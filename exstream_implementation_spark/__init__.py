@@ -8,13 +8,10 @@ filtering, entropy-based single-feature rewards, reward-leap selection,
 instability scoring — as lazy, distributed Spark DataFrame plans, plus the
 large-scale data-pipeline operators (dedup, similarity search, text analysis,
 multimodal plumbing) a 100 TB deployment needs.
+
+Import from the defining modules (``exstream_implementation_spark.pipeline``,
+``.session``, ``.plans`` for the query catalog); the package init imports
+nothing, so importing one module loads only what that module uses.
 """
 
 __version__ = "0.1.0"
-
-from exstream_implementation_spark.pipeline import (  # noqa: F401,E402
-    ExplainConfig,
-    explain_anomalies,
-    run_config_grid,
-)
-from exstream_implementation_spark.session import get_spark, tune_session  # noqa: F401,E402

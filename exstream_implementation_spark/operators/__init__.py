@@ -1,207 +1,7 @@
-"""Public operator API — the reusable building blocks behind the pipeline and
-query catalog."""
+"""Operator building blocks behind the pipeline and the query catalog.
 
-from exstream_implementation_spark.operators.bucketing import (  # noqa: F401
-    read_bucketed,
-    write_bucketed,
-)
-from exstream_implementation_spark.operators.asof import (  # noqa: F401
-    asof_join_backward,
-)
-from exstream_implementation_spark.operators.approx import (  # noqa: F401
-    distinct_rollup,
-    hll_build,
-    hll_estimate,
-    hll_merge,
-)
-from exstream_implementation_spark.operators.bloom import (  # noqa: F401
-    BloomFilter,
-    bloom_chunks,
-    bloom_params,
-    bloom_prefilter,
-    build_bloom,
-    might_contain,
-)
-from exstream_implementation_spark.operators.kll import (  # noqa: F401
-    KLLSketch,
-    kll_build,
-    kll_merge,
-    kll_quantiles,
-    quantile_rollup,
-)
-from exstream_implementation_spark.operators.sq import (  # noqa: F401
-    sq_decode,
-    sq_encode,
-    sq_topk,
-    train_sq,
-)
-from exstream_implementation_spark.operators.components import (  # noqa: F401
-    connected_components,
-)
-from exstream_implementation_spark.operators.correlation import (  # noqa: F401
-    correlated_feature_clusters,
-    correlated_features_filter,
-    correlation_matrix,
-)
-from exstream_implementation_spark.operators.fp_filter import (  # noqa: F401
-    count_matches,
-    distance_profile_stats,
-    false_positive_filter,
-    mass_distance_profile,
-)
-from exstream_implementation_spark.operators.leap import (  # noqa: F401
-    assemble_explanations,
-    reward_leap_filter,
-)
-from exstream_implementation_spark.operators.ann_index import (  # noqa: F401
-    append_to_ivf_index,
-    build_ivf_index,
-    ivf_index_is_stale,
-    load_ivf_index,
-    probe_ivf_index,
-)
-from exstream_implementation_spark.operators.multimodal import (  # noqa: F401
-    attach_audio_payload,
-    attach_gif_payload,
-    attach_image_payload,
-    audio_features,
-    audio_stats,
-    attach_payload,
-    decode_image,
-    encode_bmp,
-    encode_png,
-    decode_png,
-    image_stats,
-    resize_image,
-    decode_wav,
-    encode_wav,
-    sample_frames,
-    sample_gif_frames,
-)
-from exstream_implementation_spark.operators.gif import (  # noqa: F401
-    decode_gif,
-    encode_gif,
-)
-from exstream_implementation_spark.operators.jpeg import (  # noqa: F401
-    decode_jpeg,
-    encode_jpeg,
-)
-from exstream_implementation_spark.operators.ranking import (  # noqa: F401
-    global_row_number,
-    top_k_ranked,
-)
-from exstream_implementation_spark.operators.rewards import (  # noqa: F401
-    AUTO_GROUP_THRESHOLD,
-    resolve_segmentation,
-    segmentation_entropy,
-    segmentation_entropy_stitched,
-    single_feature_rewards,
-    worst_case_labels,
-)
-from exstream_implementation_spark.operators.skew import salted_agg  # noqa: F401
-from exstream_implementation_spark.operators.slicing import (  # noqa: F401
-    melt_features,
-    slice_intervals,
-)
-from exstream_implementation_spark.operators.kmeans import (  # noqa: F401
-    cluster_balanced_sample,
-    kmeans_train,
-)
-from exstream_implementation_spark.operators.packing import (  # noqa: F401
-    pack_sequences,
-    packing_stats,
-)
-from exstream_implementation_spark.operators.zorder import (  # noqa: F401
-    write_zordered,
-    zorder_key,
-)
-from exstream_implementation_spark.operators.sharding import (  # noqa: F401
-    assign_range_shards,
-    assign_shards,
-    prune_range_shards,
-    range_shard_bounds,
-    read_range_shards,
-    shard_balance,
-    shuffle_shard,
-    write_range_shards,
-    write_shards,
-)
-from exstream_implementation_spark.operators.bpe import (  # noqa: F401
-    apply_bpe,
-    bpe_train,
-    load_merges,
-    save_merges,
-    word_counts,
-)
-from exstream_implementation_spark.operators.pca import (  # noqa: F401
-    fit_pca,
-    transform_pca,
-)
-from exstream_implementation_spark.operators.sketches import (  # noqa: F401
-    heavy_hitters,
-    partition_summaries,
-)
-from exstream_implementation_spark.operators.expectations import (  # noqa: F401
-    compile_scan_checks,
-    in_range,
-    matches,
-    not_null,
-    referential,
-    row_count,
-    satisfies,
-    unique,
-    values_in,
-    verify,
-)
-from exstream_implementation_spark.operators.pq import (  # noqa: F401
-    encode_pq,
-    pq_adc_topk,
-    pq_reconstruct,
-    train_pq,
-)
-from exstream_implementation_spark.operators.ivfpq import (  # noqa: F401
-    append_to_ivfpq_index,
-    build_ivfpq_index,
-    ivfpq_is_stale,
-    load_pq_model,
-    probe_ivfpq_index,
-)
-from exstream_implementation_spark.operators.logreg import (  # noqa: F401
-    doc_quality_features,
-    fit_logreg,
-    logreg_score_expr,
-    score_logreg,
-)
-from exstream_implementation_spark.operators.snapshots import (  # noqa: F401
-    compact_snapshot,
-    current_version,
-    latest_per_key,
-    list_versions,
-    merge_upsert,
-    publish_snapshot,
-    read_latest,
-    read_version,
-    snapshot_diff,
-    upsert_batch_writer,
-    vacuum,
-)
-from exstream_implementation_spark.operators.profile import (  # noqa: F401
-    profile_columns,
-    profile_top_values,
-)
-from exstream_implementation_spark.operators.textstats import (  # noqa: F401
-    compression_ratio,
-    length_buckets,
-)
-from exstream_implementation_spark.operators.drift import (  # noqa: F401
-    categorical_counts,
-    drift_monitor_sink,
-    drift_report,
-    numeric_histogram,
-    psi_against,
-    psi_categorical,
-    psi_numeric,
-    reference_edges,
-    reference_edges_from_sketch,
-    reference_stats,
-)
+Import each operator from the submodule that defines it (for example
+``from exstream_implementation_spark.operators.rewards import
+single_feature_rewards``); this package init imports nothing, so loading
+one operator does not load the others.
+"""

@@ -374,7 +374,7 @@ def bloom_prefilter(
     probe: DataFrame, members: DataFrame, col: str, fpp: float
 ) -> tuple[DataFrame, DataFrame]:
     """The standard prefilter composition shared by the decontamination
-    arms (plans/dedup.decontaminate, corpus_prep.drop_contaminated):
+    arm (plans/dedup.decontaminate):
     persist ``members`` (it is read again by the bloom build and by the
     caller's verify join), build its filter eagerly, and return
     (``probe`` filtered to might-contain rows, the persisted ``members``).

@@ -1,10 +1,6 @@
-"""Shared serving-index lifecycle contract.
-
-Three index families grew their own append/staleness/compaction
-conventions independently (the r09 review's finding): the streaming
-neardup corpus (streaming/ingest_dedup.py), the BM25 postings table
-(plans/search.py), and the IVF ANN index (operators/ann_index.py).  The
-conventions were already the same IDEA three times:
+"""Serving-index lifecycle contract: idempotent append and crash-safe
+compaction of a bucketed, catalog-served table.  The BM25 postings table
+(plans/search.py) is the index family that uses it:
 
   append      anti-join the new rows against the served table's keys, pin
               the result with an eager localCheckpoint (the read-then-
@@ -13,18 +9,9 @@ conventions were already the same IDEA three times:
               through the catalog insert path so rows land in the table's
               bucket spec.  Idempotent under foreachBatch's at-least-once
               redelivery by construction.
-  staleness   a growth-ratio gate: the index is stale when the served row
-              count outgrew a recorded BASE count (what the index was
-              built/trained/compacted at) by more than a threshold.
   compaction  rewrite the bucketed table through a staging table + catalog
-              rename (never overwrite a table being read), then reset the
-              base so staleness measures growth from the fresh layout.
-
-This module is that contract, once.  The three families keep their own
-meta-table schemas (persisted tables in the field can't be migrated by a
-refactor); the LOGIC routes through here so the next index family — and
-any fix to redelivery/staleness/compaction semantics — lands in one
-place.
+              rename (never overwrite a table being read), so many small
+              appends are re-clustered into one file per bucket.
 
 NAMESPACE CLAIM: compaction reserves ``{table}_staging`` and
 ``{table}_old`` as scratch names for any table it manages — it drops
@@ -64,16 +51,6 @@ def idempotent_append(
     return fresh
 
 
-def growth_is_stale(
-    served: int, base: int, growth_threshold: float
-) -> bool:
-    """The shared staleness rule: served outgrew base by more than the
-    threshold fraction.  ``base`` is whatever the family pins it to —
-    trained-corpus size (IVF), last-compaction size (neardup); the +1
-    keeps an empty/1-row base from tripping on the first append."""
-    return served > base * (1.0 + growth_threshold) + 1
-
-
 def compact_bucketed_table(
     spark: SparkSession,
     table: str,
@@ -92,8 +69,8 @@ def compact_bucketed_table(
     RENAME — at no instant is the only copy of the data deleted.  A
     crash between the two renames leaves the data under ``{table}_old``;
     ``recover_compaction`` (called here on entry, and safe to call from
-    any reader) restores it to the live name.  Mirrors the
-    pointer-swap-last discipline of operators/snapshots.py.
+    any reader) restores it to the live name: the pointer is swapped
+    last.
 
     ``{table}_staging`` and ``{table}_old`` are RESERVED scratch names
     (module note): leftovers under them are dropped on entry."""

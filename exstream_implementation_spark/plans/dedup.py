@@ -250,8 +250,8 @@ _MIN_COLS_DUCK = ",\n".join(
 
 
 
-# --- per-row MinHash fold (stream-safe; also the batch catalog's signature
-#     builder — no explode, no groupBy, zero shuffle for signatures) --------
+# --- per-row MinHash fold (the batch catalog's signature builder — no
+#     explode, no groupBy, zero shuffle for signatures) ---------------------
 def minhash_lanes(df, grams_col: str = "grams"):
     """h0..h7 lane fold over an existing shingle-array column — md5 once per
     gram in a materialized intermediate (lambda-CSE rule), then 8 array_min
@@ -271,58 +271,6 @@ def minhash_lanes(df, grams_col: str = "grams"):
             ),
         )
     return out.drop("__mh")
-
-
-def with_minhash_signature(df, text_col: str = "text"):
-    """8-lane MinHash signature (h0..h7) per row — md5(gram)+md5('x'+gram)
-    hex split into eight 32-bit lanes, min per lane over the doc's distinct
-    word-3-gram shingles, expressed as ``array_min(transform(...))``
-    higher-order expressions: no explode, no groupBy, so it runs per-row on
-    an unbounded stream (streaming/ingest_dedup.py) and, in batch, builds
-    the corpus signature table with ZERO shuffle (the explode+groupBy
-    formulation moves one pre-combined row per doc through an exchange and
-    materializes the token-wise exploded relation first).
-
-    Docs with < 3 tokens have no shingles → NULL lanes (the groupBy
-    formulation emits no signature row for them; banding skips NULL lanes so
-    they can never collide).  Intermediates are materialized columns — md5
-    once per gram, never recomputed inside a lambda (the round-7 lambda-CSE
-    rule)."""
-    grams = F.array_distinct(
-        F.expr(
-            "CASE WHEN size(__toks) < 3 THEN array() ELSE "
-            "transform(sequence(0, size(__toks) - 3),"
-            " i -> concat_ws(' ', __toks[i], __toks[i+1], __toks[i+2])) END"
-        )
-    )
-    out = minhash_lanes(
-        df.withColumn("__toks", F.split(F.lower(text_col), r"\s+"))
-        .withColumn("__grams", grams),
-        grams_col="__grams",
-    )
-    return out.drop("__toks", "__grams")
-
-
-def minhash_band_structs():
-    """Two 4-lane band structs (band_id, band_hash) over h0..h7; band_hash
-    is NULL when the doc has no shingles, so the equi-join can never match
-    shingle-less docs to each other."""
-
-    def bh(lanes):
-        return F.when(
-            F.col(lanes[0]).isNotNull(), F.md5(F.concat_ws("_", *lanes))
-        )
-
-    return F.array(
-        F.struct(
-            F.lit(0).alias("band_id"),
-            bh(["h0", "h1", "h2", "h3"]).alias("band_hash"),
-        ),
-        F.struct(
-            F.lit(1).alias("band_id"),
-            bh(["h4", "h5", "h6", "h7"]).alias("band_hash"),
-        ),
-    )
 
 
 @query(
@@ -513,8 +461,7 @@ _HAMMING_MAX = _SIMHASH_BANDS - 1  # pigeonhole guarantee
 # aggregates, groupBy doc_id) shuffles the corpus token-wise: ~100× the doc
 # count through the exchange at 100 TB.  The fold stays in whole-stage
 # codegen per row (measured faster even single-node) and, because it needs
-# no shuffle or state, it is also the form that runs on an unbounded stream
-# (streaming/ingest_dedup.py).
+# no shuffle or state, it is also the form that runs on an unbounded stream.
 # md5 runs in an INNER transform so it executes once per token: spelled
 # inside the struct lambda it would run twice (lo and hi) — Catalyst does
 # not CSE inside lambda bodies (same class of tail as text_repetition's
@@ -552,7 +499,8 @@ def _band_expr(b: int, ones_col: str, ntok_col: str) -> F.Column:
 def with_simhash_bands(df, text_col: str = "text"):
     """Append b0..b3 (4×16-bit SimHash bands) as per-row expressions —
     shuffle-free, stream-safe, bit-identical to the DuckDB oracle's
-    explode-based formulation (parity pinned in tests/test_ingest_dedup.py).
+    explode-based formulation (parity pinned by the ``dedup_simhash``
+    oracle).
 
     NULL-text rows are DROPPED, matching both the oracle (unnest of a NULL
     token array yields no rows, so the doc never reaches the groupBy) and
@@ -1304,8 +1252,7 @@ def es_sampling_key(id_col: str, weight_col: str, salt: int) -> F.Column:
     """The Efraimidis-Spirakis sampling key -ln(u)/w — smallest keys win.
     u is the deterministic open-interval (id, salt) hash uniform at 2^52
     granularity (see ``sample_weighted_k`` for why 2^52, not 2^53, and why
-    the coarse Bernoulli ``_hash_uniform`` is NOT reused).  Factored so the
-    incremental pipeline's quota top-up orders by the IDENTICAL key."""
+    the coarse Bernoulli ``_hash_uniform`` is NOT reused)."""
     two52 = 1 << 52
     u = (
         (F.abs(F.xxhash64(F.col(id_col), F.lit(int(salt)))) % F.lit(two52))

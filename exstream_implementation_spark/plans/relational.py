@@ -457,7 +457,7 @@ def topk_until_leap(spark, sf_dir):
     # rank-shift self-join).  The cut scalars come from ONE aggregation —
     # max(leap) plus a filtered max-struct (largest leap, tie → smallest rnk,
     # prev_rev<>0 rows only) — instead of r07's two CHAINED scalar broadcasts;
-    # the A/B (tools/ab_topk_leap.py, docs/ROUND8.md) measured the fused form
+    # the A/B (docs/ROUND8.md) measured the fused form
     # 16% faster with half the run-to-run variance, and it keeps the
     # scale-safe shape (no global window, per-supplier side stays partitioned)
     leaps = global_lag(

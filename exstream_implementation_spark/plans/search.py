@@ -88,8 +88,7 @@ def build_postings(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def write_postings(postings: DataFrame, table: str, buckets: int = 64) -> None:
     """Persist the index bucketed by term: repeated query batches probe
-    co-located buckets with no corpus shuffle (same rationale as the
-    ingest corpus tables, streaming/ingest_dedup.py)."""
+    co-located buckets with no corpus shuffle."""
     (
         postings.write.mode("overwrite")
         .bucketBy(buckets, "term")
@@ -106,15 +105,14 @@ def append_postings(
 ) -> int:
     """Incrementally index new documents into a served postings table.
 
-    BM25's index state is trivially incremental (unlike IVF centroids —
-    operators/ann_index.py): new (term, doc) rows don't touch old ones,
-    and n/avgdl/df are derived at probe time from the table, so a probe
-    after append is automatically fresh.  Doc_ids already present are
-    skipped (anti-join on the distinct indexed ids — one column-pruned
-    scan), making redelivered batches idempotent, the same contract as
-    the streaming ingest corpus (streaming/ingest_dedup.py).  Appends go
-    through the catalog insert path so rows land in the table's term
-    buckets.  Returns the number of newly indexed documents.
+    BM25's index state is trivially incremental: new (term, doc) rows
+    don't touch old ones, and n/avgdl/df are derived at probe time from
+    the table, so a probe after append is automatically fresh.  Doc_ids
+    already present are skipped (anti-join on the distinct indexed ids —
+    one column-pruned scan), making redelivered batches idempotent
+    (operators/index_lifecycle.py).  Appends go through the catalog
+    insert path so rows land in the table's term buckets.  Returns the
+    number of newly indexed documents.
     """
     from exstream_implementation_spark.operators.index_lifecycle import (
         idempotent_append,

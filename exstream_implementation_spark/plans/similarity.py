@@ -147,10 +147,9 @@ _BUCKET_DUCK = bucket_duck_sql(N_PLANES)
 def plane_weight_sql(dim: int) -> str:
     """The md5 hyperplane-weight derivation as a SQL transform over
     component index j, for a row scoped by (tbl, plane) columns or
-    lambda vars.  SINGLE SOURCE OF TRUTH for the SQL form: the batch
-    bucket builder below, the DuckDB oracle CTE generator, and the
-    streaming ingest arm (streaming/ingest_dedup.py with_lsh_buckets)
-    must all hash to bit-identical buckets, so they all call this.
+    lambda vars, used by the batch bucket builder below.  The DuckDB
+    oracle (``bucket_duck_sql``) spells the same derivation; the two must
+    hash to bit-identical buckets.
     (lsh_buckets_vectorized mirrors it in numpy — kept in sync by the
     pytest that pins SQL==numpy bucket equality.)"""
     return (

@@ -273,9 +273,8 @@ def spans_from_positions(
 ) -> DataFrame:
     """(id, spans) from raw duplicated positions: union the [pos, pos+k)
     windows into merged sorted intervals — the island fold ``dup_spans``
-    uses, factored so callers that derive positions differently (e.g. the
-    incremental pipeline, which also matches against a persisted anchor
-    state) reuse the identical merge semantics."""
+    uses, factored so callers that derive positions differently reuse the
+    identical merge semantics."""
     w = Window.partitionBy(id_col).orderBy("pos")
     prev_end = F.coalesce(
         F.max(F.col("pos") + k).over(

@@ -881,7 +881,7 @@ def chunk_by_separator(
     on ``sep`` (paragraphs by default), then greedily merge CONSECUTIVE
     units into chunks of at most ``max_chars`` characters — a unit is
     never split, so a chunk always ends on a semantic boundary (the
-    standard RAG chunker, vs corpus_prep.chunk_tokens' fixed token grid).
+    standard RAG chunker, vs a fixed token grid).
     A single unit longer than ``max_chars`` becomes its own oversized
     chunk (splitting it mid-unit would break the boundary contract;
     callers wanting hard caps compose with a second fixed-length pass).

@@ -21,8 +21,8 @@ corpus-sized collected:
     broadcast join a deployment can layer on; the heuristic covers the
     overwhelming mass of web hosts without any side table.
   * ``dedup_by_url``      — keep the min-id representative per canonical
-    URL: groupBy + semi-join pullback (map-side combined), the same
-    never-a-corpus-window shape as corpus_prep.exact_dedup.
+    URL: groupBy + semi-join pullback (map-side combined), never a
+    window over the corpus.
   * ``cap_per_group``     — at most n rows per group, smallest
     (order, id) first, via the two-phase fold (partition-local top-n,
     then a window over <= partitions*n survivors per group) — the
@@ -163,49 +163,24 @@ def cap_per_group(
     n: int,
     order_col: str | None = None,
     id_col: str = "doc_id",
-    quotas: DataFrame | None = None,
 ) -> DataFrame:
     """At most ``n`` rows per group — the smallest (order_col, id_col)
     first; ``order_col=None`` keeps the n smallest ids.  ``id_col`` must
     be unique per group (it is the deterministic tie-break and the
     semi-join pullback key).
 
-    ``quotas`` (optional): a small frame of ``group_cols + quota`` that
-    overrides ``n`` per group — groups absent from it keep the default
-    ``n``; a quota <= 0 drops the group outright.  This is the remaining-
-    quota form the incremental pipeline tops caps up with (quota =
-    n - already_admitted); the frame is quota-table-sized and broadcasts.
-
     Two-phase fold: each shuffle partition folds its (group, partition)
-    slice to quota candidates with a bounded array sort; the final window
-    ranks <= partitions*quota survivors per group.  Winners semi-join back
+    slice to n candidates with a bounded array sort; the final window
+    ranks <= partitions*n survivors per group.  Winners semi-join back
     so kept rows carry every input column.
     """
     if n <= 0:
         raise ValueError(f"n must be positive: {n}")
     group_cols = list(group_cols)
     order = F.col(order_col) if order_col is not None else F.col(id_col)
-    tagged = df.select(*group_cols, F.col(id_col), order.alias("_o"))
-    if quotas is not None:
-        if "quota" not in quotas.columns:
-            raise ValueError("quotas frame must carry a 'quota' column")
-        q = F.broadcast(quotas.select(*group_cols, "quota"))
-        left, right = tagged.alias("__t"), q.alias("__q")
-        cond = F.lit(True)
-        for c in group_cols:
-            # null-safe: groupBy treats NULL as its own group, the quota
-            # lookup must too (same reason as the pullback join below)
-            cond = cond & F.col(f"__t.{c}").eqNullSafe(F.col(f"__q.{c}"))
-        tagged = (
-            left.join(right, cond, "left")
-            .select(
-                *[F.col(f"__t.{c}") for c in group_cols + [id_col, "_o"]],
-                F.coalesce(F.col("__q.quota"), F.lit(n)).alias("_q"),
-            )
-            .filter(F.col("_q") > 0)
-        )
-    else:
-        tagged = tagged.withColumn("_q", F.lit(n))
+    tagged = df.select(
+        *group_cols, F.col(id_col), order.alias("_o"), F.lit(n).alias("_q")
+    )
     part = (
         tagged.groupBy(*group_cols, F.spark_partition_id().alias("_p"))
         .agg(

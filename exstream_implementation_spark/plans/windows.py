@@ -54,7 +54,7 @@ def _batch_events(spark, sf_dir):
     """,
 )
 def events_tumbling_zscores(spark, sf_dir):
-    from exstream_implementation_spark.streaming import (
+    from exstream_implementation_spark.streaming.scoring import (
         reference_profile,
         score_against_profile,
     )
@@ -89,7 +89,7 @@ def events_tumbling_zscores(spark, sf_dir):
 # tumbling features alone (covered by events_tumbling_zscores in the catalog;
 # kept for the package API and streaming parity tests)
 def events_tumbling_window(spark, sf_dir):
-    from exstream_implementation_spark.streaming import windowed_features
+    from exstream_implementation_spark.streaming.features import windowed_features
 
     wf = windowed_features(_batch_events(spark, sf_dir), "1 hour")
     return wf.select(
@@ -187,7 +187,7 @@ def events_session_windows(spark, sf_dir):
 # z-scores alone (covered by events_tumbling_zscores in the catalog; kept for
 # the package API and streaming parity tests)
 def events_window_zscores(spark, sf_dir):
-    from exstream_implementation_spark.streaming import (
+    from exstream_implementation_spark.streaming.scoring import (
         reference_profile,
         score_against_profile,
     )

@@ -4,87 +4,27 @@ The reference processes *recorded* streams in batch (SURVEY §2.2: no streaming
 loop anywhere in script_1.py); the paper's online CEP setting (exstream.pdf
 §6.3) is unimplemented there.  This package realizes it Spark-natively:
 
-- ``events_stream``      file-based streaming source over the events parquet
-- ``windowed_features``  watermarked tumbling/sliding window feature aggs
-- ``reference_profile`` / ``score_against_profile``
-                         stream-static broadcast join + z-score anomaly flag
-- ``online_segmentation_entropy``
-                         applyInPandasWithState port of C6's run-length scan
-- ``online_moments``     transformWithStateInPandas (Spark 4) lifetime
-                         per-key Welford moments for online z-scoring
+- ``source.events_stream``        file-based streaming source over the events
+                                  parquet
+- ``features.windowed_features``  watermarked tumbling/sliding window feature
+                                  aggs
+- ``scoring.reference_profile`` / ``scoring.score_against_profile``
+                                  stream-static broadcast join + z-score
+                                  anomaly flag
+- ``stateful.online_segmentation_entropy`` / ``stateful.online_feature_rewards``
+                                  applyInPandasWithState port of C6's
+                                  run-length scan
+- ``welford.online_moments``      transformWithStateInPandas (Spark 4)
+                                  lifetime per-key Welford moments for online
+                                  z-scoring
+- ``explain_trigger``             flag → label → batch ``explain_anomalies``
+                                  per micro-batch
+- ``online_scorer``               the online reward scorer and its serving
+                                  view
+- ``unbounded``                   the online scorer over a synthetic
+                                  unbounded rate source
 
 All transforms are written against the unified DataFrame API, so each also
 works on a batch frame — tests exercise both paths and assert they agree.
+Import from the submodules; this package init imports nothing.
 """
-
-from exstream_implementation_spark.streaming.source import events_stream
-from exstream_implementation_spark.streaming.features import windowed_features
-from exstream_implementation_spark.streaming.scoring import (
-    reference_profile,
-    score_against_profile,
-)
-from exstream_implementation_spark.streaming.stateful import (
-    online_feature_rewards,
-    online_segmentation_entropy,
-)
-from exstream_implementation_spark.streaming.welford import online_moments
-from exstream_implementation_spark.streaming.explain_trigger import (
-    explain_flagged,
-    start_online_explainer,
-)
-from exstream_implementation_spark.streaming.online_scorer import (
-    start_online_reward_scorer,
-)
-from exstream_implementation_spark.streaming.ingest_dedup import (
-    corpus_minhash_index,
-    corpus_simhash_index,
-    documents_stream,
-    ingest_pipeline,
-    init_neardup_corpus,
-    compact_neardup_index,
-    minhash_index_rows,
-    neardup_index_is_stale,
-    refresh_neardup_tables,
-    simhash_index_rows,
-    start_refreshing_ingest,
-    stream_exact_dedup,
-    stream_minhash_vs_corpus,
-    stream_neardup_vs_corpus,
-    with_minhash_signature,
-    with_simhash_bands,
-)
-from exstream_implementation_spark.streaming.unbounded import (
-    run_unbounded_scorer,
-    synthetic_melted_rate_stream,
-)
-
-__all__ = [
-    "start_online_reward_scorer",
-    "run_unbounded_scorer",
-    "synthetic_melted_rate_stream",
-    "events_stream",
-    "windowed_features",
-    "reference_profile",
-    "score_against_profile",
-    "online_segmentation_entropy",
-    "online_feature_rewards",
-    "online_moments",
-    "explain_flagged",
-    "start_online_explainer",
-    "documents_stream",
-    "stream_exact_dedup",
-    "stream_neardup_vs_corpus",
-    "corpus_simhash_index",
-    "with_simhash_bands",
-    "corpus_minhash_index",
-    "stream_minhash_vs_corpus",
-    "with_minhash_signature",
-    "ingest_pipeline",
-    "init_neardup_corpus",
-    "simhash_index_rows",
-    "minhash_index_rows",
-    "compact_neardup_index",
-    "neardup_index_is_stale",
-    "refresh_neardup_tables",
-    "start_refreshing_ingest",
-]

@@ -245,47 +245,3 @@ def test_zorder_tolerates_nan_inf_null(spark, tmp_path):
     # finite rows still spread across buckets: min-x row < max-x row keys
     assert out[1] < out[2]
 
-
-def test_neardup_corpus_anti_join_reads_buckets_without_exchange(spark):
-    """The refreshing-ingest exact-dedup anti-join must NOT shuffle the
-    corpus side: {name}_admitted is bucketed on norm_hash, so each
-    microbatch exchanges only its own small probe side while the corpus
-    reads co-located buckets.  (This removes the per-trigger corpus
-    SHUFFLE; the corpus scan itself remains — see the module docstring's
-    cost-honesty note for the horizon-state + coarse-trigger composition.)"""
-    from exstream_implementation_spark.sources import load_table
-    from exstream_implementation_spark.streaming.ingest_dedup import (
-        init_neardup_corpus,
-        with_content_hashes,
-    )
-
-    name = "bkt_neardup_t"
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents").filter(
-        "doc_id < 60"
-    )
-    init_neardup_corpus(spark, name, docs=docs, n_buckets=8)
-    try:
-        probe = with_content_hashes(
-            docs.filter("doc_id >= 40").select("doc_id", "text")
-        ).select("norm_hash", "doc_id")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            anti = probe.join(
-                spark.table(f"{name}_admitted").select("norm_hash"),
-                "norm_hash",
-                "left_anti",
-            )
-            plan = plan_str(anti, mode="simple")
-            assert "SortMergeJoin" in plan, plan
-            # exactly ONE exchange below the join — the probe side; the
-            # bucketed corpus scan has none
-            join_idx = plan.index("SortMergeJoin")
-            assert plan[join_idx:].count("Exchange") == 1, plan[join_idx:]
-        finally:
-            spark.conf.set(
-                "spark.sql.autoBroadcastJoinThreshold", "10485760"
-            )
-    finally:
-        for sfx in ("admitted", "sh_idx", "mh_idx", "sh_flags", "mh_flags",
-                    "meta"):
-            spark.sql(f"DROP TABLE IF EXISTS {name}_{sfx}")

@@ -3,7 +3,12 @@
 import pytest
 from pyspark.sql import functions as F
 
-from exstream_implementation_spark.plans.dedup import decontaminate, sample_mix
+from exstream_implementation_spark.plans.dedup import (
+    decontaminate,
+    dedup_simhash,
+    sample_mix,
+    with_simhash_bands,
+)
 from exstream_implementation_spark.sources import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -529,3 +534,106 @@ def test_sample_weighted_k_weight_edge_cases(spark):
     assert sorted(r["doc_id"] for r in got.collect()) == [1, 5]
     with pytest.raises(ValueError, match="k must be positive"):
         sample_weighted_k(df, "g", 0, "w")
+
+
+# --- per-row SimHash (bit parity with pure Python, shuffle-free fold) -------
+def _py_simhash_bands(text: str) -> tuple:
+    """Independent pure-Python SimHash oracle (same spec: distinct
+    whitespace tokens of lower(text); bit g from md5 hex chars 1-8 (g<32)
+    resp. 9-16; band b bit j set iff vote sum of bit 16b+j > 0).
+
+    The split is the ASCII class [ \\t\\n\\x0b\\f\\r] — Java's regex \\s,
+    which is what Spark's split uses — NOT Python's Unicode-aware \\s
+    (U+00A0 etc. are token characters to the engine, and must be here too)."""
+    import hashlib
+    import re
+
+    votes = [0] * 64
+    for tok in set(re.split(r"[ \t\n\x0b\f\r]+", text.lower())):
+        h = hashlib.md5(tok.encode()).hexdigest()
+        lo, hi = int(h[:8], 16), int(h[8:16], 16)
+        for g in range(64):
+            bit = ((lo if g < 32 else hi) >> (g % 32)) & 1
+            votes[g] += 1 if bit else -1
+    bands = []
+    for b in range(4):
+        v = 0
+        for j in range(16):
+            if votes[16 * b + j] > 0:
+                v |= 1 << j
+        bands.append(v)
+    return tuple(bands)
+
+
+def test_perrow_simhash_matches_python_oracle(spark):
+    """The fold-based per-row SimHash must match an independent pure-Python
+    implementation bit-for-bit (dedup_simhash itself now uses the fold, so
+    this — plus the DuckDB explode-based oracle in the catalog gate — is the
+    independent parity anchor)."""
+    docs = load_table(spark, SF_DIR, "documents").filter(F.col("doc_id") < 60)
+    got = {
+        r["doc_id"]: (r["b0"], r["b1"], r["b2"], r["b3"])
+        for r in with_simhash_bands(docs)
+        .select("doc_id", "b0", "b1", "b2", "b3")
+        .collect()
+    }
+    texts = {r["doc_id"]: r["text"] for r in docs.select("doc_id", "text").collect()}
+    assert len(got) == 60
+    for doc_id, text in texts.items():
+        assert got[doc_id] == _py_simhash_bands(text), doc_id
+
+
+def test_perrow_simhash_property_random_texts(spark):
+    """Hypothesis-style sweep over adversarial text shapes (single token,
+    repeated tokens, mixed case, leading/trailing/multiple whitespace,
+    unicode) — the fold must match the pure-Python oracle on every one."""
+    from hypothesis import given, settings, strategies as st
+
+    # includes U+00A0 (no-break space): a token character to the engine's
+    # ASCII-\s split — the oracle must agree, not split on it
+    token = st.text(
+        alphabet=st.characters(
+            whitelist_categories=("Ll", "Lu", "Nd"),
+            whitelist_characters="\u00a0",
+            max_codepoint=0x24F,
+        ),
+        min_size=1,
+        max_size=8,
+    )
+    texts = st.lists(token, min_size=1, max_size=12).map(" ".join)
+
+    @settings(max_examples=25, deadline=None)
+    @given(st.lists(texts, min_size=1, max_size=6))
+    def check(batch):
+        df = spark.createDataFrame(
+            [(i, t) for i, t in enumerate(batch)], "doc_id long, text string"
+        )
+        got = {
+            r["doc_id"]: (r["b0"], r["b1"], r["b2"], r["b3"])
+            for r in with_simhash_bands(df).collect()
+        }
+        for i, t in enumerate(batch):
+            assert got[i] == _py_simhash_bands(t), repr(t)
+
+    check()
+
+
+def test_catalog_simhash_uses_perrow_fold(spark):
+    """dedup_simhash must carry no per-token explode+groupBy: its only
+    aggregation work is the fold expression, so the plan is shuffle-free up
+    to the (optional) parallel-load repartition."""
+    plan = (
+        dedup_simhash(spark, SF_DIR)
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "HashAggregate" not in plan and "Generate" not in plan
+
+
+def test_perrow_simhash_plan_has_no_shuffle(spark):
+    """The per-row formulation must stay map-side: no Exchange in the plan
+    below the scan (that is the whole point of the fold)."""
+    docs = load_table(spark, SF_DIR, "documents")
+    plan = with_simhash_bands(docs)._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan

@@ -3,7 +3,7 @@
 The r10 review found compact_bucketed_table's DROP-then-RENAME left a
 window where a crash leaves NO table under the live name and the data
 deleted.  The swap is now rename-live-out → rename-staging-in → drop-old
-(pointer-swap-last, like operators/snapshots.py): these tests kill the
+(pointer-swap-last): these tests kill the
 swap at each intermediate instant and assert the data is never lost and
 the live name is always restorable.
 """
@@ -96,175 +96,3 @@ def test_crash_during_staging_write_leaves_live_untouched(spark, monkeypatch):
     for t in (TABLE, f"{TABLE}_old", f"{TABLE}_staging"):
         spark.sql(f"DROP TABLE IF EXISTS {t}")
 
-
-# ---------------------------------------------------------------------------
-# IVF-PQ rebuild crash injection (r12): the rebuild stages every table,
-# commits a marker last, then swaps — kill it at EVERY instant (each staging
-# write, each swap DDL statement) and assert the serving set is always a
-# loadable, SINGLE-BUILD index (or a clean absence on a crashed first
-# build).  This is the r11 ADVICE scenario: the old build mutated
-# {name}_rotation before retraining, so a crash could serve a rotation from
-# one build with codebooks from another.
-# ---------------------------------------------------------------------------
-
-import math
-import shutil
-
-import numpy as np
-
-import exstream_implementation_spark.operators.ivfpq as ivfpq
-
-IVF = "t_lc_ivfpq_crash"
-_IVF_SCRATCH = [
-    f"{IVF}_{sfx}{tail}"
-    for sfx in ivfpq._IVFPQ_SUFFIXES
-    for tail in ("", "_staging", "_old")
-] + [f"{IVF}_ivfpq_commit"]
-
-
-def _ivf_clean(spark):
-    wh = spark.conf.get(
-        "spark.sql.warehouse.dir", "spark-warehouse"
-    ).removeprefix("file:")
-    for t in _IVF_SCRATCH:
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-        shutil.rmtree(f"{wh}/{t}", ignore_errors=True)
-
-
-def _ivf_vecs(spark, id_base, salt, n=32, d=8):
-    rows = [
-        (
-            id_base + i,
-            [
-                float(math.sin(0.7 * (i * d + j) + salt) * (1 + j))
-                for j in range(d)
-            ],
-        )
-        for i in range(n)
-    ]
-    return spark.createDataFrame(rows, "vec_id long, embedding array<float>")
-
-
-def _ivf_build(spark, vecs, opq):
-    # opq_iters=1: the crash protocol is what's under test, not rotation
-    # quality — one refinement pass exercises the code path cheaply
-    return ivfpq.build_ivfpq_index(
-        spark, vecs, IVF, k_cells=2, m=4, ksub=4, max_iter=2, opq=opq,
-        opq_iters=1,
-    )
-
-
-def _ivf_snapshot(spark, q, qids):
-    got = ivfpq.probe_ivfpq_index(
-        spark, IVF, q, qids, nprobe=2, k_neighbors=3
-    ).collect()
-    return sorted(
-        (int(r["query_id"]), int(r["rank"]), int(r["neighbor_id"]))
-        for r in got
-    )
-
-
-@pytest.mark.slow
-def test_ivfpq_rebuild_crash_at_every_instant(spark, monkeypatch):
-    """Build index A (opq — rotation served), then rebuild toward B
-    (plain — rotation retired), killing the rebuild at every staging
-    write and every swap DDL statement in turn.  After recover_ivfpq the
-    index must probe EXACTLY as A or EXACTLY as B (corpus id ranges are
-    disjoint, so a mixed-build set cannot reproduce either), and the
-    rotation table's presence must match the serving build."""
-    _ivf_clean(spark)
-    vecs_a = _ivf_vecs(spark, 0, salt=0.0)
-    vecs_b = _ivf_vecs(spark, 1000, salt=2.5)
-    qa = np.array(
-        [r["embedding"] for r in vecs_a.orderBy("vec_id").limit(3).collect()],
-        dtype=np.float64,
-    )
-    qids = np.array([9001, 9002, 9003], dtype=np.int64)
-
-    # reference result sets from uninterrupted builds (training is
-    # deterministic, so a later identical build probes identically)
-    _ivf_build(spark, vecs_a, opq=True)
-    res_a = _ivf_snapshot(spark, qa, qids)
-    _ivf_build(spark, vecs_b, opq=False)
-    res_b = _ivf_snapshot(spark, qa, qids)
-    assert res_a != res_b
-    _ivf_clean(spark)
-    _ivf_build(spark, vecs_a, opq=True)
-
-    real_save, real_sql = ivfpq._save_staging, spark.sql
-    step = 0
-    while True:
-        step += 1
-        state = {"events": 0, "fired": False}
-
-        def save(df, table, _s=state):
-            _s["events"] += 1
-            if _s["events"] == step:
-                _s["fired"] = True
-                raise RuntimeError(f"injected crash (save {table})")
-            return real_save(df, table)
-
-        def sql(stmt, *a, _s=state, **kw):
-            _s["events"] += 1
-            if _s["events"] == step:
-                _s["fired"] = True
-                raise RuntimeError(f"injected crash (sql {stmt})")
-            return real_sql(stmt, *a, **kw)
-
-        monkeypatch.setattr(ivfpq, "_save_staging", save)
-        monkeypatch.setattr(spark, "sql", sql)
-        try:
-            _ivf_build(spark, vecs_b, opq=False)
-        except RuntimeError as e:
-            assert "injected crash" in str(e)
-        finally:
-            monkeypatch.setattr(ivfpq, "_save_staging", real_save)
-            monkeypatch.setattr(spark, "sql", real_sql)
-        if not state["fired"]:
-            break  # the whole rebuild ran: every instant has been killed
-        ivfpq.recover_ivfpq(spark, IVF)
-        # serving set: complete, single-build, no scratch leftovers
-        for sfx in ("centroids", "codebooks", "codes", "meta"):
-            assert spark.catalog.tableExists(f"{IVF}_{sfx}"), (step, sfx)
-        for t in _IVF_SCRATCH:
-            if t.endswith(("_staging", "_old", "_commit")):
-                assert not spark.catalog.tableExists(t), (step, t)
-        res = _ivf_snapshot(spark, qa, qids)
-        assert res in (res_a, res_b), step
-        has_rot = spark.catalog.tableExists(f"{IVF}_rotation")
-        assert has_rot == (res == res_a), (step, has_rot)
-        if res == res_b:
-            # restore A so every later instant re-tests the full
-            # opq→plain transition (rotation retire + all four swaps)
-            _ivf_clean(spark)
-            _ivf_build(spark, vecs_a, opq=True)
-    assert step > 10  # sanity: the loop really visited many instants
-    # after the final uninterrupted rebuild the new index serves
-    assert _ivf_snapshot(spark, qa, qids) == res_b
-    assert not spark.catalog.tableExists(f"{IVF}_rotation")
-    _ivf_clean(spark)
-
-
-@pytest.mark.slow
-def test_ivfpq_first_build_crash_leaves_clean_absence(spark, monkeypatch):
-    """A crashed FIRST build (no prior index) must recover to a clean
-    absence: no serving tables, no staging/marker leftovers."""
-    _ivf_clean(spark)
-    vecs = _ivf_vecs(spark, 0, salt=0.0)
-    real_save = ivfpq._save_staging
-    calls = {"n": 0}
-
-    def save(df, table):
-        calls["n"] += 1
-        if calls["n"] == 2:  # after centroids staged, before the rest
-            raise RuntimeError("injected crash (first build)")
-        return real_save(df, table)
-
-    monkeypatch.setattr(ivfpq, "_save_staging", save)
-    with pytest.raises(RuntimeError, match="injected crash"):
-        _ivf_build(spark, vecs, opq=True)
-    monkeypatch.setattr(ivfpq, "_save_staging", real_save)
-    assert ivfpq.recover_ivfpq(spark, IVF) is True
-    for t in _IVF_SCRATCH:
-        assert not spark.catalog.tableExists(t), t
-    _ivf_clean(spark)

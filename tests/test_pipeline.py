@@ -13,9 +13,6 @@ from pyspark.sql import functions as F
 from exstream_implementation_spark.pipeline import ExplainConfig, explain_anomalies
 from tests import oracle_pandas as oracle
 
-# >60 s integration suite: excluded from the quick tier (README "Run")
-pytestmark = pytest.mark.slow
-
 FEATURES = ["f_cpu", "f_heap", "f_sched", "f_net", "f_records", "f_uptime", "f_dup"]
 
 

@@ -20,9 +20,6 @@ import pytest
 from exstream_implementation_spark.operators.leap import reward_leap_filter
 from exstream_implementation_spark.operators.rewards import single_feature_rewards
 
-# >60 s integration suite: excluded from the quick tier (README "Run")
-pytestmark = pytest.mark.slow
-
 GOLDEN = json.loads(
     (pathlib.Path(__file__).parent / "golden" / "reference_rewards.json").read_text()
 )

@@ -603,9 +603,6 @@ def test_streaming_postings_refresh(spark, tmp_path):
         build_postings,
         write_postings,
     )
-    from exstream_implementation_spark.streaming.ingest_dedup import (
-        documents_stream,
-    )
 
     warehouse = tmp_path / "warehouse"
     spark.sql(f"CREATE DATABASE IF NOT EXISTS sref LOCATION '{warehouse}'")
@@ -622,7 +619,9 @@ def test_streaming_postings_refresh(spark, tmp_path):
             append_postings(batch_df.sparkSession, batch_df, "sref.postings")
 
         q = (
-            documents_stream(spark, arrivals, max_files_per_trigger=1)
+            spark.readStream.schema(rest.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(arrivals)
             .writeStream.foreachBatch(_refresh)
             .option("checkpointLocation", str(tmp_path / "ckpt"))
             .trigger(availableNow=True)

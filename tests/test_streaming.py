@@ -8,19 +8,18 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
-from exstream_implementation_spark.streaming import (
-    events_stream,
-    online_segmentation_entropy,
+from exstream_implementation_spark.streaming.features import windowed_features
+from exstream_implementation_spark.streaming.scoring import (
     reference_profile,
     score_against_profile,
-    windowed_features,
 )
 from exstream_implementation_spark.streaming.source import (
     events_batch_as_stream_input,
+    events_stream,
 )
 from exstream_implementation_spark.streaming.stateful import (
-
     batch_segmentation_entropy_reference,
+    online_segmentation_entropy,
 )
 
 # >60 s integration suite: excluded from the quick tier (README "Run")
@@ -135,12 +134,8 @@ def test_online_explanation_trigger(spark):
     import time
 
     from exstream_implementation_spark.sources import events_trace
-    from exstream_implementation_spark.streaming import (
-        events_stream,
-        reference_profile,
-        score_against_profile,
+    from exstream_implementation_spark.streaming.explain_trigger import (
         start_online_explainer,
-        windowed_features,
     )
 
     batch_wf = windowed_features(events_batch_as_stream_input(spark, SF_DIR))
@@ -422,7 +417,7 @@ def test_online_scorer_end_to_end_matches_batch(spark, tmp_path):
         single_feature_rewards,
     )
     from exstream_implementation_spark.plans.exstream_sql import _events_melted
-    from exstream_implementation_spark.streaming import (
+    from exstream_implementation_spark.streaming.online_scorer import (
         start_online_reward_scorer,
     )
 
@@ -473,7 +468,7 @@ def test_online_scorer_state_survives_across_batches(spark, tmp_path):
     from pyspark.sql import Window
 
     from exstream_implementation_spark.plans.exstream_sql import _events_melted
-    from exstream_implementation_spark.streaming import (
+    from exstream_implementation_spark.streaming.online_scorer import (
         start_online_reward_scorer,
     )
 
@@ -551,7 +546,7 @@ def test_online_scorer_restart_parity(spark, tmp_path):
     explanations as an uninterrupted run: the restarted query only sees new
     files, so any key untouched after the restart exists purely in the
     journal."""
-    from exstream_implementation_spark.streaming import (
+    from exstream_implementation_spark.streaming.online_scorer import (
         start_online_reward_scorer,
     )
 
@@ -759,7 +754,7 @@ def test_unbounded_rate_source_explanation_latency(spark):
     """The paper's online envelope (exstream.pdf §6.3): with a genuinely
     unbounded source (rate) and a processing-time trigger, the first
     explanation must arrive well inside 30 s of query start."""
-    from exstream_implementation_spark.streaming import run_unbounded_scorer
+    from exstream_implementation_spark.streaming.unbounded import run_unbounded_scorer
 
     latency, emissions = run_unbounded_scorer(
         spark, rows_per_second=500, trigger="1 second", max_wait_s=30.0
@@ -772,10 +767,9 @@ def test_unbounded_rate_source_explanation_latency(spark):
 
 
 def test_session_window_drops_late_arrivals(spark, tmp_path):
-    """Late-data policy of the windowed aggregations (the DROP side, vs the
-    admit-if-novel policy of dropDuplicatesWithinWatermark pinned in
-    test_ingest_dedup): an event arriving behind the watermark belongs to a
-    session whose state is gone — it must NOT reopen or grow the session."""
+    """Late-data policy of the windowed aggregations (the DROP side): an
+    event arriving behind the watermark belongs to a session whose state
+    is gone — it must NOT reopen or grow the session."""
     import time as _time
 
     d = str(tmp_path / "late_events")
