@@ -44,6 +44,15 @@ window" but nothing enforced that reading):
     a median of two disagreeing probes hides exactly the instability the
     canaries exist to expose).  normalize_warm() is the pure function the
     tests pin this contract on.
+  * both canaries gate: "probe_drifted" reads the Spark canary alone (kept
+    as it was), "probe_numpy_drifted" the numpy one, and
+    "probe_any_drifted" either; the normalized fields are null when EITHER
+    drifted.  BENCH_r13_c8's numpy canary moved 0.086 -> 0.285 s (3.3×)
+    while the Spark one stayed under the gate.
+  * "queries_warm_spread_ratio" is max/min of each query's warm repeats,
+    and "queries_unsteady" lists the queries whose ratio is above 2×
+    (WARM_MAX_SPREAD; BENCH_r13_c8 reached 4×): their warm medians say
+    little about the engine.
 """
 
 from __future__ import annotations
@@ -60,12 +69,21 @@ REF_PROBE_SPARK_S = 0.20
 REF_PROBE_NUMPY_S = 0.20
 PROBE_BAND = (0.13, 0.33)
 PROBE_MAX_DRIFT = 1.35
+WARM_MAX_SPREAD = 2.0
+
+
+def _drift(before_s: float, after_s: float) -> float:
+    return max(before_s, after_s) / max(min(before_s, after_s), 1e-9)
 
 
 def normalize_warm(
-    value_warm: float, probe_before_s: float, probe_after_s: float
+    value_warm: float,
+    probe_before_s: float,
+    probe_after_s: float,
+    numpy_before_s: float | None = None,
+    numpy_after_s: float | None = None,
 ) -> tuple[float | None, dict]:
-    """Host-speed correction with its two validity gates — pure, so the
+    """Host-speed correction with its validity gates — pure, so the
     contract is unit-testable without running the suite.
 
     Returns (value_warm_normalized | None, flags):
@@ -78,24 +96,43 @@ def normalize_warm(
       flags["probe_drifted"]         drift > PROBE_MAX_DRIFT — the host
                                      changed speed mid-suite, so no single
                                      correction factor is honest
+    With the numpy canary's before/after also given:
+      flags["probe_numpy_intra_run_drift"]  its max/min
+      flags["probe_numpy_drifted"]   its drift > PROBE_MAX_DRIFT
+      flags["probe_any_drifted"]     either canary drifted; no number is
+                                     emitted then
     """
     observed = statistics.median([probe_before_s, probe_after_s])
-    lo, hi = min(probe_before_s, probe_after_s), max(
-        probe_before_s, probe_after_s
-    )
-    drift = hi / max(lo, 1e-9)
+    drift = _drift(probe_before_s, probe_after_s)
     flags = {
         "probe_ratio": round(observed / REF_PROBE_SPARK_S, 3),
         "probe_out_of_band": not (PROBE_BAND[0] <= observed <= PROBE_BAND[1]),
         "probe_intra_run_drift": round(drift, 3),
         "probe_drifted": drift > PROBE_MAX_DRIFT,
     }
+    drifted = flags["probe_drifted"]
+    if numpy_before_s is not None and numpy_after_s is not None:
+        numpy_drift = _drift(numpy_before_s, numpy_after_s)
+        flags["probe_numpy_intra_run_drift"] = round(numpy_drift, 3)
+        flags["probe_numpy_drifted"] = numpy_drift > PROBE_MAX_DRIFT
+        drifted = drifted or flags["probe_numpy_drifted"]
+        flags["probe_any_drifted"] = drifted
     value = (
         None
-        if flags["probe_out_of_band"] or flags["probe_drifted"]
+        if flags["probe_out_of_band"] or drifted
         else round(value_warm * (REF_PROBE_SPARK_S / observed), 3)
     )
     return value, flags
+
+
+def warm_steadiness(warm_spread: dict[str, list[float]]) -> dict:
+    """Per-query max/min of the warm repeats, and the queries above
+    WARM_MAX_SPREAD — pure, like normalize_warm."""
+    ratio = {q: round(_drift(lo, hi), 3) for q, (lo, hi) in warm_spread.items()}
+    return {
+        "queries_warm_spread_ratio": ratio,
+        "queries_unsteady": sorted(q for q, r in ratio.items() if r > WARM_MAX_SPREAD),
+    }
 
 
 def _probe(spark, np) -> dict[str, float]:
@@ -225,6 +262,8 @@ def main():
         value_warm,
         probe_before["spark_range_agg_s"],
         probe_after["spark_range_agg_s"],
+        probe_before["numpy_matmul_s"],
+        probe_after["numpy_matmul_s"],
     )
 
     total = round(sum(timings.values()), 3)
@@ -239,6 +278,8 @@ def main():
         total,
         probe_before["spark_range_agg_s"],
         probe_after["spark_range_agg_s"],
+        probe_before["numpy_matmul_s"],
+        probe_after["numpy_matmul_s"],
     )
     print(
         json.dumps(
@@ -252,6 +293,7 @@ def main():
                 "value_warm": value_warm,
                 "queries_warm": warm,
                 "queries_warm_spread": warm_spread,
+                **warm_steadiness(warm_spread),
                 "warm_repeats": repeats,
                 "value_warm_normalized": value_warm_normalized,
                 **probe_flags,

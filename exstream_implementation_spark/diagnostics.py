@@ -17,6 +17,8 @@ from pyspark.sql import DataFrame
 from pyspark.ml.classification import RandomForestClassifier
 from pyspark.ml.feature import VectorAssembler
 
+from exstream_implementation_spark.session import local_frame
+
 
 def rf_feature_importances(
     sliced: DataFrame,
@@ -37,7 +39,9 @@ def rf_feature_importances(
     ).fit(assembled)
     imps = model.featureImportances.toArray().tolist()
     rows = [(f, i, float(imps[i])) for i, f in enumerate(features)]
-    out = sliced.sparkSession.createDataFrame(
-        rows, "feature string, feature_order int, importance double"
+    out = local_frame(
+        sliced.sparkSession,
+        rows,
+        "feature string, feature_order int, importance double",
     )
     return out.orderBy(out.importance.desc(), out.feature_order)

@@ -26,6 +26,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from exstream_implementation_spark.session import local_frame
+
 
 SMALL_GRAPH_EDGES = 200_000
 
@@ -77,8 +79,8 @@ def connected_components(
                     parent[hi] = lo
             rows = [(v, find(v)) for v in parent]
             vtype = edges.schema[src].dataType.simpleString()
-            return edges.sparkSession.createDataFrame(
-                rows, f"vertex {vtype}, component {vtype}"
+            return local_frame(
+                edges.sparkSession, rows, f"vertex {vtype}, component {vtype}"
             )
 
         both = pinned.select(

@@ -17,6 +17,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from exstream_implementation_spark.session import local_frame
+
 _SQDIST = (
     "aggregate(zip_with({a}, {b}, (x, y) -> (cast(x as double) - y) *"
     " (cast(x as double) - y)), cast(0.0 as double), (acc, v) -> acc + v)"
@@ -105,7 +107,8 @@ def kmeans_train(
             .collect()
         )
         assigned.unpersist()
-        centroids = spark.createDataFrame(
+        centroids = local_frame(
+            spark,
             [(r["cell"], r["cemb"]) for r in new_rows],
             f"cell {cell_type}, cemb array<double>",
         )

@@ -30,6 +30,7 @@ from pyspark.sql import types as T
 from exstream_implementation_spark.operators.sketches import (
     merged_summaries,
 )
+from exstream_implementation_spark.session import local_frame
 
 _NUMERIC = (
     T.ByteType, T.ShortType, T.IntegerType, T.LongType,
@@ -87,7 +88,8 @@ def profile_columns(df: DataFrame, cols: list | None = None) -> DataFrame:
             float(g("sd")) if g("sd") is not None else None,
             float(g("al")) if g("al") is not None else None,
         ))
-    return df.sparkSession.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         out,
         "column string, dtype string, n long, n_null long,"
         " null_frac double, approx_distinct long, min string, max string,"

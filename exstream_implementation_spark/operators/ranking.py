@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window, functions as F
 
 from exstream_implementation_spark.cache import tracked_persist
+from exstream_implementation_spark.session import local_frame
 
 
 def global_row_number(
@@ -74,8 +75,10 @@ def global_row_number(
         offsets[pid] = acc
         acc += sizes[pid]
     offset_df = F.broadcast(
-        df.sparkSession.createDataFrame(
-            [(pid, off) for pid, off in offsets.items()], "__pid int, __offset long"
+        local_frame(
+            df.sparkSession,
+            [(pid, off) for pid, off in offsets.items()],
+            "__pid int, __offset long",
         )
     )
     w_local = Window.partitionBy("__pid").orderBy(*order_by)
@@ -161,7 +164,8 @@ def global_lag(
     }
     vtype = df.schema[value_col].dataType.simpleString()
     meta_df = F.broadcast(
-        df.sparkSession.createDataFrame(
+        local_frame(
+            df.sparkSession,
             [
                 (pid, offsets[pid], prev_of.get(pid))
                 for pid in sorted(sizes)

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from exstream_implementation_spark.session import local_frame
+
 # distinct salts so the shard assignment and the within-shard order are
 # independent hash draws (otherwise shard i would hold a contiguous hash
 # range and within-shard order would correlate with assignment)
@@ -196,8 +198,10 @@ def _bounds_from_counts(
         -(-total * (i + 1) // n_shards) for i in range(n_shards - 1)
     ]  # ceil
     off = F.broadcast(
-        spark.createDataFrame(
-            [(pid, o) for pid, o in offsets.items()], "_pid int, _off long"
+        local_frame(
+            spark,
+            [(pid, o) for pid, o in offsets.items()],
+            "_pid int, _off long",
         )
     )
     w = (
@@ -392,7 +396,7 @@ def read_range_shards(spark, path: str, lo=None, hi=None) -> DataFrame:
                     list(st.fields)
                     + [StructField("shard", IntegerType(), True)]
                 )
-            return spark.createDataFrame([], st)
+            return local_frame(spark, [], st)
         empty = (  # pre-schema manifests: infer from the parquet files
             spark.read.format(fmt)
             .option("basePath", path)

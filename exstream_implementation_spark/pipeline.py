@@ -45,6 +45,7 @@ from exstream_implementation_spark.operators.leap import (
 )
 from exstream_implementation_spark.operators.rewards import (
     AUTO_GROUP_THRESHOLD,
+    resolve_segmentation,
     single_feature_rewards,
 )
 from exstream_implementation_spark.operators.slicing import (
@@ -52,6 +53,7 @@ from exstream_implementation_spark.operators.slicing import (
     slice_intervals,
 )
 from exstream_implementation_spark.schemas import feature_columns
+from exstream_implementation_spark.session import local_frame
 
 
 @dataclass
@@ -118,6 +120,28 @@ def _explanations_for(
     return assemble_explanations(kept, keys=keys)
 
 
+def route_segmentation(sliced: DataFrame, cfg: ExplainConfig) -> ExplainConfig:
+    """Resolve ``segmentation='auto'`` on the wide slice; explicit values pass
+    through.  Each wide row melts to exactly one row per feature, so the
+    per-(run, ano_key, feature) segmentation group size is bounded by the
+    per-ano_key wide count (instability runs sample DOWN from run 0).  The
+    probe is one count agg over the slice the caller caches anyway —
+    O(anomalies) rows back to the driver — and removes the last manual scale
+    decision: a raw 1 Hz year-long trace routes to the stitched engine
+    without the caller reading anything."""
+    if cfg.segmentation != "auto":
+        return cfg
+    max_group = (
+        sliced.groupBy("ano_key").count().agg(F.max("count")).collect()[0][0] or 0
+    )
+    return replace(
+        cfg,
+        segmentation=resolve_segmentation(
+            sliced, threshold=cfg.segmentation_threshold, group_rows=max_group
+        ),
+    )
+
+
 def explain_anomalies(
     traces: DataFrame, labels: DataFrame, cfg: ExplainConfig | None = None
 ) -> DataFrame:
@@ -131,25 +155,7 @@ def explain_anomalies(
         lambda df: tracked_persist(df, scope=cfg.slice_cache_scope)
     )
 
-    # segmentation='auto': pick the engine from the ACTUAL largest anomaly
-    # slice, not a docstring.  Each wide row melts to exactly one row per
-    # feature, so the per-(run, ano_key, feature) segmentation group size is
-    # bounded by the per-ano_key wide count (instability runs sample DOWN from
-    # run 0).  The probe is one count agg over the slice we cache anyway —
-    # O(anomalies) rows back to the driver — and removes the last manual
-    # scale decision: a raw 1 Hz year-long trace routes to the stitched
-    # engine without the caller reading anything.
-    if cfg.segmentation == "auto":
-        max_group = (
-            sliced.groupBy("ano_key").count().agg(F.max("count")).collect()[0][0]
-            or 0
-        )
-        cfg = replace(
-            cfg,
-            segmentation=(
-                "stitched" if max_group > cfg.segmentation_threshold else "window"
-            ),
-        )
+    cfg = route_segmentation(sliced, cfg)
 
     # run 0 = main; runs 1..k = instability samples (reference
     # script_1.py:227-238).  One exploded run dimension over the cached slice
@@ -193,8 +199,8 @@ def explain_anomalies(
             (i, f) for i, feats in per_run_feats.items() for f in feats
         ]
         surv = F.broadcast(
-            sliced.sparkSession.createDataFrame(
-                surv_rows, "run_id int, feature string"
+            local_frame(
+                sliced.sparkSession, surv_rows, "run_id int, feature string"
             )
         )
     else:
@@ -298,21 +304,14 @@ def run_config_grid(
     base = base or ExplainConfig()
     # resolve segmentation='auto' ONCE for the whole grid: the slice — and
     # therefore the largest per-anomaly group — is identical across the four
-    # configs, so one probe replaces four
+    # configs, so one probe replaces four.  The probe runs on the slice
+    # cached under the configs' own scope, so it fills the cache the four
+    # explain calls then read (same plan) instead of re-scanning the trace.
     if base.segmentation == "auto":
-        probe = slice_intervals(traces, labels)
-        max_group = (
-            probe.groupBy("ano_key").count().agg(F.max("count")).collect()[0][0]
-            or 0
+        sliced = slice_intervals(traces, labels).transform(
+            lambda df: tracked_persist(df, scope=base.slice_cache_scope)
         )
-        base = replace(
-            base,
-            segmentation=(
-                "stitched"
-                if max_group > base.segmentation_threshold
-                else "window"
-            ),
-        )
+        base = route_segmentation(sliced, base)
     grid = {
         "explanations": (False, False),
         "explanations_cluster": (True, False),

@@ -31,6 +31,7 @@ from exstream_implementation_spark.sources import (
     load_documents_parallel,
     load_table,
 )
+from exstream_implementation_spark.session import local_frame
 
 N_MINHASH = 8
 HEX15 = "cast(conv(substr(md5({x}), 1, 15), 16, 10) as bigint)"
@@ -432,7 +433,8 @@ def dedup_summary(spark, sf_dir):
             n_docs - stats["n_docs_in_clusters"] + stats["n_clusters"],
         )
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "n_docs long, n_dup_pairs long, n_clusters long, "
         "n_docs_in_clusters long, n_docs_after long",

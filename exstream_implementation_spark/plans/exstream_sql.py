@@ -27,6 +27,7 @@ from exstream_implementation_spark.operators.rewards import (
 )
 from exstream_implementation_spark.plans.registry import query
 from exstream_implementation_spark.sources import load_table
+from exstream_implementation_spark.session import local_frame
 
 EVENT_TYPES = ["click", "view", "purchase", "error", "signup"]
 
@@ -945,8 +946,10 @@ def corr_cluster_reps(spark, sf_dir):
         rep = min(cl)  # lexicographic — matches the oracle's min(reached)
         for f in cl:
             out.append((f, rep, len(cl)))
-    return trace.sparkSession.createDataFrame(
-        out, "feature string, rep string, component_size long"
+    return local_frame(
+        trace.sparkSession,
+        out,
+        "feature string, rep string, component_size long",
     )
 
 

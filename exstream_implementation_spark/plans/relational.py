@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from exstream_implementation_spark.plans.registry import query
 from exstream_implementation_spark.sources import load_table
+from exstream_implementation_spark.session import local_frame
 
 
 # --- §2.1 #1 scan + #6 projection + #7 drop + #8 derived/literal columns
@@ -880,7 +881,7 @@ def collect_sorted_set(spark, sf_dir):
 def column_index_map(spark, sf_dir):
     li = load_table(spark, sf_dir, "lineitem")
     rows = [(c, i) for i, c in enumerate(li.columns)]
-    df = spark.createDataFrame(rows, "feature string, feature_order int")
+    df = local_frame(spark, rows, "feature string, feature_order int")
     return df.filter(F.col("feature").startswith("l_l"))
 
 

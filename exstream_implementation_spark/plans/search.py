@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from exstream_implementation_spark.sources import load_documents_parallel
+from exstream_implementation_spark.session import local_frame
 
 BM25_K1 = 1.2
 BM25_B = 0.75
@@ -214,8 +215,8 @@ def bm25_topk(
     if prebuilt and isinstance(queries, list):
         # the prebuilt path joins the query frame distributed — lift a
         # literal list into a frame there
-        queries = spark.createDataFrame(
-            queries, "query_id int, query_text string"
+        queries = local_frame(
+            spark, queries, "query_id int, query_text string"
         )
     if prebuilt:
         # postings-table path (the served deployment): the table is cheap to
@@ -223,8 +224,8 @@ def bm25_topk(
         postings = docs_or_postings
         n_docs, avgdl = corpus_stats(postings)
         if n_docs == 0 or queries.isEmpty():
-            return spark.createDataFrame(
-                [], "query_id int, doc_id bigint, score double, rank int"
+            return local_frame(
+                spark, [], "query_id int, doc_id bigint, score double, rank int"
             )
         weights = query_term_weights(
             postings, queries, n_docs, max_df_ratio=max_df_ratio
@@ -264,8 +265,8 @@ def bm25_topk(
                     seen.append(t)
                     qterms_local.append((int(r["query_id"]), t))
         if not qterms_local:
-            return spark.createDataFrame(
-                [], "query_id int, doc_id bigint, score double, rank int"
+            return local_frame(
+                spark, [], "query_id int, doc_id bigint, score double, rank int"
             )
         vocab_terms = sorted({t for _, t in qterms_local})
         tok_arr = (
@@ -362,11 +363,11 @@ def bm25_topk(
             ).first()
             n_docs, avgdl = int(row["n"] or 0), float(row["avgdl"] or 0.0)
             if n_docs == 0:
-                return spark.createDataFrame(
-                    [], "query_id int, doc_id bigint, score double, rank int"
+                return local_frame(
+                    spark, [], "query_id int, doc_id bigint, score double, rank int"
                 )
-            qterms = spark.createDataFrame(
-                qterms_local, "query_id int, term string"
+            qterms = local_frame(
+                spark, qterms_local, "query_id int, term string"
             )
             vocab = qterms.select("term").distinct()
             dfreq = (
@@ -505,8 +506,8 @@ def bm25_topk_bulk(
     )
     n_docs, avgdl = int(row["n"] or 0), float(row["avgdl"] or 0.0)
     if n_docs == 0:
-        return spark.createDataFrame(
-            [], "query_id int, doc_id bigint, score double, rank int"
+        return local_frame(
+            spark, [], "query_id int, doc_id bigint, score double, rank int"
         )
     qterms = queries.select(
         "query_id",
@@ -655,8 +656,8 @@ def dense_topk(
     from exstream_implementation_spark.plans.similarity import _cosine_expr
 
     if queries_vec.isEmpty() or embeddings.isEmpty():
-        return spark.createDataFrame(
-            [], "query_id int, doc_id bigint, score double, rank int"
+        return local_frame(
+            spark, [], "query_id int, doc_id bigint, score double, rank int"
         )
     scored = (
         embeddings.crossJoin(F.broadcast(queries_vec))

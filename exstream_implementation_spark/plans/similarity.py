@@ -24,6 +24,7 @@ from exstream_implementation_spark.cache import session_persist
 
 from exstream_implementation_spark.plans.registry import query
 from exstream_implementation_spark.sources import load_table
+from exstream_implementation_spark.session import local_frame
 
 DIM = 64
 N_PLANES = 4
@@ -776,8 +777,8 @@ def ann_topk_cosine_vectorized(spark, sf_dir):
     if not qrows:
         # empty corpus → no query vectors → no neighbors (mirrors the SQL
         # oracle, whose query-side join is empty), not a numpy shape error
-        return spark.createDataFrame(
-            [], "query_id long, neighbor_id long, cosine double, rank int"
+        return local_frame(
+            spark, [], "query_id long, neighbor_id long, cosine double, rank int"
         )
     qids = np.array([r["vec_id"] for r in qrows], dtype=np.int64)
     qmat = np.array([r["embedding"] for r in qrows], dtype=np.float64)

@@ -3,16 +3,31 @@
 Local testing runs on ``local[$SPARK_GRAFT_CPUS]`` (default all cores); the
 same configs are what we would set cluster-side: AQE on (runtime re-planning,
 skew-join splitting, partition coalescing), Arrow on (fast pandas interchange
-for the few applyInPandas operators), sane shuffle partition count.
+for the few applyInPandas operators), sane shuffle partition count, and a
+compiled-class cache that holds the engine's classes.  ``local_frame`` is
+the one way the package turns driver-side rows into a DataFrame.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SHUFFLE_PARTITIONS = 32
+
+# Size of Spark's compiled-class cache (spark.sql.codegen.cache.maxEntries,
+# an LRU keyed by generated source; static, so it is set at session build
+# only).  Spark's default holds 100 classes, but one explain call with
+# correlation clustering and FP filtering needs ~160 distinct classes: the
+# LRU evicted each class before the next call asked for it again, so every
+# warm call recompiled all ~160 with Janino.  Distinct classes measured with
+# an unbounded cache: 163 for any number of explain calls (same columns, any
+# anomaly count), 214 with the flagship query added, and 1,122 for one
+# tools/check_correctness.py pass over the 50-query catalog.  2,000 holds
+# all of them with headroom, so a warm explain call compiles nothing.
+CODEGEN_CACHE_ENTRIES = 2000
 
 
 def get_spark(
@@ -62,6 +77,7 @@ def get_spark(
         # site echoed inside error messages) is a debugging nicety, so
         # production sessions run with it off.  Overridable via extra_conf.
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        .config("spark.sql.codegen.cache.maxEntries", str(CODEGEN_CACHE_ENTRIES))
         # NOT set: a spark.python.daemon.module that pre-imports
         # numpy/pandas before forking workers (the COW-preload pattern).
         # Measured r13, interleaved A/B ×3: first Python stage 3.5/4.2/4.3 s
@@ -106,7 +122,41 @@ def tune_session(spark: SparkSession) -> SparkSession:
     spark.conf.set(
         "spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS)
     )
-    # per-call call-site capture (see get_spark) is a STATIC conf — it can
-    # only be set at session build time, so an externally-provided session
-    # keeps whatever it was built with; nothing to do here.
+    # per-call call-site capture and the compiled-class cache size (see
+    # get_spark) are STATIC confs — they can only be set at session build
+    # time, so an externally-provided session keeps whatever it was built
+    # with (upstream: debugging on, a 100-class cache that warm explain
+    # calls thrash); nothing to do here.
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str | StructType) -> DataFrame:
+    """Lift driver-side rows (tuples in schema order) into a DataFrame — the
+    package's only way to do it (tests/test_local_frame.py guards that no
+    other ``createDataFrame`` call exists).
+
+    The rows become a ``pyarrow.Table`` typed exactly as ``schema`` (a DDL
+    string or a StructType) says, so Spark takes them as a local relation on
+    the driver.  ``createDataFrame(list)`` instead parallelizes the rows and
+    converts them in Python workers: a 4-task job, ~0.9 CPU-s and ~0.45 s
+    wall for 10 rows on 4 cores, paid on every explain call and every
+    streaming trigger.  A value that does not fit its column type (an int32
+    overflow, a string in a numeric column) raises ``ValueError``, as
+    ``verifySchema`` does on the list path.
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = StructType.fromDDL(schema) if isinstance(schema, str) else schema
+    arrow = to_arrow_schema(struct)
+    rows = list(rows)
+    if any(len(r) != len(struct.fields) for r in rows):
+        raise ValueError(f"every row must have {len(struct.fields)} fields")
+    columns = list(zip(*rows)) if rows else [()] * len(struct.fields)
+    arrays = []
+    for col, field, atype in zip(columns, struct.fields, arrow.types):
+        try:
+            arrays.append(pa.array(col, type=atype))
+        except (pa.ArrowException, OverflowError, TypeError) as exc:
+            raise ValueError(f"column {field.name!r}: {exc}") from exc
+    return spark.createDataFrame(pa.Table.from_arrays(arrays, schema=arrow), struct)

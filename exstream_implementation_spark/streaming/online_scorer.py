@@ -65,6 +65,7 @@ from exstream_implementation_spark.operators.leap import (
 from exstream_implementation_spark.streaming.stateful import (
     online_feature_rewards,
 )
+from exstream_implementation_spark.session import local_frame
 
 _SEP = "\x1f"
 
@@ -347,7 +348,8 @@ def start_online_reward_scorer(
         # only the touched anomalies re-rank: per-batch work is
         # O(touched × features), not O(view) — and the sink receives one
         # refreshed explanation per anomaly that actually changed
-        tbl = spark.createDataFrame(
+        tbl = local_frame(
+            spark,
             view.as_rows(reward_round, only=touched),
             "ano_key string, feature string, feature_order int, reward double",
         )

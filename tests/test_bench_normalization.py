@@ -53,3 +53,38 @@ def test_intra_run_drift_nulls_even_when_median_in_band():
 def test_drift_ratio_reported():
     _, flags = bench.normalize_warm(10.0, 0.1, 0.3)
     assert flags["probe_intra_run_drift"] == 3.0
+
+
+def test_numpy_canary_drift_also_gates():
+    # BENCH_r13_c8: the Spark canary stayed under the gate (0.282 -> 0.32)
+    # while the numpy one moved 0.086 -> 0.285 (3.3×)
+    v, flags = bench.normalize_warm(26.575, 0.282, 0.32, 0.086, 0.285)
+    assert not flags["probe_drifted"]  # the Spark-only field is unchanged
+    assert flags["probe_numpy_drifted"] and flags["probe_any_drifted"]
+    assert flags["probe_numpy_intra_run_drift"] == 3.314
+    assert v is None
+    # a steady numpy canary leaves the Spark-gated value as it was
+    v, flags = bench.normalize_warm(20.0, 0.20, 0.20, 0.09, 0.10)
+    assert v == 20.0
+    assert not flags["probe_numpy_drifted"] and not flags["probe_any_drifted"]
+
+
+def test_numpy_fields_only_when_its_canary_is_given():
+    _, flags = bench.normalize_warm(20.0, 0.20, 0.20)
+    assert set(flags) == {
+        "probe_ratio", "probe_out_of_band", "probe_intra_run_drift",
+        "probe_drifted",
+    }
+
+
+def test_unsteady_queries_flagged_above_2x():
+    # BENCH_r13_c8's warm spreads: text_fingerprint 2.29-9.04 s (3.9×)
+    out = bench.warm_steadiness({
+        "text_fingerprint": [2.293, 9.041],
+        "exstream_explain": [2.523, 5.375],
+        "join_broadcast_dims": [0.251, 0.26],
+        "exactly_2x": [1.0, 2.0],
+    })
+    assert out["queries_unsteady"] == ["exstream_explain", "text_fingerprint"]
+    assert out["queries_warm_spread_ratio"]["text_fingerprint"] == 3.943
+    assert out["queries_warm_spread_ratio"]["exactly_2x"] == 2.0
