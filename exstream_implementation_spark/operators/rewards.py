@@ -39,72 +39,69 @@ sorted label sequence as-is. We implement BOTH:
 
 where n0/n1 are the run's class counts and r the within-run position — no
 UDF, no Python loop, whole-stage codegen end to end; one shuffle keyed
-(ano_key, feature, value), one keyed (ano_key, feature).
+(ano_key, feature_order, value), one keyed (ano_key, feature_order).
 
-Input: melted long table (ano_key, type_data, timestamp, feature,
-feature_order, value) from operators.slicing.melt_features.
+A missing value (SQL NULL) sorts after every number, as pandas sorts NaN
+last (``sort_values`` default ``na_position='last'``), so a gap in a trace
+segments exactly like the reference's NaN.
+
+Input: melted long table (ano_key, type_data, timestamp, feature_order,
+value) from operators.slicing.melt_features; its ``feature`` name column is
+dropped before any exchange, since the int ``feature_order`` is the key.
 Output: (ano_key, feature, feature_order, reward, rank).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 from exstream_implementation_spark.operators.ranking import global_lag
+from exstream_implementation_spark.operators.slicing import _sql_str
 
 # A (key, feature) group above this many rows routes through the stitched
-# engine under segmentation='auto': the window form sorts the whole group in
-# ONE task, so the threshold is "largest single-task sort we accept".  1M
+# engine (pipeline.route_segmentation): the window form sorts the whole group
+# in ONE task, so the threshold is "largest single-task sort we accept".  1M
 # doubles sort in well under a second per task and fit any sane executor; a
 # raw 1 Hz year-long trace (~31M rows/group) is 30× past it and must stitch.
 AUTO_GROUP_THRESHOLD = 1_000_000
 
+# C4 class entropy p_a·log2(1/p_a) + p_r·log2(1/p_r) over the interval row
+# counts, as SQL text with p recomputed per term (the shape the oracle hashes
+# were taken on — float results stay bit-identical)
+CLASS_ENTROPY_SQL = (
+    "(n_ano / (n_ref + n_ano))"
+    " * log2(1.0 / (n_ano / (n_ref + n_ano)))"
+    " + (n_ref / (n_ref + n_ano))"
+    " * log2(1.0 / (n_ref / (n_ref + n_ano)))"
+)
 
-def resolve_segmentation(
-    melted: DataFrame,
-    keys: tuple[str, ...] = ("ano_key",),
-    threshold: int = AUTO_GROUP_THRESHOLD,
-    group_rows: int | None = None,
-    feature_key: str = "feature",
-) -> str:
-    """Pick the segmentation engine from the actual group sizes.
 
-    ``group_rows`` — the largest (*keys, feature) group's row count — may be
-    passed by callers that already know it (the pipeline computes it from the
-    cached wide slice, one row per ano_key: each wide row melts to exactly one
-    row per feature, so per-(key, feature) melted size == per-key wide size).
-    Without a hint this probes ``melted`` with one count aggregation — an
-    eager job, the price of an adaptive plan choice (same trade AQE makes).
-    """
-    if group_rows is None:
-        group_rows = (
-            melted.groupBy(*keys, feature_key)
-            .count()
-            .agg(F.max("count"))
-            .collect()[0][0]
-            or 0
-        )
-    return "stitched" if group_rows > threshold else "window"
+def feature_name_expr(feature_names: list[str]) -> str:
+    """``feature`` re-derived from the 0-based ``feature_order`` by a literal
+    array lookup — meant for the tiny post-aggregation projection (one row
+    per (*keys, feature)), never for the melted exchange."""
+    arr = ", ".join(_sql_str(n) for n in feature_names)
+    return f"array({arr})[feature_order] AS feature"
 
 
 def worst_case_labels(
     melted: DataFrame,
     duplicate_mode: str = "sorted",
     keys: tuple[str, ...] = ("ano_key",),
-    feature_key: str = "feature",
 ) -> DataFrame:
     """Assign each row its segmentation label and sequence position.
 
-    Adds: r (0-based position within the (ano_key, feature, value) duplicate
-    run, type_data ascending — the reference's sort puts class 0 first within
-    equal values, reference exstream/entropy_based_single_reward_feature.py:224),
-    and label (int; 0, 1, or the reference's literal 2 in worst_case mode).
+    Adds: r (0-based position within the (ano_key, feature_order, value)
+    duplicate run, type_data ascending — the reference's sort puts class 0
+    first within equal values, reference
+    exstream/entropy_based_single_reward_feature.py:224), and label (int; 0,
+    1, or the reference's literal 2 in worst_case mode).
     """
     if duplicate_mode not in ("sorted", "worst_case"):
         raise ValueError(f"unknown duplicate_mode {duplicate_mode!r}")
     # SQL-string construction — one py4j round-trip per selectExpr instead
     # of one per expression node (see segmentation_entropy)
-    gk = ", ".join(f"`{c}`" for c in (*keys, feature_key, "value"))
+    gk = ", ".join(f"`{c}`" for c in (*keys, "feature_order", "value"))
     df = melted.selectExpr(
         "*",
         f"row_number() OVER (PARTITION BY {gk}"
@@ -137,11 +134,9 @@ def worst_case_labels(
 def segmentation_entropy(
     labeled: DataFrame,
     keys: tuple[str, ...] = ("ano_key",),
-    order_tail: list | None = None,
-    class_counts: bool = False,
-    feature_key: str = "feature",
+    ties: tuple[str, ...] = ("r",),
 ) -> DataFrame:
-    """(*keys, feature) → (*keys, feature, feature_order, seg_ent).
+    """(*keys, feature_order) → (*keys, feature_order, seg_ent, n_ano, n_ref).
 
     Run-length segmentation of the label sequence ordered by (value, r),
     Σ (len/N)·ln(N/len) over all segments EXCEPT the last (quirk Q2 — the
@@ -149,28 +144,25 @@ def segmentation_entropy(
     so the final segment never contributes,
     reference exstream/entropy_based_single_reward_feature.py:181-200).
 
-    ``order_tail`` overrides the within-(key, feature) ordering columns
-    (default ``[value, r]``).  Sorted-mode callers pass
-    ``[value, type_data, timestamp]`` — the identical total order (``r`` IS
-    row_number over (type_data, timestamp) within equal values) — which
-    lets them skip ``worst_case_labels``'s per-(key, feature, value) window
-    entirely: one full Exchange+Sort of the melted relation removed
+    ``ties`` orders rows of equal value (default ``r``).  Sorted-mode
+    callers pass ``(type_data, timestamp)`` — the identical total order
+    (``r`` IS row_number over (type_data, timestamp) within equal values) —
+    which lets them skip ``worst_case_labels``'s per-(key, feature, value)
+    window entirely: one full Exchange+Sort of the melted relation removed
     (guide §2.4; the stitched engine has always used this ordering).
 
-    ``class_counts=True`` additionally emits per-(keys, feature) ``n_ref``/
-    ``n_ano`` — folded into the SAME segment aggregates (each melted row
-    belongs to exactly one segment, so Σ per-segment type_data sums = n_ano)
-    — so reward callers need no second full pass over ``melted`` and no
-    seg⋈cls join.
+    ``n_ref``/``n_ano`` are folded into the SAME segment aggregates (each
+    melted row belongs to exactly one segment, so Σ per-segment type_data
+    sums = n_ano) — reward callers need no second full pass over ``melted``
+    and no seg⋈cls join.
     """
     # plan text built as SQL strings: selectExpr is ONE py4j round-trip per
     # call, where the equivalent Column-object chain paid one per
     # expression node — the rewards build sits on every explain call's
     # driver-side critical path (guide §1.2 step 2 applied to plan
     # construction; round-12/13 profiles put build ≈ 2× execute locally)
-    order_cols = order_tail if order_tail is not None else ["value", "r"]
-    pk = ", ".join(f"`{c}`" for c in (*keys, feature_key))
-    ob = ", ".join(f"`{c}`" for c in order_cols)
+    pk = ", ".join(f"`{c}`" for c in (*keys, "feature_order"))
+    ob = ", ".join(["`value` NULLS LAST", *(f"`{c}`" for c in ties)])
     df = labeled.selectExpr(
         "*",
         f"lag(label) OVER (PARTITION BY {pk} ORDER BY {ob}) AS prev_label",
@@ -181,17 +173,9 @@ def segmentation_entropy(
         f" THEN 1 ELSE 0 END) OVER (PARTITION BY {pk} ORDER BY {ob}"
         f" ROWS UNBOUNDED PRECEDING) AS seg_id",
     )
-    seg_aggs = [F.count(F.lit(1)).alias("seg_len")]
-    if feature_key != "feature_order":
-        # keyed on the name: carry the order along.  Keyed on the ORDER
-        # (feature_names callers), feature_order IS the group key and the
-        # name never enters the aggregation — the hot exchanges carry one
-        # int where they carried an int + a string (guide §2.3 narrower
-        # types / shuffle fewer bytes).
-        seg_aggs.append(F.first("feature_order").alias("feature_order"))
-    if class_counts:
-        seg_aggs.append(F.sum("type_data").alias("_seg_n1"))
-    segs = df.groupBy(*keys, feature_key, "seg_id").agg(*seg_aggs)
+    segs = df.groupBy(*keys, "feature_order", "seg_id").agg(
+        F.count(F.lit(1)).alias("seg_len"), F.sum("type_data").alias("_seg_n1")
+    )
     segs = segs.selectExpr(
         "*",
         f"sum(seg_len) OVER (PARTITION BY {pk}) AS n_total",
@@ -201,25 +185,17 @@ def segmentation_entropy(
     term = F.when(F.col("seg_id") < F.col("max_seg"), p * F.log(1.0 / p)).otherwise(
         F.lit(0.0)
     )
-    final_aggs = [F.sum(term).alias("seg_ent")]
-    if feature_key != "feature_order":
-        final_aggs.append(F.first("feature_order").alias("feature_order"))
-    if class_counts:
-        final_aggs.extend(
-            [
-                F.sum("_seg_n1").alias("n_ano"),
-                (F.first("n_total") - F.sum("_seg_n1")).alias("n_ref"),
-            ]
-        )
-    return segs.groupBy(*keys, feature_key).agg(*final_aggs)
+    return segs.groupBy(*keys, "feature_order").agg(
+        F.sum(term).alias("seg_ent"),
+        F.sum("_seg_n1").alias("n_ano"),
+        (F.first("n_total") - F.sum("_seg_n1")).alias("n_ref"),
+    )
 
 
 def segmentation_entropy_stitched(
     melted: DataFrame,
     duplicate_mode: str = "sorted",
     keys: tuple[str, ...] = ("ano_key",),
-    class_counts: bool = False,
-    feature_key: str = "feature",
 ) -> DataFrame:
     """Distributed twin of ``segmentation_entropy`` — same output, no
     per-(key, feature) single-partition window.
@@ -228,9 +204,10 @@ def segmentation_entropy_stitched(
     (rewards path parallelism floor — fine for hourly-bucketed traces where
     groups are O(buckets), fatal for a raw 1 Hz trace with a year-long
     interval: ~31M rows in one sort).  This form range-partitions the GLOBAL
-    sort order (*keys, feature, value, …) and stitches partition boundaries
-    with ``operators.ranking.global_lag`` (O(#partitions) boundary rows, never
-    O(rows)), so a single huge group spreads across all executors:
+    sort order (*keys, feature_order, value, …) and stitches partition
+    boundaries with ``operators.ranking.global_lag`` (O(#partitions) boundary
+    rows, never O(rows)), so a single huge group spreads across all
+    executors:
 
       1. global stitched lag of (group, label) over the segmentation order →
          boundary flags exactly as the window's ``lag`` would emit them;
@@ -246,16 +223,17 @@ def segmentation_entropy_stitched(
     timestamp) within equal values, and equal-key ties carry equal labels so
     boundary flags are tie-order invariant.  ``worst_case`` mode needs the
     within-duplicate position r for its closed-form labels; that window is
-    keyed by (…, feature, value) — per-VALUE groups, already fine-grained.
+    keyed by (…, feature_order, value) — per-VALUE groups, already
+    fine-grained.
     """
     if duplicate_mode == "sorted":
         labeled = melted.withColumn("label", F.col("type_data"))
-        order_tail = [F.col("value"), F.col("type_data"), F.col("timestamp")]
+        ties = [F.col("type_data"), F.col("timestamp")]
     else:
-        labeled = worst_case_labels(melted, duplicate_mode, keys, feature_key)
-        order_tail = [F.col("value"), F.col("r")]
-    group = [*keys, feature_key]
-    order = [*[F.col(c) for c in group], *order_tail]
+        labeled = worst_case_labels(melted, duplicate_mode, keys)
+        ties = [F.col("r")]
+    group = [*keys, "feature_order"]
+    order = [*[F.col(c) for c in group], F.col("value").asc_nulls_last(), *ties]
 
     tagged = labeled.withColumn("__gl", F.struct(*group, "label"))
     lagged = global_lag(tagged, order, "__gl", rn_col="__rn", lag_col="__prev")
@@ -272,15 +250,11 @@ def segmentation_entropy_stitched(
     )
     flagged = lagged.withColumn("__b", boundary)
 
-    gstat_aggs = [
+    gstats = flagged.groupBy(*group).agg(
         F.max("__rn").alias("__gmax"),
         F.count(F.lit(1)).alias("n_total"),
-    ]
-    if feature_key != "feature_order":
-        gstat_aggs.append(F.first("feature_order").alias("feature_order"))
-    if class_counts:
-        gstat_aggs.append(F.sum("type_data").alias("n_ano"))
-    gstats = flagged.groupBy(*group).agg(*gstat_aggs)
+        F.sum("type_data").alias("n_ano"),
+    )
     bnds = flagged.filter("__b").select(*group, "__rn")
     # lead(rn) within group via a DESCENDING stitched lag over boundary rows
     bnds = bnds.withColumn("__gr", F.struct(*group, "__rn"))
@@ -307,43 +281,43 @@ def segmentation_entropy_stitched(
     )
     p = F.col("seg_len") / F.col("n_total")
     term = F.when(~F.col("__is_last"), p * F.log(1.0 / p)).otherwise(F.lit(0.0))
-    final_aggs = [F.sum(term).alias("seg_ent")]
-    if feature_key != "feature_order":
-        final_aggs.append(F.first("feature_order").alias("feature_order"))
-    if class_counts:
-        final_aggs.extend(
-            [
-                F.first("n_ano").alias("n_ano"),
-                (F.first("n_total") - F.first("n_ano")).alias("n_ref"),
-            ]
-        )
-    return segs.groupBy(*group).agg(*final_aggs)
+    return segs.groupBy(*group).agg(
+        F.sum(term).alias("seg_ent"),
+        F.first("n_ano").alias("n_ano"),
+        (F.first("n_total") - F.first("n_ano")).alias("n_ref"),
+    )
 
 
 def single_feature_rewards(
     melted: DataFrame,
+    feature_names: list[str],
     duplicate_mode: str = "sorted",
     reward_round: int | None = None,
     keys: tuple[str, ...] = ("ano_key",),
     segmentation: str = "window",
-    auto_threshold: int = AUTO_GROUP_THRESHOLD,
-    group_rows: int | None = None,
-    feature_names: list[str] | None = None,
 ) -> DataFrame:
     """C7 — reward(f) = class_ent / seg_ent per (ano_key, feature), ranked.
+
+    ``feature_names``: the trace's feature list in ``feature_order``
+    position order.  The ``feature`` STRING is dropped before any shuffle —
+    segmentation and aggregation key on the int ``feature_order`` — and the
+    name is mapped back once, in the final (tiny, post-aggregation)
+    projection: the hot exchanges of the melted relation carry one int where
+    they would carry int + string (guide §2.3 "narrower types" / "shuffle
+    fewer bytes"; the name was 10-20% of the melted exchange's bytes on the
+    events trace).  ``feature_order`` is a bijection of the name within one
+    trace, so results do not depend on the key.
 
     ``segmentation='window'`` (default) sorts each (key, feature) group in
     one window partition — lowest overhead when groups are O(trace buckets).
     ``'stitched'`` routes through ``segmentation_entropy_stitched`` — same
     result, range-partitioned + boundary-stitched, for raw high-frequency
-    traces where a single group would serialize into one task.
-    ``'auto'`` measures the largest group (``group_rows`` hint, else a count
-    probe — see ``resolve_segmentation``) and picks: window when every group
-    fits one task (≤ ``auto_threshold`` rows), stitched above it.
+    traces where a single group would serialize into one task.  The choice
+    between them is made by the caller (``pipeline.route_segmentation``).
 
-    Class entropy (C4) is computed per (ano_key, feature) from the same long
-    table — identical for every feature of a key, but grouping on the same
-    keys as segmentation keeps the join co-partitioned (no extra shuffle).
+    Class entropy (C4) comes from the n_ref/n_ano folded into the
+    segmentation aggregates — identical for every feature of a key, and no
+    second pass over ``melted``.
 
     rank is row_number over (reward desc, feature_order asc): the reference
     sorts its dict descending with Python's stable sort, so ties keep the
@@ -353,87 +327,38 @@ def single_feature_rewards(
     ``reward_round``: round rewards to N decimals BEFORE ranking — the
     cross-engine determinism boundary (float summation order differs between
     engines, and the downstream leap filter compares rewards for equality).
-
-    ``feature_names``: the trace's feature list in ``feature_order``
-    position order.  When provided, the ``feature`` STRING is dropped
-    before any shuffle — segmentation/aggregation key on the int
-    ``feature_order`` instead — and the name is re-derived from a literal
-    array lookup in the final (tiny, post-aggregation) projection: the hot
-    exchanges of the melted relation carry one int where they carried
-    int + string (guide §2.3 "narrower types" / "shuffle fewer bytes";
-    the name was 10-20% of the melted exchange's bytes on the events
-    trace).  Results are identical — ``feature_order`` is a bijection of
-    the name within one trace.
     """
-    fkey = "feature"
-    if feature_names is not None:
-        fkey = "feature_order"
-        if "feature" in melted.columns:
-            melted = melted.drop("feature")
-    if segmentation == "auto":
-        segmentation = resolve_segmentation(
-            melted, keys, auto_threshold, group_rows, feature_key=fkey
-        )
+    melted = melted.drop("feature")
     if segmentation == "stitched":
-        seg = segmentation_entropy_stitched(
-            melted, duplicate_mode, keys, class_counts=True, feature_key=fkey
-        )
-    elif segmentation == "window":
-        if duplicate_mode == "sorted":
-            # label IS type_data, and (value, type_data, timestamp) is the
-            # identical total order to (value, r) — skip worst_case_labels's
-            # per-(key, feature, value) ranking window: one full
-            # Exchange+Sort of the melted relation removed (guide §2.4)
-            seg = segmentation_entropy(
-                melted.withColumn("label", F.col("type_data")),
-                keys,
-                order_tail=["value", "type_data", "timestamp"],
-                class_counts=True,
-                feature_key=fkey,
-            )
-        elif duplicate_mode == "worst_case":
-            seg = segmentation_entropy(
-                worst_case_labels(melted, duplicate_mode, keys, fkey),
-                keys,
-                class_counts=True,
-                feature_key=fkey,
-            )
-        else:
-            raise ValueError(f"unknown duplicate_mode {duplicate_mode!r}")
-    else:
+        seg = segmentation_entropy_stitched(melted, duplicate_mode, keys)
+    elif segmentation != "window":
         raise ValueError(f"unknown segmentation {segmentation!r}")
-    # class entropy from the SAME aggregates (class_counts=True): every melted
-    # row lands in exactly one segment, so the folded n_ref/n_ano equal the
-    # old second groupBy over melted — one full pass and the seg⋈cls join
-    # removed (guide §2.3 "aggregate before you shuffle", §1.2 fewer passes).
-    # Expression trees written as SQL text, shaped EXACTLY like the former
-    # Column chain (p_a·log2(1/p_a) + p_r·log2(1/p_r) with p recomputed per
-    # term) so float results are bit-identical; selectExpr keeps the build
-    # to one py4j round-trip.
-    class_ent = (
-        "CASE WHEN n_ref > 0 AND n_ano > 0 THEN"
-        " (n_ano / (n_ref + n_ano))"
-        " * log2(1.0 / (n_ano / (n_ref + n_ano)))"
-        " + (n_ref / (n_ref + n_ano))"
-        " * log2(1.0 / (n_ref / (n_ref + n_ano))) END"
+    elif duplicate_mode == "sorted":
+        # label IS type_data, and (value, type_data, timestamp) is the
+        # identical total order to (value, r) — skip worst_case_labels's
+        # per-(key, feature, value) ranking window: one full Exchange+Sort
+        # of the melted relation removed (guide §2.4)
+        seg = segmentation_entropy(
+            melted.withColumn("label", F.col("type_data")),
+            keys,
+            ties=("type_data", "timestamp"),
+        )
+    else:
+        seg = segmentation_entropy(
+            worst_case_labels(melted, duplicate_mode, keys), keys
+        )
+    # expression trees written as SQL text: selectExpr keeps the build to
+    # one py4j round-trip
+    reward = (
+        f"(CASE WHEN n_ref > 0 AND n_ano > 0 THEN {CLASS_ENTROPY_SQL} END)"
+        " / seg_ent"
     )
-    reward = f"({class_ent}) / seg_ent"
     if reward_round is not None:
         reward = f"round({reward}, {int(reward_round)})"
-    if feature_names is not None:
-        # name re-derived from the 0-based order via a literal array lookup
-        # — this projection sits on the tiny post-aggregation relation
-        # (one row per (*keys, feature)), never on the melted exchange
-        from exstream_implementation_spark.operators.slicing import _sql_str
-
-        arr = ", ".join(_sql_str(n) for n in feature_names)
-        feature_expr = f"array({arr})[feature_order] AS feature"
-    else:
-        feature_expr = "feature"
     kq = ", ".join(f"`{c}`" for c in keys)
     return seg.selectExpr(
         *(f"`{c}`" for c in keys),
-        feature_expr,
+        feature_name_expr(feature_names),
         "feature_order",
         f"{reward} AS reward",
     ).selectExpr(

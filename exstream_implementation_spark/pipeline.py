@@ -45,7 +45,6 @@ from exstream_implementation_spark.operators.leap import (
 )
 from exstream_implementation_spark.operators.rewards import (
     AUTO_GROUP_THRESHOLD,
-    resolve_segmentation,
     single_feature_rewards,
 )
 from exstream_implementation_spark.operators.slicing import (
@@ -100,46 +99,48 @@ class ExplainConfig:
 def _explanations_for(
     melted: DataFrame,
     cfg: ExplainConfig,
-    keys=("ano_key",),
-    feature_names: list[str] | None = None,
+    keys: tuple[str, ...],
+    feature_names: list[str],
 ) -> DataFrame:
     """rewards → leap → assembly, all partitioned by *keys (run_id, ano_key):
     the operators take the composite key natively, so the six instability runs
-    ride the same shuffles as the main run.  ``feature_names`` (the melt's
-    column list) lets rewards key on the int ``feature_order`` and drop the
-    feature STRING from every melted exchange (guide §2.3)."""
+    ride the same shuffles as the main run.  Rewards key on the int
+    ``feature_order`` and map it back to the name from ``feature_names`` (the
+    melt's column list) after aggregation, so no melted exchange carries the
+    feature STRING (guide §2.3).  ``cfg.segmentation`` must already be
+    resolved to 'window' or 'stitched' (``route_segmentation``)."""
     rewards = single_feature_rewards(
         melted,
+        feature_names,
         cfg.duplicate_mode,
         cfg.reward_round,
         keys=keys,
         segmentation=cfg.segmentation,
-        feature_names=feature_names,
     )
     kept = reward_leap_filter(rewards, keys=keys)
     return assemble_explanations(kept, keys=keys)
 
 
 def route_segmentation(sliced: DataFrame, cfg: ExplainConfig) -> ExplainConfig:
-    """Resolve ``segmentation='auto'`` on the wide slice; explicit values pass
-    through.  Each wide row melts to exactly one row per feature, so the
-    per-(run, ano_key, feature) segmentation group size is bounded by the
-    per-ano_key wide count (instability runs sample DOWN from run 0).  The
-    probe is one count agg over the slice the caller caches anyway —
-    O(anomalies) rows back to the driver — and removes the last manual scale
-    decision: a raw 1 Hz year-long trace routes to the stitched engine
-    without the caller reading anything."""
+    """The one place the segmentation engine is chosen: resolve
+    ``segmentation='auto'`` on the wide slice; explicit values pass through.
+
+    'window' when the largest group fits one task (at most
+    ``cfg.segmentation_threshold`` rows), 'stitched' above it.  Each wide row
+    melts to exactly one row per feature, so the per-(run, ano_key, feature)
+    segmentation group size is bounded by the per-ano_key wide count
+    (instability runs sample DOWN from run 0).  The probe is one count agg
+    over the slice the caller caches anyway — O(anomalies) rows back to the
+    driver — and removes the last manual scale decision: a raw 1 Hz
+    year-long trace routes to the stitched engine without the caller reading
+    anything."""
     if cfg.segmentation != "auto":
         return cfg
     max_group = (
         sliced.groupBy("ano_key").count().agg(F.max("count")).collect()[0][0] or 0
     )
-    return replace(
-        cfg,
-        segmentation=resolve_segmentation(
-            sliced, threshold=cfg.segmentation_threshold, group_rows=max_group
-        ),
-    )
+    route = "stitched" if max_group > cfg.segmentation_threshold else "window"
+    return replace(cfg, segmentation=route)
 
 
 def explain_anomalies(

@@ -22,8 +22,10 @@ from exstream_implementation_spark.cache import session_persist
 
 from exstream_implementation_spark.operators.leap import reward_leap_filter
 from exstream_implementation_spark.operators.rewards import (
-    single_feature_rewards,
+    CLASS_ENTROPY_SQL,
+    feature_name_expr,
     segmentation_entropy,
+    single_feature_rewards,
 )
 from exstream_implementation_spark.plans.registry import query
 from exstream_implementation_spark.sources import load_table
@@ -315,27 +317,17 @@ def exstream_entropy_profile(spark, sf_dir):
     # sorted-mode fast path: label IS type_data and (value, type_data,
     # timestamp) is the identical total order to (value, r), so the
     # worst_case_labels ranking window (one full Exchange+Sort of melted) is
-    # skipped; class_counts folds n_ref/n_ano into the same segment
-    # aggregates, removing the second melted pass and the seg⋈cls join.
-    # feature_key='feature_order': the melted exchange carries the int key
-    # only; the name is re-derived from a literal array in the final
-    # (5-row) projection (guide §2.3)
+    # skipped; n_ref/n_ano come folded into the same segment aggregates
     seg = segmentation_entropy(
         melted.drop("feature").withColumn("label", F.col("type_data")),
-        order_tail=["value", "type_data", "timestamp"],
-        class_counts=True,
-        feature_key="feature_order",
+        ties=("type_data", "timestamp"),
     )
-    names = ", ".join(f"'{t}_n'" for t in EVENT_TYPES)
     return seg.selectExpr(
-        f"array({names})[feature_order] AS feature",
+        feature_name_expr([f"{t}_n" for t in EVENT_TYPES]),
         "round(seg_ent, 6) AS seg_ent",
         "n_ref",
         "n_ano",
-        "round((n_ano / (n_ref + n_ano))"
-        " * log2(1.0 / (n_ano / (n_ref + n_ano)))"
-        " + (n_ref / (n_ref + n_ano))"
-        " * log2(1.0 / (n_ref / (n_ref + n_ano))), 6) AS class_ent",
+        f"round({CLASS_ENTROPY_SQL}, 6) AS class_ent",
     )
 
 

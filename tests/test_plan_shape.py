@@ -7,6 +7,8 @@ distributed top-k (TakeOrderedAndProject), and the absence of
 single-partition window exchanges in the hot paths.
 """
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,9 +17,6 @@ from exstream_implementation_spark.plans import relational as rel
 from exstream_implementation_spark.plans import similarity as sim
 from exstream_implementation_spark.plans import text as textq
 from exstream_implementation_spark.plans import windows as winq
-
-# >60 s integration suite: excluded from the quick tier (README "Run")
-pytestmark = pytest.mark.slow
 
 SF_DIR = "/root/testdata/sf0.01"
 
@@ -95,7 +94,8 @@ def test_groupby_has_partial_aggregation(spark):
 
 def test_exstream_rewards_windows_are_keyed(spark):
     """The C6/C7 reward computation must partition every window by
-    (ano_key, feature) — never a global sort.  (The catalog's single-anomaly
+    (ano_key, feature_order) — never a global sort, and never by the
+    feature name string.  (The catalog's single-anomaly
     query constant-folds ano_key to one partition, so build a genuine
     multi-anomaly melted frame here.)"""
     from exstream_implementation_spark.operators.rewards import (
@@ -114,9 +114,12 @@ def test_exstream_rewards_windows_are_keyed(spark):
         "ano_key string, type_data int, timestamp long, feature string, "
         "feature_order int, value double",
     )
-    plan = plan_str(single_feature_rewards(melted), mode="simple")
+    plan = plan_str(
+        single_feature_rewards(melted, [f"f{i}" for i in range(4)]),
+        mode="simple",
+    )
     assert "SinglePartition" not in plan
-    assert "hashpartitioning(ano_key" in plan
+    assert re.search(r"hashpartitioning\(ano_key#\d+, feature_order#\d+", plan)
 
 
 def test_global_row_number_stays_distributed(spark):

@@ -176,10 +176,8 @@ RETAINED_UNREACHED = frozenset(
     for m in (
         "operators.approx",
         "operators.bpe",
-        "operators.kll",
         "operators.pca",
         "operators.profile",
-        "operators.sharding",
         "operators.snapshots",
         "operators.sq",
         "operators.textstats",

@@ -43,7 +43,9 @@ def melted_from_case(spark, case):
 @pytest.mark.parametrize("name", sorted(GOLDEN))
 def test_rewards_and_leap_match_reference(spark, name):
     case = GOLDEN[name]
-    rewards = single_feature_rewards(melted_from_case(spark, case))
+    rewards = single_feature_rewards(
+        melted_from_case(spark, case), list(case["refs"])
+    )
     got = {r["feature"]: r for r in rewards.collect()}
     assert set(got) == set(case["rewards"])
     for f, want in case["rewards"].items():

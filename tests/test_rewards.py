@@ -32,7 +32,9 @@ def melt_rows(spark, data):
 
 
 def spark_rewards(spark, data, mode="sorted"):
-    df = single_feature_rewards(melt_rows(spark, data), duplicate_mode=mode)
+    df = single_feature_rewards(
+        melt_rows(spark, data), list(data), duplicate_mode=mode
+    )
     return {
         r["feature"]: (r["reward"], r["rank"])
         for r in df.collect()
@@ -88,6 +90,34 @@ def test_property_random_matches_oracle(spark):
         for feat, (values, labels) in data.items():
             want = oracle.reward(values, labels, mode)
             assert got[feat][0] == pytest.approx(want, rel=1e-9), (mode, feat)
+
+
+@pytest.mark.parametrize("segmentation", ["window", "stitched"])
+@pytest.mark.parametrize("mode", ["sorted", "worst_case"])
+def test_missing_value_sorts_last_like_pandas_nan(spark, mode, segmentation):
+    """A missing value (Spark's CSV reader turns an empty cell into NULL)
+    must segment like the reference's NaN, which pandas sorts last:
+    references 1..5 and anomalies 10, 11, 12, <missing> give the label
+    sequence [0]*5 + [1]*4 — (5/9)·ln(9/5) segmentation entropy."""
+
+    def reward(missing):
+        values = [(0, float(v)) for v in range(1, 6)]
+        values += [(1, v) for v in (10.0, 11.0, 12.0, missing)]
+        df = spark.createDataFrame(
+            [("a1", td, ts, "f", 0, v) for ts, (td, v) in enumerate(values)],
+            "ano_key string, type_data int, timestamp long, feature string, "
+            "feature_order int, value double",
+        )
+        (row,) = single_feature_rewards(
+            df, feature_names=["f"], duplicate_mode=mode, segmentation=segmentation
+        ).collect()
+        return row["reward"]
+
+    class_ent = (5 / 9) * math.log2(9 / 5) + (4 / 9) * math.log2(9 / 4)
+    want = class_ent / ((5 / 9) * math.log(9 / 5))
+    assert want == pytest.approx(3.035, abs=1e-3)
+    assert reward(float("nan")) == pytest.approx(want, rel=1e-12)
+    assert reward(None) == pytest.approx(want, rel=1e-12)
 
 
 def test_leap_filter_golden(spark):
@@ -153,7 +183,9 @@ def test_fuzz_rewards_match_oracle_both_modes(spark):
         )
         got = {
             r["ano_key"]: r["reward"]
-            for r in single_feature_rewards(df, duplicate_mode=mode).collect()
+            for r in single_feature_rewards(
+                df, ["f"], duplicate_mode=mode
+            ).collect()
         }
         for key, (values, labels) in cases.items():
             want = oracle.reward(values, labels, mode=mode)

@@ -14,7 +14,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from exstream_implementation_spark.operators.rewards import (
-    resolve_segmentation,
     segmentation_entropy,
     segmentation_entropy_stitched,
     single_feature_rewards,
@@ -26,7 +25,7 @@ from tests.test_rewards import melt_rows
 
 def _seg_map(df):
     return {
-        tuple(r[k] for k in ("ano_key", "feature")): (r["seg_ent"], r["feature_order"])
+        (r["ano_key"], r["feature_order"]): (r["seg_ent"], r["n_ano"], r["n_ref"])
         for r in df.collect()
     }
 
@@ -50,7 +49,7 @@ def test_stitched_matches_window_random(spark, mode):
     assert set(got) == set(want)
     for k in want:
         assert got[k][0] == pytest.approx(want[k][0], rel=1e-12, abs=1e-15), k
-        assert got[k][1] == want[k][1]
+        assert got[k][1:] == want[k][1:]
 
 
 def test_stitched_single_segment_and_single_row(spark):
@@ -67,8 +66,8 @@ def test_stitched_single_segment_and_single_row(spark):
     got = _seg_map(segmentation_entropy_stitched(melted, "sorted"))
     want = _seg_map(segmentation_entropy(worst_case_labels(melted, "sorted")))
     assert got == pytest.approx(want)
-    assert got[("a1", "allsame")][0] == 0.0
-    assert got[("a1", "one")][0] == 0.0
+    assert got[("a1", 2)][0] == 0.0  # allsame
+    assert got[("a1", 1)][0] == 0.0  # one
 
 
 def test_stitched_composite_keys(spark):
@@ -96,13 +95,13 @@ def test_stitched_composite_keys(spark):
     )
     keys = ("run_id", "ano_key")
     want = {
-        (r["run_id"], r["feature"]): r["seg_ent"]
+        (r["run_id"], r["feature_order"]): r["seg_ent"]
         for r in segmentation_entropy(
             worst_case_labels(melted, "sorted", keys), keys
         ).collect()
     }
     got = {
-        (r["run_id"], r["feature"]): r["seg_ent"]
+        (r["run_id"], r["feature_order"]): r["seg_ent"]
         for r in segmentation_entropy_stitched(melted, "sorted", keys).collect()
     }
     assert set(got) == set(want)
@@ -139,26 +138,32 @@ def test_rewards_stitched_engine_parity_sf0001(spark, mode):
         "label_row int, trace_id string, ano_id int, ano_type string, "
         "ref_start long, ref_end long, ano_start long, ano_end long",
     )
-    melted = melt_features(
-        slice_intervals(trace, labels),
-        [c for c in trace.columns if c not in ("timestamp", "trace_id")],
-    )
+    features = [c for c in trace.columns if c not in ("timestamp", "trace_id")]
+    melted = melt_features(slice_intervals(trace, labels), features)
     want = {
         r["feature"]: (round(r["reward"], 9), r["rank"])
-        for r in single_feature_rewards(melted, duplicate_mode=mode).collect()
+        for r in single_feature_rewards(
+            melted, features, duplicate_mode=mode
+        ).collect()
     }
     got = {
         r["feature"]: (round(r["reward"], 9), r["rank"])
         for r in single_feature_rewards(
-            melted, duplicate_mode=mode, segmentation="stitched"
+            melted, features, duplicate_mode=mode, segmentation="stitched"
         ).collect()
     }
     assert got == want
 
 
 def test_auto_segmentation_routing_and_parity(spark):
-    """segmentation='auto' resolves to window below the threshold and to
-    stitched above it, and both routes return the window engine's rewards."""
+    """segmentation='auto' resolves (pipeline.route_segmentation) to window
+    below the threshold and to stitched above it, and both routes return the
+    window engine's rewards."""
+    from exstream_implementation_spark.pipeline import (
+        ExplainConfig,
+        route_segmentation,
+    )
+
     rng = random.Random(7)
     n = 40
     melted = melt_rows(
@@ -170,21 +175,25 @@ def test_auto_segmentation_routing_and_parity(spark):
             )
         },
     )
-    # the group has 40 rows: threshold 100 → window, threshold 10 → stitched
-    assert resolve_segmentation(melted, threshold=100) == "window"
-    assert resolve_segmentation(melted, threshold=10) == "stitched"
-    # the hint path skips the probe entirely
-    assert resolve_segmentation(melted, threshold=100, group_rows=1_000) == "stitched"
+    # one feature, so the per-ano_key count the router probes IS the group
+    # size: 40 rows, threshold 100 → window, threshold 10 → stitched
+    routes = {
+        threshold: route_segmentation(
+            melted, ExplainConfig(segmentation_threshold=threshold)
+        ).segmentation
+        for threshold in (100, 10)
+    }
+    assert routes == {100: "window", 10: "stitched"}
 
     want = {
         r["feature"]: (round(r["reward"], 9), r["rank"])
-        for r in single_feature_rewards(melted).collect()
+        for r in single_feature_rewards(melted, ["f0"]).collect()
     }
-    for threshold in (100, 10):
+    for threshold, route in routes.items():
         got = {
             r["feature"]: (round(r["reward"], 9), r["rank"])
             for r in single_feature_rewards(
-                melted, segmentation="auto", auto_threshold=threshold
+                melted, ["f0"], segmentation=route
             ).collect()
         }
         assert got == want, threshold

@@ -416,7 +416,10 @@ def test_online_scorer_end_to_end_matches_batch(spark, tmp_path):
     from exstream_implementation_spark.operators.rewards import (
         single_feature_rewards,
     )
-    from exstream_implementation_spark.plans.exstream_sql import _events_melted
+    from exstream_implementation_spark.plans.exstream_sql import (
+        EVENT_TYPES,
+        _events_melted,
+    )
     from exstream_implementation_spark.streaming.online_scorer import (
         start_online_reward_scorer,
     )
@@ -424,7 +427,9 @@ def test_online_scorer_end_to_end_matches_batch(spark, tmp_path):
     melted = _events_melted(spark, SF_DIR)
 
     # batch side: C7 (sorted mode) → round → C8 → assembly
-    rewards = single_feature_rewards(melted).withColumn(
+    rewards = single_feature_rewards(
+        melted, [f"{t}_n" for t in EVENT_TYPES]
+    ).withColumn(
         "reward", F.round("reward", 6)
     )
     want = {

@@ -226,11 +226,11 @@ def _rewards_raw(segmentation):
             "label_row int, trace_id string, ano_id int, ano_type string, "
             "ref_start long, ref_end long, ano_start long, ano_end long",
         )
-        melted = melt_features(
-            slice_intervals(trace, labels),
-            [c for c in trace.columns if c not in ("timestamp", "trace_id")],
+        features = [c for c in trace.columns if c not in ("timestamp", "trace_id")]
+        melted = melt_features(slice_intervals(trace, labels), features)
+        return single_feature_rewards(
+            melted, features, segmentation=segmentation
         )
-        return single_feature_rewards(melted, segmentation=segmentation)
 
     return q
 
