@@ -12,7 +12,8 @@ the same four result tables:
         --data-folder data/folder_1 --label-filename labels \
         --out-dir data/folder_1_results [--fmt csv|parquet] \
         [--correlation-threshold 0.6] [--max-distance 40.0] \
-        [--instability-runs 5] [--seed 42]
+        [--instability-runs 5] [--seed 42] [--sample-method xxhash64|md5] \
+        [--shuffle-partitions N]
 
 Differences from the reference, by design: all four configs share ONE cached
 slice (the reference re-reads and re-slices the CSVs per config), and the
@@ -43,12 +44,6 @@ def main(argv: list[str] | None = None) -> int:
         "--sample-method", choices=["xxhash64", "md5"], default="xxhash64",
         help="instability sampler: xxhash64 (production) or md5 "
         "(engine-reproducible, for oracle cross-checks)",
-    )
-    ap.add_argument(
-        "--segmentation", choices=["auto", "window", "stitched"], default="auto",
-        help="segmentation engine: auto (size-based routing, default), window "
-        "(bucketed traces) or stitched (raw high-frequency traces — no "
-        "single-task group sort)",
     )
     ap.add_argument("--shuffle-partitions", type=int, default=None)
     args = ap.parse_args(argv)
@@ -92,7 +87,6 @@ def main(argv: list[str] | None = None) -> int:
         instability_runs=args.instability_runs,
         seed=args.seed,
         sample_method=args.sample_method,
-        segmentation=args.segmentation,
     )
     out = run_config_grid(traces, labels, args.out_dir, fmt=args.fmt, base=cfg)
     for name, df in out.items():

@@ -65,13 +65,11 @@ def correlated_features_filter(
     sliced: DataFrame,
     features: list[str],
     threshold: float,
-    cluster: bool,
 ) -> list[str]:
     """Surviving feature list, preserving original column order
     (reference exstream/correlation_filtering.py:7-67; the nested-list append
-    bug at :66 — quirk Q1 — is intentionally not replicated)."""
-    if not cluster:
-        return list(features)
+    bug at :66 — quirk Q1 — is intentionally not replicated).  Callers skip
+    it when clustering is off."""
     corr = correlation_matrix(sliced, features)
     clusters = correlated_feature_clusters(corr, features, threshold)
     order = {f: i for i, f in enumerate(features)}

@@ -39,6 +39,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+# the reference keeps a feature whose reference shape stumpy.match finds at
+# most this many times (reference exstream/false_positive_filtering.py:36-46,
+# before the :45-46 fewest-matches fallback)
+KEEP_THRESHOLD = 5
+
+# distance_profile_stats rounds distances to this many decimals, as the
+# exstream_fp_profile oracle SQL does (round(d, 4))
+PROFILE_DECIMALS = 4
+
 
 def mass_distance_profile(query: np.ndarray, ts: np.ndarray) -> np.ndarray:
     """Z-normalized Euclidean distance between ``query`` and every window of
@@ -120,14 +129,14 @@ def count_matches(query: np.ndarray, ts: np.ndarray, max_distance: float) -> int
 def distance_profile_stats(
     melted: DataFrame,
     max_distance: float = 40.0,
-    round_decimals: int = 4,
 ) -> DataFrame:
     """Oracle-checkable projection of C3: per (ano_key, feature), statistics
     of the full z-normalized distance profile (pattern = the anomaly's
     reference slice, series = pooled references — quirk Q4 orientation)
     WITHOUT the greedy exclusion-zone match selection, which is inherently
-    sequential and stays golden-tested.  Distances are rounded before the
-    threshold compare so the FFT path and a naive O(n·m) SQL evaluation agree.
+    sequential and stays golden-tested.  Distances are rounded to
+    ``PROFILE_DECIMALS`` before the threshold compare so the FFT path and a
+    naive O(n·m) SQL evaluation agree.
     """
     refs = melted.filter(F.col("type_data") == 0).select(
         "ano_key", "timestamp", "feature", "value"
@@ -145,13 +154,13 @@ def distance_profile_stats(
         for key, grp in pdf.groupby("ano_key", sort=True):
             pattern = grp["value"].to_numpy(dtype=np.float64)
             d = mass_distance_profile(pattern, pooled)
-            dr = np.round(d, round_decimals)
+            dr = np.round(d, PROFILE_DECIMALS)
             rows.append(
                 (
                     key,
                     feature,
                     int((dr <= max_distance).sum()),
-                    float(np.round(d.min(), round_decimals)),
+                    float(np.round(d.min(), PROFILE_DECIMALS)),
                     int(d.size),
                 )
             )
@@ -166,13 +175,12 @@ def distance_profile_stats(
 def false_positive_filter(
     melted: DataFrame,
     max_distance: float = 40.0,
-    keep_threshold: int = 5,
     keys: tuple[str, ...] = (),
 ) -> DataFrame:
     """melted long table → (*keys, ano_key, feature, feature_order,
     n_matches, kept).
 
-    ``kept`` replicates the reference's rule: n_matches ≤ keep_threshold, with
+    ``kept`` replicates the reference's rule: n_matches ≤ KEEP_THRESHOLD, with
     the fewest-matches fallback when an anomaly would keep nothing.
 
     ``keys`` are extra grouping columns (e.g. ``run_id`` for the instability
@@ -217,7 +225,7 @@ def false_positive_filter(
 
     w_key = Window.partitionBy(*keys, "ano_key")
     counts = counts.withColumn(
-        "kept_primary", (F.col("n_matches") <= F.lit(keep_threshold)).cast("int")
+        "kept_primary", (F.col("n_matches") <= F.lit(KEEP_THRESHOLD)).cast("int")
     )
     counts = counts.withColumn("any_kept", F.max("kept_primary").over(w_key))
     # fallback: argmin n_matches, ties by column order (np.argmin = first

@@ -41,6 +41,9 @@ where n0/n1 are the run's class counts and r the within-run position — no
 UDF, no Python loop, whole-stage codegen end to end; one shuffle keyed
 (ano_key, feature_order, value), one keyed (ano_key, feature_order).
 
+Segmentation sorts each (ano_key, feature_order) group in one window
+partition: the reference's one sort per (anomaly, feature).
+
 A missing value (SQL NULL) sorts after every number, as pandas sorts NaN
 last (``sort_values`` default ``na_position='last'``), so a gap in a trace
 segments exactly like the reference's NaN.
@@ -55,15 +58,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from exstream_implementation_spark.operators.ranking import global_lag
 from exstream_implementation_spark.operators.slicing import _sql_str
-
-# A (key, feature) group above this many rows routes through the stitched
-# engine (pipeline.route_segmentation): the window form sorts the whole group
-# in ONE task, so the threshold is "largest single-task sort we accept".  1M
-# doubles sort in well under a second per task and fit any sane executor; a
-# raw 1 Hz year-long trace (~31M rows/group) is 30× past it and must stitch.
-AUTO_GROUP_THRESHOLD = 1_000_000
 
 # C4 class entropy p_a·log2(1/p_a) + p_r·log2(1/p_r) over the interval row
 # counts, as SQL text with p recomputed per term (the shape the oracle hashes
@@ -149,7 +144,7 @@ def segmentation_entropy(
     (``r`` IS row_number over (type_data, timestamp) within equal values) —
     which lets them skip ``worst_case_labels``'s per-(key, feature, value)
     window entirely: one full Exchange+Sort of the melted relation removed
-    (guide §2.4; the stitched engine has always used this ordering).
+    (guide §2.4).
 
     ``n_ref``/``n_ano`` are folded into the SAME segment aggregates (each
     melted row belongs to exactly one segment, so Σ per-segment type_data
@@ -192,109 +187,12 @@ def segmentation_entropy(
     )
 
 
-def segmentation_entropy_stitched(
-    melted: DataFrame,
-    duplicate_mode: str = "sorted",
-    keys: tuple[str, ...] = ("ano_key",),
-) -> DataFrame:
-    """Distributed twin of ``segmentation_entropy`` — same output, no
-    per-(key, feature) single-partition window.
-
-    The window form serializes each feature's full row set into ONE task
-    (rewards path parallelism floor — fine for hourly-bucketed traces where
-    groups are O(buckets), fatal for a raw 1 Hz trace with a year-long
-    interval: ~31M rows in one sort).  This form range-partitions the GLOBAL
-    sort order (*keys, feature_order, value, …) and stitches partition
-    boundaries with ``operators.ranking.global_lag`` (O(#partitions) boundary
-    rows, never O(rows)), so a single huge group spreads across all
-    executors:
-
-      1. global stitched lag of (group, label) over the segmentation order →
-         boundary flags exactly as the window's ``lag`` would emit them;
-      2. segment lengths WITHOUT a cumulative seg_id: a segment spans from
-         its boundary row's global rn to the next boundary's rn (second
-         stitched lag over boundary rows only, descending order → lead);
-         the group's last segment ends at the group's max rn + 1;
-      3. the same Σ (len/N)·ln(N/len) fold excluding the final segment
-         (quirk Q2), now over the segs relation.
-
-    ``sorted`` mode orders by (value, type_data, timestamp) — equivalent to
-    the window form's (value, r) since r is row_number over (type_data,
-    timestamp) within equal values, and equal-key ties carry equal labels so
-    boundary flags are tie-order invariant.  ``worst_case`` mode needs the
-    within-duplicate position r for its closed-form labels; that window is
-    keyed by (…, feature_order, value) — per-VALUE groups, already
-    fine-grained.
-    """
-    if duplicate_mode == "sorted":
-        labeled = melted.withColumn("label", F.col("type_data"))
-        ties = [F.col("type_data"), F.col("timestamp")]
-    else:
-        labeled = worst_case_labels(melted, duplicate_mode, keys)
-        ties = [F.col("r")]
-    group = [*keys, "feature_order"]
-    order = [*[F.col(c) for c in group], F.col("value").asc_nulls_last(), *ties]
-
-    tagged = labeled.withColumn("__gl", F.struct(*group, "label"))
-    lagged = global_lag(tagged, order, "__gl", rn_col="__rn", lag_col="__prev")
-    # eqNullSafe: a NULL group key must compare as "same group", not poison
-    # the boundary flag into NULL (melted traces never carry NULL keys, but
-    # the operator is public API)
-    same_group = F.lit(True)
-    for c in group:
-        same_group = same_group & F.col("__prev")[c].eqNullSafe(F.col(c))
-    boundary = (
-        F.col("__prev").isNull()
-        | ~same_group
-        | (F.col("__prev")["label"] != F.col("label"))
-    )
-    flagged = lagged.withColumn("__b", boundary)
-
-    gstats = flagged.groupBy(*group).agg(
-        F.max("__rn").alias("__gmax"),
-        F.count(F.lit(1)).alias("n_total"),
-        F.sum("type_data").alias("n_ano"),
-    )
-    bnds = flagged.filter("__b").select(*group, "__rn")
-    # lead(rn) within group via a DESCENDING stitched lag over boundary rows
-    bnds = bnds.withColumn("__gr", F.struct(*group, "__rn"))
-    nxt = global_lag(
-        bnds,
-        [*[F.col(c).desc() for c in group], F.col("__rn").desc()],
-        "__gr",
-        rn_col="__brn",
-        lag_col="__nxt",
-    )
-    same_next = F.lit(True)
-    for c in group:
-        same_next = same_next & F.col("__nxt")[c].eqNullSafe(F.col(c))
-    segs = (
-        nxt.join(gstats, group)
-        .withColumn(
-            "__seg_end",
-            F.when(
-                F.col("__nxt").isNotNull() & same_next, F.col("__nxt")["__rn"]
-            ).otherwise(F.col("__gmax") + 1),
-        )
-        .withColumn("seg_len", F.col("__seg_end") - F.col("__rn"))
-        .withColumn("__is_last", F.col("__seg_end") == F.col("__gmax") + 1)
-    )
-    p = F.col("seg_len") / F.col("n_total")
-    term = F.when(~F.col("__is_last"), p * F.log(1.0 / p)).otherwise(F.lit(0.0))
-    return segs.groupBy(*group).agg(
-        F.sum(term).alias("seg_ent"),
-        F.first("n_ano").alias("n_ano"),
-        (F.first("n_total") - F.first("n_ano")).alias("n_ref"),
-    )
-
-
 def single_feature_rewards(
     melted: DataFrame,
     feature_names: list[str],
     duplicate_mode: str = "sorted",
     reward_round: int | None = None,
     keys: tuple[str, ...] = ("ano_key",),
-    segmentation: str = "window",
 ) -> DataFrame:
     """C7 — reward(f) = class_ent / seg_ent per (ano_key, feature), ranked.
 
@@ -307,13 +205,6 @@ def single_feature_rewards(
     fewer bytes"; the name was 10-20% of the melted exchange's bytes on the
     events trace).  ``feature_order`` is a bijection of the name within one
     trace, so results do not depend on the key.
-
-    ``segmentation='window'`` (default) sorts each (key, feature) group in
-    one window partition — lowest overhead when groups are O(trace buckets).
-    ``'stitched'`` routes through ``segmentation_entropy_stitched`` — same
-    result, range-partitioned + boundary-stitched, for raw high-frequency
-    traces where a single group would serialize into one task.  The choice
-    between them is made by the caller (``pipeline.route_segmentation``).
 
     Class entropy (C4) comes from the n_ref/n_ano folded into the
     segmentation aggregates — identical for every feature of a key, and no
@@ -329,11 +220,7 @@ def single_feature_rewards(
     engines, and the downstream leap filter compares rewards for equality).
     """
     melted = melted.drop("feature")
-    if segmentation == "stitched":
-        seg = segmentation_entropy_stitched(melted, duplicate_mode, keys)
-    elif segmentation != "window":
-        raise ValueError(f"unknown segmentation {segmentation!r}")
-    elif duplicate_mode == "sorted":
+    if duplicate_mode == "sorted":
         # label IS type_data, and (value, type_data, timestamp) is the
         # identical total order to (value, r) — skip worst_case_labels's
         # per-(key, feature, value) ranking window: one full Exchange+Sort

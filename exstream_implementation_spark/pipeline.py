@@ -43,10 +43,7 @@ from exstream_implementation_spark.operators.leap import (
     assemble_explanations,
     reward_leap_filter,
 )
-from exstream_implementation_spark.operators.rewards import (
-    AUTO_GROUP_THRESHOLD,
-    single_feature_rewards,
-)
+from exstream_implementation_spark.operators.rewards import single_feature_rewards
 from exstream_implementation_spark.operators.slicing import (
     melt_features,
     slice_intervals,
@@ -73,17 +70,6 @@ class ExplainConfig:
     # runs — and therefore the instability metric — are oracle-reproducible
     # in DuckDB; same trade as plans.dedup.sample_mix)
     sample_method: str = "xxhash64"
-    # 'auto' (default) measures the largest per-anomaly slice on the cached
-    # wide table and routes: 'window' = per-(key, feature) window sort (lowest
-    # overhead; groups are O(trace buckets) on bucketed traces); 'stitched' =
-    # range-partitioned boundary-stitched segmentation (operators.rewards.
-    # segmentation_entropy_stitched) for raw high-frequency traces where one
-    # (anomaly, feature) group would serialize into a single task.  Both
-    # explicit values remain accepted overrides.
-    segmentation: str = "auto"
-    # 'auto' routing threshold: largest (anomaly, feature) group the window
-    # engine may sort in one task
-    segmentation_threshold: int = AUTO_GROUP_THRESHOLD
     # cache scope for the sliced table: "query" (default — released when the
     # next catalog query starts) or "session" (shared across queries via
     # CacheManager plan-matching, like the melted-events relation).  The
@@ -107,40 +93,12 @@ def _explanations_for(
     ride the same shuffles as the main run.  Rewards key on the int
     ``feature_order`` and map it back to the name from ``feature_names`` (the
     melt's column list) after aggregation, so no melted exchange carries the
-    feature STRING (guide §2.3).  ``cfg.segmentation`` must already be
-    resolved to 'window' or 'stitched' (``route_segmentation``)."""
+    feature STRING (guide §2.3)."""
     rewards = single_feature_rewards(
-        melted,
-        feature_names,
-        cfg.duplicate_mode,
-        cfg.reward_round,
-        keys=keys,
-        segmentation=cfg.segmentation,
+        melted, feature_names, cfg.duplicate_mode, cfg.reward_round, keys=keys
     )
     kept = reward_leap_filter(rewards, keys=keys)
     return assemble_explanations(kept, keys=keys)
-
-
-def route_segmentation(sliced: DataFrame, cfg: ExplainConfig) -> ExplainConfig:
-    """The one place the segmentation engine is chosen: resolve
-    ``segmentation='auto'`` on the wide slice; explicit values pass through.
-
-    'window' when the largest group fits one task (at most
-    ``cfg.segmentation_threshold`` rows), 'stitched' above it.  Each wide row
-    melts to exactly one row per feature, so the per-(run, ano_key, feature)
-    segmentation group size is bounded by the per-ano_key wide count
-    (instability runs sample DOWN from run 0).  The probe is one count agg
-    over the slice the caller caches anyway — O(anomalies) rows back to the
-    driver — and removes the last manual scale decision: a raw 1 Hz
-    year-long trace routes to the stitched engine without the caller reading
-    anything."""
-    if cfg.segmentation != "auto":
-        return cfg
-    max_group = (
-        sliced.groupBy("ano_key").count().agg(F.max("count")).collect()[0][0] or 0
-    )
-    route = "stitched" if max_group > cfg.segmentation_threshold else "window"
-    return replace(cfg, segmentation=route)
 
 
 def explain_anomalies(
@@ -155,8 +113,6 @@ def explain_anomalies(
     sliced = slice_intervals(traces, labels).transform(
         lambda df: tracked_persist(df, scope=cfg.slice_cache_scope)
     )
-
-    cfg = route_segmentation(sliced, cfg)
 
     # run 0 = main; runs 1..k = instability samples (reference
     # script_1.py:227-238).  One exploded run dimension over the cached slice
@@ -194,7 +150,7 @@ def explain_anomalies(
         for i in range(cfg.instability_runs + 1):
             src = sliced if i == 0 else all_runs.filter(F.col("run_id") == i)
             per_run_feats[i] = correlated_features_filter(
-                src, features, cfg.correlation_threshold, cluster=True
+                src, features, cfg.correlation_threshold
             )
         surv_rows = [
             (i, f) for i, feats in per_run_feats.items() for f in feats
@@ -303,16 +259,6 @@ def run_config_grid(
     from exstream_implementation_spark.sources import write_results
 
     base = base or ExplainConfig()
-    # resolve segmentation='auto' ONCE for the whole grid: the slice — and
-    # therefore the largest per-anomaly group — is identical across the four
-    # configs, so one probe replaces four.  The probe runs on the slice
-    # cached under the configs' own scope, so it fills the cache the four
-    # explain calls then read (same plan) instead of re-scanning the trace.
-    if base.segmentation == "auto":
-        sliced = slice_intervals(traces, labels).transform(
-            lambda df: tracked_persist(df, scope=base.slice_cache_scope)
-        )
-        base = route_segmentation(sliced, base)
     grid = {
         "explanations": (False, False),
         "explanations_cluster": (True, False),

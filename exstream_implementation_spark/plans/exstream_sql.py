@@ -847,7 +847,7 @@ def exstream_fp_profile(spark, sf_dir):
         slice_intervals(trace, labels),
         feature_columns(trace.columns),
     )
-    return distance_profile_stats(melted, _FP_MAX_DIST, round_decimals=4)
+    return distance_profile_stats(melted, _FP_MAX_DIST)
 
 
 # --- C2: correlation clustering — connected components of |corr| > τ over

@@ -12,7 +12,7 @@ Identity used (n = rows seen, l_i = closed-segment lengths):
 so state is just (n, Σ l_i, Σ l_i·ln l_i, open-run label, open-run length) —
 state-store size is O(#keys), independent of stream length.
 
-Ordering: rows are scanned in ``order_col`` order *within* each micro-batch;
+Ordering: rows are scanned in ``seq`` order *within* each micro-batch;
 cross-batch order is arrival order.  Feed event-time-sorted batches (e.g. the
 file source replaying time-partitioned files) for exact batch parity.
 """
@@ -78,25 +78,17 @@ def _entropy(n, closed_len, closed_llnl):
     return (math.log(n) * closed_len - closed_llnl) / n
 
 
-def online_segmentation_entropy(
-    df: DataFrame,
-    key_col: str = "key",
-    order_col: str = "seq",
-    label_col: str = "label",
-    timeout_ms: int | None = None,
-) -> DataFrame:
+def online_segmentation_entropy(df: DataFrame) -> DataFrame:
     """Apply the online C6 operator to a (streaming or batch) DataFrame with
-    columns ``(key_col, order_col, label_col)``; emits one row per key per
-    micro-batch in update mode."""
+    columns ``(key, seq, label)``; emits one row per key per micro-batch in
+    update mode."""
 
     def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
         st = state.get if state.exists else (0, 0, 0.0, 0, -1, 0)
         for pdf in pdf_iter:
-            pdf = pdf.sort_values(order_col, kind="mergesort")
-            st = _scan(pdf[label_col].to_numpy(), st)
+            pdf = pdf.sort_values("seq", kind="mergesort")
+            st = _scan(pdf["label"].to_numpy(), st)
         state.update(st)
-        if timeout_ms is not None:
-            state.setTimeoutDuration(timeout_ms)
         n, closed_len, closed_llnl, closed_segs = st[0], st[1], st[2], st[3]
         yield pd.DataFrame(
             {
@@ -107,17 +99,12 @@ def online_segmentation_entropy(
             }
         )
 
-    timeout = (
-        GroupStateTimeout.ProcessingTimeTimeout
-        if timeout_ms is not None
-        else GroupStateTimeout.NoTimeout
-    )
-    return df.groupBy(key_col).applyInPandasWithState(
+    return df.groupBy("key").applyInPandasWithState(
         fn,
         outputStructType=OUTPUT_SCHEMA,
         stateStructType=STATE_SCHEMA,
         outputMode="update",
-        timeoutConf=timeout,
+        timeoutConf=GroupStateTimeout.NoTimeout,
     )
 
 
@@ -152,14 +139,10 @@ REWARD_STATE_SCHEMA = StructType(
 )
 
 
-def online_feature_rewards(
-    df: DataFrame,
-    key_col: str = "key",
-    order_col: str = "seq",
-    label_col: str = "label",
-) -> DataFrame:
-    """Online C7: per-key reward = class_entropy / segmentation_entropy over
-    the ARRIVAL-ORDERED label sequence, maintained incrementally forever.
+def online_feature_rewards(df: DataFrame) -> DataFrame:
+    """Online C7 over columns ``(key, seq, label)``: per-key reward =
+    class_entropy / segmentation_entropy over the ARRIVAL-ORDERED label
+    sequence, maintained incrementally forever.
 
     Semantic note (vs batch ``operators.rewards``): batch C7 sorts the rows by
     feature VALUE before segmenting (reference
@@ -176,8 +159,8 @@ def online_feature_rewards(
         st = state.get if state.exists else (0, 0, 0.0, 0, -1, 0, 0)
         c6, n_ano = st[:6], st[6]
         for pdf in pdf_iter:
-            pdf = pdf.sort_values(order_col, kind="mergesort")
-            labs = pdf[label_col].to_numpy()
+            pdf = pdf.sort_values("seq", kind="mergesort")
+            labs = pdf["label"].to_numpy()
             c6 = _scan(labs, c6)
             n_ano += int((labs == 1).sum())
         state.update((*c6, n_ano))
@@ -201,7 +184,7 @@ def online_feature_rewards(
             }
         )
 
-    return df.groupBy(key_col).applyInPandasWithState(
+    return df.groupBy("key").applyInPandasWithState(
         fn,
         outputStructType=REWARD_OUTPUT_SCHEMA,
         stateStructType=REWARD_STATE_SCHEMA,

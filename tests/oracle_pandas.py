@@ -52,9 +52,17 @@ def _worst_case_run(n0: int, n1: int) -> list[int]:
     return out
 
 
+def _value_key(v) -> tuple[bool, float]:
+    """Total order on feature values with NaN last, as pandas sorts it; all
+    NaNs share one key, so they form one duplicate run (NaN != NaN would
+    otherwise leave both the sort and the run grouping undefined)."""
+    nan = math.isnan(v)
+    return (nan, 0.0 if nan else v)
+
+
 def label_sequence(values, labels, mode: str = "sorted") -> list[int]:
     """Sequence of class labels after sorting rows by (value, label)."""
-    rows = sorted(zip(values, labels), key=lambda t: (t[0], t[1]))
+    rows = sorted((_value_key(v), l) for v, l in zip(values, labels))
     if mode == "sorted":
         return [l for _, l in rows]
     seq: list[int] = []

@@ -307,7 +307,3 @@ def test_explain_config_rejects_bad_modes(spark):
         explain_anomalies(
             trace, labels, ExplainConfig(sample_method="sha1")
         )
-    with _pytest.raises(ValueError, match="segmentation"):
-        explain_anomalies(
-            trace, labels, ExplainConfig(segmentation="bogus")
-        ).collect()

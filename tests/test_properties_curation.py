@@ -1,6 +1,5 @@
-"""Hypothesis property tests for the deterministic curation primitives:
-assign_splits (total coverage + python-mirror parity over random weights)
-and mask_tokens (python-mirror parity over adversarial token arrays).
+"""Hypothesis property test for the deterministic curation primitive
+assign_splits (total coverage + python-mirror parity over random weights).
 Few examples per property — each example runs Spark jobs."""
 
 import hashlib
@@ -9,7 +8,6 @@ import pytest
 from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from exstream_implementation_spark.plans.masking import mask_tokens
 from exstream_implementation_spark.plans.splits import assign_splits
 
 _weights = st.dictionaries(
@@ -47,40 +45,3 @@ def test_split_total_coverage_and_mirror(spark, weights, salt):
         assert r["split"] == want
         assert r["split"] in weights
 
-
-_tokens = st.lists(
-    st.text(
-        alphabet=st.characters(
-            codec="utf-8", exclude_characters="\x00"
-        ),
-        min_size=0,
-        max_size=6,
-    ),
-    min_size=0,
-    max_size=12,
-)
-
-
-@given(
-    toks=st.lists(_tokens, min_size=1, max_size=5),
-    rate=st.sampled_from([0.0, 0.15, 0.5, 1.0]),
-    salt=st.integers(min_value=0, max_value=9),
-)
-@settings(max_examples=8, deadline=None)
-def test_mask_mirror_on_adversarial_arrays(spark, toks, rate, salt):
-    """Quotes, unicode, empty strings, empty arrays: the JVM decision and
-    the python mirror agree position-by-position."""
-    rows = [(i, t) for i, t in enumerate(toks)]
-    df = spark.createDataFrame(rows, "doc_id long, tokens array<string>")
-    got = {r["doc_id"]: r for r in
-           mask_tokens(df, rate=rate, salt=salt).collect()}
-    cutoff = int(rate * 16**6)
-    for i, t in rows:
-        want_pos = [
-            j for j in range(len(t))
-            if int(hashlib.md5(f"{i}:{j}:{salt}".encode()).hexdigest()[:6],
-                   16) < cutoff
-        ]
-        assert list(got[i]["mask_positions"]) == want_pos
-        for j, (orig, m) in enumerate(zip(t, got[i]["tokens_masked"])):
-            assert m == ("<mask>" if j in want_pos else orig)

@@ -174,14 +174,10 @@ def _entry_points() -> list:
 RETAINED_UNREACHED = frozenset(
     f"{PKG}.{m}"
     for m in (
-        "operators.approx",
         "operators.bpe",
         "operators.pca",
         "operators.profile",
         "operators.snapshots",
-        "operators.sq",
-        "operators.textstats",
-        "plans.masking",
     )
 )
 

@@ -92,9 +92,8 @@ def test_property_random_matches_oracle(spark):
             assert got[feat][0] == pytest.approx(want, rel=1e-9), (mode, feat)
 
 
-@pytest.mark.parametrize("segmentation", ["window", "stitched"])
 @pytest.mark.parametrize("mode", ["sorted", "worst_case"])
-def test_missing_value_sorts_last_like_pandas_nan(spark, mode, segmentation):
+def test_missing_value_sorts_last_like_pandas_nan(spark, mode):
     """A missing value (Spark's CSV reader turns an empty cell into NULL)
     must segment like the reference's NaN, which pandas sorts last:
     references 1..5 and anomalies 10, 11, 12, <missing> give the label
@@ -109,7 +108,7 @@ def test_missing_value_sorts_last_like_pandas_nan(spark, mode, segmentation):
             "feature_order int, value double",
         )
         (row,) = single_feature_rewards(
-            df, feature_names=["f"], duplicate_mode=mode, segmentation=segmentation
+            df, feature_names=["f"], duplicate_mode=mode
         ).collect()
         return row["reward"]
 
@@ -118,6 +117,47 @@ def test_missing_value_sorts_last_like_pandas_nan(spark, mode, segmentation):
     assert want == pytest.approx(3.035, abs=1e-3)
     assert reward(float("nan")) == pytest.approx(want, rel=1e-12)
     assert reward(None) == pytest.approx(want, rel=1e-12)
+
+
+INF, NAN = float("inf"), float("nan")
+
+# real-trace value defects, each as (values, labels): references first
+DEFECT_CASES = {
+    "pos_inf_in_anomaly": (
+        [1.0, 2.0, 2.0, 3.0, 4.0, 10.0, INF, 11.0, INF],
+        [0, 0, 0, 0, 0, 1, 1, 1, 1],
+    ),
+    "neg_inf_in_reference": (
+        [-INF, 1.0, -INF, 2.0, 5.0, 5.0, 6.0],
+        [0, 0, 0, 0, 1, 1, 1],
+    ),
+    "inf_both_sides": (
+        [-INF, INF, 1.0, INF, -INF, 2.0, INF, 3.0],
+        [0, 0, 0, 1, 1, 1, 1, 0],
+    ),
+    "nan_mixed_with_inf": (
+        [1.0, NAN, INF, 2.0, INF, NAN, -INF, 3.0],
+        [0, 0, 0, 0, 1, 1, 1, 1],
+    ),
+    "duplicate_nans": (
+        [NAN, NAN, 1.0, 2.0, NAN, NAN, NAN, 3.0],
+        [0, 0, 0, 0, 1, 1, 1, 1],
+    ),
+    "constant_feature": ([7.0] * 7, [0, 0, 0, 1, 1, 1, 1]),
+}
+
+
+@pytest.mark.parametrize("case", sorted(DEFECT_CASES))
+@pytest.mark.parametrize("mode", ["sorted", "worst_case"])
+def test_inf_nan_and_constant_values_match_oracle(spark, mode, case):
+    """±inf sorts at the ends of the order, every NaN sorts after +inf as
+    one duplicate run (pandas sorts NaN last), and a constant feature is one
+    duplicate run: both modes must give the oracle's reward."""
+    values, labels = DEFECT_CASES[case]
+    got = spark_rewards(spark, {"f": (values, labels)}, mode=mode)
+    assert got["f"][0] == pytest.approx(
+        oracle.reward(values, labels, mode), rel=1e-9
+    )
 
 
 def test_leap_filter_golden(spark):

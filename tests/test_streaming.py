@@ -22,9 +22,6 @@ from exstream_implementation_spark.streaming.stateful import (
     online_segmentation_entropy,
 )
 
-# >60 s integration suite: excluded from the quick tier (README "Run")
-pytestmark = pytest.mark.slow
-
 SF_DIR = "/root/testdata/sf0.001"
 
 

@@ -5,7 +5,7 @@ Usage:  PYTHONPATH=/root/repo python tools/capture_plans.py before
 
 Writes plans/<round>/<query>_<tag>.txt for the 13 bench-suite queries (the
 flagship included).  Building a DataFrame may run the small eager probes a
-query legitimately embeds (e.g. the flagship's segmentation-auto count);
+query legitimately embeds (e.g. correlation matrices when clustering is on);
 the captured text is the final lazy plan the noop sink would execute.
 """
 

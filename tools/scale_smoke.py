@@ -70,10 +70,6 @@ QUERIES_TO_TIME = [
     "multimodal_suite",
     # the flagship end-to-end pipeline (resolved via __spark_entry__)
     "exstream_explain",
-    # long-interval case: ONE anomaly over the RAW (1 s bucket) events trace
-    # — the shape where the window engine serializes each (anomaly, feature)
-    # group into one task; the stitched engine must stay sub-linear
-    "rewards_raw_stitched",
 ]
 
 
@@ -191,48 +187,41 @@ def build_scaled(spark, n: int) -> str:
     return out
 
 
-def _rewards_raw(segmentation):
+def _rewards_raw(spark, sf_dir):
     """ONE anomaly spanning the full RAW events trace (1 s buckets — no
-    hourly pre-aggregation), rewards end to end.  'window' serializes each
-    (anomaly, feature) group into a single sort task (the parallelism floor
-    VERDICT r06 flagged); 'stitched' routes through the range-partitioned
-    boundary-stitched segmentation (operators/rewards.py)."""
+    hourly pre-aggregation), rewards end to end.  Each (anomaly, feature)
+    group is sorted in a single window task (the parallelism floor VERDICT
+    r06 flagged), so this entry times that sort at the replica's size."""
+    from pyspark.sql import functions as F
 
-    def q(spark, sf_dir):
-        from pyspark.sql import functions as F
+    from exstream_implementation_spark.operators.rewards import (
+        single_feature_rewards,
+    )
+    from exstream_implementation_spark.operators.slicing import (
+        melt_features,
+        slice_intervals,
+    )
+    from exstream_implementation_spark.sources import events_trace
 
-        from exstream_implementation_spark.operators.rewards import (
-            single_feature_rewards,
-        )
-        from exstream_implementation_spark.operators.slicing import (
-            melt_features,
-            slice_intervals,
-        )
-        from exstream_implementation_spark.sources import events_trace
-
-        trace = events_trace(spark, sf_dir, bucket_seconds=1)
-        b = trace.agg(
-            F.min("timestamp").alias("tmin"), F.max("timestamp").alias("tmax")
-        ).first()
-        tmin, tmax = b["tmin"], b["tmax"]
-        span = max(tmax - tmin, 4)
-        labels = spark.createDataFrame(
-            [
-                (
-                    0, "events", 1, "bursty input",
-                    tmin, tmin + span // 2, tmin + span // 2, tmax,
-                )
-            ],
-            "label_row int, trace_id string, ano_id int, ano_type string, "
-            "ref_start long, ref_end long, ano_start long, ano_end long",
-        )
-        features = [c for c in trace.columns if c not in ("timestamp", "trace_id")]
-        melted = melt_features(slice_intervals(trace, labels), features)
-        return single_feature_rewards(
-            melted, features, segmentation=segmentation
-        )
-
-    return q
+    trace = events_trace(spark, sf_dir, bucket_seconds=1)
+    b = trace.agg(
+        F.min("timestamp").alias("tmin"), F.max("timestamp").alias("tmax")
+    ).first()
+    tmin, tmax = b["tmin"], b["tmax"]
+    span = max(tmax - tmin, 4)
+    labels = spark.createDataFrame(
+        [
+            (
+                0, "events", 1, "bursty input",
+                tmin, tmin + span // 2, tmin + span // 2, tmax,
+            )
+        ],
+        "label_row int, trace_id string, ano_id int, ano_type string, "
+        "ref_start long, ref_end long, ano_start long, ano_end long",
+    )
+    features = [c for c in trace.columns if c not in ("timestamp", "trace_id")]
+    melted = melt_features(slice_intervals(trace, labels), features)
+    return single_feature_rewards(melted, features)
 
 
 def _text_stage(stage):
@@ -309,8 +298,7 @@ def _neardup_vectorized(spark, sf_dir):
 
 SPECIAL = {
     "emb_neardup_lsh_vec": _neardup_vectorized,
-    "rewards_raw_stitched": _rewards_raw("stitched"),
-    "rewards_raw_window": _rewards_raw("window"),
+    "rewards_raw_window": _rewards_raw,
     "text_stage_tokenize": _text_stage("tokenize"),
     "text_stage_langid": _text_stage("langid"),
     "text_stage_quality": _text_stage("quality"),
