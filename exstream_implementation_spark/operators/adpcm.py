@@ -35,7 +35,6 @@ import numpy as np
 # --- G.711 -------------------------------------------------------------------
 
 _ULAW_BIAS = 0x84  # 132: the spec's linearization bias
-_ULAW_CLIP = 32635
 
 
 def _ulaw_decode_table() -> np.ndarray:

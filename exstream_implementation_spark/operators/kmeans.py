@@ -118,42 +118,3 @@ def kmeans_train(
     return centroids, history
 
 
-def cluster_balanced_sample(
-    vecs: DataFrame,
-    n_cells: int,
-    per_cell: int,
-    max_iter: int = 5,
-    salt: int = 0,
-) -> DataFrame:
-    """Diversity-preserving subsample: cluster the embeddings with the
-    deterministic Lloyd trainer above, then draw EXACTLY ``per_cell``
-    vectors per cluster (all of a smaller cluster) with the deterministic
-    reservoir — so rare modes keep representation that a uniform sample
-    of the same size would wash out (the cluster-balanced selection step
-    of SemDeDup-style pipelines, composed from existing operators).
-
-    Returns (vec_id, embedding, cell).  Deterministic in
-    (data, n_cells, salt): Lloyd init is the k lowest vec_ids and the
-    reservoir is a pure (vec_id, salt) hash rank — no RNG anywhere.
-    Scale: centroids stay broadcast-sized (k x dim), the assignment is a
-    broadcast join + per-vector argmin, and the per-cell cut is the
-    two-phase fold (plans/dedup.py sample_exact_k) — a dominant cluster
-    never serializes into one task.
-    """
-    if per_cell <= 0:
-        raise ValueError(f"per_cell must be positive: {per_cell}")
-    if n_cells <= 0:
-        raise ValueError(f"n_cells must be positive: {n_cells}")
-    from exstream_implementation_spark.cache import tracked_persist
-    from exstream_implementation_spark.plans.dedup import sample_exact_k
-
-    centroids, _ = kmeans_train(vecs, n_cells, max_iter=max_iter)
-    # persisted: sample_exact_k reads the assignment from BOTH sides
-    # (winner tagging and the semi-join probe) — without the pin the
-    # broadcast-distance scan + per-vector window would run twice
-    assigned = tracked_persist(
-        _assign(vecs, centroids).select("vec_id", "embedding", "cell")
-    )
-    return sample_exact_k(
-        assigned, "cell", per_cell, id_col="vec_id", salt=salt
-    )

@@ -18,7 +18,7 @@ relation — per-anomaly state never leaves the executor.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 
 def reward_leap_filter(

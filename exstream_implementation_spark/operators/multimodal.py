@@ -834,92 +834,6 @@ def audio_payload_stats(
     return df.select(id_col).mapInPandas(batches, schema)
 
 
-def audio_features(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Spectral feature extraction over the decoded PCM16 stream — the
-    step a speech/audio curation pipeline runs after ``audio_stats``'s
-    amplitude screen: zero-crossing rate, power-spectral centroid, and
-    the dominant frequency (all Hz), via one numpy rfft per stream in
-    the same Arrow-batched mapInPandas shape.
-
-    These are physical quantities with a physics oracle (pinned by
-    tests): a pure sine at f has dominant_freq_hz == f to within one
-    DFT bin, zcr_hz == 2f, and spectral centroid -> f.  Multi-channel
-    streams are mixed to mono by per-sample mean first (the standard
-    analysis convention).  No SQL oracle slot: DuckDB has no FFT — the
-    honest catalog boundary, same class as C10."""
-    schema = (
-        f"{id_col} long, n_samples int, sample_rate int, "
-        "duration_s double, zcr_hz double, spectral_centroid_hz double, "
-        "dominant_freq_hz double"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            rows: dict = {
-                id_col: [], "n_samples": [], "sample_rate": [],
-                "duration_s": [], "zcr_hz": [],
-                "spectral_centroid_hz": [], "dominant_freq_hz": [],
-            }
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
-                samples, rate = decode_wav(bytes(payload))
-                mono = samples.astype(np.float64).mean(axis=1)
-                n = len(mono)
-                rows[id_col].append(did)
-                rows["n_samples"].append(n)
-                rows["sample_rate"].append(rate)
-                rows["duration_s"].append(n / rate)
-                if n < 2:
-                    # a degenerate stream still gets its row — NULL
-                    # features, never a silently vanished document
-                    rows["zcr_hz"].append(None)
-                    rows["spectral_centroid_hz"].append(None)
-                    rows["dominant_freq_hz"].append(None)
-                    continue
-                # zero-crossing rate: sign changes per second (a pure
-                # sine at f crosses zero 2f times a second)
-                zc = int(np.count_nonzero(np.diff(np.signbit(mono))))
-                zcr = zc * rate / n
-                spec = np.abs(np.fft.rfft(mono))
-                power = spec * spec
-                freqs = np.fft.rfftfreq(n, 1.0 / rate)
-                # exclude DC from both features: a constant offset is
-                # loudness bias, not pitch content
-                p = power[1:]
-                tot = float(p.sum())
-                centroid = (
-                    float((freqs[1:] * p).sum() / tot) if tot > 0 else 0.0
-                )
-                dom = (
-                    float(freqs[1 + int(np.argmax(p))]) if tot > 0 else 0.0
-                )
-                rows["zcr_hz"].append(zcr)
-                rows["spectral_centroid_hz"].append(centroid)
-                rows["dominant_freq_hz"].append(dom)
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(rows[id_col], dtype="int64"),
-                    "n_samples": pd.Series(rows["n_samples"], dtype="int32"),
-                    "sample_rate": pd.Series(
-                        rows["sample_rate"], dtype="int32"
-                    ),
-                    "duration_s": pd.Series(
-                        rows["duration_s"], dtype="float64"
-                    ),
-                    # nullable Float64: a plain float64 Series would turn
-                    # the degenerate-stream None into NaN, not SQL NULL
-                    "zcr_hz": pd.Series(rows["zcr_hz"], dtype="Float64"),
-                    "spectral_centroid_hz": pd.Series(
-                        rows["spectral_centroid_hz"], dtype="Float64"
-                    ),
-                    "dominant_freq_hz": pd.Series(
-                        rows["dominant_freq_hz"], dtype="Float64"
-                    ),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema)
-
-
 N_FRAMES = 4
 
 
@@ -955,88 +869,6 @@ def sample_frames(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
                     "frame_idx": pd.Series(idxs, dtype="int32"),
                     "frame_bytes": pd.Series(sizes, dtype="int32"),
                     "frame_hash": pd.Series(hashes, dtype="object"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema)
-
-
-N_VIDEO_FRAMES = 4
-VIDEO_FPS = 2.0
-
-
-def attach_video_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_frames: int = N_VIDEO_FRAMES,
-    w: int = 16,
-    h: int = 16,
-    fps: float = VIDEO_FPS,
-) -> DataFrame:
-    """REAL MP4 payloads: each row gets a genuine single-track MJPEG MP4
-    (operators/mp4.py — full ftyp/mdat/moov + sample tables) whose frame f
-    is the JPEG encoding of the synthetic pixel field of doc_id + f, built
-    in the Arrow workers.  Width/height default to JPEG-block multiples so
-    the lossy error stays small."""
-    from exstream_implementation_spark.operators.jpeg import encode_jpeg
-    from exstream_implementation_spark.operators.mp4 import encode_mp4
-
-    @F.pandas_udf("binary")
-    def mp4(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda i: encode_mp4(
-                [
-                    encode_jpeg(synth_pixels(int(i) + f, w, h), quality=92)
-                    for f in range(n_frames)
-                ],
-                fps=fps,
-                width=w,
-                height=h,
-            )
-        )
-
-    out = df.withColumn("payload", mp4(F.col(id_col)))
-    return out.withColumn("n_bytes", F.length("payload"))
-
-
-def video_frame_stats(
-    df: DataFrame, id_col: str = "doc_id", fps: float = VIDEO_FPS
-) -> DataFrame:
-    """Decode-and-sample each MP4 payload (REAL container parse + MJPEG
-    decode) at ``fps`` and emit one row per sampled frame with its decoded
-    pixel mean — the true-video twin of ``sample_gif_frames``'s 1→N
-    fan-out, Arrow-batched via mapInPandas.  JPEG is lossy, so px_mean is
-    tolerance-tested in pytest rather than SQL-hash-gated (same contract
-    as image_stats' JPEG branch)."""
-    schema = (
-        f"{id_col} long, tick int, t_s double, width int, height int, "
-        "px_mean double"
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, ticks, ts, ws, hs, means = [], [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
-                for k, (t, frame) in enumerate(
-                    sample_video_frames(bytes(payload), fps)
-                ):
-                    fh, fw, _ = frame.shape
-                    ids.append(did)
-                    ticks.append(k)
-                    ts.append(t)
-                    ws.append(fw)
-                    hs.append(fh)
-                    means.append(
-                        float(frame.astype(np.int64).sum()) / (fh * fw * 3)
-                    )
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "tick": pd.Series(ticks, dtype="int32"),
-                    "t_s": pd.Series(ts, dtype="float64"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "px_mean": pd.Series(means, dtype="float64"),
                 }
             )
 

@@ -123,19 +123,9 @@ def heavy_hitters(
         raise ValueError(f"k must be >= 1: {k}")
     cap = capacity if capacity is not None else max(16 * k, 256)
     return (
-        merged_summaries(df, col, cap)
+        merge_summary_units(partition_summaries(df, col, cap), ["pid"])
         .orderBy(F.desc("count_hi"), F.asc("key"))
         .limit(k)
-    )
-
-
-def merged_summaries(df: DataFrame, col: str, capacity: int) -> DataFrame:
-    """The full cross-partition merge (every tracked key with its
-    eviction-floor-corrected bounds), BEFORE any top-k cut — exposed so
-    callers that re-rank within groups (operators/profile.py) can cut
-    per group instead of globally."""
-    return merge_summary_units(
-        partition_summaries(df, col, capacity), ["pid"]
     )
 
 

@@ -394,10 +394,6 @@ def _ct_delta(t: int, c: int) -> int:
     return (t8 * c8) >> 5
 
 
-def _sub_pixels(width_for: int) -> int:
-    return width_for
-
-
 def _subsize(size: int, bits: int) -> int:
     return (size + (1 << bits) - 1) >> bits
 

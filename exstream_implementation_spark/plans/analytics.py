@@ -66,60 +66,6 @@ def tpch_q1_pricing(spark, sf_dir):
     )
 
 
-# --- TPC-H Q3 pattern: shipping-priority top-k revenue (filtered customer
-#     pre-joined to orders, then onto lineitem).  Not a catalog
-#     entry: its operator surface (broadcast dim chain + agg + global top-k)
-#     is covered by tpch_q5 / tpch_q18 / sort_rank_topk; kept for tests. -----
-_TPCH_Q3_SQL = """
-    SELECT l_orderkey,
-           round(cast(sum(cast(l_extendedprice AS DECIMAL(14,2))
-                          * cast(1 - l_discount AS DECIMAL(5,2))) AS DOUBLE), 2)
-                                                             AS revenue,
-           o_orderdate, o_orderpriority
-    FROM customer
-    JOIN orders   ON c_custkey = o_custkey
-    JOIN lineitem ON l_orderkey = o_orderkey
-    WHERE c_mktsegment = 'BUILDING'
-      AND o_orderdate < TIMESTAMP '1998-01-01'
-      AND l_shipdate  > TIMESTAMP '1998-01-01'
-    GROUP BY l_orderkey, o_orderdate, o_orderpriority
-    ORDER BY revenue DESC, l_orderkey
-    LIMIT 10
-    """
-
-
-def tpch_q3_toprevenue(spark, sf_dir):
-    cust = (
-        load_table(spark, sf_dir, "customer")
-        .filter(F.col("c_mktsegment") == "BUILDING")
-        .select("c_custkey")
-    )
-    orders = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp")
-    )
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate") > F.lit("1998-01-01").cast("timestamp")
-    )
-    revenue = F.col("l_extendedprice").cast("decimal(14,2)") * (
-        F.lit(1) - F.col("l_discount")
-    ).cast("decimal(5,2)")
-    # orders/customer scale with SF — no broadcast HINT (a forced broadcast
-    # of an SF-scaling relation OOMs at 100 TB).  Catalyst's size-based
-    # planning still broadcasts them while they fit (as at test SFs) and
-    # falls back to a shuffle join when they don't.
-    return (
-        li.join(
-            orders.join(cust, orders.o_custkey == cust.c_custkey),
-            li.l_orderkey == F.col("o_orderkey"),
-        )
-        .groupBy("l_orderkey", "o_orderdate", "o_orderpriority")
-        .agg(F.round(F.sum(revenue).cast("double"), 2).alias("revenue"))
-        .select("l_orderkey", "revenue", "o_orderdate", "o_orderpriority")
-        .orderBy(F.desc("revenue"), F.asc("l_orderkey"))
-        .limit(10)
-    )
-
-
 # --- TPC-H Q5 pattern: local-supplier revenue per nation (two broadcast dim
 #     chains meeting on the fact table) ---------------------------------------
 _TPCH_Q5_DUCK = """
@@ -314,26 +260,6 @@ def cube_agg(spark, sf_dir):
             F.coalesce("l_linestatus", F.lit("<all>")).alias("linestatus"),
             "gid", "n", "sum_qty",
         )
-    )
-
-
-# --- explicit grouping sets: mixed-granularity panel in one shuffle.
-#     Catalog coverage: cube_agg (CUBE ⊇ every ROLLUP/GROUPING SETS level of
-#     the same keys and exercises grouping_id); this and relational.rollup_agg
-#     stay as package API + tests. --------------------------------------------
-def grouping_sets_agg(spark, sf_dir):
-    orders = load_table(spark, sf_dir, "orders")
-    orders.createOrReplaceTempView("_gs_orders")
-    return orders.sparkSession.sql(
-        """
-        SELECT coalesce(o_orderpriority, '<all>') AS priority,
-               coalesce(o_orderstatus, '<all>')  AS status,
-               count(*) AS n,
-               round(cast(sum(cast(o_totalprice AS DECIMAL(14,2))) AS DOUBLE), 2)
-                   AS sum_price
-        FROM _gs_orders
-        GROUP BY GROUPING SETS ((o_orderpriority), (o_orderstatus), ())
-        """
     )
 
 

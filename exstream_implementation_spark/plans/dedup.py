@@ -31,10 +31,8 @@ from exstream_implementation_spark.sources import (
     load_documents_parallel,
     load_table,
 )
-from exstream_implementation_spark.session import local_frame
 
 N_MINHASH = 8
-HEX15 = "cast(conv(substr(md5({x}), 1, 15), 16, 10) as bigint)"
 
 
 def _doc_tokens(spark, sf_dir):
@@ -250,7 +248,6 @@ _MIN_COLS_DUCK = ",\n".join(
 )
 
 
-
 # --- per-row MinHash fold (the batch catalog's signature builder — no
 #     explode, no groupBy, zero shuffle for signatures) ---------------------
 def minhash_lanes(df, grams_col: str = "grams"):
@@ -407,40 +404,6 @@ def dedup_ngram_components(spark, sf_dir):
     return cc.select(F.col("vertex").alias("doc_id"), "component")
 
 
-# --- corpus dedup report: the one-row summary a curation run publishes.
-#     (Utility, not a catalog entry: its inputs — the capped-Jaccard pair set
-#     and the components — are each oracle-gated via dedup_ngram_jaccard /
-#     dedup_ngram_components; pytest pins this rollup's arithmetic.) ----------
-def dedup_summary(spark, sf_dir):
-    from exstream_implementation_spark.operators.components import (
-        connected_components,
-    )
-
-    n_docs = load_table(spark, sf_dir, "documents").count()
-    pairs = dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b").transform(tracked_persist)
-    n_pairs = pairs.count()
-    comp = connected_components(pairs, src="doc_a", dst="doc_b")
-    stats = comp.agg(
-        F.countDistinct("component").alias("n_clusters"),
-        F.count(F.lit(1)).alias("n_docs_in_clusters"),
-    ).first()
-    rows = [
-        (
-            n_docs,
-            n_pairs,
-            stats["n_clusters"],
-            stats["n_docs_in_clusters"],
-            n_docs - stats["n_docs_in_clusters"] + stats["n_clusters"],
-        )
-    ]
-    return local_frame(
-        spark,
-        rows,
-        "n_docs long, n_dup_pairs long, n_clusters long, "
-        "n_docs_in_clusters long, n_docs_after long",
-    )
-
-
 # --- SimHash (64-bit, distinct-token weights), carried as 4×16-bit bands ----
 # 64 bits, not 32: the 10× scale smoke (tools/scale_smoke.py) showed 8-bit
 # bands saturating — band-bucket occupancy grows n/2^bits, so candidate
@@ -451,7 +414,6 @@ def dedup_summary(spark, sf_dir):
 # the hash lives as its four band values (hex-joined for display).
 _SIMHASH_BITS = 64
 _SIMHASH_BANDS = 4
-_BAND_BITS = _SIMHASH_BITS // _SIMHASH_BANDS  # 16
 _HAMMING_MAX = _SIMHASH_BANDS - 1  # pigeonhole guarantee
 
 

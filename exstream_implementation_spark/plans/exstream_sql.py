@@ -16,6 +16,8 @@ the anomaly interval, per event_type-derived features on an hourly trace.
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import DataFrame, functions as F
 
 from exstream_implementation_spark.cache import session_persist
@@ -364,8 +366,6 @@ def exstream_leap_cut(spark, sf_dir):
 #     the full 10-feature events trace with TWO anomalies, end-to-end against
 #     one independent DuckDB formulation.  Only the instability metric (seeded
 #     Bernoulli sampling) is excluded — that stays rows-only checked. --------
-EVENT_TYPES_FULL = EVENT_TYPES  # click, view, purchase, error, signup
-
 _FULL_TRACE_DUCK = """
   trace AS (
     SELECT CAST(floor(epoch(ts)) AS BIGINT) // 3600 AS bucket,
@@ -912,26 +912,20 @@ _TRACE10_MELT_DUCK = """
 def corr_cluster_reps(spark, sf_dir):
     from exstream_implementation_spark.operators.correlation import (
         correlated_feature_clusters,
+        correlation_matrix,
     )
     from exstream_implementation_spark.sources import events_trace
 
     trace = events_trace(spark, sf_dir, bucket_seconds=3600)
     feats = [c for c in trace.columns if c not in ("timestamp", "trace_id")]
-    # single-pass pairwise corr: d(d-1)/2 corr aggregates in ONE job over the
-    # trace (SURVEY §4.1) — the only driver-side data is the tiny d×d matrix
-    aggs = [
-        F.corr(feats[i], feats[j]).alias(f"{i}|{j}")
-        for i in range(len(feats))
-        for j in range(i + 1, len(feats))
-    ]
-    row = trace.agg(*aggs).first()
-    d = len(feats)
-    corr = [[float("nan")] * d for _ in range(d)]
-    for i in range(d):
-        corr[i][i] = 1.0
-        for j in range(i + 1, d):
-            v = row[f"{i}|{j}"]
-            corr[i][j] = corr[j][i] = float("nan") if v is None else v
+    # the pipeline's C2 matrix: a constant column (an event type absent from
+    # the table) gives NaN, so no edge, where a SQL corr() would divide by
+    # zero under ANSI mode.  MLlib needs two rows for a covariance; with
+    # fewer, every coefficient is undefined (NaN in pandas), so no edge.
+    if trace.limit(2).count() < 2:
+        corr = [[math.nan] * len(feats) for _ in feats]
+    else:
+        corr = correlation_matrix(trace, feats)
     clusters = correlated_feature_clusters(corr, feats, _CORR_TAU)
     out = []
     for cl in clusters:

@@ -26,7 +26,6 @@ from exstream_implementation_spark.operators.multimodal import (
     audio_payload_stats,
     image_payload_stats,
     sample_frames,
-    AUDIO_RATE,
     IMG_H,
     IMG_W,
     N_AUDIO_SAMPLES,

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F
 
 from exstream_implementation_spark.plans.registry import query
 from exstream_implementation_spark.sources import load_table
-from exstream_implementation_spark.session import local_frame
 
 
 # --- §2.1 #1 scan + #6 projection + #7 drop + #8 derived/literal columns
@@ -177,59 +176,6 @@ def filter_range(spark, sf_dir):
     ).select("event_id", "user_id", "event_type", "value")
 
 
-# --- §2.1 #4 equality filter (reference utils/get_data.py:81) ----------------
-# (covered by filter_union_suite's eq branch)
-def filter_eq(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "orders")
-        .filter(F.col("o_orderstatus") == "F")
-        .select("o_orderkey", "o_custkey", "o_totalprice")
-    )
-
-
-# --- §2.1 #5 string-prefix filter (reference utils/get_data.py:44-48) --------
-# (covered by filter_union_suite's prefix branch)
-def filter_prefix(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "part")
-        .filter(F.col("p_name").startswith("b"))
-        .select("p_partkey", "p_name", "p_brand")
-    )
-
-
-# --- §2.1 #7 drop columns (reference script_1.py:167,250-252) ----------------
-# (covered by scan_project's .drop())
-def drop_columns(spark, sf_dir):
-    return load_table(spark, sf_dir, "supplier").drop("s_acctbal")
-
-
-# --- §2.1 #8 literal/derived columns + key concat
-#     (reference utils/get_data.py:78-79, plot_metrics.ipynb cell 1) ----------
-# (covered by scan_project's derived columns)
-def derived_columns(spark, sf_dir):
-    return load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        F.concat_ws("_", "c_mktsegment", F.col("c_custkey").cast("string")).alias(
-            "seg_key"
-        ),
-        F.lit("batch42").alias("source_tag"),
-        F.round(F.col("c_acctbal") * 2.0, 2).alias("boosted_bal"),
-    )
-
-
-# --- §2.1 #9 union all (reference script_1.py:43, utils/get_data.py:103-104) -
-# (covered by filter_union_suite's 5-branch union)
-def union_all(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    a = o.filter(F.col("o_orderpriority") == "1-URGENT").select(
-        "o_orderkey", "o_totalprice", F.lit(0).alias("type_data")
-    )
-    b = o.filter(F.col("o_orderpriority") == "5-LOW").select(
-        "o_orderkey", "o_totalprice", F.lit(1).alias("type_data")
-    )
-    return a.unionByName(b)
-
-
 # --- §2.1 #10 inner equi-join, broadcast dims (reference utils/get_data.py:81,
 #     script_1.py:164-166) ----------------------------------------------------
 @query(
@@ -339,28 +285,6 @@ def groupby_salted_skew(spark, sf_dir):
     )
 
 
-# --- §2.1 #13 distinct + counts (reference
-#     exstream/entropy_based_single_reward_feature.py:63-70) ------------------
-# (covered by conditional_counts' countDistinct column)
-def distinct_counts(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "orders")
-        .groupBy("o_orderpriority")
-        .agg(
-            F.countDistinct("o_custkey").alias("n_custs"),
-            F.count(F.lit(1)).alias("n_orders"),
-        )
-    )
-
-
-# --- §2.1 #14 distinct keys (reference script_1.py:59) -----------------------
-# (covered by join_semi_anti's .distinct() + the dedup family)
-def distinct_keys(spark, sf_dir):
-    return load_table(spark, sf_dir, "customer").select(
-        "c_mktsegment", "c_nationkey"
-    ).distinct()
-
-
 # --- §2.1 #15 multi-key sort + #16 rank (reference
 #     entropy_based_single_reward_feature.py:224,239-241) — rank materialized
 #     so the order survives the driver's order-insensitive hash --------------
@@ -401,20 +325,6 @@ def lag_delta(spark, sf_dir):
             "user_id",
             "event_id",
             F.round(F.col("value") - F.lag("value").over(w), 2).alias("delta"),
-        )
-    )
-
-
-# --- §2.1 #18 max aggregation (reference
-#     entropy_based_single_reward_feature.py:273) -----------------------------
-# (covered by agg_stats_suite)
-def max_agg(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.round(F.max("value"), 2).alias("max_value"),
-            F.round(F.min("value"), 2).alias("min_value"),
         )
     )
 
@@ -493,31 +403,6 @@ def topk_until_leap(spark, sf_dir):
     )
 
 
-# --- §2.1 #20 argmin / min-by (reference exstream/false_positive_filtering.py:46)
-# (covered by agg_stats_suite's deterministic min_by column)
-def argmin_per_group(spark, sf_dir):
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("c_nationkey").orderBy("c_acctbal", "c_custkey")
-    return (
-        load_table(spark, sf_dir, "customer")
-        .select(
-            "c_nationkey",
-            F.col("c_custkey").alias("poorest_cust"),
-            "c_acctbal",
-        )
-        .withColumn(
-            "rn",
-            F.row_number().over(
-                Window.partitionBy("c_nationkey").orderBy(
-                    "c_acctbal", "poorest_cust"
-                )
-            ),
-        )
-        .filter(F.col("rn") == 1)
-    )
-
-
 # --- §2.1 #21 conditional counts (reference
 #     entropy_based_single_reward_feature.py:220, script_1.py:198-201) --------
 @query(
@@ -545,49 +430,9 @@ def conditional_counts(spark, sf_dir):
     )
 
 
-# --- §2.1 #22 mean aggregation (reference explore_data.ipynb cell 13) --------
-# (covered by agg_stats_suite's avg/count columns)
-def mean_agg(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.round(F.avg("value"), 4).alias("avg_value"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
-
-
-# --- §2.1 #23 row sampling (reference script_1.py:228-229) — deterministic
-#     modular variant so both engines agree exactly; true Bernoulli sampling
-#     lives in pipeline.explain_anomalies -------------------------------------
-# (covered by filter_union_suite's sample branch)
-def sample_deterministic(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .filter((F.col("l_orderkey") * 7 + F.col("l_linenumber")) % 10 < 8)
-        .select("l_orderkey", "l_linenumber", "l_quantity")
-    )
-
-
 # --- beyond-reference relational surface (SURVEY §2.2: the reference has no
-#     joins beyond inner-equi and no order statistics — Spark provides them;
-#     these pin the semantics under the same oracle gate) ---------------------
-# (covered by agg_stats_suite's percentile columns)
-def percentiles_exact(spark, sf_dir):
-    # exact interpolated percentiles (Spark `percentile`, not the approx
-    # sketch) — matches DuckDB quantile_cont bit-for-bit after rounding
-    return (
-        load_table(spark, sf_dir, "events")
-        .groupBy("event_type")
-        .agg(
-            F.round(F.expr("percentile(value, 0.5)"), 6).alias("median_value"),
-            F.round(F.expr("percentile(value, 0.9)"), 6).alias("p90_value"),
-            F.round(F.expr("percentile(value, 0.99)"), 6).alias("p99_value"),
-        )
-    )
-
-
+#     joins beyond inner-equi — Spark provides them; these pin the semantics
+#     under the same oracle gate) ---------------------------------------------
 @query(
     "join_semi_anti",
     oracle="""
@@ -699,113 +544,6 @@ def asof_join_events(spark, sf_dir):
     )
 
 
-# (covered by window_fn_suite's frame columns)
-def window_frames(spark, sf_dir):
-    from pyspark.sql import Window
-
-    w5 = Window.partitionBy("user_id").orderBy("event_id").rowsBetween(-4, 0)
-    wall = (
-        Window.partitionBy("user_id")
-        .orderBy("event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 25)
-        .select(
-            "user_id",
-            "event_id",
-            F.round(F.avg("value").over(w5), 6).alias("moving_avg5"),
-            F.round(F.sum("value").over(wall), 6).alias("running_sum"),
-        )
-    )
-
-
-# (covered by cube_agg: CUBE spans every ROLLUP level + grouping_id)
-def rollup_agg(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .rollup("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        )
-    )
-
-
-# (covered by filter_union_suite's setops branch)
-def set_ops(spark, sf_dir):
-    o = load_table(spark, sf_dir, "orders")
-    urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
-    big = o.filter(F.col("o_totalprice") > 200000.0).select("o_custkey")
-    partial = o.filter(F.col("o_orderstatus") == "P").select("o_custkey")
-    return urgent.intersect(big).exceptAll(partial.distinct())
-
-
-# (covered by string_json_suite)
-def json_extract_props(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 2000)
-    k = F.get_json_object("props", "$.k").cast("long")
-    return ev.select(
-        "event_id", k.alias("k"), (k % 10).alias("k_bucket")
-    )
-
-
-# --- §2.1 #24 Pearson correlation (reference exstream/correlation_filtering.py:41)
-# (covered by agg_stats_suite's corr column)
-def corr_agg(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag")
-        .agg(
-            F.round(F.corr("l_quantity", "l_extendedprice"), 6).alias(
-                "corr_qty_price"
-            ),
-            F.round(F.corr("l_discount", "l_tax"), 6).alias("corr_disc_tax"),
-        )
-    )
-
-
-# --- §2.1 #25 scalar math (log2/log/abs/ratio — reference
-#     entropy_based_single_reward_feature.py:35-37,187, script_1.py:201-202) --
-# (covered by scalar_expr_suite)
-def scalar_math(spark, sf_dir):
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_retailprice") > 0)
-    return p.select(
-        "p_partkey",
-        F.round(F.log2("p_retailprice"), 6).alias("log2_price"),
-        F.round(F.log("p_retailprice"), 6).alias("ln_price"),
-        F.round(F.abs(F.col("p_retailprice") - 1500.0), 2).alias("abs_dev"),
-        F.round(F.col("p_size") / (F.col("p_retailprice") + 1.0), 6).alias(
-            "size_price_ratio"
-        ),
-    )
-
-
-# --- §2.1 #26 array length + #29 string split (reference script_1.py:171,
-#     testing.ipynb cells 6,26) -----------------------------------------------
-# (covered by text_metrics_suite's n_tokens = size(split(text)))
-def array_size_split(spark, sf_dir):
-    d = load_table(spark, sf_dir, "documents")
-    return d.select(
-        "doc_id",
-        F.size(F.split("text", r"\s+")).alias("n_tokens"),
-        "n_chars",
-    )
-
-
-# --- §2.1 #29 string cleanup (regexp_replace; reference testing.ipynb cell 6)
-# (covered by string_json_suite)
-def string_cleanup(spark, sf_dir):
-    ev = load_table(spark, sf_dir, "events").filter(F.col("event_id") < 1000)
-    return ev.select(
-        "event_id",
-        F.regexp_replace(
-            F.regexp_replace("props", '[{}"]', ""), r"\s", ""
-        ).alias("props_clean"),
-    )
-
-
 # --- §2.1 #30 pivot-wide assembly + #27 collect + unpivot round-trip
 #     (reference script_1.py:240-248): pivot event counts wide per user,
 #     attach the sorted collect_set, then UNPIVOT the count columns back to
@@ -860,31 +598,6 @@ def pivot_wide(spark, sf_dir):
     )
 
 
-# --- §2.1 #27 collect/array assembly (reference script_1.py:240-248 run
-#     accumulation; order pinned by sorting so the hash is stable) ------------
-# (covered by pivot_wide's types_seen column)
-def collect_sorted_set(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "events")
-        .groupBy("user_id")
-        .agg(
-            F.array_join(
-                F.array_sort(F.collect_set("event_type")), ","
-            ).alias("types_seen")
-        )
-    )
-
-
-# --- §2.1 #28 column-name → index lookup (reference script_1.py:110-115) —
-#     the engine's feature_order mapping, expressed as a queryable relation --
-# (schema->index mapping is the feature_order dimension inside exstream_rewards / _events_melted)
-def column_index_map(spark, sf_dir):
-    li = load_table(spark, sf_dir, "lineitem")
-    rows = [(c, i) for i, c in enumerate(li.columns)]
-    df = local_frame(spark, rows, "feature string, feature_order int")
-    return df.filter(F.col("feature").startswith("l_l"))
-
-
 # --- binned interval join: the SCALE path for C1-style range predicates when
 #     the interval side is too big to broadcast (reference utils/get_data.py:
 #     83-100 slices by interval; slicing.slice_intervals broadcasts labels).
@@ -930,92 +643,6 @@ def interval_join_binned(spark, sf_dir):
             & (F.col("click_sec") < F.col("t0") + w)
         )
         .select("user_id", "incident_id", "click_id", "click_sec")
-    )
-
-
-# --- native unpivot (the engine's melt — operators/slicing.melt_features
-#     uses stack() for the same reshape; reference melts implicitly by
-#     iterating feature columns, entropy_based_single_reward_feature.py:222) --
-# (covered by pivot_wide's round-trip unpivot)
-def unpivot_metrics(spark, sf_dir):
-    wide = (
-        load_table(spark, sf_dir, "lineitem")
-        .filter(F.col("l_orderkey") % 500 == 9)
-        .select(
-            "l_orderkey",
-            "l_linenumber",
-            F.col("l_quantity").alias("qty"),
-            F.col("l_extendedprice").alias("price"),
-            F.col("l_discount").alias("disc"),
-        )
-    )
-    return wide.unpivot(
-        ["l_orderkey", "l_linenumber"], ["qty", "price", "disc"],
-        "metric", "val",
-    ).select("l_orderkey", "l_linenumber", "metric", F.round("val", 4).alias("val"))
-
-
-# --- distribution ranking functions (ntile / percent_rank / cume_dist),
-#     partitioned per nation so the window never plans a global sort ---------
-# (covered by window_fn_suite's ntile/percent_rank/cume_dist columns)
-def ntile_distribution(spark, sf_dir):
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("s_nationkey").orderBy("s_acctbal", "s_suppkey")
-    return load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey",
-        "s_nationkey",
-        F.ntile(4).over(w).alias("quartile"),
-        F.round(F.percent_rank().over(w), 6).alias("pr"),
-        F.round(F.cume_dist().over(w), 6).alias("cd"),
-    )
-
-
-# --- per-group top-k (rank <= k within partition key): the keyed sibling of
-#     sort_rank_topk's global TakeOrderedAndProject — the window partitions
-#     by customer, so no global sort ever materializes --------------------
-# (covered by window_fn_suite's rk<=50 per-group filter)
-def topk_per_group(spark, sf_dir):
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("o_custkey").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        load_table(spark, sf_dir, "orders")
-        .select(
-            "o_custkey",
-            "o_orderkey",
-            "o_totalprice",
-            F.row_number().over(w).alias("rk"),
-        )
-        .filter(F.col("rk") <= 3)
-    )
-
-
-# --- date/time scalar surface (year/quarter/month/dow, date_trunc) and null
-#     semantics (coalesce/nullif) — the remaining scalar-function families a
-#     warehouse user relies on daily ------------------------------------------
-# (covered by scalar_expr_suite)
-def datetime_null_scalars(spark, sf_dir):
-    # Spark dayofweek is 1=Sunday..7; DuckDB dayofweek is 0=Sunday..6 — the
-    # +1 on the oracle side aligns the conventions explicitly
-    o = load_table(spark, sf_dir, "orders").filter(F.col("o_orderkey") % 50 == 1)
-    return o.select(
-        "o_orderkey",
-        F.year("o_orderdate").alias("yr"),
-        F.quarter("o_orderdate").alias("qtr"),
-        F.month("o_orderdate").alias("mon"),
-        F.dayofweek("o_orderdate").alias("dow"),
-        # string, not DATE: pandas renders Spark dates as datetime.date
-        # objects but DuckDB dates as datetime64 — the driver's canonicalizer
-        # hashes them differently
-        F.date_format(F.date_trunc("month", "o_orderdate"), "yyyy-MM-dd").alias(
-            "month_start"
-        ),
-        F.coalesce(
-            F.nullif("o_orderstatus", F.lit("O")), F.lit("OPEN")
-        ).alias("status_label"),
     )
 
 

@@ -45,7 +45,6 @@ import re
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from exstream_implementation_spark.sources import load_documents_parallel
 from exstream_implementation_spark.session import local_frame
 
 BM25_K1 = 1.2
@@ -454,19 +453,6 @@ def two_phase_topk(scored: DataFrame, k: int) -> DataFrame:
     )
 
 
-def bm25_topk_documents(
-    spark: SparkSession,
-    sf_dir: str,
-    queries: DataFrame,
-    k: int = 10,
-    **kw,
-) -> DataFrame:
-    """Convenience: BM25 over the testdata ``documents`` table."""
-    return bm25_topk(
-        spark, load_documents_parallel(spark, sf_dir), queries, k=k, **kw
-    )
-
-
 def bm25_topk_bulk(
     spark: SparkSession,
     postings: DataFrame,
@@ -534,61 +520,6 @@ def bm25_topk_bulk(
         .agg(F.sum(F.col("idf") * tf_norm).alias("score"))
     )
     return two_phase_topk(scored, k)
-
-
-def retrieval_metrics(
-    results: DataFrame, qrels: DataFrame, k: int | None = None
-) -> DataFrame:
-    """Per-query ranking quality: recall@k, MRR and nDCG@k, distributed.
-
-    ``results``: (query_id, doc_id, rank) — e.g. any of the top-k functions
-    here.  ``qrels``: (query_id, doc_id, rel double >= 0) graded relevance
-    judgments.  Both frames can be corpus-scale: everything is equi-joins
-    on (query_id, doc_id) plus per-query aggregates (map-side combined) —
-    no windows over unbounded partitions, no driver loops.
-
-    nDCG uses the classic form DCG = sum rel_i / log2(rank_i + 1); the
-    ideal DCG ranks each query's judgments by rel descending, computed
-    with a per-query window (bounded by that query's judgment count).
-    Queries with no relevant judgment are dropped (metrics undefined).
-
-    Returns (query_id, recall double, mrr double, ndcg double).
-    """
-    if k is not None:
-        results = results.filter(F.col("rank") <= k)
-    rel_pos = F.col("rel") > 0.0
-    hits = results.join(qrels, ["query_id", "doc_id"])
-    got = hits.groupBy("query_id").agg(
-        F.sum(rel_pos.cast("int")).alias("n_hit"),
-        F.max(F.when(rel_pos, 1.0 / F.col("rank")).otherwise(0.0)).alias("mrr"),
-        F.sum(F.col("rel") / F.log2(F.col("rank") + 1.0)).alias("dcg"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("rel"), F.asc("doc_id")
-    )
-    ideal_ranked = qrels.filter(rel_pos).withColumn(
-        "irank", F.row_number().over(w)
-    )
-    if k is not None:
-        ideal_ranked = ideal_ranked.filter(F.col("irank") <= k)
-    ideal = ideal_ranked.groupBy("query_id").agg(
-        F.sum(F.col("rel") / F.log2(F.col("irank") + 1.0)).alias("idcg")
-    )
-    n_rel = (
-        qrels.filter(rel_pos)
-        .groupBy("query_id")
-        .agg(F.count("*").alias("n_rel"))
-    )
-    return (
-        ideal.join(n_rel, "query_id")
-        .join(got, "query_id", "left")
-        .select(
-            "query_id",
-            (F.coalesce("n_hit", F.lit(0)) / F.col("n_rel")).alias("recall"),
-            F.coalesce("mrr", F.lit(0.0)).alias("mrr"),
-            (F.coalesce("dcg", F.lit(0.0)) / F.col("idcg")).alias("ndcg"),
-        )
-    )
 
 
 def mine_hard_negatives(
@@ -749,95 +680,6 @@ def rrf_fuse(
         .filter(F.col("rank") <= k)
         .select("query_id", "doc_id", "rrf", "lex_rank", "dense_rank", "rank")
     )
-
-
-def best_passage(
-    results: DataFrame,
-    docs: DataFrame,
-    queries: DataFrame,
-    max_chars: int = 400,
-    sep: str = "\n\n",
-    text_col: str = "text",
-    query_text_col: str = "query_text",
-    score_round: int = 6,
-) -> DataFrame:
-    """Snippet extraction — the stage between retrieval and the reader in
-    a RAG pipeline: for each (query_id, doc_id) hit in ``results``, return
-    the single passage of that doc best matching the query.
-
-    Passages come from ``chunk_by_separator`` (boundary-respecting,
-    ``max_chars`` budget).  Passage score = Σ over DISTINCT query terms of
-    log(1 + tf(term, passage)) — corpus-independent lexical snippet
-    scoring (saturated tf; equal term weights), deterministic and
-    self-contained, so snippets never need the postings table.  Rounded to
-    ``score_round`` before the argmax; ties break to the EARLIEST passage.
-
-    Output: (query_id, doc_id, passage, passage_idx, p_score).
-
-    Scale shape: only HIT docs are chunked (semi-join first — the corpus
-    never explodes); ``results`` is k-bounded per query by contract, so
-    the passage×query join is |results| × passages-per-doc, and the
-    argmax is one map-side-combinable max over a struct whose ordering
-    (score desc, earliest-idx, passage) is total.
-    """
-    hits = results.select("query_id", "doc_id")
-    hit_docs = docs.select("doc_id", text_col).join(
-        hits.select("doc_id").distinct(), "doc_id", "left_semi"
-    )
-    from exstream_implementation_spark.plans.text import chunk_by_separator
-
-    passages = chunk_by_separator(
-        hit_docs, max_chars, text_col=text_col, id_col="doc_id", sep=sep
-    ).select("doc_id", "chunk_idx", F.col("chunk_text").alias("passage"))
-    qterms = queries.select(
-        "query_id", F.array_distinct(_terms(query_text_col)).alias("__qt")
-    )
-    # tokenize each passage ONCE as a column — embedded in the aggregate
-    # lambda, the split would re-run per query term (no CSE inside
-    # higher-order-function lambdas)
-    paired = (
-        hits.join(passages, "doc_id")
-        .withColumn("__ptoks", _terms("passage"))
-        .join(F.broadcast(qterms), "query_id")
-    )
-    score = F.aggregate(
-        F.col("__qt"),
-        F.lit(0.0),
-        lambda acc, t: acc
-        + F.log(
-            F.lit(1.0)
-            + F.size(
-                F.filter(F.col("__ptoks"), lambda x: x == t)
-            ).cast("double")
-        ),
-    )
-    scored = paired.withColumn("__s", F.round(score, score_round))
-    # argmax as one aggregate: struct ordering = score desc (negated idx
-    # keeps earliest-passage ties deterministic)
-    best = (
-        scored.groupBy("query_id", "doc_id")
-        .agg(
-            F.max(
-                F.struct(
-                    F.col("__s").alias("s"),
-                    (-F.col("chunk_idx")).alias("negidx"),
-                    F.col("passage").alias("p"),
-                )
-            ).alias("b")
-        )
-        .select(
-            "query_id",
-            "doc_id",
-            F.col("b.p").alias("passage"),
-            (-F.col("b.negidx")).alias("passage_idx"),
-            F.col("b.s").alias("p_score"),
-        )
-    )
-    # left join back to the hit list: a hit whose doc has no text (empty/
-    # NULL — a dense-arm hit can be textless) or whose query is absent
-    # still surfaces, with NULL passage columns as the explicit marker,
-    # instead of silently shrinking the k-hit result
-    return hits.join(best, ["query_id", "doc_id"], "left")
 
 
 def rrf_fuse_many(

@@ -142,9 +142,6 @@ def bucket_duck_sql(planes: int = N_PLANES) -> str:
 """
 
 
-_BUCKET_DUCK = bucket_duck_sql(N_PLANES)
-
-
 def plane_weight_sql(dim: int) -> str:
     """The md5 hyperplane-weight derivation as a SQL transform over
     component index j, for a row scoped by (tbl, plane) columns or
@@ -213,15 +210,6 @@ def _buckets_spark(spark, sf_dir):
     )
 
 
-# bucket-occupancy diagnostic (the same _buckets_spark assignment feeds the
-# oracle-gated ann_lsh_topk; kept for tests/EDA, not a catalog slot)
-def ann_lsh_buckets(spark, sf_dir):
-    b = _buckets_spark(spark, sf_dir)
-    return b.groupBy("tbl", "bucket").agg(
-        F.count(F.lit(1)).alias("n_vectors"), F.min("vec_id").alias("min_vec_id")
-    )
-
-
 # --- LSH-bucketed ANN with multiprobe: candidates come from an equi-join on
 #     (table, bucket); each query probes its own bucket plus every bucket at
 #     Hamming distance 1 (k+1 probes per table).  Exact cosine re-ranks the
@@ -265,9 +253,6 @@ def ann_lsh_duck_sql(planes: int = N_PLANES) -> str:
     )
     SELECT query_id, neighbor_id, cosine, rank FROM ranked WHERE rank <= 5
     """
-
-
-_ANN_LSH_DUCK = ann_lsh_duck_sql(N_PLANES)
 
 
 # catalog slot: ann_bucketed_topk below unions this with the IVF twin under
@@ -417,19 +402,6 @@ _IVF_DUCK = """
 """
 
 
-# cell-occupancy diagnostic (assignment itself is oracle-gated via
-# ann_ivf_topk; kept for tests/EDA, not a catalog slot)
-def ann_ivf_cells(spark, sf_dir):
-    return (
-        _ivf_assign_spark(spark, sf_dir)
-        .groupBy("cell")
-        .agg(
-            F.count(F.lit(1)).alias("n_vectors"),
-            F.min("vec_id").alias("min_vec_id"),
-        )
-    )
-
-
 # nprobe: how many nearest cells a query searches.  The centroid count grows
 # as √n (stride above), while nprobe is a fixed deployment knob, so the
 # probed FRACTION of the corpus → 0 as data grows and per-query cost stays
@@ -519,9 +491,9 @@ def ann_ivf_topk(spark, sf_dir, nprobe: int | None = None):
 
 
 # --- trained-centroid IVF: the production upgrade of the stride index -------
-# Not a catalog slot: Lloyd iteration is not SQL-expressible (same rationale
-# as FFD packing), so the oracle-exact stride form above carries the hash
-# gate while this carries the deployment path — data-aware cells from
+# Not a catalog slot: Lloyd iteration is not SQL-expressible, so the
+# oracle-exact stride form above carries the hash gate while this carries
+# the deployment path — data-aware cells from
 # operators/kmeans.py, searched with the same probe/union/re-rank mechanics.
 # Quality is pinned by the recall gate in tests/test_properties.py;
 # determinism by construction (lowest-vec_id init, no RNG anywhere).
@@ -828,7 +800,7 @@ def ann_topk_cosine_vectorized(spark, sf_dir):
 # (table, bucket) equi-join as ann_lsh_topk, no all-pairs self-join) and
 # re-ranks exactly.  Recall vs the brute-force ground truth is pinned in
 # tests/test_properties.py.  The md5-derived buckets are reproduced
-# bit-identically in DuckDB (_BUCKET_DUCK), so the oracle draws the IDENTICAL
+# bit-identically in DuckDB (bucket_duck_sql), so the oracle draws the IDENTICAL
 # candidate set and the hash gate stays exact.  Candidate pairs are oriented:
 # the lower vec_id probes (own bucket + Hamming-1 flips), the higher vec_id
 # is matched at its exact buckets — symmetric for H≤1 and half the join volume.
@@ -888,7 +860,6 @@ def lsh_buckets_vectorized(spark, sf_dir):
             )
 
     return e.mapInPandas(batches, "vec_id long, tbl int, bucket long")
-
 
 
 def emb_neardup_duck_sql(planes: int = N_PLANES) -> str:

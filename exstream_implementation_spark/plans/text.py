@@ -152,46 +152,12 @@ def text_metrics_suite(spark, sf_dir):
     )
 
 
-# token counting (covered by text_metrics_suite in the catalog; kept for the
-# package API and tests)
-def text_token_stats(spark, sf_dir):
-    d = load_documents_parallel(spark, sf_dir).withColumn("toks", _toks())
-    return d.select(
-        "doc_id",
-        F.size("toks").alias("n_tokens"),
-        F.size(F.array_distinct("toks")).alias("n_distinct"),
-        F.round(
-            F.length(F.array_join("toks", "")).cast("double") / F.size("toks"), 4
-        ).alias("mean_tok_len"),
-    )
-
-
 # --- BPE-ish subword token counting ------------------------------------------
 # GPT-2-style pre-tokenization approximated without lookarounds (so the Java
 # and RE2 regex engines match): optional leading space + letter run / digit
 # run / punctuation run.  The count is the usual first-order estimate of
 # post-BPE token counts for data budgeting.
 _BPE_RE = r" ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s]+"
-
-
-# doc-level BPE estimate (catalog coverage moved to udtf_token_chunks'
-# per-chunk n_bpe column; kept for the package API and tests)
-def text_bpe_tokens(spark, sf_dir):
-    d = load_documents_parallel(spark, sf_dir)
-    # F.expr parses a SQL string literal: backslashes double (see
-    # udtf_token_chunks) or \\s degrades to a literal 's'
-    bpe_sql = _BPE_RE.replace("\\", "\\\\")
-    d = d.select(
-        "doc_id",
-        F.size(F.expr(f"regexp_extract_all(lower(text), '{bpe_sql}', 0)")).alias(
-            "n_bpe"
-        ),
-        F.size(_toks()).alias("n_words"),
-    )
-    return d.withColumn(
-        "bpe_per_word",
-        F.round(F.col("n_bpe").cast("double") / F.col("n_words"), 4),
-    )
 
 
 # --- quality scoring (covered by text_metrics_suite in the catalog) ----------
@@ -218,38 +184,6 @@ def text_quality(spark, sf_dir):
             + 0.2 * (1.0 - F.col("punct_ratio_raw")),
             4,
         ).alias("quality"),
-    )
-
-
-# --- language ID (stopword-hit heuristic; deterministic priority argmax) -----
-_LANG_SCORES_SQL = ",\n".join(
-    f"           len(list_filter(toks, x -> x IN ({_sql_list(ws)}))) AS s_{lg}"
-    for lg, ws in LEX.items()
-)
-
-
-# (covered by text_metrics_suite's pred_lang in the catalog)
-def text_langid(spark, sf_dir):
-    d = load_documents_parallel(spark, sf_dir).withColumn("toks", _toks())
-    for lg, ws in LEX.items():
-        d = d.withColumn(
-            f"s_{lg}",
-            F.expr(f"size(filter(toks, x -> x IN ({_sql_list(ws)})))"),
-        )
-    pred = (
-        F.when(
-            F.col("s_en") >= F.greatest("s_fr", "s_de", "s_es", "s_zh"), "en"
-        )
-        .when(F.col("s_fr") >= F.greatest("s_de", "s_es", "s_zh"), "fr")
-        .when(F.col("s_de") >= F.greatest("s_es", "s_zh"), "de")
-        .when(F.col("s_es") >= F.col("s_zh"), "es")
-        .otherwise("zh")
-    )
-    return d.select(
-        "doc_id",
-        F.col("lang").alias("true_lang"),
-        pred.alias("pred_lang"),
-        "s_en", "s_fr", "s_de", "s_es", "s_zh",
     )
 
 
@@ -545,23 +479,6 @@ def udtf_token_chunks(spark, sf_dir):
         FROM _udtf_docs d, LATERAL chunk_doc(d.text) c
         """
     )
-
-
-# Not a catalog slot: first-fit-decreasing is an imperative algorithm DuckDB
-# SQL can't replicate, so the driver could only record a weak rows-only check
-# that costs a correctness-budget entry better spent on a hash-gated query.
-# The FFD invariants (capacity, fill accounting, determinism) are
-# property-tested in tests/test_properties.py; this stays the packing API.
-def pack_sequences_ffd(spark, sf_dir):
-    """Pack the token chunks of every 10th document into fixed 3×CHUNK_TOKS
-    context windows (operators/packing.py) — one row per chunk with its
-    deterministic (pack_group, seq_id) assignment."""
-    from exstream_implementation_spark.operators.packing import pack_sequences
-
-    chunks = udtf_token_chunks(spark, sf_dir).select(
-        "doc_id", "chunk_idx", "n_toks"
-    )
-    return pack_sequences(chunks, capacity=3 * CHUNK_TOKS, num_groups=8)
 
 
 # --- PII redaction -----------------------------------------------------------

@@ -182,36 +182,3 @@ def events_session_windows(spark, sf_dir):
             "sum_value",
         )
     )
-
-
-# z-scores alone (covered by events_tumbling_zscores in the catalog; kept for
-# the package API and streaming parity tests)
-def events_window_zscores(spark, sf_dir):
-    from exstream_implementation_spark.streaming.scoring import (
-        reference_profile,
-        score_against_profile,
-    )
-
-    # unrounded twin of windowed_features so z-scores match duckdb exactly
-    ev = _batch_events(spark, sf_dir)
-    wf = (
-        ev.groupBy(F.window("event_time", "1 hour").alias("win"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum("value").alias("sum_value"),
-        )
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
-    scored = score_against_profile(wf, reference_profile(wf))
-    return scored.select(
-        F.unix_timestamp("window_start").alias("window_start_s"),
-        "event_type",
-        "z_n",
-        "z_value",
-    )

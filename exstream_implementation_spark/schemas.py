@@ -35,25 +35,6 @@ LABELS_SCHEMA = T.StructType(
 # Metadata columns appended to a sliced trace; everything else is a feature.
 SLICE_META_COLS = ["trace_id", "timestamp", "ano_id", "type_data", "ano_key"]
 
-REWARDS_SCHEMA = T.StructType(
-    [
-        T.StructField("ano_key", T.StringType()),
-        T.StructField("feature", T.StringType()),
-        T.StructField("reward", T.DoubleType()),
-        T.StructField("rank", T.IntegerType()),
-    ]
-)
-
-RESULT_SCHEMA = T.StructType(
-    [
-        T.StructField("trace_id", T.StringType()),
-        T.StructField("ano_id", T.IntegerType()),
-        T.StructField("explanation", T.ArrayType(T.IntegerType())),
-        T.StructField("exp_size", T.IntegerType()),
-        T.StructField("exp_instability", T.DoubleType()),
-    ]
-)
-
 
 def feature_columns(columns: list[str]) -> list[str]:
     """Feature columns of a (possibly sliced) trace table = all non-metadata.

@@ -5,6 +5,5 @@ from exstream_implementation_spark.sources.tables import (  # noqa: F401
     load_table,
     read_labels_csv,
     read_trace_csv,
-    register_views,
     write_results,
 )

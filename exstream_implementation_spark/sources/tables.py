@@ -79,11 +79,6 @@ def ts_seconds(dtype) -> "F.Column":
     return (F.col("ts") / F.lit(1_000_000_000)).cast("long")
 
 
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    for t in TABLES:
-        load_table(spark, sf_dir, t).createOrReplaceTempView(t)
-
-
 def read_trace_csv(spark: SparkSession, path: str, trace_id: str) -> DataFrame:
     """CSV trace scan (reference utils/get_data.py:77-79): first column is the
     integer timestamp index; all other columns double features."""

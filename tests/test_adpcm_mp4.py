@@ -266,24 +266,3 @@ def test_mp4_honest_codec_boundary_and_garbage():
         parse_mp4(blob[: len(blob) // 2])  # truncated moov
     with pytest.raises(ValueError):
         encode_mp4([], 2.0, 16, 16)
-
-
-def test_spark_video_frame_stats(spark):
-    """attach → sample → stats through mapInPandas: one row per tick per
-    doc, px_mean within JPEG tolerance of the exact synthetic field mean."""
-    from pyspark.sql import functions as F
-
-    from exstream_implementation_spark.operators.multimodal import (
-        attach_video_payload,
-        video_frame_stats,
-    )
-
-    df = spark.range(4).select((F.col("id") + 10).alias("doc_id"))
-    out = video_frame_stats(attach_video_payload(df)).collect()
-    # 4 frames at 2 fps → duration 2 s → 4 ticks per doc
-    assert len(out) == 16
-    for r in out:
-        ref = synth_pixels(int(r["doc_id"]) + r["tick"], 16, 16)
-        exact = float(ref.astype(np.int64).sum()) / ref.size
-        assert (r["width"], r["height"]) == (16, 16)
-        assert abs(r["px_mean"] - exact) < 2.0

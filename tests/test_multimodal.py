@@ -433,86 +433,6 @@ def test_spark_audio_stats_over_float_payloads(spark):
         assert got[i]["amp_rms"] == math.sqrt(float((f * f).sum()) / len(f))
 
 
-def test_audio_features_physics_oracle(spark):
-    """Spectral features carry a PHYSICS oracle: a pure sine at f must
-    report dominant_freq_hz == f to within one DFT bin, zcr_hz == 2f up
-    to crossing discreteness, and a power centroid near f (leakage
-    spreads a non-bin-aligned tone slightly).  Stereo streams mix to
-    mono first."""
-    import numpy as np
-
-    from exstream_implementation_spark.operators.multimodal import (
-        audio_features,
-        encode_wav,
-    )
-
-    rate, n = 8000, 4096
-    t = np.arange(n) / rate
-
-    def sine(f, amp=10000):
-        return (amp * np.sin(2 * np.pi * f * t)).astype(np.int16)
-
-    payloads = [
-        (1, bytearray(encode_wav(sine(440.0), rate))),
-        (2, bytearray(encode_wav(sine(1000.0), rate))),
-        (
-            3,
-            bytearray(
-                encode_wav(
-                    np.stack([sine(250.0), sine(250.0)], axis=1), rate
-                )
-            ),
-        ),
-    ]
-    df = spark.createDataFrame(payloads, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in audio_features(df).collect()}
-    binw = rate / n
-    for did, f in [(1, 440.0), (2, 1000.0), (3, 250.0)]:
-        r = got[did]
-        assert r["sample_rate"] == rate and r["n_samples"] == n
-        assert abs(r["duration_s"] - n / rate) < 1e-12
-        assert abs(r["dominant_freq_hz"] - f) <= binw, (did, r)
-        assert abs(r["zcr_hz"] - 2 * f) <= 2 * binw + 2, (did, r)
-        assert abs(r["spectral_centroid_hz"] - f) <= 0.05 * f + binw, (
-            did,
-            r,
-        )
-
-
-def test_audio_features_degenerate_stream_gets_null_row(spark):
-    """A 1-sample WAV must surface with NULL features, never silently
-    vanish from the output (a doc that disappears joins to nothing and
-    is lost without a quarantine entry)."""
-    import numpy as np
-
-    from exstream_implementation_spark.operators.multimodal import (
-        audio_features,
-        encode_wav,
-    )
-
-    payloads = [
-        (1, bytearray(encode_wav(np.array([123], dtype=np.int16), 8000))),
-        (
-            2,
-            bytearray(
-                encode_wav(
-                    (10000 * np.sin(2 * np.pi * 500 * np.arange(2048) / 8000))
-                    .astype(np.int16),
-                    8000,
-                )
-            ),
-        ),
-    ]
-    df = spark.createDataFrame(payloads, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in audio_features(df).collect()}
-    assert set(got) == {1, 2}
-    assert got[1]["n_samples"] == 1
-    assert got[1]["zcr_hz"] is None
-    assert got[1]["spectral_centroid_hz"] is None
-    assert got[1]["dominant_freq_hz"] is None
-    assert got[2]["dominant_freq_hz"] is not None
-
-
 def test_audio_stats_full_scale_int32_does_not_overflow(spark):
     """Sum-of-squares of full-scale 32-bit PCM wraps int64 after two
     samples; the stats path must route wide integers through float64."""

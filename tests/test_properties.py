@@ -361,120 +361,6 @@ def test_global_lag_property(rows, nparts):
     assert got == want
 
 
-def test_sequence_packing_invariants():
-    """FFD packing over real chunk data: every chunk packed exactly once, no
-    sequence over capacity, and fill beats the one-chunk-per-sequence
-    strawman by a wide margin."""
-    from exstream_implementation_spark.operators.packing import (
-        pack_sequences,
-        packing_stats,
-    )
-    from exstream_implementation_spark.plans.text import udtf_token_chunks
-    from exstream_implementation_spark.session import get_spark
-
-    spark = get_spark(app_name="exstream-spark-tests", shuffle_partitions=8)
-    chunks = udtf_token_chunks(spark, "/root/testdata/sf0.01").select(
-        "doc_id", "chunk_idx", "n_toks"
-    )
-    capacity = 64
-    packed = pack_sequences(chunks, capacity, num_groups=8).persist()
-
-    n_chunks = chunks.count()
-    assert packed.count() == n_chunks  # every chunk exactly once
-    assert (
-        packed.select("doc_id", "chunk_idx").distinct().count() == n_chunks
-    )
-    over = packed.groupBy("pack_group", "seq_id").agg(
-        F.sum("n_toks").alias("s"), F.first("seq_fill").alias("fill")
-    )
-    assert over.filter(F.col("s") > capacity).count() == 0
-    assert over.filter(F.col("s") != F.col("fill")).count() == 0
-
-    stats = packing_stats(packed, capacity).first()
-    assert stats["n_sequences"] < n_chunks  # actually packs
-    assert stats["mean_fill"] > 0.5
-
-    # determinism: identical assignment on a rerun
-    again = pack_sequences(chunks, capacity, num_groups=8)
-    a = sorted(tuple(r) for r in packed.collect())
-    b = sorted(tuple(r) for r in again.collect())
-    assert a == b
-
-
-def test_leftmost_fit_tree_equals_naive_first_fit():
-    """The O(log m) segment-tree first-fit must assign EXACTLY like the
-    naive scan-every-open-sequence loop — first (leftmost) fit, not
-    best-fit — across random decreasing-sorted instances."""
-    import random
-
-    from exstream_implementation_spark.operators.packing import _LeftmostFit
-
-    rng = random.Random(7)
-    for trial in range(50):
-        capacity = rng.choice([16, 64, 257])
-        sizes = sorted(
-            (rng.randint(1, capacity) for _ in range(rng.randint(1, 200))),
-            reverse=True,
-        )
-        naive_fills: list[int] = []
-        naive_assign = []
-        for n in sizes:
-            placed = None
-            for s, fill in enumerate(naive_fills):
-                if fill + n <= capacity:
-                    placed = s
-                    break
-            if placed is None:
-                placed = len(naive_fills)
-                naive_fills.append(0)
-            naive_fills[placed] += n
-            naive_assign.append(placed)
-
-        fills: list[int] = []
-        tree = _LeftmostFit()
-        assign = []
-        for n in sizes:
-            placed = tree.leftmost(n)
-            if placed is None:
-                placed = len(fills)
-                fills.append(0)
-                tree.append(capacity)
-            fills[placed] += n
-            tree.update(placed, capacity - fills[placed])
-            assign.append(placed)
-        assert assign == naive_assign, (trial, capacity)
-        assert fills == naive_fills, (trial, capacity)
-
-
-def test_pack_sequences_string_ids():
-    """The output schema derives from the input: string doc ids (common in
-    dedup pipelines) must pack, keeping the caller's names and types."""
-    from exstream_implementation_spark.operators.packing import pack_sequences
-    from exstream_implementation_spark.session import get_spark
-
-    spark = get_spark(app_name="exstream-spark-tests", shuffle_partitions=8)
-    chunks = spark.createDataFrame(
-        [("url://a", i, 10 + i) for i in range(6)]
-        + [("url://b", i, 30) for i in range(4)],
-        "url string, part long, toks long",
-    )
-    packed = pack_sequences(
-        chunks, capacity=40, num_groups=2, id_cols=("url", "part"),
-        toks_col="toks",
-    )
-    rows = packed.collect()
-    assert len(rows) == 10
-    assert packed.schema["url"].dataType.simpleString() == "string"
-    assert packed.schema["part"].dataType.simpleString() == "bigint"
-    assert packed.schema["toks"].dataType.simpleString() == "bigint"
-    # capacity respected per (group, seq)
-    fills: dict = {}
-    for r in rows:
-        fills.setdefault((r["pack_group"], r["seq_id"]), 0)
-        fills[(r["pack_group"], r["seq_id"])] += r["toks"]
-    assert all(v <= 40 for v in fills.values())
-
-
 def test_emb_neardup_lsh_recall():
     """The label-free LSH-blocked near-dup pass must recover >= 85% of the
     true cosine>=0.3 pairs that brute force finds (candidates come from the
@@ -869,48 +755,3 @@ def test_emb_neardup_hot_bucket_cap_mechanism(spark, tmp_path):
     # design, but the bulk of random-random pairs never touch a hot bucket
     rr = lambda s: {(a, b) for a, b in s if a < 1000 and b < 1000}
     assert rr(uncapped) and len(rr(capped)) >= 0.9 * len(rr(uncapped))
-
-
-# --- cluster-balanced diversity sampling (operators/kmeans.py) ---------------
-def test_cluster_balanced_sample_quota_and_determinism(spark):
-    from pyspark.sql import functions as F
-
-    from exstream_implementation_spark.operators.kmeans import (
-        cluster_balanced_sample,
-    )
-
-    vecs = spark.read.parquet(
-        "/root/testdata/sf0.001/embeddings.parquet"
-    ).select("vec_id", "embedding")
-    got = cluster_balanced_sample(vecs, n_cells=6, per_cell=10)
-    rows = got.collect()
-    # output rows come from the input, keep their embedding, carry a cell
-    ids = {r["vec_id"] for r in rows}
-    assert ids <= {r["vec_id"] for r in vecs.select("vec_id").collect()}
-    # quota: never more than per_cell from any cell, and a cell smaller
-    # than the quota contributes all its members
-    per = (
-        got.groupBy("cell").agg(F.count("*").alias("c")).collect()
-    )
-    assert all(r["c"] <= 10 for r in per)
-    assert len(rows) == sum(r["c"] for r in per)
-    # deterministic across re-runs and partitionings
-    again = {
-        r["vec_id"]
-        for r in cluster_balanced_sample(
-            vecs.repartition(7), n_cells=6, per_cell=10
-        ).collect()
-    }
-    assert ids == again
-    # a different salt draws a different sample from the SAME clusters
-    other = {
-        r["vec_id"]
-        for r in cluster_balanced_sample(
-            vecs, n_cells=6, per_cell=10, salt=3
-        ).collect()
-    }
-    assert ids != other
-    import pytest
-
-    with pytest.raises(ValueError, match="per_cell"):
-        cluster_balanced_sample(vecs, n_cells=4, per_cell=0)

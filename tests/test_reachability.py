@@ -10,15 +10,21 @@
     transitively, plus the package ``__init__`` files Python executes on
     the way.  A package init that re-exports its submodules breaks this,
     because it loads every submodule for every importer.
+(c) Every top-level function and class must be reached by an AST name walk
+    from the same entry points, or be one of the ``RETAINED_TEST_ONLY``
+    definitions that only tests reach; and every top-level definition,
+    constants included, must be named by some file.
 
-No Spark session is started: (a) parses source, (b) runs a plain import in
-a subprocess.
+No Spark session is started: (a) and (c) parse source, (b) runs a plain
+import in a subprocess.
 """
 
 from __future__ import annotations
 
 import ast
+import functools
 import json
+import re
 import subprocess
 import sys
 from pathlib import Path
@@ -66,6 +72,7 @@ def _ancestors(mod: str) -> list[str]:
     return [".".join(parts[:i]) for i in range(1, len(parts))]
 
 
+@functools.cache
 def _parse(path: Path) -> ast.Module:
     return ast.parse(path.read_text(), filename=str(path))
 
@@ -102,6 +109,15 @@ def _resolve(module: str, name: str) -> str:
     return module
 
 
+def _from_module(node: ast.ImportFrom, path: Path) -> str:
+    """The absolute module name of a ``from ... import`` in ``path``."""
+    module = node.module or ""
+    if node.level:
+        here = path.relative_to(ROOT).with_suffix("").parts
+        module = ".".join(list(here[: -node.level]) + ([module] if module else []))
+    return module
+
+
 def _imports(path: Path, *, lazy: bool, names: bool = True) -> set[str]:
     """Package modules imported by the file at ``path``.
 
@@ -111,18 +127,12 @@ def _imports(path: Path, *, lazy: bool, names: bool = True) -> set[str]:
     """
     tree = _parse(path)
     nodes = ast.walk(tree) if lazy else _module_level(tree)
-    here = None
-    if path.is_relative_to(PKG_DIR):
-        here = ".".join(path.relative_to(ROOT).with_suffix("").parts)
     found = set()
     for node in nodes:
         if isinstance(node, ast.Import):
             found.update(a.name for a in node.names if a.name in MODULES)
         elif isinstance(node, ast.ImportFrom):
-            module = node.module or ""
-            if node.level:
-                base = here.split(".")[: -node.level]
-                module = ".".join(base + ([module] if module else []))
+            module = _from_module(node, path)
             if module.split(".")[0] != PKG:
                 continue
             for alias in node.names:
@@ -167,31 +177,10 @@ def _entry_points() -> list:
     return scripts + [f"{PKG}.{m}" for m in PACKAGE_ENTRIES]
 
 
-# Modules no entry point reaches that are still kept, each with its own
-# tests, until a later change deletes them with those tests.  The list must
-# stay exact: a module here that an entry point reaches, or that is gone,
-# fails the guard as well.
-RETAINED_UNREACHED = frozenset(
-    f"{PKG}.{m}"
-    for m in (
-        "operators.bpe",
-        "operators.pca",
-        "operators.profile",
-        "operators.snapshots",
-    )
-)
-
-
 def test_every_package_module_is_reachable():
     reached = _closure(_entry_points(), lazy=True)
-    unreachable = set(MODULES) - reached
-    assert not sorted(unreachable - RETAINED_UNREACHED), (
-        "package modules no entry point imports: "
-        f"{sorted(unreachable - RETAINED_UNREACHED)}"
-    )
-    assert unreachable == RETAINED_UNREACHED, (
-        "stale RETAINED_UNREACHED entries: "
-        f"{sorted(RETAINED_UNREACHED - unreachable)}"
+    assert reached == set(MODULES), (
+        f"package modules no entry point imports: {sorted(set(MODULES) - reached)}"
     )
 
 
@@ -220,3 +209,203 @@ def test_import_loads_only_its_closure(target):
     )
     assert not {m for m in loaded if m.startswith(f"{PKG}.plans.")}
     assert not {f"{PKG}.operators.{c}" for c in CODECS} & loaded
+
+
+# --- (c) top-level definitions -------------------------------------------------
+
+# Functions and classes that only tests reach, each kept with its tests until
+# a change deletes both.  The list must stay exact: an entry that an entry
+# point reaches, that no test names, or that is gone fails the guard too.
+RETAINED_TEST_ONLY = frozenset(
+    f"{PKG}.{mod}.{name}"
+    for mod, names in (
+        ("cache", "persisted_rdd_count"),
+        ("operators.adpcm", "encode_adpcm encode_alaw encode_ulaw"),
+        ("operators.bucketing", "read_bucketed write_bucketed"),
+        ("operators.gif",
+         "_deinterlace _sub_blocks decode_gif encode_gif lzw_decode lzw_encode"),
+        ("operators.index_lifecycle",
+         "compact_bucketed_table idempotent_append recover_compaction"),
+        ("operators.kmeans", "_assign kmeans_train"),
+        ("operators.mp4",
+         "_box _child _full encode_mp4 extract_mp4_samples parse_mp4 "
+         "sample_mp4_frames"),
+        ("operators.multimodal",
+         "attach_audio_payload attach_gif_payload attach_image_payload audio_stats "
+         "encode_wav_compressed image_stats resize_image sample_gif_frames "
+         "sample_video_frames"),
+        ("operators.webp",
+         "_BitWriter _dist_code_value _encode_entropy_image _limited_lengths "
+         "_lz77_symbol _write_prefix_code encode_vp8l encode_webp"),
+        ("plans.dedup",
+         "_fold_smallest_k es_sampling_key expand_epochs sample_exact_k "
+         "sample_weighted_k temperature_mix_policy"),
+        ("plans.relational", "filter_range groupby_count lag_delta"),
+        ("plans.search",
+         "append_postings bm25_topk_bulk build_postings dense_topk hybrid_rrf_topk "
+         "mine_hard_negatives rrf_fuse rrf_fuse_many write_postings"),
+        ("plans.similarity", "ann_ivf_trained_topk ann_topk_cosine"),
+        ("plans.splits", "leakage_report split_by_neardup_groups"),
+        ("plans.substring",
+         "dup_spans remove_spans spans_from_positions substring_dedup"),
+        ("plans.text",
+         "_re_escape_sql c4_line_filter chunk_by_separator clean_web_text strip_html "
+         "text_quality"),
+        ("plans.urls", "dedup_by_url normalize_urls registered_domain with_domain"),
+        ("plans.windows", "events_tumbling_window"),
+        ("streaming.features", "windowed_features"),
+        ("streaming.source", "events_stream"),
+        ("streaming.stateful",
+         "batch_segmentation_entropy_reference online_segmentation_entropy"),
+    )
+    for name in names.split()
+)
+
+TEST_FILES = sorted((ROOT / "tests").rglob("*.py")) + sorted(
+    (ROOT / "exbench" / "tests").rglob("*.py")
+)
+_DEFS = (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+_IDENTIFIER = re.compile(r"[A-Za-z_][\w.]*")
+
+
+def _definitions(mod: str) -> dict[str, ast.stmt]:
+    """Top-level functions, classes and assigned names of ``mod``."""
+    out = {}
+    for node in _parse(MODULES[mod]).body:
+        if isinstance(node, _DEFS):
+            out[node.name] = node
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            out.update((t.id, node) for t in targets if isinstance(t, ast.Name))
+    return out
+
+
+DEFINITIONS = {mod: _definitions(mod) for mod in MODULES}
+BY_NAME: dict[str, set[tuple[str, str]]] = {}
+for _mod, _defs in DEFINITIONS.items():
+    for _name in _defs:
+        BY_NAME.setdefault(_name, set()).add((_mod, _name))
+
+
+@functools.cache
+def _bindings(path: Path) -> dict[str, str | tuple[str, str]]:
+    """What the package imports of ``path`` bind, lazy ones included: a
+    name maps to a package module, or to the (module, name) it imports."""
+    out: dict[str, str | tuple[str, str]] = {}
+    for node in ast.walk(_parse(path)):
+        if isinstance(node, ast.Import):
+            for a in node.names:
+                if a.name.split(".")[0] == PKG:
+                    out[a.asname or PKG] = a.name if a.asname else PKG
+        elif isinstance(node, ast.ImportFrom):
+            module = _from_module(node, path)
+            if module.split(".")[0] == PKG:
+                for a in node.names:
+                    sub = f"{module}.{a.name}"
+                    out[a.asname or a.name] = sub if sub in MODULES else (module, a.name)
+    return out
+
+
+def _definition(mod: str, name: str, seen: frozenset = frozenset()):
+    """The (module, name) that ``mod.name`` is, through re-exports."""
+    if name in DEFINITIONS.get(mod, ()):
+        return (mod, name)
+    target = _bindings(MODULES[mod]).get(name) if mod in MODULES else None
+    if isinstance(target, tuple) and target not in seen:
+        return _definition(*target, seen | {target})
+    return None
+
+
+def _attribute(node: ast.Attribute, binds: dict) -> set[tuple[str, str]]:
+    chain = []
+    while isinstance(node, ast.Attribute):
+        chain.append(node.attr)
+        node = node.value
+    target = binds.get(node.id) if isinstance(node, ast.Name) else None
+    if not isinstance(target, str):
+        # an attribute of a value: any definition of that name counts
+        return BY_NAME.get(chain[0], set())
+    for attr in reversed(chain):
+        if f"{target}.{attr}" in MODULES:
+            target = f"{target}.{attr}"
+            continue
+        found = _definition(target, attr)
+        return {found} if found else set()
+    return set()
+
+
+def _named(node: ast.AST, path: Path, mod: str | None) -> set[tuple[str, str]]:
+    """Definitions the code under ``node`` names.  ``mod`` is the package
+    module ``path`` defines, if any.  A string that reads as a (dotted)
+    identifier names every definition called like one of its parts, which
+    covers lookups by name such as ``getattr`` and monkey-patching."""
+    binds = _bindings(path)
+    own = DEFINITIONS.get(mod, {})
+    found = set()
+    for n in ast.walk(node):
+        if isinstance(n, ast.Name):
+            target = (mod, n.id) if n.id in own else binds.get(n.id)
+            if isinstance(target, tuple):
+                found.add(_definition(*target))
+        elif isinstance(n, ast.Attribute):
+            found |= _attribute(n, binds)
+        elif isinstance(n, ast.Constant) and isinstance(n.value, str):
+            if _IDENTIFIER.fullmatch(n.value):
+                for part in n.value.split("."):
+                    found |= BY_NAME.get(part, set())
+    found.discard(None)
+    return found
+
+
+def _is_query(node: ast.stmt) -> bool:
+    for deco in getattr(node, "decorator_list", ()):
+        fn = deco.func if isinstance(deco, ast.Call) else deco
+        if getattr(fn, "id", getattr(fn, "attr", None)) == "query":
+            return True
+    return False
+
+
+def _reached(scripts) -> set[tuple[str, str]]:
+    """Fix point of the definitions named from the roots: the ``scripts``,
+    every definition of a ``PACKAGE_ENTRIES`` module (``run_unbounded_scorer``,
+    ``start_online_explainer``, ``rf_feature_importances``,
+    ``summary_from_sinks``, ...), the ``@query`` catalog and the import-time
+    statements of every module."""
+    work: set[tuple[str, str]] = set()
+    for path in scripts:
+        work |= _named(_parse(path), path, None)
+    for mod, defs in DEFINITIONS.items():
+        entry = mod.removeprefix(f"{PKG}.") in PACKAGE_ENTRIES
+        work |= {(mod, name) for name, node in defs.items() if entry or _is_query(node)}
+        for node in _parse(MODULES[mod]).body:
+            if not isinstance(node, (ast.Import, ast.ImportFrom)) and node not in defs.values():
+                work |= _named(node, MODULES[mod], mod)
+    reached: set[tuple[str, str]] = set()
+    while work:
+        mod, name = work.pop()
+        if (mod, name) not in reached:
+            reached.add((mod, name))
+            work |= _named(DEFINITIONS[mod][name], MODULES[mod], mod) - reached
+    return reached
+
+
+def _qualified(defs) -> set[str]:
+    return {f"{mod}.{name}" for mod, name in defs}
+
+
+def test_every_definition_is_reached():
+    scripts = [p for p in _entry_points() if isinstance(p, Path)]
+    system = _reached(scripts)
+    named = _reached(scripts + TEST_FILES)
+    every = {(m, n) for m, defs in DEFINITIONS.items() for n in defs}
+    unnamed = _qualified(every - named) - {f"{PKG}.__version__"}
+    assert not unnamed, f"definitions no file names: {sorted(unnamed)}"
+    callables = {d for d in every if isinstance(DEFINITIONS[d[0]][d[1]], _DEFS)}
+    unreached = _qualified(callables - system)
+    assert unreached <= RETAINED_TEST_ONLY, (
+        "functions or classes no entry point reaches: "
+        f"{sorted(unreached - RETAINED_TEST_ONLY)}"
+    )
+    assert RETAINED_TEST_ONLY <= unreached, (
+        f"stale RETAINED_TEST_ONLY entries: {sorted(RETAINED_TEST_ONLY - unreached)}"
+    )

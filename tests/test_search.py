@@ -472,86 +472,6 @@ def test_append_postings_incremental_refresh(spark, tmp_path_factory):
         spark.sql("DROP DATABASE IF EXISTS appdemo CASCADE")
 
 
-# --- retrieval evaluation metrics --------------------------------------------
-
-
-def test_retrieval_metrics_vs_local_model(spark):
-    """recall@k / MRR / nDCG@k vs hand-computed values, including a query
-    the results missed entirely and graded (non-binary) relevance."""
-    import math as m
-
-    from exstream_implementation_spark.plans.search import retrieval_metrics
-
-    results = spark.createDataFrame(
-        [
-            # q1: ranks 1..3 -> docs 10, 11, 12
-            (1, 10, 1), (1, 11, 2), (1, 12, 3),
-            # q2: relevant doc found at rank 2 only
-            (2, 20, 1), (2, 21, 2), (2, 22, 3),
-            # q3 judged but never retrieved -> all-zero metrics row
-        ],
-        "query_id int, doc_id long, rank int",
-    )
-    qrels = spark.createDataFrame(
-        [
-            (1, 10, 3.0), (1, 12, 1.0), (1, 99, 2.0),   # graded, one missed
-            (2, 21, 1.0),
-            (3, 30, 1.0),
-            (1, 50, 0.0),                               # rel=0 judgment: ignored
-        ],
-        "query_id int, doc_id long, rel double",
-    )
-    got = {
-        r["query_id"]: r
-        for r in retrieval_metrics(results, qrels, k=3).collect()
-    }
-    assert set(got) == {1, 2, 3}
-
-    # q1: hits at rank1(rel3), rank3(rel1); relevant={10,12,99}
-    dcg1 = 3.0 / m.log2(2) + 1.0 / m.log2(4)
-    idcg1 = 3.0 / m.log2(2) + 2.0 / m.log2(3) + 1.0 / m.log2(4)
-    assert got[1]["recall"] == pytest.approx(2 / 3)
-    assert got[1]["mrr"] == pytest.approx(1.0)
-    assert got[1]["ndcg"] == pytest.approx(dcg1 / idcg1, rel=1e-12)
-
-    # q2: single relevant found at rank 2
-    assert got[2]["recall"] == pytest.approx(1.0)
-    assert got[2]["mrr"] == pytest.approx(0.5)
-    assert got[2]["ndcg"] == pytest.approx((1.0 / m.log2(3)) / (1.0 / m.log2(2)))
-
-    # q3: judged, never retrieved
-    assert (got[3]["recall"], got[3]["mrr"], got[3]["ndcg"]) == (0.0, 0.0, 0.0)
-
-
-def test_retrieval_metrics_close_the_loop_on_bm25(spark):
-    """End-to-end: docs carry a unique marker token; querying the marker
-    must put the source doc at rank 1 for every query (MRR = recall = 1).
-    (The testdata documents share one 31-term vocabulary, so fragments of
-    them are deliberately NOT distinctive enough for this check — a
-    marker corpus isolates the metric-wiring property being tested.)"""
-    from exstream_implementation_spark.plans.search import (
-        bm25_topk,
-        retrieval_metrics,
-    )
-
-    docs_df = spark.createDataFrame(
-        [(i, f"marker{i} common filler words here") for i in range(50)],
-        "doc_id long, text string",
-    )
-    qrows = [(i, f"marker{i} common") for i in range(1, 9)]
-    qrels = spark.createDataFrame(
-        [(i, i, 1.0) for i in range(1, 9)],
-        "query_id int, doc_id long, rel double",
-    )
-    res = bm25_topk(spark, docs_df, _queries_df(spark, qrows), k=5)
-    mrow = (
-        retrieval_metrics(res, qrels, k=5)
-        .agg(F.avg("mrr").alias("amrr"), F.avg("recall").alias("arec"))
-        .first()
-    )
-    assert mrow["amrr"] == 1.0 and mrow["arec"] == 1.0
-
-
 def test_rrf_fuse_composes_bulk_arms(spark):
     """rrf_fuse over the BULK lexical arm + the dense arm must equal
     hybrid_rrf_topk built from the broadcast arms — fusion is agnostic to
@@ -756,74 +676,6 @@ def test_mine_hard_negatives_end_to_end_bm25(spark):
     assert [r["neg_rank"] for r in negs] == [1, 2, 3, 4]
 
 
-# --- best_passage (snippet extraction) ---------------------------------------
-
-
-def test_best_passage_picks_matching_paragraph(spark):
-    from exstream_implementation_spark.plans.search import best_passage
-
-    doc = "\n\n".join(
-        [
-            "intro paragraph about nothing relevant at all",
-            "the quantum cat experiment used a quantum detector twice: "
-            "quantum quantum",
-            "closing remarks mention cat once",
-        ]
-    )
-    docs = spark.createDataFrame([(0, doc)], "doc_id long, text string")
-    queries = spark.createDataFrame(
-        [(1, "quantum cat")], "query_id long, query_text string"
-    )
-    hits = spark.createDataFrame([(1, 0)], "query_id long, doc_id long")
-    got = best_passage(hits, docs, queries, max_chars=80).collect()
-    assert len(got) == 1
-    r = got[0]
-    assert "quantum detector" in r["passage"]
-    assert r["passage_idx"] == 1
-    # score = log(1+4 quantum) + log(1+1 cat), rounded to 6
-    assert r["p_score"] == pytest.approx(
-        round(math.log(5) + math.log(2), 6)
-    )
-
-
-def test_best_passage_tie_breaks_earliest_and_no_match_scores_zero(spark):
-    from exstream_implementation_spark.plans.search import best_passage
-
-    doc = "\n\n".join(["alpha beta", "alpha beta", "gamma"])
-    docs = spark.createDataFrame([(0, doc)], "doc_id long, text string")
-    queries = spark.createDataFrame(
-        [(1, "alpha"), (2, "zzz")], "query_id long, query_text string"
-    )
-    hits = spark.createDataFrame(
-        [(1, 0), (2, 0)], "query_id long, doc_id long"
-    )
-    got = {r["query_id"]: r for r in best_passage(hits, docs, queries, max_chars=5).collect()}
-    assert got[1]["passage_idx"] == 0          # equal scores → earliest
-    assert got[2]["p_score"] == 0.0            # no term matches anywhere
-    assert got[2]["passage_idx"] == 0
-
-
-def test_best_passage_end_to_end_over_bm25(spark):
-    from exstream_implementation_spark.plans.search import best_passage
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    queries = _queries_df(spark, [(0, "sort merge join")])
-    # max_df_ratio=1.0: the tiny synthetic vocabulary makes every real
-    # word "common", and the default pruning would empty the result set —
-    # a vacuous pass
-    res = bm25_topk(spark, docs, queries, k=5, max_df_ratio=1.0, score_round=6)
-    out = best_passage(res, docs, queries, max_chars=120, sep=" ")
-    rows = out.collect()
-    assert res.count() == 5
-    assert len(rows) == 5
-    for r in rows:
-        assert 0 < len(r["passage"]) and r["p_score"] >= 0.0
-    # the extracted passage really comes from its doc
-    joined = out.join(docs, "doc_id").collect()
-    for r in joined:
-        assert r["passage"].split(" ")[0] in r["text"]
-
-
 def test_rrf_fuse_many_matches_two_arm_and_three_arm_reference(spark):
     from exstream_implementation_spark.plans.search import (
         rrf_fuse,
@@ -893,23 +745,3 @@ def test_rrf_fuse_many_is_rounded_before_ranking(spark):
     # identical rank multisets -> identical ROUNDED scores -> doc_id asc
     assert out[10]["rrf"] == out[11]["rrf"]
     assert out[10]["rank"] == 1 and out[11]["rank"] == 2
-
-
-def test_best_passage_keeps_textless_hits_with_null_marker(spark):
-    from exstream_implementation_spark.plans.search import best_passage
-
-    docs = spark.createDataFrame(
-        [(0, "real text here"), (1, ""), (2, None)],
-        "doc_id long, text string",
-    )
-    queries = spark.createDataFrame(
-        [(1, "text")], "query_id long, query_text string"
-    )
-    hits = spark.createDataFrame(
-        [(1, 0), (1, 1), (1, 2), (9, 0)], "query_id long, doc_id long"
-    )
-    got = {(r["query_id"], r["doc_id"]): r for r in best_passage(hits, docs, queries, max_chars=50).collect()}
-    assert set(got) == {(1, 0), (1, 1), (1, 2), (9, 0)}
-    assert got[(1, 0)]["passage"] == "real text here"
-    for key in [(1, 1), (1, 2), (9, 0)]:
-        assert got[key]["passage"] is None and got[key]["p_score"] is None

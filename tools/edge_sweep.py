@@ -1,9 +1,13 @@
 """Degenerate-input robustness sweep (VERDICT r07 next-round #6).
 
-Runs every catalog query against an EMPTY-tables dir and a 1-ROW-per-table
-dir.  ANSI mode (Spark 4 default) turns empty-array indexing, div-zero and
-log(0) into hard errors, and the entropy/leap math divides by counts — this
-gate proves none of the 50 queries hits an ANSI crash on degenerate input.
+Runs every catalog query against an EMPTY-tables dir, a 1-ROW-per-table dir
+and a dir whose events table lacks one event type.  ANSI mode (Spark 4
+default) turns empty-array indexing, div-zero and log(0) into hard errors,
+and the entropy/leap math divides by counts — this gate proves none of the
+50 queries hits an ANSI crash on degenerate input.  The third dir is the
+constant-column class: the absent type's trace columns are all 0.0, which
+the other two cannot produce (a corr over at most one bucket is NULL and
+never divides).
 
 Contract per (query, dir):
   PASS   the query plan builds and collects (any row count, including 0), or
@@ -14,9 +18,10 @@ Contract per (query, dir):
   FAIL   anything else — ANSI SparkArithmeticException / CAST_INVALID_INPUT /
          INVALID_ARRAY_INDEX, Python TypeError from None arithmetic, etc.
 
-Edge dirs are built from sf0.001 by limit(0)/limit(1), preserving every
-table's exact schema (including the events ts encoding), under .scale/
-(gitignored), with a sentinel so they rebuild only when the base changes.
+Edge dirs are built from sf0.001 by limit(0)/limit(1)/dropping the signup
+events, preserving every table's exact schema (including the events ts
+encoding), under .scale/ (gitignored), with a sentinel so they rebuild only
+when the base changes.
 
 Usage: PYTHONPATH=. python tools/edge_sweep.py [query ...]
 Exit code 0 iff every checked (query, dir) passes.
@@ -36,15 +41,22 @@ TABLES = (
     "region nation customer supplier part orders lineitem events documents "
     "embeddings"
 ).split()
-SENTINEL_V = "edge-v1"
+SENTINEL_V = "edge-v2"
+EDGE_DIRS = {
+    "edge_empty": lambda table, df: df.limit(0),
+    "edge_1row": lambda table, df: df.limit(1),
+    "edge_no_signup": lambda table, df: (
+        df.filter("event_type != 'signup'") if table == "events" else df
+    ),
+}
 
 
 def build_edge_dirs(spark) -> dict[str, str]:
     out = {}
-    for kind, n in (("edge_empty", 0), ("edge_1row", 1)):
+    for kind, derive in EDGE_DIRS.items():
         d = f"{ROOT}/{kind}"
         sentinel = f"{d}/_SUCCESS"
-        stamp = f"{SENTINEL_V}:base={BASE}:n={n}"
+        stamp = f"{SENTINEL_V}:base={BASE}"
         if os.path.exists(sentinel) and open(sentinel).read().strip() == stamp:
             out[kind] = d
             continue
@@ -52,7 +64,7 @@ def build_edge_dirs(spark) -> dict[str, str]:
             shutil.rmtree(d)
         os.makedirs(d)
         for t in TABLES:
-            df = spark.read.parquet(f"{BASE}/{t}.parquet").limit(n)
+            df = derive(t, spark.read.parquet(f"{BASE}/{t}.parquet"))
             df.coalesce(1).write.mode("overwrite").parquet(f"{d}/{t}.parquet")
         with open(sentinel, "w") as fh:
             fh.write(stamp)
