@@ -21,17 +21,30 @@ from __future__ import annotations
 
 import math
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import IllegalArgumentException
 from pyspark.sql import DataFrame
 from pyspark.ml.feature import VectorAssembler
 from pyspark.ml.stat import Correlation
 
 
 def correlation_matrix(sliced: DataFrame, features: list[str]) -> list[list[float]]:
-    """d×d Pearson matrix over the feature columns of the sliced table."""
+    """d×d Pearson matrix over the feature columns of the sliced table.
+
+    Below two rows no coefficient is defined, so every entry is NaN (no
+    edge), as pandas ``corr`` gives for the reference."""
     assembled = VectorAssembler(
         inputCols=features, outputCol="_vec", handleInvalid="keep"
     ).transform(sliced.select(*features))
-    m = Correlation.corr(assembled, "_vec", "pearson").head()[0]
+    try:
+        m = Correlation.corr(assembled, "_vec", "pearson").head()[0]
+    except (IllegalArgumentException, Py4JJavaError):
+        # MLlib refuses a covariance over fewer than two rows (and cannot
+        # size an empty input).  Rows are counted only on this failure path,
+        # so a call on two or more rows runs no extra job.
+        if sliced.limit(2).count() >= 2:
+            raise
+        return [[math.nan] * len(features) for _ in features]
     return m.toArray().tolist()
 
 

@@ -30,7 +30,6 @@ def global_row_number(
     order_by: list[Column],
     rn_col: str = "rn",
     num_partitions: int | None = None,
-    persist_input: bool = False,
 ) -> DataFrame:
     """Consecutive 1-based global row numbers in ``order_by`` order, without a
     single-partition window.
@@ -38,19 +37,9 @@ def global_row_number(
     Plan shape: rangepartition+sort (one shuffle, all partitions), a cheap
     per-partition count job, then a map-side offset join — the count job reads
     only partition sizes, so the added cost is one lightweight pass.
-
-    ``persist_input=True``: cache ``df`` before the range partitioning.
-    ``repartitionByRange`` SAMPLES its child in a separate job, so an
-    unpersisted input subtree is computed TWICE (sampling pass + shuffle
-    map pass) — guide §1.2 "don't compute things twice".  Enable when the
-    input is an expensive subtree (an aggregation over a fact table);
-    leave off when recompute is cheaper than materializing (a bare scan,
-    or a map-side derivation from an already-cached relation).  The input
-    cache is dropped as soon as the shuffled output is materialized.
     """
     n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    src = tracked_persist(df) if persist_input else df
-    ordered = src.repartitionByRange(int(n), *order_by).sortWithinPartitions(*order_by)
+    ordered = df.repartitionByRange(int(n), *order_by).sortWithinPartitions(*order_by)
     # MUST persist before the sizes job: repartitionByRange SAMPLES the data
     # to pick range boundaries, so an unpersisted plan can land on DIFFERENT
     # boundaries when the final job recomputes it — the collected offsets
@@ -66,10 +55,6 @@ def global_row_number(
         r["__pid"]: r["cnt"]
         for r in with_pid.groupBy("__pid").agg(F.count(F.lit(1)).alias("cnt")).collect()
     }
-    if persist_input:
-        # with_pid is materialized by the sizes job — the input cache has
-        # served both its reads (sampling + shuffle map) and can go now
-        src.unpersist()
     offsets, acc = {}, 0
     for pid in sorted(sizes):
         offsets[pid] = acc
@@ -110,8 +95,13 @@ def global_lag(
     ranked table — the win that matters when the ranked relation is itself
     large (e.g. per-key aggregates over a 100 TB fact table).
 
-    ``persist_input``: see ``global_row_number`` — avoids computing an
-    expensive input subtree twice (range-boundary sampling + shuffle map).
+    ``persist_input=True``: cache ``df`` before the range partitioning.
+    ``repartitionByRange`` SAMPLES its child in a separate job, so an
+    unpersisted input subtree is computed TWICE (sampling pass + shuffle
+    map pass) — guide §1.2 "don't compute things twice".  Enable when the
+    input is an expensive subtree (an aggregation over a fact table);
+    leave off when recompute is cheaper than materializing.  The input
+    cache is dropped as soon as the shuffled output is materialized.
     """
     n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
     src = tracked_persist(df) if persist_input else df

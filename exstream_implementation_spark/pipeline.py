@@ -60,7 +60,6 @@ class ExplainConfig:
     max_distance: float = 40.0
     instability_runs: int = 5
     sample_fraction: float = 0.8
-    duplicate_mode: str = "sorted"  # reference-exact; "worst_case" = paper mode
     seed: int = 42
     # round rewards to N decimals before ranking/leap (cross-engine float
     # determinism boundary); None = full precision
@@ -95,7 +94,7 @@ def _explanations_for(
     melt's column list) after aggregation, so no melted exchange carries the
     feature STRING (guide §2.3)."""
     rewards = single_feature_rewards(
-        melted, feature_names, cfg.duplicate_mode, cfg.reward_round, keys=keys
+        melted, feature_names, reward_round=cfg.reward_round, keys=keys
     )
     kept = reward_leap_filter(rewards, keys=keys)
     return assemble_explanations(kept, keys=keys)

@@ -843,7 +843,6 @@ def decontaminate(
     benchmark=None,
     max_overlap: float = 0.0,
     benchmark_grams=None,
-    bloom_fpp: float | None = None,
 ):
     """(doc_id, n_grams, n_contaminated, overlap, contaminated) per corpus doc.
 
@@ -856,15 +855,6 @@ def decontaminate(
     DataFrame with one distinct ``gram`` column — lets a caller whose
     benchmark is a corpus slice reuse the session-cached shingle table
     instead of re-tokenizing the text.
-
-    ``bloom_fpp`` (optional): the scale path for a CONSOLIDATED benchmark
-    set too large to broadcast as rows.  Builds a Bloom filter over the
-    benchmark grams (operators/bloom.py — eager, bounded: the benchmark
-    side is small by construction) and map-side-filters the corpus gram
-    explosion BEFORE the join, so ~(1-fpp) of corpus grams never reach an
-    exchange.  The exact join still runs on the survivors, so the output
-    is IDENTICAL to the exact path (false positives cost a few joined
-    rows, never a wrong answer) — pinned by tests/test_bloom.py.
     """
     if (benchmark is None) == (benchmark_grams is None):
         raise ValueError("pass exactly one of benchmark / benchmark_grams")
@@ -888,12 +878,6 @@ def decontaminate(
             .distinct()
         )
     e = grams.select("doc_id", F.explode("grams").alias("gram"))
-    if bloom_fpp is not None:
-        from exstream_implementation_spark.operators.bloom import (
-            bloom_prefilter,
-        )
-
-        e, bench_grams = bloom_prefilter(e, bench_grams, "gram", bloom_fpp)
     # real eval benchmarks are MB-sized (≪ 1M distinct 3-grams) so this join
     # normally broadcasts and the corpus never shuffles — but the hint is
     # left to AQE's runtime-size conversion rather than forced, so an

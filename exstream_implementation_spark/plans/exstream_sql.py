@@ -16,8 +16,6 @@ the anomaly interval, per event_type-derived features on an hourly trace.
 
 from __future__ import annotations
 
-import math
-
 from pyspark.sql import DataFrame, functions as F
 
 from exstream_implementation_spark.cache import session_persist
@@ -29,8 +27,11 @@ from exstream_implementation_spark.operators.rewards import (
     segmentation_entropy,
     single_feature_rewards,
 )
+from exstream_implementation_spark.operators.slicing import (
+    melt_features,
+    slice_intervals,
+)
 from exstream_implementation_spark.plans.registry import query
-from exstream_implementation_spark.sources import load_table
 from exstream_implementation_spark.session import local_frame
 
 EVENT_TYPES = ["click", "view", "purchase", "error", "signup"]
@@ -139,58 +140,44 @@ WITH {_TRACE_SQL},
 """
 
 
+def _events_trace(spark, sf_dir) -> DataFrame:
+    """The hourly 10-feature events trace, session-cached: the flagship
+    family and the C1/C4-C8 queries all read it, and CacheManager
+    plan-matching shares one copy."""
+    from exstream_implementation_spark.sources import events_trace
+
+    return events_trace(spark, sf_dir, bucket_seconds=3600).transform(
+        session_persist
+    )
+
+
 def _events_melted(spark, sf_dir) -> DataFrame:
-    """Engine-side construction of the same hourly trace, melted, using the
-    real slicing/melt path shapes (ano_key constant — one synthetic anomaly).
+    """The engine's C1 path over the ``*_n`` features of the cached trace:
+    ``slice_intervals`` with one label whose intervals are those of
+    ``_TRACE_SQL``'s ``iv`` CTE (derived in-plan from the trace's min/max
+    bucket), then ``melt_features``.
 
     Persisted: four catalog queries (rewards' two modes, the entropy
-    profile, the leap cut) consume this identical subtree — Spark's
-    CacheManager plan-matching shares one cached copy across all of them,
-    so the events scan + pivot executes once per session, not six times.
-    The melted slice is O(buckets × features) at any corpus scale."""
-    ev = load_table(spark, sf_dir, "events")
-    trace = (
-        ev.withColumn("bucket", F.expr("ts_sec DIV 3600"))
-        .groupBy("bucket")
-        .pivot("event_type", EVENT_TYPES)
-        .agg(F.count(F.lit(1)))
+    profile, the leap cut, the slice counts) consume this identical subtree,
+    and plan-matching shares one cached copy across all of them.  The melted
+    slice is O(buckets × features) at any corpus scale."""
+    trace = _events_trace(spark, sf_dir)
+    labels = trace.selectExpr(
+        "min(timestamp) AS tmin", "max(timestamp) AS tmax"
+    ).selectExpr(
+        "0 AS label_row",
+        "'events' AS trace_id",
+        "1 AS ano_id",
+        "'bursty input' AS ano_type",
+        "tmin AS ref_start",
+        "tmin + (tmax - tmin) DIV 2 AS ref_end",
+        "tmin + (tmax - tmin) DIV 2 AS ano_start",
+        "tmin + ((tmax - tmin) * 3) DIV 4 AS ano_end",
     )
-    for i, t in enumerate(EVENT_TYPES):
-        trace = trace.withColumn(
-            f"{t}_n", F.coalesce(F.col(t).cast("double"), F.lit(0.0))
-        ).drop(t)
-    b = trace.agg(
-        F.min("bucket").alias("tmin"), F.max("bucket").alias("tmax")
-    )
-    iv = b.select(
-        F.col("tmin").alias("ref_start"),
-        F.expr("tmin + (tmax - tmin) DIV 2").alias("ref_end"),
-        F.expr("tmin + (tmax - tmin) DIV 2").alias("ano_start"),
-        F.expr("tmin + ((tmax - tmin) * 3) DIV 4").alias("ano_end"),
-    )
-    t = trace.crossJoin(F.broadcast(iv))
-    refs = t.filter(
-        (F.col("bucket") >= F.col("ref_start")) & (F.col("bucket") < F.col("ref_end"))
-    ).withColumn("type_data", F.lit(0))
-    anos = t.filter(
-        (F.col("bucket") >= F.col("ano_start")) & (F.col("bucket") <= F.col("ano_end"))
-    ).withColumn("type_data", F.lit(1))
-    sliced = refs.unionByName(anos)
-    pairs = []
-    for i, tname in enumerate(EVENT_TYPES):
-        pairs.extend([f"'{tname}_n'", str(i), f"`{tname}_n`"])
-    stack = (
-        f"stack({len(EVENT_TYPES)}, {', '.join(pairs)}) "
-        "as (feature, feature_order, value)"
-    )
-    # session scope: every exstream query melts the same events subtree, and
-    # CacheManager plan-matching shares one copy — per-query release would
-    # force each of them to re-melt
-    return sliced.select(
-        F.lit("events_0").alias("ano_key"),
-        "type_data",
-        F.col("bucket").alias("timestamp"),
-        F.expr(stack),
+    # session scope: the four queries above melt the same subtree, and a
+    # per-query release would force each of them to re-melt
+    return melt_features(
+        slice_intervals(trace, labels), [f"{t}_n" for t in EVENT_TYPES]
     ).transform(session_persist)
 
 
@@ -514,9 +501,7 @@ def _two_anomaly_setup(spark, sf_dir):
 
     The labels are derived IN-PLAN from the trace's min/max bucket — no
     driver-side bounds probe, so the whole pipeline stays one lazy graph."""
-    from exstream_implementation_spark.sources import events_trace
-
-    trace = events_trace(spark, sf_dir, bucket_seconds=3600).transform(session_persist)
+    trace = _events_trace(spark, sf_dir)
     # both label rows exploded from the ONE bounds row, not two unioned
     # single-row aggregates: the labels relation is referenced in several
     # plan branches (the slice join AND the final ano_key↔label join), and
@@ -836,10 +821,6 @@ def exstream_fp_profile(spark, sf_dir):
     from exstream_implementation_spark.operators.fp_filter import (
         distance_profile_stats,
     )
-    from exstream_implementation_spark.operators.slicing import (
-        melt_features,
-        slice_intervals,
-    )
     from exstream_implementation_spark.schemas import feature_columns
 
     trace, labels = _two_anomaly_setup(spark, sf_dir)
@@ -920,12 +901,8 @@ def corr_cluster_reps(spark, sf_dir):
     feats = [c for c in trace.columns if c not in ("timestamp", "trace_id")]
     # the pipeline's C2 matrix: a constant column (an event type absent from
     # the table) gives NaN, so no edge, where a SQL corr() would divide by
-    # zero under ANSI mode.  MLlib needs two rows for a covariance; with
-    # fewer, every coefficient is undefined (NaN in pandas), so no edge.
-    if trace.limit(2).count() < 2:
-        corr = [[math.nan] * len(feats) for _ in feats]
-    else:
-        corr = correlation_matrix(trace, feats)
+    # zero under ANSI mode; below two buckets every coefficient is NaN
+    corr = correlation_matrix(trace, feats)
     clusters = correlated_feature_clusters(corr, feats, _CORR_TAU)
     out = []
     for cl in clusters:

@@ -620,35 +620,6 @@ def ann_bucketed_topk(spark, sf_dir):
     return lsh.unionByName(ivf).unionByName(brute)
 
 
-# --- embedding near-dup pairs (label-blocked) --------------------------------
-# NOT a catalog entry (demoted in round 3): blocking on `label` looks like a
-# bounded equi-join, but the testdata has only 10 distinct labels, so the
-# candidate set is n²/10 — a quadratic join hiding behind a key that does not
-# grow with the data.  The oracle-gated entry is the LSH-blocked
-# `emb_neardup_lsh` below; this form stays as the small-scale ground truth
-# for its recall gate (tests/test_properties.py).
-def emb_neardup_cosine(spark, sf_dir):
-    e = load_table(spark, sf_dir, "embeddings").select(
-        "vec_id", "label", "embedding"
-    )
-    a, b = e.alias("a"), e.alias("b")
-    cos = F.expr(_cosine_expr("a.embedding", "b.embedding"))
-    return (
-        a.join(
-            b,
-            (F.col("a.label") == F.col("b.label"))
-            & (F.col("a.vec_id") < F.col("b.vec_id")),
-        )
-        .filter(cos >= 0.3)
-        .select(
-            F.col("a.vec_id").alias("vec_a"),
-            F.col("b.vec_id").alias("vec_b"),
-            F.col("a.label").alias("label"),
-            F.round(cos, 5).alias("cosine"),
-        )
-    )
-
-
 # --- distributed MASS: exact z-normalized distance profile of an hourly
 #     event-count series against a 24-hour pattern, computed CHUNKED (the
 #     arbitrary-length-series scale path for C3's subsequence matching,
@@ -794,11 +765,11 @@ def ann_topk_cosine_vectorized(spark, sf_dir):
 
 
 # --- embedding near-dup pairs, LSH-BLOCKED (the label-free scale path) -------
-# emb_neardup_cosine blocks on the label column — fine when a natural
-# blocking key exists, unavailable for a raw unlabeled corpus.  This variant
-# draws candidates from the multiprobe LSH tables instead (same
+# Blocking on the label column would be all-pairs within a label (n²/10 on
+# the testdata's 10 labels) and is unavailable for a raw unlabeled corpus.
+# Candidates come from the multiprobe LSH tables instead (same
 # (table, bucket) equi-join as ann_lsh_topk, no all-pairs self-join) and
-# re-ranks exactly.  Recall vs the brute-force ground truth is pinned in
+# are re-ranked exactly.  Recall vs the brute-force ground truth is pinned in
 # tests/test_properties.py.  The md5-derived buckets are reproduced
 # bit-identically in DuckDB (bucket_duck_sql), so the oracle draws the IDENTICAL
 # candidate set and the hash gate stays exact.  Candidate pairs are oriented:
@@ -910,29 +881,11 @@ def emb_neardup_lsh(
     sf_dir,
     min_cosine: float = 0.3,
     buckets=None,
-    max_bucket: int | None = None,
 ):
-    """``max_bucket`` (opt-in, production scale knob — the catalog keeps
-    None so the DuckDB oracle's candidate set stays identical): exclude
-    (table, bucket) cells holding more than this many vectors from
-    candidate generation, the ``_capped_gram_edges`` pattern.  A hot bucket
-    is a dense region where LSH stops discriminating; its quadratic
-    self-join cost buys mostly mid-cosine pairs (recall impact measured in
-    docs/ROUND8.md §5b).  The hot list is bounded by n/max_bucket rows and
-    broadcasts into an anti-join on BOTH sides (probes into a dropped
-    bucket find no build rows)."""
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     if buckets is None:
         buckets = _buckets_spark(spark, sf_dir)
     bands = buckets.select("vec_id", "tbl", "bucket")
-    if max_bucket is not None:
-        hot = (
-            bands.groupBy("tbl", "bucket")
-            .count()
-            .filter(F.col("count") > max_bucket)
-            .select("tbl", "bucket")
-        )
-        bands = bands.join(F.broadcast(hot), ["tbl", "bucket"], "left_anti")
     # PAIR generation needs only UPWARD Hamming-1 probes (flip a 0-bit to 1):
     # for an unordered pair differing in exactly bit k, the side holding 0 at
     # k probes the other's bucket — one detection per pair is enough, so the

@@ -691,9 +691,8 @@ def text_repetition(spark, sf_dir):
     unnest/GROUP BY mirror, and ``dup40_frac`` (chars inside a
     corpus-duplicated span of length >= 40; plans/substring.py) gated
     against an independent generate_series + self-join + window-union
-    DuckDB formulation.  The catalog branch runs raw-gram anchors so both
-    engines group on identical keys; the production default is hashed
-    (xxhash64) anchors, pytest-pinned equal on this corpus.  Round 9 also
+    DuckDB formulation; both engines group on identical raw-gram
+    anchors.  Round 9 also
     adds ``lm_nll`` (plans/lm.py: CCNet-style corpus-LM quality score —
     bigram stupid-backoff mean negative ln-likelihood, trained and scored
     on this same corpus) under the hash, mirrored by independent count-
@@ -715,7 +714,7 @@ def text_repetition(spark, sf_dir):
     rep = repetition_metrics(d).select(
         "doc_id", "dup_line_frac", "top_bigram_share"
     )
-    prof = dup_span_profile(d, k=40, hashed=False).select(
+    prof = dup_span_profile(d, k=40).select(
         "doc_id", F.col("dup_frac").alias("dup40_frac")
     )
     lm = score_lm_nll(d, train_bigram_lm(d)).select("doc_id", "lm_nll")

@@ -11,12 +11,9 @@ loop anywhere in script_1.py); the paper's online CEP setting (exstream.pdf
 - ``scoring.reference_profile`` / ``scoring.score_against_profile``
                                   stream-static broadcast join + z-score
                                   anomaly flag
-- ``stateful.online_segmentation_entropy`` / ``stateful.online_feature_rewards``
+- ``stateful.online_feature_rewards``
                                   applyInPandasWithState port of C6's
-                                  run-length scan
-- ``welford.online_moments``      transformWithStateInPandas (Spark 4)
-                                  lifetime per-key Welford moments for online
-                                  z-scoring
+                                  run-length scan, with C4 and C7 on top
 - ``explain_trigger``             flag → label → batch ``explain_anomalies``
                                   per micro-batch
 - ``online_scorer``               the online reward scorer and its serving

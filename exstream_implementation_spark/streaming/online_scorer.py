@@ -68,6 +68,9 @@ from exstream_implementation_spark.streaming.stateful import (
 from exstream_implementation_spark.session import local_frame
 
 _SEP = "\x1f"
+# decimals the served rewards are rounded to before ranking — the batch
+# pipeline's cross-engine float determinism boundary (reward_round=6)
+REWARD_ROUND = 6
 
 
 def melted_to_keyed(melted: DataFrame) -> DataFrame:
@@ -295,20 +298,14 @@ class RewardServingView:
         os.rmdir(tmp)
         self._appends = 0
 
-    def as_rows(self, reward_round: int | None, only: set[str] | None = None):
+    def as_rows(self, only: set[str] | None = None):
         """(ano_key, feature, feature_order, reward) rows — all anomalies,
-        or just ``only``.  Rounds with Spark's F.round semantics (HALF_UP on
-        the shortest decimal repr) so the ranking the leap filter sees is
-        bit-identical to the batch pipeline's rounded rewards."""
+        or just ``only``.  Rounds to ``REWARD_ROUND`` dp with Spark's F.round
+        semantics (HALF_UP on the shortest decimal repr) so the ranking the
+        leap filter sees is bit-identical to the batch pipeline's rounded
+        rewards."""
         return [
-            (
-                ak,
-                f,
-                fo,
-                round_half_up(rw, reward_round)
-                if reward_round is not None
-                else rw,
-            )
+            (ak, f, fo, round_half_up(rw, REWARD_ROUND))
             for (ak, f, fo), rw in self.latest.items()
             if only is None or ak in only
         ]
@@ -318,7 +315,6 @@ def start_online_reward_scorer(
     spark: SparkSession,
     melted_stream: DataFrame,
     sink: list,
-    reward_round: int | None = 6,
     trigger_available_now: bool = True,
     state_dir: str | None = None,
     checkpoint_dir: str | None = None,
@@ -350,7 +346,7 @@ def start_online_reward_scorer(
         # refreshed explanation per anomaly that actually changed
         tbl = local_frame(
             spark,
-            view.as_rows(reward_round, only=touched),
+            view.as_rows(only=touched),
             "ano_key string, feature string, feature_order int, reward double",
         )
         w = Window.partitionBy("ano_key").orderBy(

@@ -1,11 +1,12 @@
-"""Custom stateful operator — online segmentation entropy (C6, streaming).
+"""Custom stateful operator — online feature rewards (C4/C6/C7, streaming).
 
 Batch C6 (reference entropy_based_single_reward_feature.py:157-200) run-length
 scans a label sequence and sums p·ln(1/p) per segment, never counting the
 final segment (SURVEY Q2).  Online, the sequence is unbounded, so the operator
-keeps O(1) state per key and emits the entropy over *closed* segments after
-each micro-batch — the still-open run is exactly the "final segment" Q2 drops,
-so the streaming semantics converge to the batch value on a finite replay.
+keeps O(1) state per key and emits the entropy over *closed* segments (with
+the class entropy and their ratio, the reward) after each micro-batch — the
+still-open run is exactly the "final segment" Q2 drops, so the streaming
+semantics converge to the batch value on a finite replay.
 
 Identity used (n = rows seen, l_i = closed-segment lengths):
     H = Σ (l_i/n)·ln(n/l_i) = (ln n)·(Σ l_i)/n − (1/n)·Σ l_i·ln l_i
@@ -33,26 +34,6 @@ from pyspark.sql.types import (
     StructType,
 )
 
-OUTPUT_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("n_rows", LongType()),
-        StructField("closed_segments", LongType()),
-        StructField("seg_entropy", DoubleType()),
-    ]
-)
-
-STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("closed_len", LongType()),
-        StructField("closed_llnl", DoubleType()),
-        StructField("closed_segs", LongType()),
-        StructField("cur_label", LongType()),
-        StructField("cur_len", LongType()),
-    ]
-)
-
 
 def _scan(labels, state):
     """Run-length scan continuing from ``state`` tuple; returns new tuple."""
@@ -76,36 +57,6 @@ def _entropy(n, closed_len, closed_llnl):
     if n == 0 or closed_len == 0:
         return 0.0
     return (math.log(n) * closed_len - closed_llnl) / n
-
-
-def online_segmentation_entropy(df: DataFrame) -> DataFrame:
-    """Apply the online C6 operator to a (streaming or batch) DataFrame with
-    columns ``(key, seq, label)``; emits one row per key per micro-batch in
-    update mode."""
-
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else (0, 0, 0.0, 0, -1, 0)
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values("seq", kind="mergesort")
-            st = _scan(pdf["label"].to_numpy(), st)
-        state.update(st)
-        n, closed_len, closed_llnl, closed_segs = st[0], st[1], st[2], st[3]
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_rows": [n],
-                "closed_segments": [closed_segs],
-                "seg_entropy": [_entropy(n, closed_len, closed_llnl)],
-            }
-        )
-
-    return df.groupBy("key").applyInPandasWithState(
-        fn,
-        outputStructType=OUTPUT_SCHEMA,
-        stateStructType=STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
 
 
 def batch_segmentation_entropy_reference(labels) -> float:

@@ -1,5 +1,6 @@
-"""C2 correlation clustering: the driver-side union-find, and the catalog's
-``corr_cluster_reps`` on a trace with a constant feature.
+"""C2 correlation clustering: the driver-side union-find, the catalog's
+``corr_cluster_reps`` on a trace with a constant feature, and the matrix
+on fewer than two rows.
 
 Reference: exstream/correlation_filtering.py:39-61 connects two features
 when |corr| > threshold and keeps one representative per component.
@@ -77,3 +78,47 @@ def test_corr_cluster_reps_with_fewer_than_two_buckets(spark, tmp_path, n_rows):
     rows = QUERIES["corr_cluster_reps"](spark, str(tmp_path)).collect()
     assert len(rows) == 10
     assert all(r["rep"] == r["feature"] and r["component_size"] == 1 for r in rows)
+
+
+def _tiny_trace(spark):
+    """Ten 1 s rows and one label whose slice holds two rows: reference
+    [3, 4) and anomaly [4, 4].  An 80% sample of it often keeps one row."""
+    trace = spark.createDataFrame(
+        [(t, float(t), float((7 * t) % 10), "tiny") for t in range(10)],
+        "timestamp long, f0 double, f1 double, trace_id string",
+    )
+    labels = spark.createDataFrame(
+        [(0, "tiny", 1, "spike", 3, 4, 4, 4)],
+        "label_row int, trace_id string, ano_id int, ano_type string, "
+        "ref_start long, ref_end long, ano_start long, ano_end long",
+    )
+    return trace, labels
+
+
+@pytest.mark.parametrize("n_rows", [0, 1])
+def test_correlation_matrix_below_two_rows_is_undefined(spark, n_rows):
+    # pandas DataFrame.corr, which the reference calls, gives NaN for every
+    # pair below two rows: no edge, every feature is its own component
+    from exstream_implementation_spark.operators.correlation import (
+        correlation_matrix,
+    )
+
+    trace, _ = _tiny_trace(spark)
+    corr = correlation_matrix(trace.filter(f"timestamp < {n_rows}"), ["f0", "f1"])
+    assert len(corr) == 2 and all(len(r) == 2 for r in corr)
+    assert all(math.isnan(c) for r in corr for c in r)
+
+
+def test_clustered_explain_on_a_two_row_slice(spark):
+    # the slice has two rows, so some instability samples keep fewer; the
+    # clustered pipeline explains the anomaly as the unclustered one does
+    from exstream_implementation_spark.pipeline import ExplainConfig, explain_anomalies
+
+    trace, labels = _tiny_trace(spark)
+    got = {}
+    for cluster in (False, True):
+        rows = explain_anomalies(trace, labels, ExplainConfig(cluster=cluster)).collect()
+        assert [r["ano_id"] for r in rows] == [1]
+        got[cluster] = (list(rows[0]["explanation"]), rows[0]["exp_instability"])
+    # f0 and f1 correlate perfectly over two rows, so f0 represents both
+    assert got[True] == got[False] == ([0], 0.0)

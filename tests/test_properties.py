@@ -699,59 +699,3 @@ def test_emb_neardup_lsh_planted_neardup_recall(spark, tmp_path):
         sim._PLANES_CACHE.clear()  # tmp dir must not linger in the cache
     hits = sum(1 for s, v in planted if (min(s, v), max(s, v)) in got)
     assert hits / n_pairs >= 0.9, f"planted near-dup recall {hits}/{n_pairs}"
-
-
-def test_emb_neardup_hot_bucket_cap_mechanism(spark, tmp_path):
-    """max_bucket (opt-in production knob): a planted dense cluster floods
-    its LSH buckets; with the cap those buckets leave candidate generation
-    (cluster pairs vanish) while every pair OUTSIDE the hot buckets is
-    untouched — capping is surgical, not a global recall tax.  On the real
-    x20 corpus the cap never binds (max bucket 168 < any sane cap,
-    docs/ROUND8.md §5b); this pins the mechanism for corpora where it does."""
-    import os
-
-    import numpy as np
-
-    from exstream_implementation_spark.plans import similarity as sim
-
-    rng = np.random.default_rng(11)
-    dim = 64
-    rows = [
-        (i, 0, [float(x) for x in rng.standard_normal(dim)]) for i in range(512)
-    ]
-    # 100 vectors in a tight cone: same direction + small jitter → they all
-    # land in the same buckets and pair with each other at high cosine
-    center = rng.standard_normal(dim)
-    for k in range(100):
-        v = center + rng.standard_normal(dim) * 0.05
-        rows.append((1000 + k, 0, [float(x) for x in v]))
-    d = str(tmp_path / "hot_corpus")
-    spark.createDataFrame(
-        rows, "vec_id long, label int, embedding array<float>"
-    ).write.parquet(os.path.join(d, "embeddings.parquet"))
-
-    def pairs(cap):
-        sim._PLANES_CACHE.clear()
-        try:
-            return {
-                (r["vec_a"], r["vec_b"])
-                for r in sim.emb_neardup_lsh(spark, d, max_bucket=cap)
-                .select("vec_a", "vec_b")
-                .collect()
-            }
-        finally:
-            sim._PLANES_CACHE.clear()
-
-    uncapped = pairs(None)
-    capped = pairs(50)
-    cluster = {(a, b) for a, b in uncapped if a >= 1000 and b >= 1000}
-    assert len(cluster) > 1000  # the dense cluster dominates the pair set
-    # the cap is a strict candidate filter...
-    assert capped <= uncapped
-    # ...that removes the hot-bucket (cluster) pairs entirely...
-    assert not {(a, b) for a, b in capped if a >= 1000 and b >= 1000}
-    # ...while pairs meeting in NON-hot buckets survive: any pair that met
-    # only inside a hot bucket (incl. mixed random-cluster pairs) is gone by
-    # design, but the bulk of random-random pairs never touch a hot bucket
-    rr = lambda s: {(a, b) for a, b in s if a < 1000 and b < 1000}
-    assert rr(uncapped) and len(rr(capped)) >= 0.9 * len(rr(uncapped))

@@ -46,7 +46,6 @@ PACKAGE_ENTRIES = (
     "reporting",
     "streaming.explain_trigger",
     "streaming.unbounded",
-    "streaming.welford",
 )
 
 
@@ -246,8 +245,6 @@ RETAINED_TEST_ONLY = frozenset(
          "mine_hard_negatives rrf_fuse rrf_fuse_many write_postings"),
         ("plans.similarity", "ann_ivf_trained_topk ann_topk_cosine"),
         ("plans.splits", "leakage_report split_by_neardup_groups"),
-        ("plans.substring",
-         "dup_spans remove_spans spans_from_positions substring_dedup"),
         ("plans.text",
          "_re_escape_sql c4_line_filter chunk_by_separator clean_web_text strip_html "
          "text_quality"),
@@ -255,8 +252,7 @@ RETAINED_TEST_ONLY = frozenset(
         ("plans.windows", "events_tumbling_window"),
         ("streaming.features", "windowed_features"),
         ("streaming.source", "events_stream"),
-        ("streaming.stateful",
-         "batch_segmentation_entropy_reference online_segmentation_entropy"),
+        ("streaming.stateful", "batch_segmentation_entropy_reference"),
     )
     for name in names.split()
 )

@@ -1,5 +1,5 @@
 """M6 streaming-layer tests: windowed features, stream-static scoring, and the
-stateful online segmentation-entropy operator — each streaming result is
+stateful online reward operator — each streaming result is
 cross-checked against its batch twin (unified-API parity) or a driver-side
 reference implementation."""
 
@@ -19,7 +19,7 @@ from exstream_implementation_spark.streaming.source import (
 )
 from exstream_implementation_spark.streaming.stateful import (
     batch_segmentation_entropy_reference,
-    online_segmentation_entropy,
+    online_feature_rewards,
 )
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -92,7 +92,7 @@ def test_online_segmentation_entropy_matches_reference(spark):
         (F.col("value") > 50.0).cast("long").alias("label"),
     )
     got = run_stream_to_memory(
-        online_segmentation_entropy(src), "seg_mem", output_mode="update"
+        online_feature_rewards(src), "seg_mem", output_mode="update"
     )
     # driver-side oracle: same scan per key over ts-sorted labels
     import pandas as pd  # noqa: F401
@@ -215,51 +215,6 @@ def test_streaming_parquet_sink_roundtrip(spark, tmp_path):
     # append mode: finalized windows only — subset of batch, non-empty
     got = rows_as_set(back, cols)
     assert got and got < rows_as_set(batch, cols)
-
-
-def test_transform_with_state_welford_matches_batch(spark):
-    """Spark-4 transformWithStateInPandas path: lifetime per-key moments from
-    the state store must converge to the batch avg/var over a finite replay.
-
-    Requires protobuf (the transformWithState Python worker protocol) — not
-    shipped in this container, so the test gates on the import; the operator
-    itself is plain Spark 4 API and runs on any real cluster."""
-    pytest.importorskip("google.protobuf")
-    from exstream_implementation_spark.streaming.welford import online_moments
-
-    # transformWithState requires the RocksDB state store provider
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    src = events_stream(spark, SF_DIR).select(
-        F.col("event_type").alias("key"), F.col("value").cast("double")
-    )
-    got = run_stream_to_memory(online_moments(src), "welford_mem",
-                               output_mode="update")
-    # update mode emits one row per key per batch: keep the final (max n) row
-    import pandas as pd  # noqa: F401
-
-    last = {
-        r["key"]: r
-        for r in got.orderBy("n").collect()  # later rows overwrite earlier
-    }
-    want = {
-        r["event_type"]: r
-        for r in events_batch_as_stream_input(spark, SF_DIR)
-        .groupBy("event_type")
-        .agg(
-            F.count("value").alias("n"),
-            F.avg("value").alias("mean"),
-            F.sqrt(F.var_pop("value")).alias("std_pop"),
-        )
-        .collect()
-    }
-    assert set(last) == set(want)
-    for k, w in want.items():
-        assert last[k]["n"] == w["n"]
-        assert last[k]["mean"] == pytest.approx(w["mean"], rel=1e-9)
-        assert last[k]["std_pop"] == pytest.approx(w["std_pop"], rel=1e-9)
 
 
 def _attribution_join(views, clicks):

@@ -1,52 +1,31 @@
-"""Substring dedup (plans/substring.py) vs an independent pure-python
-model: anchor/coverage/cleaning parity on planted and random corpora, the
-keep-first convention, hashed==raw anchor equivalence, content-defined
-mod sampling, and degenerate inputs."""
+"""Substring duplication profile (plans/substring.py) vs an independent
+pure-python model: coverage parity on planted and random corpora,
+within-doc repetition, and degenerate inputs."""
 
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from exstream_implementation_spark.plans.substring import (
     dup_span_profile,
-    dup_spans,
     gram_anchors,
-    substring_dedup,
 )
-from exstream_implementation_spark.sources import load_table
-
-SF_DIR = "/root/testdata/sf0.001"
 
 
-def _py_dup_positions(texts, k, policy):
-    """texts: {doc_id: text} -> {doc_id: set of 0-based dup positions}."""
+def _py_mask(texts, k):
+    """{doc_id: bool mask over chars — True = inside a duplicated span}."""
     occ = {}
     for d in sorted(texts):
         t = texts[d]
         for i in range(len(t) - k + 1):
             occ.setdefault(t[i : i + k], []).append((d, i))
-    dup = {d: set() for d in texts}
+    out = {d: [False] * len(t) for d, t in texts.items()}
     for ps in occ.values():
         if len(ps) < 2:
             continue
-        first = min(ps)
         for d, i in ps:
-            if policy == "all" or (d, i) != first:
-                dup[d].add(i)
-    return dup
-
-
-def _py_mask(texts, k, policy):
-    """{doc_id: bool mask over chars — True = inside a duplicated span}."""
-    dup = _py_dup_positions(texts, k, policy)
-    out = {}
-    for d, t in texts.items():
-        mask = [False] * len(t)
-        for i in dup[d]:
             for j in range(i, i + k):
-                mask[j] = True
-        out[d] = mask
+                out[d][j] = True
     return out
 
 
@@ -56,17 +35,15 @@ def _df(spark, texts):
     )
 
 
-def _check_profile(spark, texts, k, policy):
+def _check_profile(spark, texts, k):
     got = {
         r["doc_id"]: r
-        for r in dup_span_profile(
-            _df(spark, texts), k=k, policy=policy
-        ).collect()
+        for r in dup_span_profile(_df(spark, texts), k=k).collect()
     }
-    masks = _py_mask(texts, k, policy)
+    masks = _py_mask(texts, k)
     for d, t in texts.items():
         exp = sum(masks[d])
-        assert got[d]["dup_chars"] == exp, (d, policy)
+        assert got[d]["dup_chars"] == exp, d
         assert got[d]["doc_len"] == len(t)
         exp_frac = round(exp / len(t), 6) if t else 0.0
         assert got[d]["dup_frac"] == pytest.approx(exp_frac, abs=1e-9)
@@ -81,8 +58,7 @@ def test_profile_matches_python_on_planted_duplicates(spark):
         3: "short",
         4: "",
     }
-    _check_profile(spark, texts, k=12, policy="all")
-    _check_profile(spark, texts, k=12, policy="keep_first")
+    _check_profile(spark, texts, k=12)
 
 
 def test_profile_matches_python_on_random_corpus(spark):
@@ -92,163 +68,16 @@ def test_profile_matches_python_on_random_corpus(spark):
         d: " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 60)))
         for d in range(40)
     }
-    _check_profile(spark, texts, k=10, policy="all")
-    _check_profile(spark, texts, k=10, policy="keep_first")
+    _check_profile(spark, texts, k=10)
 
 
 def test_within_doc_repetition_is_caught(spark):
-    # the duplicated span lives twice in ONE doc; keep_first keeps the
-    # earlier copy only
+    # the duplicated span lives twice in ONE doc
     texts = {0: "abcdefghijklmnop MIDDLE abcdefghijklmnop"}
-    _check_profile(spark, texts, k=16, policy="all")
-    _check_profile(spark, texts, k=16, policy="keep_first")
-
-
-def test_cleaning_matches_mask_complement(spark):
-    boiler = "this exact legal disclaimer paragraph repeats everywhere"
-    texts = {
-        0: "keep me " + boiler + " and me",
-        1: boiler + " novel tail content one",
-        2: "novel head content two " + boiler,
-    }
-    k = 14
-    out = {
-        r["doc_id"]: r
-        for r in substring_dedup(
-            _df(spark, texts), k=k, policy="keep_first"
-        ).collect()
-    }
-    masks = _py_mask(texts, k, "keep_first")
-    for d, t in texts.items():
-        exp = "".join(c for c, m in zip(t, masks[d]) if not m)
-        assert out[d]["text"] == exp, d
-        assert out[d]["n_removed_chars"] == sum(masks[d])
-    # doc 0 holds the globally-first occurrence — its boilerplate survives
-    assert boiler in out[0]["text"]
-    assert boiler not in out[1]["text"] and boiler not in out[2]["text"]
-
-
-def test_identical_docs_keep_exactly_one_copy(spark):
-    t = "the very same document body repeated verbatim twice over"
-    texts = {0: t, 1: t}
-    out = {
-        r["doc_id"]: r
-        for r in substring_dedup(
-            _df(spark, texts), k=12, policy="keep_first"
-        ).collect()
-    }
-    assert out[0]["text"] == t
-    assert out[1]["text"] == ""
-    assert out[1]["n_removed_chars"] == len(t)
-
-
-def test_hashed_equals_raw_anchors_on_testdata(spark):
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "text")
-    a = dup_span_profile(docs, k=40, hashed=True)
-    b = dup_span_profile(docs, k=40, hashed=False)
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
-def test_mod_sampling_detects_long_spans_and_underestimates(spark):
-    rng = random.Random(3)
-    junk = lambda n: "".join(  # noqa: E731
-        rng.choice("abcdefghijklmnopqrstuvwxyz") for _ in range(n)
-    )
-    span = junk(220)  # long shared span — dense in witnesses
-    texts = {0: junk(80) + span + junk(80), 1: junk(90) + span + junk(70)}
-    k = 16
-    exact = {
-        r["doc_id"]: r["dup_chars"]
-        for r in dup_span_profile(_df(spark, texts), k=k).collect()
-    }
-    sampled = {
-        r["doc_id"]: r["dup_chars"]
-        for r in dup_span_profile(_df(spark, texts), k=k, mod=4).collect()
-    }
-    for d in texts:
-        # sampling only drops witnesses — never invents coverage
-        assert 0 < sampled[d] <= exact[d]
-        # a 220-char span carries ~205/4 expected witnesses; missing ALL
-        # of them is (3/4)^205-improbable, and selection is deterministic
-        # in content, so this asserts a fixed fact about this corpus
-        assert sampled[d] >= 150
-
-
-def test_mod_sampling_selects_identically_across_copies(spark):
-    # content-defined selection: both copies of the span pick the same
-    # interior anchors, so every sampled witness pairs up — coverage on
-    # the two docs is identical even though the junk context differs
-    rng = random.Random(11)
-    junk = lambda n: "".join(  # noqa: E731
-        rng.choice("qwertyuiop") for _ in range(n)
-    )
-    span = junk(150)
-    texts = {0: junk(31) + span, 1: junk(57) + span + junk(13)}
-    prof = {
-        r["doc_id"]: r["dup_chars"]
-        for r in dup_span_profile(_df(spark, texts), k=12, mod=3).collect()
-    }
-    assert prof[0] == prof[1] > 0
-
-
-def test_spans_are_sorted_disjoint_and_in_bounds(spark):
-    rng = random.Random(5)
-    vocab = ["aa", "bb", "cc", "dd"]
-    texts = {
-        d: " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 40)))
-        for d in range(12)
-    }
-    spans = dup_spans(_df(spark, texts), k=6, policy="all").collect()
-    for r in spans:
-        prev_end = 0
-        for s in r["spans"]:
-            assert s["start"] > prev_end  # sorted, merged, disjoint
-            assert s["end"] - s["start"] >= 6
-            prev_end = s["end"]
-        assert prev_end <= len(texts[r["doc_id"]]) + 1
-
-
-def test_auto_via_routes_on_hot_anchor_estimate(spark):
-    from exstream_implementation_spark.plans.substring import (
-        choose_via,
-        gram_anchors,
-    )
-
-    hot = {d: "zqxjzqxjzqxj every doc shares this" for d in range(50)}
-    anchors = gram_anchors(_df(spark, hot), k=8)
-    # the shared gram occurs ~50x; sample=1.0 makes the estimate exact
-    assert choose_via(anchors, threshold=10, sample=1.0) == "join"
-    assert choose_via(anchors, threshold=10_000, sample=1.0) == "window"
-    # and auto produces the same results as both explicit forms
-    a = dup_span_profile(_df(spark, hot), k=8, via="auto")
-    b = dup_span_profile(_df(spark, hot), k=8, via="window")
-    assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty()
-
-
-def test_window_and_join_forms_agree(spark):
-    rng = random.Random(17)
-    vocab = ["red", "green", "blue", "cyan", "teal", "plum"]
-    texts = {
-        d: " ".join(rng.choice(vocab) for _ in range(rng.randrange(0, 50)))
-        for d in range(30)
-    }
-    for policy in ("all", "keep_first"):
-        a = dup_span_profile(
-            _df(spark, texts), k=8, policy=policy, via="window"
-        )
-        b = dup_span_profile(
-            _df(spark, texts), k=8, policy=policy, via="join"
-        )
-        assert a.exceptAll(b).isEmpty() and b.exceptAll(a).isEmpty(), policy
+    _check_profile(spark, texts, k=16)
 
 
 def test_bad_args(spark):
     docs = _df(spark, {0: "abc"})
     with pytest.raises(ValueError):
         gram_anchors(docs, k=1)
-    with pytest.raises(ValueError):
-        gram_anchors(docs, hashed=False, mod=4)
-    with pytest.raises(ValueError):
-        dup_span_profile(docs, k=2, policy="nope")
-    with pytest.raises(ValueError):
-        dup_span_profile(docs, k=2, via="nope")
