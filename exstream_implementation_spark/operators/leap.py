@@ -14,11 +14,18 @@ script_1.py:16-28):
 
 Spark: lag/max/min windows over the tiny (ano_key, feature, reward, rank)
 relation — per-anomaly state never leaves the executor.
+
+Driver rows: ``leap_cut_rows`` + ``assemble_rows`` are the same cut and
+assembly in plain Python, for rewards that already sit in driver memory (the
+streaming trigger's touched anomalies, O(touched × features) scalars) —
+lifting them into a DataFrame would cost a Spark job per trigger.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from collections import defaultdict
+
+from pyspark.sql import DataFrame, Row, functions as F
 
 
 def reward_leap_filter(
@@ -72,3 +79,51 @@ def assemble_explanations(
         F.col("_s.feature").alias("features"),
         F.col("_s.feature_order").alias("feature_orders"),
     )
+
+
+def leap_cut_rows(rewards) -> list[tuple[str, str, int, float, int]]:
+    """(ano_key, feature, feature_order, reward) driver rows → the kept
+    (ano_key, feature, feature_order, reward, rank) rows, each anomaly's in
+    rank order: ``reward_leap_filter`` over the rewards ranked by reward
+    desc, feature_order asc."""
+    by_anomaly = defaultdict(list)
+    for ano_key, feature, feature_order, reward in rewards:
+        by_anomaly[ano_key].append((feature, feature_order, reward))
+    kept = []
+    for ano_key, rows in by_anomaly.items():
+        ranked = sorted(rows, key=lambda r: (-r[2], r[1]))
+        rs = [r[2] for r in ranked]
+        leaps = [prev - rw for prev, rw in zip(rs, rs[1:])]
+        max_leap = max(leaps, default=None)
+        # keep the ranks before the first max leap whose previous reward is
+        # not 0; no such leap (a single feature has none): nothing is cut
+        n_kept = next(
+            (
+                i
+                for i, leap in enumerate(leaps, 1)
+                if leap == max_leap and rs[i - 1] != 0
+            ),
+            len(rs),
+        )
+        kept.extend(
+            (ano_key, f, fo, rw, rank)
+            for rank, (f, fo, rw) in enumerate(ranked[:n_kept], 1)
+        )
+    return kept
+
+
+def assemble_rows(kept) -> list[Row]:
+    """``leap_cut_rows`` output (each anomaly's rows in rank order) → one
+    ``Row(ano_key, features, feature_orders)`` per anomaly, as
+    ``assemble_explanations`` collects them."""
+    by_anomaly = defaultdict(list)
+    for ano_key, feature, feature_order, _reward, _rank in kept:
+        by_anomaly[ano_key].append((feature, feature_order))
+    return [
+        Row(
+            ano_key=ano_key,
+            features=[f for f, _ in rows],
+            feature_orders=[fo for _, fo in rows],
+        )
+        for ano_key, rows in by_anomaly.items()
+    ]

@@ -82,7 +82,6 @@ def global_lag(
     rn_col: str = "rn",
     lag_col: str = "prev",
     num_partitions: int | None = None,
-    persist_input: bool = False,
 ) -> DataFrame:
     """Global row number AND lag(value) in one distributed pass — no
     single-partition window and no rank-shift self-join.
@@ -95,16 +94,13 @@ def global_lag(
     ranked table — the win that matters when the ranked relation is itself
     large (e.g. per-key aggregates over a 100 TB fact table).
 
-    ``persist_input=True``: cache ``df`` before the range partitioning.
-    ``repartitionByRange`` SAMPLES its child in a separate job, so an
-    unpersisted input subtree is computed TWICE (sampling pass + shuffle
-    map pass) — guide §1.2 "don't compute things twice".  Enable when the
-    input is an expensive subtree (an aggregation over a fact table);
-    leave off when recompute is cheaper than materializing.  The input
-    cache is dropped as soon as the shuffled output is materialized.
+    ``df`` is cached before the range partitioning: ``repartitionByRange``
+    SAMPLES its child in a separate job, so an unpersisted input subtree is
+    computed TWICE (sampling pass + shuffle map pass).  The input cache is
+    dropped as soon as the shuffled output is materialized.
     """
     n = num_partitions or df.sparkSession.conf.get("spark.sql.shuffle.partitions")
-    src = tracked_persist(df) if persist_input else df
+    src = tracked_persist(df)
     w_local = Window.partitionBy("__pid").orderBy(*order_by)
     # one persisted pass carries the sort, the window row numbers AND the
     # window lag — the sizes job, the boundary job and the caller's
@@ -134,10 +130,9 @@ def global_lag(
         )
         .collect()
     )
-    if persist_input:
-        # `local` is materialized by the stats job — the input cache has
-        # served both its reads (sampling + shuffle map) and can go now
-        src.unpersist()
+    # `local` is materialized by the stats job — the input cache has served
+    # both its reads (sampling + shuffle map) and can go now
+    src.unpersist()
     sizes = {r["__pid"]: r["cnt"] for r in stats}
     offsets, acc = {}, 0
     for pid in sorted(sizes):

@@ -837,46 +837,16 @@ def corpus_curation(spark, sf_dir):
 # overlap an evaluation benchmark's n-grams.  The benchmark side is tiny by
 # construction, so its shingle set BROADCASTS and the check is one map-side
 # semi-join per document — no shuffle of the corpus, linear at 100 TB.
-def decontaminate(
-    spark,
-    sf_dir,
-    benchmark=None,
-    max_overlap: float = 0.0,
-    benchmark_grams=None,
-):
+def decontaminate(spark, sf_dir, benchmark_grams, max_overlap: float = 0.0):
     """(doc_id, n_grams, n_contaminated, overlap, contaminated) per corpus doc.
 
-    ``benchmark`` is a DataFrame with a ``text`` column (the eval set).
-    A document's overlap is |its distinct 3-grams ∩ benchmark 3-grams| /
-    |its distinct 3-grams|; ``contaminated`` flags overlap > ``max_overlap``.
-    Empty/short docs (no 3-grams) report overlap 0.0.
-
-    ``benchmark_grams`` (alternative to ``benchmark``): a pre-shingled
-    DataFrame with one distinct ``gram`` column — lets a caller whose
-    benchmark is a corpus slice reuse the session-cached shingle table
-    instead of re-tokenizing the text.
+    ``benchmark_grams`` is the eval set's pre-shingled word 3-grams, one
+    distinct ``gram`` column.  A document's overlap is |its distinct 3-grams
+    ∩ benchmark 3-grams| / |its distinct 3-grams|; ``contaminated`` flags
+    overlap > ``max_overlap``.  Empty/short docs (no 3-grams) report
+    overlap 0.0.
     """
-    if (benchmark is None) == (benchmark_grams is None):
-        raise ValueError("pass exactly one of benchmark / benchmark_grams")
     grams = _doc_grams(spark, sf_dir)
-    if benchmark_grams is not None:
-        bench_grams = benchmark_grams
-    else:
-        bench_grams = (
-            benchmark.select(F.split(F.lower("text"), r"\s+").alias("toks"))
-            .select(
-                F.explode(
-                    F.array_distinct(
-                        F.expr(
-                            "CASE WHEN size(toks) < 3 THEN array() ELSE "
-                            "transform(sequence(0, size(toks) - 3),"
-                            " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) END"
-                        )
-                    )
-                ).alias("gram")
-            )
-            .distinct()
-        )
     e = grams.select("doc_id", F.explode("grams").alias("gram"))
     # real eval benchmarks are MB-sized (≪ 1M distinct 3-grams) so this join
     # normally broadcasts and the corpus never shuffles — but the hint is
@@ -885,7 +855,7 @@ def decontaminate(
     # shuffle join instead of a forced-broadcast OOM, and plan construction
     # stays lazy (no probe jobs, no persist of a caller-owned frame)
     hits = (
-        e.join(bench_grams, "gram")
+        e.join(benchmark_grams, "gram")
         .groupBy("doc_id")
         .agg(F.count(F.lit(1)).alias("n_contaminated"))
     )

@@ -377,9 +377,6 @@ def topk_until_leap(spark, sf_dir):
         "rev",
         rn_col="rnk",
         lag_col="prev_rev",
-        # the revenue aggregate is a full lineitem pass; without this the
-        # range-boundary sampling job computes it a second time (guide §1.2)
-        persist_input=True,
     ).withColumn("leap", F.col("prev_rev") - F.col("rev"))
     scalars = leaps.agg(
         F.max("leap").alias("max_leap"),

@@ -6,12 +6,13 @@ Composition (all inside one StreamingQuery):
   melted point stream (ano_key, feature, feature_order, seq, label)
     → ``online_feature_rewards``   stateful C7: O(1) state per
       (ano_key, feature), update-mode reward emissions per micro-batch
-    → foreachBatch handler: merge the update stream into the serving view of
-      latest rewards, then run the BATCH leap filter (C8) + explanation
-      assembly over the rewards of the anomalies TOUCHED THIS BATCH and emit
-      one refreshed explanation per touched anomaly (per-batch work is
-      O(touched × features), independent of how many anomalies the view
-      holds).
+    → foreachBatch handler: collect the update batch once and merge it into
+      the serving view of latest rewards, then rank, leap-cut (C8) and
+      assemble the anomalies TOUCHED THIS BATCH on the driver, from the
+      view's rows, and emit one refreshed explanation per touched anomaly
+      (per-batch work is O(touched × features), independent of how many
+      anomalies the view holds; the trigger runs one Spark job, the
+      stateful update's).
 
 Restart durability: the stateful stage restores its per-key counters from the
 checkpoint, but after recovery it only re-emits keys touched by new data — a
@@ -58,9 +59,12 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.utils import AnalysisException
 
 from exstream_implementation_spark.canon import round_half_up
+# the driver-row C8, bound under the batch operators' names: exbench's
+# tracer wraps these two attributes of this module (exbench/layers.py
+# SPAN_TARGETS, pinned by tests/test_span_targets.py)
 from exstream_implementation_spark.operators.leap import (
-    assemble_explanations,
-    reward_leap_filter,
+    assemble_rows as assemble_explanations,
+    leap_cut_rows as reward_leap_filter,
 )
 from exstream_implementation_spark.streaming.stateful import (
     online_feature_rewards,
@@ -71,6 +75,13 @@ _SEP = "\x1f"
 # decimals the served rewards are rounded to before ranking — the batch
 # pipeline's cross-engine float determinism boundary (reward_round=6)
 REWARD_ROUND = 6
+# the reward log's parquet schema; batch_id and epoch are NOT NULL, as the
+# literal columns of logs written from the update DataFrame are, so every log
+# file carries one schema (tests/test_streaming.py pins it)
+JOURNAL_SCHEMA = (
+    "key string, n_rows bigint, reward double,"
+    " batch_id int NOT NULL, epoch int NOT NULL"
+)
 
 
 def melted_to_keyed(melted: DataFrame) -> DataFrame:
@@ -198,22 +209,20 @@ class RewardServingView:
         """Journal + merge one update micro-batch; returns the set of
         anomalies touched by it (empty set: nothing changed).  ``batch_df``
         must carry (key, n_rows, reward)."""
-        batch_df = batch_df.persist()
-        try:
-            updates = batch_df.collect()  # O(touched keys): reward scalars
-            if not updates:
-                return set()
-            if self.state_dir is not None:
-                (
-                    batch_df.select("key", "n_rows", "reward")
-                    .withColumn("batch_id", F.lit(batch_id))
-                    .withColumn("epoch", F.lit(self._epoch))
-                    .write.mode("append")
-                    .parquet(self.state_dir)
-                )
-                self._appends += 1
-        finally:
-            batch_df.unpersist()
+        # the batch's only job: O(touched keys) reward scalars
+        updates = batch_df.collect()
+        if not updates:
+            return set()
+        if self.state_dir is not None:
+            local_frame(
+                self.spark,
+                [
+                    (r["key"], r["n_rows"], r["reward"], batch_id, self._epoch)
+                    for r in updates
+                ],
+                JOURNAL_SCHEMA,
+            ).write.mode("append").parquet(self.state_dir)
+            self._appends += 1
         touched = {r["key"].split(_SEP, 1)[0] for r in updates}
         # an anomaly not currently in the view (LRU-evicted, or simply not
         # seen since this process started) may have journaled rewards for
@@ -341,20 +350,12 @@ def start_online_reward_scorer(
         touched = view.apply_batch(batch_df, batch_id)
         if not touched:
             return
-        # only the touched anomalies re-rank: per-batch work is
-        # O(touched × features), not O(view) — and the sink receives one
-        # refreshed explanation per anomaly that actually changed
-        tbl = local_frame(
-            spark,
-            view.as_rows(only=touched),
-            "ano_key string, feature string, feature_order int, reward double",
-        )
-        w = Window.partitionBy("ano_key").orderBy(
-            F.desc("reward"), F.asc("feature_order")
-        )
-        ranked = tbl.withColumn("rank", F.row_number().over(w))
-        out = assemble_explanations(reward_leap_filter(ranked))
-        for row in out.collect():
+        # only the touched anomalies re-rank, on the driver rows: per-batch
+        # work is O(touched × features), not O(view), and runs no Spark job —
+        # the sink receives one refreshed explanation per anomaly that
+        # actually changed
+        kept = reward_leap_filter(view.as_rows(only=touched))
+        for row in assemble_explanations(kept):
             sink.append((batch_id, row))
 
     writer = rewards_stream.writeStream.outputMode("update").foreachBatch(handle)

@@ -14,6 +14,23 @@ from exstream_implementation_spark.sources import load_table
 SF_DIR = "/root/testdata/sf0.001"
 
 
+def bench_grams(bench):
+    """A benchmark's ``text`` column → its distinct word 3-grams, shingled
+    like the corpus side (lower-case, whitespace split)."""
+    toks = bench.select(F.split(F.lower("text"), r"\s+").alias("toks"))
+    return toks.select(
+        F.explode(
+            F.array_distinct(
+                F.expr(
+                    "CASE WHEN size(toks) < 3 THEN array() ELSE "
+                    "transform(sequence(0, size(toks) - 3),"
+                    " i -> concat_ws(' ', toks[i], toks[i+1], toks[i+2])) END"
+                )
+            )
+        ).alias("gram")
+    ).distinct()
+
+
 def test_decontaminate_flags_exact_benchmark_members(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     # benchmark = the full text of three corpus docs -> those docs must come
@@ -21,7 +38,7 @@ def test_decontaminate_flags_exact_benchmark_members(spark):
     bench_ids = [r["doc_id"] for r in docs.select("doc_id").orderBy("doc_id").limit(3).collect()]
     bench = docs.filter(F.col("doc_id").isin(bench_ids)).select("text")
 
-    out = decontaminate(spark, SF_DIR, bench).collect()
+    out = decontaminate(spark, SF_DIR, bench_grams(bench)).collect()
     by_id = {r["doc_id"]: r for r in out}
     assert set(by_id) == {r["doc_id"] for r in docs.select("doc_id").collect()}
     for did in bench_ids:
@@ -36,8 +53,8 @@ def test_decontaminate_flags_exact_benchmark_members(spark):
 def test_decontaminate_threshold(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     bench = docs.orderBy("doc_id").limit(1).select("text")
-    strict = decontaminate(spark, SF_DIR, bench, max_overlap=0.0)
-    loose = decontaminate(spark, SF_DIR, bench, max_overlap=0.99)
+    strict = decontaminate(spark, SF_DIR, bench_grams(bench), max_overlap=0.0)
+    loose = decontaminate(spark, SF_DIR, bench_grams(bench), max_overlap=0.99)
     n_strict = strict.filter("contaminated").count()
     n_loose = loose.filter("contaminated").count()
     assert n_loose <= n_strict
@@ -107,18 +124,6 @@ def test_sample_mix_rejects_unknown_method(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     with pytest.raises(ValueError, match="method"):
         sample_mix(docs, {"web": 0.5}, method="MD5")
-
-
-def test_decontaminate_requires_exactly_one_benchmark_form(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    bench = docs.limit(1).select("text")
-    with pytest.raises(ValueError, match="exactly one"):
-        decontaminate(spark, SF_DIR)
-    with pytest.raises(ValueError, match="exactly one"):
-        decontaminate(
-            spark, SF_DIR, bench,
-            benchmark_grams=bench.selectExpr("text AS gram"),
-        )
 
 
 def test_repetition_metrics_null_text_scores_zero(spark):
@@ -223,7 +228,7 @@ def test_short_docs_survive_gram_paths(spark, tmp_path):
     assert {(r["doc_a"], r["doc_b"]) for r in pairs} == {(3, 4)}
 
     bench = spark.createDataFrame([("x",)], "text string")  # 1-token benchmark
-    out = decontaminate(spark, str(tmp_path), bench).collect()
+    out = decontaminate(spark, str(tmp_path), bench_grams(bench)).collect()
     assert len(out) == 5
     assert all(not r["contaminated"] for r in out)
 

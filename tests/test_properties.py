@@ -3,9 +3,10 @@ one-shot Spark equivalence checks for the distributed operators."""
 
 import math
 
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
+from exstream_implementation_spark.canon import round_half_up
 from exstream_implementation_spark.streaming.stateful import (
     _entropy,
     _scan,
@@ -699,3 +700,80 @@ def test_emb_neardup_lsh_planted_neardup_recall(spark, tmp_path):
         sim._PLANES_CACHE.clear()  # tmp dir must not linger in the cache
     hits = sum(1 for s, v in planted if (min(s, v), max(s, v)) in got)
     assert hits / n_pairs >= 0.9, f"planted near-dup recall {hits}/{n_pairs}"
+
+
+# rewards for the driver leap cut: a small pool makes exact ties and zero
+# rewards common; the floats are rounded as the serving view rounds them
+_REWARD_POOL = (-1.0, 0.0, 0.5, 1.0, 2.0)
+_reward = st.one_of(
+    st.sampled_from(_REWARD_POOL),
+    st.floats(min_value=-5, max_value=5, allow_nan=False).map(
+        lambda v: round_half_up(v, 6)
+    ),
+)
+
+
+@st.composite
+def _anomaly_rewards(draw):
+    """One anomaly's rewards: 1-8 features, feature_order a permutation so a
+    tie is broken by it rather than by list position."""
+    rewards = draw(st.lists(_reward, min_size=1, max_size=8))
+    orders = draw(st.permutations(range(len(rewards))))
+    return [(f"f{o}", o, rw) for o, rw in zip(orders, rewards)]
+
+
+@given(st.lists(_anomaly_rewards(), min_size=1, max_size=4))
+@example([[("f0", 0, 2.885), ("f1", 1, 0.701)]])  # FIXTURES §5
+@example([[("f0", 0, 1.0), ("f1", 1, 1.0), ("f2", 2, 1.0)]])  # all equal
+@example([[("f0", 0, 0.0), ("f1", 1, 0.0)]])  # all zero: nothing cut
+@example([[("f3", 3, 1.5)], [("f0", 0, 0.0)]])  # single-feature anomalies
+# the largest leap (1.0) first follows a zero reward: that one is skipped
+# and the cut falls at its second occurrence
+@example([[("f0", 0, 0.5), ("f1", 1, 0.0), ("f2", 2, -1.0),
+           ("f3", 3, -1.5), ("f4", 4, -2.5)]])
+# the largest leap only ever follows a zero reward: nothing is cut
+@example([[("f0", 0, 0.0), ("f1", 1, -2.0), ("f2", 2, -2.5)]])
+# leaps compare exactly: in binary 0.3 - 0.2 < 0.2 - 0.1, so the max leap
+# is the second one
+@example([[("f0", 0, 0.3), ("f1", 1, 0.2), ("f2", 2, 0.1)]])
+# exact ties broken by feature_order, not by row position
+@example([[("f2", 2, 1.0), ("f0", 0, 1.0), ("f1", 1, 0.25)]])
+@settings(max_examples=30, deadline=None)
+def test_driver_leap_cut_matches_sql(anomalies):
+    """leap_cut_rows + assemble_rows == assemble_explanations over
+    reward_leap_filter of the same rewards ranked by reward desc,
+    feature_order asc — the streaming trigger's C8 against the batch one."""
+    from pyspark.sql import Window
+
+    from exstream_implementation_spark.operators.leap import (
+        assemble_explanations,
+        assemble_rows,
+        leap_cut_rows,
+        reward_leap_filter,
+    )
+    from exstream_implementation_spark.session import get_spark, local_frame
+
+    rows = [
+        (f"a{i}", f, fo, rw)
+        for i, rewards in enumerate(anomalies)
+        for f, fo, rw in rewards
+    ]
+    got = {
+        r["ano_key"]: (r["features"], r["feature_orders"])
+        for r in assemble_rows(leap_cut_rows(rows))
+    }
+    spark = get_spark(app_name="exstream-spark-tests", shuffle_partitions=8)
+    tbl = local_frame(
+        spark,
+        rows,
+        "ano_key string, feature string, feature_order int, reward double",
+    )
+    w = Window.partitionBy("ano_key").orderBy(
+        F.desc("reward"), F.asc("feature_order")
+    )
+    ranked = tbl.withColumn("rank", F.row_number().over(w))
+    want = {
+        r["ano_key"]: (list(r["features"]), list(r["feature_orders"]))
+        for r in assemble_explanations(reward_leap_filter(ranked)).collect()
+    }
+    assert got == want

@@ -13,6 +13,8 @@ from pyspark.sql import functions as F
 from exstream_implementation_spark.operators.rewards import single_feature_rewards
 from exstream_implementation_spark.operators.leap import (
     assemble_explanations,
+    assemble_rows,
+    leap_cut_rows,
     reward_leap_filter,
 )
 from tests import oracle_pandas as oracle
@@ -170,6 +172,15 @@ def test_leap_filter_golden(spark):
     assert [r["feature"] for r in kept.collect()] == ["f1"]
     expl = assemble_explanations(kept).collect()[0]
     assert expl["features"] == ["f1"]
+
+
+def test_leap_cut_rows_golden():
+    # FIXTURES §5 on the driver-row C8: same rewards, same single survivor
+    kept = leap_cut_rows([("a1", "f2", 1, 0.701), ("a1", "f1", 0, 2.885)])
+    assert kept == [("a1", "f1", 0, 2.885, 1)]
+    (expl,) = assemble_rows(kept)
+    assert expl["features"] == ["f1"]
+    assert expl["feature_orders"] == [0]
 
 
 def test_leap_filter_matches_oracle_random(spark):

@@ -690,6 +690,57 @@ def test_serving_view_compaction_bounds_log(spark, tmp_path):
     assert rebuilt.latest[("A", "f1", 0)] == pytest.approx(0.4)
 
 
+def test_serving_view_journal_schema(spark, tmp_path):
+    """The journal is written from the collected update rows; its parquet
+    schema must stay the one the update DataFrame wrote before (read here
+    off such a log: NOT NULL literals for batch_id and epoch, nullable after
+    a compaction), so old and new log files read back as one log."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from exstream_implementation_spark.streaming.online_scorer import (
+        RewardServingView,
+    )
+
+    def file_schemas(state):
+        return {
+            tuple(
+                (f.name, str(f.type), f.nullable)
+                for f in pq.read_schema(path)
+            )
+            for path in glob.glob(f"{state}/*.parquet")
+        }
+
+    def fields(not_null):
+        return (
+            ("key", "string", True),
+            ("n_rows", "int64", True),
+            ("reward", "double", True),
+            ("batch_id", "int32", not not_null),
+            ("epoch", "int32", not not_null),
+        )
+
+    spark_schema = (
+        "struct<key:string,n_rows:bigint,reward:double,batch_id:int,epoch:int>"
+    )
+    state = str(tmp_path / "log")
+    view = RewardServingView(spark, state_dir=state, compact_every=None)
+    _view_batch(spark, view, [("A", "f1", 0, 10, 0.9), ("A", "f2", 1, 10, 0.5)], 0)
+    _view_batch(spark, view, [("A", "f1", 0, 12, 0.7)], 1)
+    assert file_schemas(state) == {fields(not_null=True)}
+    assert spark.read.parquet(state).schema.simpleString() == spark_schema
+    assert spark.read.parquet(state).count() == 3
+
+    view._compact()
+    assert file_schemas(state) == {fields(not_null=False)}
+    assert spark.read.parquet(state).schema.simpleString() == spark_schema
+    rebuilt = RewardServingView(spark, state_dir=state)
+    assert rebuilt.latest == {("A", "f1", 0): 0.7, ("A", "f2", 1): 0.5}
+    assert rebuilt._touched == {"A": (0, 1)}
+    assert rebuilt._epoch == 1
+
+
 def test_round_half_up_matches_spark_round(spark):
     """canon.round_half_up must agree with F.round on exact half boundaries
     where Python's builtin round (half-even) diverges."""
