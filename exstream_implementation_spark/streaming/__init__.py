@@ -12,12 +12,14 @@ loop anywhere in script_1.py); the paper's online CEP setting (exstream.pdf
                                   stream-static broadcast join + z-score
                                   anomaly flag
 - ``stateful.online_feature_rewards``
-                                  applyInPandasWithState port of C6's
-                                  run-length scan, with C4 and C7 on top
+                                  driver-side reducer: C6's run-length
+                                  scan continued per key from an O(1)
+                                  tuple, with C4 and C7 on top
 - ``explain_trigger``             flag → label → batch ``explain_anomalies``
                                   per micro-batch
-- ``online_scorer``               the online reward scorer and its serving
-                                  view
+- ``online_scorer``               the online reward scorer: one collect
+                                  per trigger, the reducer, and the serving
+                                  view that holds and journals the state
 - ``unbounded``                   the online scorer over a synthetic
                                   unbounded rate source
 

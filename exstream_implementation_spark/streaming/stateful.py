@@ -1,8 +1,8 @@
-"""Custom stateful operator — online feature rewards (C4/C6/C7, streaming).
+"""Online feature rewards (C4/C6/C7, streaming): a driver-side reducer.
 
 Batch C6 (reference entropy_based_single_reward_feature.py:157-200) run-length
 scans a label sequence and sums p·ln(1/p) per segment, never counting the
-final segment (SURVEY Q2).  Online, the sequence is unbounded, so the operator
+final segment (SURVEY Q2).  Online, the sequence is unbounded, so the reducer
 keeps O(1) state per key and emits the entropy over *closed* segments (with
 the class entropy and their ratio, the reward) after each micro-batch — the
 still-open run is exactly the "final segment" Q2 drops, so the streaming
@@ -11,21 +11,27 @@ semantics converge to the batch value on a finite replay.
 Identity used (n = rows seen, l_i = closed-segment lengths):
     H = Σ (l_i/n)·ln(n/l_i) = (ln n)·(Σ l_i)/n − (1/n)·Σ l_i·ln l_i
 so state is just (n, Σ l_i, Σ l_i·ln l_i, open-run label, open-run length) —
-state-store size is O(#keys), independent of stream length.
+O(#keys) tuples, independent of stream length.
 
-Ordering: rows are scanned in ``seq`` order *within* each micro-batch;
-cross-batch order is arrival order.  Feed event-time-sorted batches (e.g. the
-file source replaying time-partitioned files) for exact batch parity.
+The state update is plain Python over the rows a trigger collects: at the
+per-trigger volumes of the online setting (hundreds to thousands of points
+over tens of keys) a Spark stateful operator costs more in shuffle, Arrow
+hand-off and state-store commit than the scan itself.  The caller owns the
+tuples (``streaming.online_scorer`` keeps them next to its serving view and
+journals them for restarts).
+
+Ordering: rows are scanned in ``seq`` order across each key's whole
+micro-batch; cross-batch order is arrival order.  Feed event-time-sorted
+batches (e.g. the file source replaying time-partitioned files) for exact
+batch parity.
 """
 
 from __future__ import annotations
 
 import math
-from collections.abc import Iterator
+from operator import itemgetter
 
-import pandas as pd
-from pyspark.sql import DataFrame
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql import Row
 from pyspark.sql.types import (
     DoubleType,
     LongType,
@@ -77,23 +83,24 @@ REWARD_OUTPUT_SCHEMA = StructType(
     ]
 )
 
-REWARD_STATE_SCHEMA = StructType(
-    [
-        StructField("n", LongType()),
-        StructField("closed_len", LongType()),
-        StructField("closed_llnl", DoubleType()),
-        StructField("closed_segs", LongType()),
-        StructField("cur_label", LongType()),
-        StructField("cur_len", LongType()),
-        StructField("n_ano", LongType()),
-    ]
-)
+
+# the update row the reducer emits per touched key
+RewardUpdate = Row(*REWARD_OUTPUT_SCHEMA.fieldNames())
+
+# a key's state before its first point: the C6 tuple, then n_ano
+EMPTY_STATE = (0, 0, 0.0, 0, -1, 0, 0)
 
 
-def online_feature_rewards(df: DataFrame) -> DataFrame:
-    """Online C7 over columns ``(key, seq, label)``: per-key reward =
+def online_feature_rewards(state: dict, rows) -> list:
+    """Online C7 over ``(key, seq, label)`` rows: per-key reward =
     class_entropy / segmentation_entropy over the ARRIVAL-ORDERED label
     sequence, maintained incrementally forever.
+
+    ``state`` maps key → ``(n, closed_len, closed_llnl, closed_segs,
+    cur_label, cur_len, n_ano)``; a missing key starts at ``EMPTY_STATE``.
+    The reducer stable-sorts each key's rows of this micro-batch by ``seq``,
+    continues the key's C6 scan from its tuple, stores the new tuple back in
+    ``state`` and returns one ``RewardUpdate`` per key the rows touch.
 
     Semantic note (vs batch ``operators.rewards``): batch C7 sorts the rows by
     feature VALUE before segmenting (reference
@@ -103,18 +110,18 @@ def online_feature_rewards(df: DataFrame) -> DataFrame:
     monitoring framing (exstream.pdf §6.3): a feature whose label runs are
     long in time (few alternations) separates the classes well *as the stream
     evolves*. Class entropy (C4, log2) is order-free, so it is exact.
-    State per key is O(1): the C6 tuple plus the anomaly-row count.
     """
-
-    def fn(key, pdf_iter: Iterator[pd.DataFrame], state: GroupState):
-        st = state.get if state.exists else (0, 0, 0.0, 0, -1, 0, 0)
-        c6, n_ano = st[:6], st[6]
-        for pdf in pdf_iter:
-            pdf = pdf.sort_values("seq", kind="mergesort")
-            labs = pdf["label"].to_numpy()
-            c6 = _scan(labs, c6)
-            n_ano += int((labs == 1).sum())
-        state.update((*c6, n_ano))
+    points: dict[str, list] = {}
+    for key, seq, label in rows:
+        points.setdefault(key, []).append((seq, label))
+    updates = []
+    for key, pts in points.items():
+        pts.sort(key=itemgetter(0))  # stable: equal seqs keep arrival order
+        labs = [lab for _, lab in pts]
+        st = state.get(key, EMPTY_STATE)
+        c6 = _scan(labs, st[:6])
+        n_ano = st[6] + sum(1 for lab in labs if lab == 1)
+        state[key] = (*c6, n_ano)
         n = c6[0]
         seg = _entropy(c6[0], c6[1], c6[2])
         if 0 < n_ano < n:
@@ -124,21 +131,5 @@ def online_feature_rewards(df: DataFrame) -> DataFrame:
         else:
             cls = 0.0
         reward = cls / seg if seg > 0 else 0.0
-        yield pd.DataFrame(
-            {
-                "key": [key[0]],
-                "n_rows": [n],
-                "n_ano": [n_ano],
-                "class_entropy": [cls],
-                "seg_entropy": [seg],
-                "reward": [reward],
-            }
-        )
-
-    return df.groupBy("key").applyInPandasWithState(
-        fn,
-        outputStructType=REWARD_OUTPUT_SCHEMA,
-        stateStructType=REWARD_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+        updates.append(RewardUpdate(key, n, n_ano, cls, seg, reward))
+    return updates

@@ -5,9 +5,12 @@ Everything else in ``streaming/`` replays finite file sources with
 ``availableNow`` (bounded, deterministic — what the oracle gate can check).
 This module is the paper's actual online setting (exstream.pdf §6.3: a
 trigger fires and the explanation must arrive in under 30 s): an unbounded
-``rate`` source feeds the same stateful C7 → C8 → assembly loop through
+``rate`` source feeds the same C7 → C8 → assembly loop through
 ``start_online_reward_scorer`` with a processing-time trigger, so
-explanations refresh continuously as points arrive, forever.
+explanations refresh continuously as points arrive, forever.  Each trigger
+collects its points to the driver, which continues the per-key C6 tuples
+(streaming/online_scorer.py): the driver sees rate × trigger interval rows
+per trigger.
 
 The rate source is Spark's built-in unbounded generator (row = (timestamp,
 value)); ``synthetic_melted_rate_stream`` maps it deterministically onto the

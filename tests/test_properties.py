@@ -11,6 +11,7 @@ from exstream_implementation_spark.streaming.stateful import (
     _entropy,
     _scan,
     batch_segmentation_entropy_reference,
+    online_feature_rewards,
 )
 
 
@@ -55,6 +56,41 @@ def test_scan_is_chunking_invariant(labels, n_chunks):
     assert _entropy(st_[0], st_[1], st_[2]) == pytest_approx(
         _entropy(whole[0], whole[1], whole[2])
     )
+
+
+@given(
+    st.lists(st.integers(min_value=0, max_value=1), min_size=1, max_size=120),
+    st.data(),
+)
+@settings(max_examples=200, deadline=None)
+def test_online_reducer_is_batching_and_order_invariant(labels, data):
+    """A key's label sequence split into random consecutive micro-batches,
+    each arriving in a random row order, must give exactly the reference
+    C4/C6/C7 of the whole sequence: the reducer sorts each batch by seq and
+    continues the same float operations from the key's tuple."""
+    cuts = sorted(
+        data.draw(
+            st.sets(st.integers(min_value=1, max_value=len(labels) - 1))
+            if len(labels) > 1
+            else st.just(set())
+        )
+    )
+    state = {}
+    for lo, hi in zip([0, *cuts], [*cuts, len(labels)]):
+        rows = [("k", seq, labels[seq]) for seq in range(lo, hi)]
+        shuffled = data.draw(st.permutations(rows))
+        (update,) = online_feature_rewards(state, shuffled)
+    n, n_ano = len(labels), labels.count(1)
+    seg = batch_segmentation_entropy_reference(labels)
+    if 0 < n_ano < n:
+        p_a = n_ano / n
+        cls = -p_a * math.log2(p_a) - (1.0 - p_a) * math.log2(1.0 - p_a)
+    else:
+        cls = 0.0
+    assert (update["n_rows"], update["n_ano"]) == (n, n_ano)
+    assert update["seg_entropy"] == seg
+    assert update["class_entropy"] == cls
+    assert update["reward"] == (cls / seg if seg > 0 else 0.0)
 
 
 def pytest_approx(x):

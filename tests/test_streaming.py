@@ -1,12 +1,12 @@
 """M6 streaming-layer tests: windowed features, stream-static scoring, and the
-stateful online reward operator — each streaming result is
+online reward reducer and scorer — each streaming result is
 cross-checked against its batch twin (unified-API parity) or a driver-side
 reference implementation."""
 
 import math
 
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Row, functions as F
 
 from exstream_implementation_spark.streaming.features import windowed_features
 from exstream_implementation_spark.streaming.scoring import (
@@ -23,6 +23,10 @@ from exstream_implementation_spark.streaming.stateful import (
 )
 
 SF_DIR = "/root/testdata/sf0.001"
+# the online scorer's input: melted points
+MELTED_DDL = (
+    "ano_key string, feature string, feature_order int, seq long, label long"
+)
 
 
 def run_stream_to_memory(sdf, name, output_mode="append"):
@@ -37,6 +41,20 @@ def run_stream_to_memory(sdf, name, output_mode="append"):
     # slow run fails loudly instead of reading a half-populated sink
     assert q.awaitTermination(300), f"stream {name} did not drain in 300s"
     return sdf.sparkSession.table(name)
+
+
+def run_reducer_stream(sdf):
+    """Drive the online reducer from a stream through foreachBatch, as the
+    scorer does; returns the last update row per key."""
+    state, last = {}, {}
+
+    def handle(batch_df, _batch_id):
+        for r in online_feature_rewards(state, batch_df.collect()):
+            last[r["key"]] = r
+
+    q = sdf.writeStream.foreachBatch(handle).trigger(availableNow=True).start()
+    assert q.awaitTermination(300), "reducer stream did not drain in 300s"
+    return last
 
 
 def rows_as_set(df, cols):
@@ -91,9 +109,7 @@ def test_online_segmentation_entropy_matches_reference(spark):
         F.col("ts").alias("seq"),
         (F.col("value") > 50.0).cast("long").alias("label"),
     )
-    got = run_stream_to_memory(
-        online_feature_rewards(src), "seg_mem", output_mode="update"
-    )
+    rows = run_reducer_stream(src)
     # driver-side oracle: same scan per key over ts-sorted labels
     import pandas as pd  # noqa: F401
 
@@ -107,7 +123,6 @@ def test_online_segmentation_entropy_matches_reference(spark):
         k: batch_segmentation_entropy_reference(g["label"].to_numpy())
         for k, g in pdf.groupby("event_type")
     }
-    rows = {r["key"]: r for r in got.collect()}
     assert set(rows) == set(by_key)
     for k, want in by_key.items():
         assert rows[k]["seg_entropy"] == pytest.approx(want, abs=1e-9)
@@ -266,21 +281,12 @@ def test_online_feature_rewards_matches_driver_oracle(spark):
     """Online C7 (arrival-ordered segmentation + exact class entropy): the
     streamed lifetime reward must equal a driver-side recomputation over the
     same event-time ordering."""
-    import math
-
-    from exstream_implementation_spark.streaming.stateful import (
-        online_feature_rewards,
-    )
-
     src = events_stream(spark, SF_DIR).select(
         F.col("event_type").alias("key"),
         F.col("ts").alias("seq"),
         (F.col("value") > 50.0).cast("long").alias("label"),
     )
-    got = run_stream_to_memory(
-        online_feature_rewards(src), "rewards_mem", output_mode="update"
-    )
-    rows = {r["key"]: r for r in got.orderBy("n_rows").collect()}
+    rows = run_reducer_stream(src)
 
     pdf = (
         events_batch_as_stream_input(spark, SF_DIR)
@@ -582,11 +588,13 @@ def test_reward_serving_view_reloads_evicted_anomaly(spark, tmp_path):
     view = RewardServingView(spark, state_dir=state, max_view_anomalies=1)
 
     def batch(rows, bid):
-        df = spark.createDataFrame(
-            [(f"{a}{_SEP}{f}{_SEP}{o}", n, rw) for a, f, o, n, rw in rows],
-            "key string, n_rows long, reward double",
+        view.apply_batch(
+            [
+                Row(key=f"{a}{_SEP}{f}{_SEP}{o}", n_rows=n, reward=rw)
+                for a, f, o, n, rw in rows
+            ],
+            bid,
         )
-        view.apply_batch(df, bid)
 
     # anomaly A gets two features, then B's activity evicts A
     batch([("A", "f1", 0, 10, 0.9), ("A", "f2", 1, 10, 0.5)], 0)
@@ -606,11 +614,13 @@ def test_reward_serving_view_reloads_evicted_anomaly(spark, tmp_path):
 def _view_batch(spark, view, rows, bid):
     from exstream_implementation_spark.streaming.online_scorer import _SEP
 
-    df = spark.createDataFrame(
-        [(f"{a}{_SEP}{f}{_SEP}{o}", n, rw) for a, f, o, n, rw in rows],
-        "key string, n_rows long, reward double",
+    return view.apply_batch(
+        [
+            Row(key=f"{a}{_SEP}{f}{_SEP}{o}", n_rows=n, reward=rw)
+            for a, f, o, n, rw in rows
+        ],
+        bid,
     )
-    return view.apply_batch(df, bid)
 
 
 def test_serving_view_eviction_requires_state_dir(spark):
@@ -824,3 +834,276 @@ def test_session_window_drops_late_arrivals(spark, tmp_path):
     # the closed session emitted with its ON-TIME events only — the late
     # 10:10 event neither grew it to 3 nor opened a new 10:10 session
     assert u1 == {("2024-01-01 10:00:00", 2)}
+
+
+def _reference_reward(labels):
+    """The reward the online reducer must reach on a finite label sequence
+    in seq order: C4 class entropy over the reference C6 (Q2 included)."""
+    n, n_ano = len(labels), sum(1 for lab in labels if lab == 1)
+    seg = batch_segmentation_entropy_reference(labels)
+    if 0 < n_ano < n:
+        p_a = n_ano / n
+        cls = -p_a * math.log2(p_a) - (1.0 - p_a) * math.log2(1.0 - p_a)
+    else:
+        cls = 0.0
+    return cls / seg if seg > 0 else 0.0
+
+
+def test_online_scorer_orders_whole_batch_by_seq(spark, tmp_path):
+    """One key's 12 points arrive in one micro-batch in reverse seq order.
+    They must be scanned in seq order across the whole batch, however the
+    batch is chunked for Python (``maxRecordsPerBatch``); a per-chunk sort
+    segments 4 + 4 + 4 reversed runs and reports another reward."""
+    from exstream_implementation_spark.streaming.online_scorer import (
+        start_online_reward_scorer,
+    )
+
+    labels = [0, 0, 1, 0, 1, 1, 1, 0, 0, 1, 0, 0]  # in seq order
+    src, state = str(tmp_path / "src"), str(tmp_path / "state")
+    spark.createDataFrame(
+        [("A", "f", 0, seq, lab) for seq, lab in enumerate(labels)][::-1],
+        MELTED_DDL,
+    ).coalesce(1).write.parquet(src)
+    conf = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(conf)
+    spark.conf.set(conf, "4")
+    try:
+        q = start_online_reward_scorer(
+            spark,
+            spark.readStream.schema(MELTED_DDL).parquet(src),
+            [],
+            state_dir=state,
+        )
+        assert q.awaitTermination(120)
+    finally:
+        spark.conf.set(conf, before)
+    (got,) = spark.read.parquet(state).collect()
+    assert got["n_rows"] == len(labels)
+    assert got["reward"] == _reference_reward(labels)
+
+
+def test_journal_append_is_one_file(spark, tmp_path):
+    """An append writes one parquet file per log, however many partitions
+    the rows' local relation has (8 rows on 4 cores made 4 files), and the
+    reward log keeps the schema test_serving_view_journal_schema pins."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    from exstream_implementation_spark.streaming.online_scorer import (
+        _SEP,
+        STATE_LOG,
+        RewardServingView,
+    )
+
+    state = str(tmp_path / "log")
+    view = RewardServingView(spark, state_dir=state, compact_every=None)
+    rows = [(f"A{_SEP}f{i}{_SEP}{i}", seq, (seq + i) % 2)
+            for i in range(8) for seq in range(3)]
+    updates = online_feature_rewards(view.state, rows)
+    assert len(updates) == 8
+    view.apply_batch(updates, 0)
+    (reward_file,) = glob.glob(f"{state}/*.parquet")
+    assert len(glob.glob(f"{state}/{STATE_LOG}/*.parquet")) == 1
+    assert [
+        (f.name, str(f.type), f.nullable) for f in pq.read_schema(reward_file)
+    ] == [
+        ("key", "string", True),
+        ("n_rows", "int64", True),
+        ("reward", "double", True),
+        ("batch_id", "int32", False),
+        ("epoch", "int32", False),
+    ]
+    assert spark.read.parquet(state).count() == 8
+
+
+def _split_points(spark, tmp_path, parts):
+    """Write each (name, frame) of ``parts`` as one file of a source dir and
+    return a stream over it that takes one file per micro-batch, in order."""
+    src = tmp_path / "src"
+    src.mkdir(exist_ok=True)
+    for name, df in parts:
+        df.coalesce(1).write.parquet(str(src / f"b={name}"))
+    return lambda: (
+        spark.readStream.schema(parts[0][1].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src) + "/b=*")
+    )
+
+
+def _halves(pts):
+    cut = pts.groupBy("feature").agg(
+        (F.max("seq") / 2).cast("long").alias("half")
+    )
+    half = pts.join(F.broadcast(cut), "feature")
+    return (
+        half.filter(F.col("seq") <= F.col("half")).drop("half"),
+        half.filter(F.col("seq") > F.col("half")).drop("half"),
+    )
+
+
+def _last_explanations(sink):
+    return {
+        r["ano_key"]: (tuple(r["features"]), tuple(r["feature_orders"]))
+        for _, r in sink
+    }
+
+
+def test_online_scorer_replays_uncommitted_batch(spark, tmp_path):
+    """A crash after a batch's journal write but before Spark commits it:
+    the restarted query replays that batch, and the state it continues from
+    must be the last committed batch's, not the replayed attempt's — the
+    rewards and explanations equal an uninterrupted run's."""
+    import os
+
+    from exstream_implementation_spark.streaming.online_scorer import (
+        RewardServingView,
+        start_online_reward_scorer,
+    )
+
+    pts = _melted_points(spark).persist()
+    first, second = _halves(pts)
+    stream = _split_points(spark, tmp_path, [("0", first), ("1", second)])
+    ckpt, state = str(tmp_path / "ckpt"), str(tmp_path / "state")
+
+    sink_a = []
+    q = start_online_reward_scorer(
+        spark, stream(), sink_a, checkpoint_dir=ckpt, state_dir=state
+    )
+    assert q.awaitTermination(180)
+    assert {b for b, _ in sink_a} == {0, 1}
+    for name in ("1", ".1.crc"):  # batch 1 never committed
+        os.remove(os.path.join(ckpt, "commits", name))
+
+    sink_b = []
+    q2 = start_online_reward_scorer(
+        spark, stream(), sink_b, checkpoint_dir=ckpt, state_dir=state
+    )
+    assert q2.awaitTermination(180)
+    assert {b for b, _ in sink_b} == {1}  # the replay
+
+    control_state = str(tmp_path / "control")
+    sink_c = []
+    q3 = start_online_reward_scorer(
+        spark, stream(), sink_c, state_dir=control_state
+    )
+    assert q3.awaitTermination(180)
+    pts.unpersist()
+
+    assert _last_explanations(sink_a + sink_b) == _last_explanations(sink_c)
+    assert (
+        RewardServingView(spark, state).latest
+        == RewardServingView(spark, control_state).latest
+    )
+
+
+def test_online_scorer_resume_requires_state_dir(spark, tmp_path):
+    """The checkpoint holds only source offsets: a query resuming from it
+    without the state journal must fail with the documented ValueError
+    instead of restarting every tuple from empty."""
+    from pyspark.errors import StreamingQueryException
+
+    from exstream_implementation_spark.streaming.online_scorer import (
+        start_online_reward_scorer,
+    )
+
+    first, second = _halves(_melted_points(spark))
+    stream = _split_points(spark, tmp_path, [("0", first)])
+    ckpt = str(tmp_path / "ckpt")
+    q = start_online_reward_scorer(spark, stream(), [], checkpoint_dir=ckpt)
+    assert q.awaitTermination(180)
+
+    second.coalesce(1).write.parquet(str(tmp_path / "src" / "b=1"))
+    q2 = start_online_reward_scorer(spark, stream(), [], checkpoint_dir=ckpt)
+    with pytest.raises(StreamingQueryException, match="ValueError.*state_dir"):
+        q2.awaitTermination(180)
+
+
+def _alternating_points(spark):
+    """Two anomalies x three features; feature k of anomaly a flips its
+    label every k + 2 + a points."""
+    rows = [
+        (ano, f"f{k}", k, seq, (seq // (k + 2 + a)) % 2)
+        for a, ano in enumerate(("A", "B"))
+        for k in range(3)
+        for seq in range(40)
+    ]
+    return spark.createDataFrame(rows, MELTED_DDL)
+
+
+def test_online_scorer_eviction_keeps_state(spark, tmp_path):
+    """With room for one anomaly in driver memory and batches alternating
+    between two, every batch evicts the other anomaly's rewards and
+    tuples; they come back from the journal, so rewards and explanations
+    equal an unbounded run's."""
+    from exstream_implementation_spark.streaming.online_scorer import (
+        RewardServingView,
+        start_online_reward_scorer,
+    )
+
+    pts = _alternating_points(spark)
+    first, second = F.col("seq") < 20, F.col("seq") >= 20
+    order = [("A", first), ("B", first), ("A", second), ("B", second)]
+    parts = [
+        (str(i), pts.filter((F.col("ano_key") == ano) & half))
+        for i, (ano, half) in enumerate(order)
+    ]
+    stream = _split_points(spark, tmp_path, parts)
+    runs = {}
+    for name, bound in (("bounded", 1), ("unbounded", None)):
+        state = str(tmp_path / name)
+        sink = []
+        q = start_online_reward_scorer(
+            spark, stream(), sink, state_dir=state, max_view_anomalies=bound
+        )
+        assert q.awaitTermination(180)
+        assert {b for b, _ in sink} == {0, 1, 2, 3}
+        runs[name] = (
+            _last_explanations(sink), RewardServingView(spark, state).latest
+        )
+    assert runs["bounded"] == runs["unbounded"]
+    assert len(runs["bounded"][1]) == 6
+
+
+def test_online_scorer_runs_no_stateful_operator(spark, tmp_path):
+    """The scorer's query is stateless to Spark: no Python stateful
+    operator, no state store and no shuffle in any micro-batch."""
+    from exstream_implementation_spark.streaming.online_scorer import (
+        start_online_reward_scorer,
+    )
+
+    pts = _alternating_points(spark)
+    halves = [("0", pts.filter("seq < 20")), ("1", pts.filter("seq >= 20"))]
+    stream = _split_points(spark, tmp_path, halves)
+    sink = []
+    q = start_online_reward_scorer(spark, stream(), sink)
+    assert q.awaitTermination(180)
+    assert sink and len(q.recentProgress) == 2
+    assert all(p["stateOperators"] == [] for p in q.recentProgress)
+    plan = q._jsq.explainInternal(True)
+    assert "FlatMapGroupsInPandasWithState" not in plan
+    assert "Exchange" not in plan
+
+
+def test_state_log_compaction_keeps_replay_point(spark, tmp_path):
+    """The state log is compacted before the batch's own tuples are
+    appended, so it still holds the last committed batch's tuples for a
+    replay of the batch that triggered the compaction."""
+    from exstream_implementation_spark.streaming.online_scorer import (
+        _SEP,
+        RewardServingView,
+    )
+
+    state = str(tmp_path / "log")
+    key = f"A{_SEP}f{_SEP}0"
+    view = RewardServingView(spark, state_dir=state, compact_every=1)
+    for bid, labels in enumerate(([0, 1, 1], [0, 0, 1])):
+        view.admit({"A"}, bid)
+        rows = [(key, 3 * bid + i, lab) for i, lab in enumerate(labels)]
+        view.apply_batch(online_feature_rewards(view.state, rows), bid)
+        if bid == 0:
+            committed = dict(view.state)
+    # batch 1 journaled and compacted both logs, then never committed
+    replay = RewardServingView(spark, state_dir=state, compact_every=1)
+    replay.admit({"A"}, 1)
+    assert replay.state == committed
