@@ -32,7 +32,7 @@ def _flagship(spark: SparkSession, sf_dir: str, instability_runs: int = 5) -> Da
 
     tune_session(spark)
     # trace is cached post-pivot; labels are derived in-plan from its bounds
-    # (no driver-side probe), so the whole flagship is one lazy graph
+    # (no driver-side probe job)
     trace, labels = _two_anomaly_setup(spark, sf_dir)
     cfg = ExplainConfig(
         instability_runs=instability_runs, slice_cache_scope="session"

@@ -1,5 +1,5 @@
 """Full EXstream pipeline — reference script_1.py:118-254 re-expressed as one
-lazy Spark plan.
+Spark plan up to C7 and a driver tail after it.
 
 Stages (reference driver at script_1.py:118-184):
   slice (C1) → correlation filter (C2) → per-anomaly FP filter (C3) →
@@ -10,7 +10,7 @@ Spark-first wins over the reference's 6× eager recomputation
 (reference script_1.py:227-238):
   * the sliced table is computed once and cached; the main run and the 5
     instability samples are an EXPLODED ``run_id`` dimension over it, so
-    rewards/leap for all six runs execute as ONE shuffle keyed
+    the rewards of all six runs execute as ONE shuffle keyed
     (run_id, ano_key, feature) — not six sequential pipelines, and the
     sliced subtree appears once in the plan;
   * sampling is deterministic Bernoulli p=0.8 via xxhash64 per (row, run)
@@ -18,9 +18,20 @@ Spark-first wins over the reference's 6× eager recomputation
     replacement and reruns eagerly — statistically equivalent, and FIXTURES
     §4 notes instability is only statistically comparable across engines
     anyway);
-  * (run, anomaly) groups that lose an entire class to sampling are dropped
-    (the reference would raise ValueError,
-    reference exstream/entropy_based_single_reward_feature.py:30-34).
+  * after C7 the plan holds one reward per (run, anomaly, feature), so
+    ``explain_anomalies`` collects those rows once and runs C8, the
+    assembly and C9 on the driver (``operators.leap`` — the same cut the
+    streaming trigger uses); the call is eager, and its result is a local
+    relation broadcast-joined to the labels.
+
+Samples that lose a class (a documented divergence from the reference): a
+(run, anomaly) group whose sample lost every reference or every anomaly row
+is dropped, where the reference raises ``ValueError``
+(reference exstream/entropy_based_single_reward_feature.py:30-34).  The
+explanation is run 0's, so a dropped sample run never changes it; C9 counts
+only the surviving sample runs, and ``exp_instability`` is NULL when none
+survived (pinned by tests/test_pipeline.py's ``sample_fraction=0.0`` case).
+An anomaly whose run 0 lost a class has no row at all.
 
 Explanation integer indices: the reference maps feature names to positions in
 the sliced frame's column order (reference script_1.py:110-115); features
@@ -29,6 +40,8 @@ precede metadata there, so the index is exactly our ``feature_order``.
 
 from __future__ import annotations
 
+import math
+from collections import Counter
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, functions as F
@@ -81,23 +94,27 @@ class ExplainConfig:
     slice_cache_scope: str = "query"
 
 
-def _explanations_for(
-    melted: DataFrame,
-    cfg: ExplainConfig,
-    keys: tuple[str, ...],
-    feature_names: list[str],
-) -> DataFrame:
-    """rewards → leap → assembly, all partitioned by *keys (run_id, ano_key):
-    the operators take the composite key natively, so the six instability runs
-    ride the same shuffles as the main run.  Rewards key on the int
-    ``feature_order`` and map it back to the name from ``feature_names`` (the
-    melt's column list) after aggregation, so no melted exchange carries the
-    feature STRING (guide §2.3)."""
-    rewards = single_feature_rewards(
-        melted, feature_names, reward_round=cfg.reward_round, keys=keys
-    )
-    kept = reward_leap_filter(rewards, keys=keys)
-    return assemble_explanations(kept, keys=keys)
+_LN2 = math.log(2.0)
+
+
+def _log2(x: float) -> float:
+    # the form of Spark SQL's log2, log(x) / log(2); math.log2 can differ
+    # from it in the last bit
+    return math.log(x) / _LN2
+
+
+def explanation_instability(explanations: list[list[int]]) -> float | None:
+    """C9 (reference script_1.py:187-205, log base 2): the entropy of the
+    feature frequencies over the sample runs' explanations,
+    H = -Σ p·log2 p = log2(T) - (Σ c·log2 c) / T, where c counts each
+    feature over the T flattened entries.  ``None`` when no sample run
+    survived (T = 0) — see the module docstring."""
+    flat = [f for e in explanations for f in e]
+    total = len(flat)
+    if not total:
+        return None
+    counts = Counter(flat)
+    return _log2(total) - sum(c * _log2(c) for c in counts.values()) / total
 
 
 def explain_anomalies(
@@ -105,7 +122,8 @@ def explain_anomalies(
 ) -> DataFrame:
     """→ (trace_id, ano_id, ano_key, explanation array<int>, exp_size,
     exp_instability) — the reference's result schema (FIXTURES §4) plus the
-    engine's explicit ano_key."""
+    engine's explicit ano_key.  Eager: the call runs the plan up to C7 and
+    returns the driver tail's local relation joined to ``labels``."""
     cfg = cfg or ExplainConfig()
     features = feature_columns(traces.columns)
 
@@ -187,45 +205,42 @@ def explain_anomalies(
             F.broadcast(fp_kept), ["run_id", "ano_key", "feature"], "inner"
         )
 
-    expl = _explanations_for(
-        melted, cfg, keys=("run_id", "ano_key"), feature_names=features
-    ).transform(tracked_persist)
-
-    # main explanation (run 0) + C9 instability in ONE groupBy over the
-    # cached expl relation (one row per (run, anomaly) — tiny).  The older
-    # form ran three plan branches (main filter; explode → two chained
-    # groupBys for the frequency entropy; a main⋈inst join): 2 extra
-    # exchanges + a join stage per explain call for data that fits one
-    # aggregation.  C9 (reference script_1.py:187-205, log base 2):
-    # H = -Σ p·log2 p = log2(T) - (Σ c·log2 c)/T over the per-feature
-    # explanation frequencies c across the sample runs — computed here from
-    # the flattened feature_orders of runs 1..k via array higher-order
-    # functions (counts are per feature_order, a bijection of feature names
-    # within one trace, so the frequencies are identical).
-    fused = expl.groupBy("ano_key").agg(
-        F.first(
-            F.when(F.col("run_id") == 0, F.col("feature_orders")),
-            ignorenulls=True,
-        ).alias("explanation"),
-        F.flatten(
-            F.collect_list(F.when(F.col("run_id") > 0, F.col("feature_orders")))
-        ).alias("_all"),
+    # C7 → one collect → C8, assembly and C9 on the driver.  After C7 the
+    # tail holds one reward per (run, anomaly, feature), O(runs × anomalies
+    # × features) rows: too few to pay for a Spark stage each.  The collect
+    # runs here, not inside the cut, so its job is the pipeline's own.
+    rewards = single_feature_rewards(
+        melted,
+        features,
+        reward_round=cfg.reward_round,
+        keys=("run_id", "ano_key"),
     )
-    inst_expr = F.expr(
-        """CASE WHEN size(_all) > 0 THEN
-             log2(size(_all)) -
-             aggregate(
-               transform(array_distinct(_all),
-                         f -> cast(size(filter(_all, x -> x = f)) AS DOUBLE)
-                              * log2(size(filter(_all, x -> x = f)))),
-               0D, (a, c) -> a + c) / size(_all)
-           END"""
+    rows = rewards.select(
+        "run_id", "ano_key", "feature", "feature_order", "reward"
+    ).collect()
+    kept = reward_leap_filter(
+        ((run_id, ano_key), f, fo, rw) for run_id, ano_key, f, fo, rw in rows
     )
-    main = fused.filter(F.col("explanation").isNotNull()).select(
-        "ano_key",
-        "explanation",
-        F.size("explanation").alias("exp_size"),
-        inst_expr.alias("exp_instability"),
+    runs: dict[str, dict[int, list[int]]] = {}
+    for e in assemble_explanations(kept):
+        run_id, ano_key = e["ano_key"]
+        runs.setdefault(ano_key, {})[run_id] = e["feature_orders"]
+    main = local_frame(
+        sliced.sparkSession,
+        [
+            (
+                ano_key,
+                by_run[0],
+                len(by_run[0]),
+                explanation_instability(
+                    [by_run[i] for i in sorted(by_run) if i > 0]
+                ),
+            )
+            for ano_key, by_run in runs.items()
+            if 0 in by_run
+        ],
+        "ano_key string, explanation array<int>, exp_size int,"
+        " exp_instability double",
     )
 
     lbl = labels.select(

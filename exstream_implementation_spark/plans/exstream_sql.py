@@ -6,8 +6,9 @@ table, and pit them against independent DuckDB SQL formulations of the same
 math — class entropy (reference exstream/entropy_based_single_reward_feature.py:10-39),
 segmentation entropy with the dropped-final-segment quirk (:157-200),
 reward ranking (:203-243) and the leap cut (:278-310). A hash match here
-means the distributed window-SQL reformulation reproduces the reference
-semantics exactly on real data, verified by a second engine.
+means the engine's reformulation (window SQL up to C7, the driver-row cut
+for C8) reproduces the reference semantics exactly on real data, verified by
+a second engine.
 
 The "anomaly" labeling is synthetic but deterministic: the event time range
 is split so the middle half is the reference interval and the next quarter
@@ -342,11 +343,21 @@ def exstream_entropy_profile(spark, sf_dir):
 )
 def exstream_leap_cut(spark, sf_dir):
     melted = _events_melted(spark, sf_dir)
-    r = single_feature_rewards(
-        melted, feature_names=[f"{t}_n" for t in EVENT_TYPES]
-    ).withColumn("reward", F.round("reward", 6))
-    kept = reward_leap_filter(r)
-    return kept.select("feature", "reward", "rank")
+    rewards = single_feature_rewards(
+        melted, feature_names=[f"{t}_n" for t in EVENT_TYPES], reward_round=6
+    )
+    # a feature without both classes has no reward, and the oracle's
+    # cls_ent drops it (only degenerate inputs have one)
+    rows = (
+        rewards.filter("reward IS NOT NULL")
+        .select("ano_key", "feature", "feature_order", "reward")
+        .collect()
+    )
+    return local_frame(
+        spark,
+        [(f, rw, rank) for _, f, _, rw, rank in reward_leap_filter(rows)],
+        "feature string, reward double, rank int",
+    )
 
 
 # --- FLAGSHIP (deterministic core): slice → rewards → leap → assembly over
@@ -500,7 +511,7 @@ def _two_anomaly_setup(spark, sf_dir):
     flagship (mirrors the `labels` CTE of _FULL_TRACE_DUCK exactly).
 
     The labels are derived IN-PLAN from the trace's min/max bucket — no
-    driver-side bounds probe, so the whole pipeline stays one lazy graph."""
+    driver-side bounds probe job before the pipeline runs."""
     trace = _events_trace(spark, sf_dir)
     # both label rows exploded from the ONE bounds row, not two unioned
     # single-row aggregates: the labels relation is referenced in several

@@ -70,13 +70,9 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from pyspark.sql.utils import AnalysisException
 
 from exstream_implementation_spark.canon import round_half_up
-# the driver-row C8, bound under the batch operators' names: exbench's
-# tracer wraps these two attributes of this module (exbench/layers.py
-# SPAN_TARGETS, pinned by tests/test_span_targets.py); it wraps the reducer
-# too, so ``handle`` calls all three through this module's globals
 from exstream_implementation_spark.operators.leap import (
-    assemble_rows as assemble_explanations,
-    leap_cut_rows as reward_leap_filter,
+    assemble_explanations,
+    reward_leap_filter,
 )
 from exstream_implementation_spark.streaming.stateful import (
     online_feature_rewards,
@@ -142,9 +138,13 @@ class RewardServingView:
     anomaly reloads its journaled rewards and tuples through
     key-prefix-pruned scans before anything is updated or served).  Because
     eviction without a log silently loses rewards forever,
-    ``max_view_anomalies`` REQUIRES ``state_dir``.  The rebuild honors the
-    bound too: only the most recently touched ``max_view_anomalies``
-    anomalies are loaded into memory.
+    ``max_view_anomalies`` REQUIRES ``state_dir``.  The anomalies a batch
+    touches are never evicted by that batch, since the handler serves them
+    next: a batch that touches more than ``max_view_anomalies`` anomalies
+    leaves the view over its bound by up to that batch's touched count until
+    the next batch's eviction.  The rebuild honors the bound too: only the
+    most recently touched ``max_view_anomalies`` anomalies are loaded into
+    memory.
     """
 
     def __init__(
@@ -329,13 +329,12 @@ class RewardServingView:
             ano_key, feature, forder = r["key"].split(_SEP)
             self.latest[(ano_key, feature, int(forder))] = r["reward"]
             self._touched[ano_key] = (self._epoch, batch_id)
-        # the touched tuples, taken before eviction can drop them
         states = [
             (r["key"], *self.state[r["key"]], batch_id, self._epoch)
             for r in updates
             if r["key"] in self.state
         ]
-        self._evict()
+        self._evict(keep=touched)
         if self.state_dir is None:
             return touched
         if (
@@ -369,13 +368,20 @@ class RewardServingView:
         if states is not None:
             self._absorb_state(self._of_anomalies(states, ano_keys))
 
-    def _evict(self) -> None:
+    def _evict(self, keep: set[str]) -> None:
+        """Drop least recently updated anomalies down to
+        ``max_view_anomalies``, never one in ``keep`` (this batch's touched
+        set, which the handler serves next)."""
         if self.max_view_anomalies is None:
             return
         excess = len(self._touched) - self.max_view_anomalies
         if excess <= 0:
             return
-        stale = sorted(self._touched, key=self._touched.__getitem__)[:excess]
+        stale = [
+            ak
+            for ak in sorted(self._touched, key=self._touched.__getitem__)
+            if ak not in keep
+        ][:excess]
         drop = set(stale)
         for ak in stale:
             del self._touched[ak]

@@ -135,6 +135,30 @@ def test_instability_log2k_identity(spark):
         )
 
 
+def test_sample_runs_losing_a_class_keep_explanation(spark):
+    """Samples that lose a class (ROADMAP defect class): with
+    sample_fraction=0.0 every sample run loses both classes, so each of its
+    (run, anomaly) groups is dropped — the reference raises ValueError
+    instead (entropy_based_single_reward_feature.py:30-34).  Every anomaly
+    keeps its run-0 explanation, and exp_instability is NULL because no
+    sample run survived."""
+    traces, labels, _ = build_fixture(spark)
+    base = {
+        r["ano_key"]: list(r["explanation"])
+        for r in explain_anomalies(
+            traces, labels, ExplainConfig(instability_runs=0)
+        ).collect()
+    }
+    out = explain_anomalies(
+        traces, labels, ExplainConfig(instability_runs=3, sample_fraction=0.0)
+    ).collect()
+    assert len(out) == len(base) == 2
+    for row in out:
+        assert list(row["explanation"]) == base[row["ano_key"]]
+        assert row["exp_size"] == len(base[row["ano_key"]])
+        assert row["exp_instability"] is None
+
+
 def test_many_anomalies_parallel_matches_oracle(spark):
     """20 anomalies across 5 traces run as ONE keyed plan; every explanation
     must match the per-anomaly python oracle loop."""

@@ -13,6 +13,7 @@ from exstream_implementation_spark.streaming.stateful import (
     batch_segmentation_entropy_reference,
     online_feature_rewards,
 )
+from tests import oracle_pandas as oracle
 
 
 def naive_seg_entropy_dropping_last(labels):
@@ -775,19 +776,16 @@ def _anomaly_rewards(draw):
 # exact ties broken by feature_order, not by row position
 @example([[("f2", 2, 1.0), ("f0", 0, 1.0), ("f1", 1, 0.25)]])
 @settings(max_examples=30, deadline=None)
-def test_driver_leap_cut_matches_sql(anomalies):
-    """leap_cut_rows + assemble_rows == assemble_explanations over
-    reward_leap_filter of the same rewards ranked by reward desc,
-    feature_order asc — the streaming trigger's C8 against the batch one."""
-    from pyspark.sql import Window
-
+def test_driver_leap_cut_matches_reference_loop(anomalies):
+    """reward_leap_filter + assemble_explanations == oracle_pandas.leap_filter,
+    the line-for-line port of the reference's cut loop
+    (entropy_based_single_reward_feature.py:249-314), over each anomaly's
+    rewards sorted as the reference sorts its dict: by reward, descending,
+    stable over the feature column order."""
     from exstream_implementation_spark.operators.leap import (
         assemble_explanations,
-        assemble_rows,
-        leap_cut_rows,
         reward_leap_filter,
     )
-    from exstream_implementation_spark.session import get_spark, local_frame
 
     rows = [
         (f"a{i}", f, fo, rw)
@@ -796,20 +794,35 @@ def test_driver_leap_cut_matches_sql(anomalies):
     ]
     got = {
         r["ano_key"]: (r["features"], r["feature_orders"])
-        for r in assemble_rows(leap_cut_rows(rows))
+        for r in assemble_explanations(reward_leap_filter(rows))
     }
-    spark = get_spark(app_name="exstream-spark-tests", shuffle_partitions=8)
-    tbl = local_frame(
-        spark,
-        rows,
-        "ano_key string, feature string, feature_order int, reward double",
-    )
-    w = Window.partitionBy("ano_key").orderBy(
-        F.desc("reward"), F.asc("feature_order")
-    )
-    ranked = tbl.withColumn("rank", F.row_number().over(w))
-    want = {
-        r["ano_key"]: (list(r["features"]), list(r["feature_orders"]))
-        for r in assemble_explanations(reward_leap_filter(ranked)).collect()
-    }
+    want = {}
+    for i, rewards in enumerate(anomalies):
+        by_column = sorted(rewards, key=lambda r: r[1])
+        ordered = sorted(by_column, key=lambda r: r[2], reverse=True)
+        kept = oracle.leap_filter([(f, rw) for f, _, rw in ordered])
+        order_of = {f: fo for f, fo, _ in rewards}
+        want[f"a{i}"] = (kept, [order_of[f] for f in kept])
     assert got == want
+
+
+@given(
+    st.lists(
+        st.lists(st.integers(min_value=0, max_value=9), min_size=1, max_size=8),
+        max_size=6,
+    )
+)
+@example([])  # no sample run survived
+@example([[2, 4], [2, 4], [2, 4]])  # identical runs: log2(k)
+@settings(max_examples=200, deadline=None)
+def test_explanation_instability_matches_oracle(explanations):
+    """C9: the pipeline's driver entropy equals the oracle's frequency
+    entropy over the sample runs' feature orders, and is None (SQL NULL)
+    when no sample run survived."""
+    from exstream_implementation_spark.pipeline import explanation_instability
+
+    got = explanation_instability(explanations)
+    if not explanations:
+        assert got is None
+    else:
+        assert abs(got - oracle.instability(explanations)) <= 1e-12

@@ -50,5 +50,8 @@ def test_rewards_and_leap_match_reference(spark, name):
     assert set(got) == set(case["rewards"])
     for f, want in case["rewards"].items():
         assert got[f]["reward"] == pytest.approx(want, rel=1e-9), f
-    kept = reward_leap_filter(rewards).orderBy("rank").collect()
-    assert [r["feature"] for r in kept] == case["kept"]
+    kept = reward_leap_filter(
+        (r["ano_key"], r["feature"], r["feature_order"], r["reward"])
+        for r in got.values()
+    )
+    assert [r[1] for r in kept] == case["kept"]

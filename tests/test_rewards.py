@@ -13,8 +13,6 @@ from pyspark.sql import functions as F
 from exstream_implementation_spark.operators.rewards import single_feature_rewards
 from exstream_implementation_spark.operators.leap import (
     assemble_explanations,
-    assemble_rows,
-    leap_cut_rows,
     reward_leap_filter,
 )
 from tests import oracle_pandas as oracle
@@ -162,23 +160,34 @@ def test_inf_nan_and_constant_values_match_oracle(spark, mode, case):
     )
 
 
+_REWARDS_DDL = (
+    "ano_key string, feature string, feature_order int, reward double, rank int"
+)
+
+
+def collected_rewards(df):
+    """The (ano_key, feature, feature_order, reward) rows the pipeline
+    collects after C7 and hands to the driver cut."""
+    return df.select("ano_key", "feature", "feature_order", "reward").collect()
+
+
 def test_leap_filter_golden(spark):
     # FIXTURES §5: rewards {f1: 2.885, f2: 0.701} → max leap 2.184 → keep [f1]
     rewards = spark.createDataFrame(
-        [("a1", "f1", 0, 2.885, 1), ("a1", "f2", 1, 0.701, 2)],
-        "ano_key string, feature string, feature_order int, reward double, rank int",
+        [("a1", "f1", 0, 2.885, 1), ("a1", "f2", 1, 0.701, 2)], _REWARDS_DDL
     )
-    kept = reward_leap_filter(rewards)
-    assert [r["feature"] for r in kept.collect()] == ["f1"]
-    expl = assemble_explanations(kept).collect()[0]
+    kept = reward_leap_filter(collected_rewards(rewards))
+    assert [r[1] for r in kept] == ["f1"]
+    (expl,) = assemble_explanations(kept)
     assert expl["features"] == ["f1"]
 
 
 def test_leap_cut_rows_golden():
-    # FIXTURES §5 on the driver-row C8: same rewards, same single survivor
-    kept = leap_cut_rows([("a1", "f2", 1, 0.701), ("a1", "f1", 0, 2.885)])
+    # FIXTURES §5 on plain driver rows: same rewards, same single survivor,
+    # ranked whatever order the rows arrive in
+    kept = reward_leap_filter([("a1", "f2", 1, 0.701), ("a1", "f1", 0, 2.885)])
     assert kept == [("a1", "f1", 0, 2.885, 1)]
-    (expl,) = assemble_rows(kept)
+    (expl,) = assemble_explanations(kept)
     assert expl["features"] == ["f1"]
     assert expl["feature_orders"] == [0]
 
@@ -190,21 +199,16 @@ def test_leap_filter_matches_oracle_random(spark):
         vals = sorted({round(rng.uniform(0, 5), 3) for _ in range(n)}, reverse=True)
         ordered = [(f"f{i}", v) for i, v in enumerate(vals)]
         rows = [("k", f, i, v, i + 1) for i, (f, v) in enumerate(ordered)]
-        df = spark.createDataFrame(
-            rows,
-            "ano_key string, feature string, feature_order int, reward double, rank int",
-        )
-        got = [r["feature"] for r in reward_leap_filter(df).orderBy("rank").collect()]
+        df = spark.createDataFrame(rows, _REWARDS_DDL)
+        kept = reward_leap_filter(collected_rewards(df))
+        got = [f for _, f, _, _, _ in kept]
         want = oracle.leap_filter(ordered)
         assert got == want, (trial, ordered)
 
 
 def test_leap_filter_single_feature_kept(spark):
-    df = spark.createDataFrame(
-        [("a1", "f1", 0, 1.5, 1)],
-        "ano_key string, feature string, feature_order int, reward double, rank int",
-    )
-    assert reward_leap_filter(df).count() == 1
+    df = spark.createDataFrame([("a1", "f1", 0, 1.5, 1)], _REWARDS_DDL)
+    assert len(reward_leap_filter(collected_rewards(df))) == 1
 
 
 def test_fuzz_rewards_match_oracle_both_modes(spark):

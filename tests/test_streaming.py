@@ -384,15 +384,15 @@ def test_online_scorer_end_to_end_matches_batch(spark, tmp_path):
 
     melted = _events_melted(spark, SF_DIR)
 
-    # batch side: C7 (sorted mode) → round → C8 → assembly
+    # batch side: C7 (sorted mode) → round → collect → C8 → assembly
     rewards = single_feature_rewards(
         melted, [f"{t}_n" for t in EVENT_TYPES]
-    ).withColumn(
-        "reward", F.round("reward", 6)
-    )
+    ).select(
+        "ano_key", "feature", "feature_order", F.round("reward", 6)
+    ).collect()
     want = {
-        r["ano_key"]: (list(r["features"]), list(r["feature_orders"]))
-        for r in assemble_explanations(reward_leap_filter(rewards)).collect()
+        r["ano_key"]: (r["features"], r["feature_orders"])
+        for r in assemble_explanations(reward_leap_filter(rewards))
     }
 
     # stream side: seq = the batch sort order per feature
@@ -621,6 +621,37 @@ def _view_batch(spark, view, rows, bid):
         ],
         bid,
     )
+
+
+def test_serving_view_serves_every_touched_anomaly_over_bound(spark, tmp_path):
+    """A batch that touches more anomalies than ``max_view_anomalies``
+    still serves each of them: eviction spares the batch's touched set, so
+    the handler's cut over ``as_rows(only=touched)`` explains A and B, and
+    the next batch evicts the view back down to its bound."""
+    from exstream_implementation_spark.operators.leap import (
+        assemble_explanations,
+        reward_leap_filter,
+    )
+    from exstream_implementation_spark.streaming.online_scorer import (
+        RewardServingView,
+    )
+
+    view = RewardServingView(
+        spark, state_dir=str(tmp_path / "log"), max_view_anomalies=1
+    )
+    touched = _view_batch(
+        spark, view, [("A", "f1", 0, 10, 0.9), ("B", "g1", 0, 5, 0.7)], 0
+    )
+    assert touched == {"A", "B"}
+    served = assemble_explanations(
+        reward_leap_filter(view.as_rows(only=touched))
+    )
+    assert {r["ano_key"]: r["features"] for r in served} == {
+        "A": ["f1"],
+        "B": ["g1"],
+    }
+    _view_batch(spark, view, [("C", "h1", 0, 3, 0.4)], 1)
+    assert {k[0] for k in view.latest} == {"C"}
 
 
 def test_serving_view_eviction_requires_state_dir(spark):

@@ -6,8 +6,10 @@ a query survives a 1000-executor / 100 TB deployment.  For every catalog
 query it captures `explain("formatted")` WITHOUT executing, extracts the
 scale-relevant markers, and enforces hard rules.  (Capture itself runs no
 actions; a few queries execute small bounded side jobs during CONSTRUCTION
-— e.g. filter_union_suite's csv-sink round-trip arm writes its fixture —
-but the audited relation is never materialized.)  Hard rules:
+— e.g. filter_union_suite's csv-sink round-trip arm writes its fixture, and
+exstream_leap_cut and the exstream_explain flagships collect their C7
+rewards and return the driver tail's local relation — but the audited
+relation is never materialized.)  Hard rules:
 
   * no CartesianProduct anywhere;
   * no BroadcastNestedLoopJoin except on an explicit allowlist (each entry
@@ -46,12 +48,7 @@ BNLJ_ALLOW = {
     # (plans/exstream_sql.py:167, operators/slicing.py — O(#anomalies) rows)
     "exstream_rewards": "interval-bounds broadcast, O(#anomalies) rows",
     "exstream_entropy_profile": "interval-bounds broadcast, O(#anomalies) rows",
-    "exstream_leap_cut": "interval-bounds broadcast, O(#anomalies) rows",
     "exstream_slice_counts": "interval-bounds broadcast, O(#anomalies) rows",
-    # full flagship (instability runs share the one sliced subtree; same
-    # interval-bounds broadcast as the det twin)
-    "exstream_explain": "interval-bounds broadcast, O(#anomalies) rows",
-    "exstream_explain_det": "interval-bounds broadcast, O(#anomalies) rows",
     # leap cut: 1-row max-leap / cut-rank scalar frames
     # (plans/relational.py:468,473)
     "topk_until_leap": "1-row leap-cut scalar broadcast",
@@ -80,7 +77,6 @@ BNLJ_ALLOW = {
 SINGLE_PARTITION_ALLOW = {
     "sort_rank_topk": "rank window over TakeOrderedAndProject's k=100 rows",
     "topk_until_leap": "leap scan over top-k survivors only",
-    "exstream_leap_cut": "leap scan over <= n_features rows per anomaly",
     "pivot_wide": "unpivot of a 750-row pivoted frame (bounded by key card.)",
 }
 
