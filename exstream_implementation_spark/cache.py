@@ -92,11 +92,11 @@ def persisted_rdd_count(spark) -> int:
     inventory — covers caches made outside this module too).
 
     Locally-checkpointed RDDs are excluded: ``localCheckpoint()`` blocks
-    (e.g. the eager materialization fence in
-    ``operators/index_lifecycle.idempotent_append``) are lifecycle-managed
-    by Spark's ContextCleaner — released as soon as the referencing frame
-    is garbage-collected — so they are a bounded, self-cleaning footprint,
-    not an indefinitely-pinned leak this inventory is meant to catch.
+    (e.g. the per-round label fence in ``operators/components.py``) are
+    lifecycle-managed by Spark's ContextCleaner — released as soon as the
+    referencing frame is garbage-collected — so they are a bounded,
+    self-cleaning footprint, not an indefinitely-pinned leak this inventory
+    is meant to catch.
     Counting them made the post-suite hygiene gate flake on GC timing.
     They are not invisible, though: ``persisted_rdd_census`` reports both
     populations so a hygiene gate can still alert if the locally-

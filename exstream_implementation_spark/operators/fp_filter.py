@@ -172,65 +172,52 @@ def distance_profile_stats(
     return refs.groupBy("feature").applyInPandas(per_feature, out_schema)
 
 
-def false_positive_filter(
-    melted: DataFrame,
-    max_distance: float = 40.0,
-    keys: tuple[str, ...] = (),
-) -> DataFrame:
-    """melted long table → (*keys, ano_key, feature, feature_order,
+def false_positive_filter(melted: DataFrame, max_distance: float = 40.0) -> DataFrame:
+    """melted long table → (run_id, ano_key, feature, feature_order,
     n_matches, kept).
 
     ``kept`` replicates the reference's rule: n_matches ≤ KEEP_THRESHOLD, with
     the fewest-matches fallback when an anomaly would keep nothing.
 
-    ``keys`` are extra grouping columns (e.g. ``run_id`` for the instability
-    re-runs): pooling happens per (*keys, feature) — each run pools ONLY its
-    own sampled references, exactly as the reference's per-run pipeline
-    re-execution does (reference script_1.py:227-238).
+    Pooling happens per (run_id, feature): each instability run pools ONLY
+    its own sampled references, exactly as the reference's per-run pipeline
+    re-execution does (reference script_1.py:227-238).  ``run_id`` is the
+    int the pipeline explodes from ``sequence``.
     """
     refs = melted.filter(F.col("type_data") == 0).select(
-        *keys, "ano_key", "timestamp", "feature", "feature_order", "value"
-    )
-
-    # derive each extra key's type from the input — hardcoding int crashed
-    # string/long keys at Arrow conversion
-    key_schema = "".join(
-        f"{k} {melted.schema[k].dataType.simpleString()}, " for k in keys
+        "run_id", "ano_key", "timestamp", "feature", "feature_order", "value"
     )
     out_schema = (
-        f"{key_schema}feature string, feature_order int, ano_key string, "
+        "run_id int, feature string, feature_order int, ano_key string, "
         "n_matches long"
     )
 
     def per_feature(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(["ano_key", "timestamp"])
         pooled = pdf["value"].to_numpy(dtype=np.float64)
+        run_id = int(pdf["run_id"].iloc[0])
         feature = pdf["feature"].iloc[0]
         order = int(pdf["feature_order"].iloc[0])
-        extra = tuple(
-            v.item() if hasattr(v, "item") else v
-            for v in (pdf[k].iloc[0] for k in keys)
-        )
         rows = []
         for key, grp in pdf.groupby("ano_key", sort=True):
             pattern = grp["value"].to_numpy(dtype=np.float64)
             n = count_matches(pattern, pooled, max_distance)
-            rows.append((*extra, feature, order, key, n))
+            rows.append((run_id, feature, order, key, n))
         return pd.DataFrame(
             rows,
-            columns=[*keys, "feature", "feature_order", "ano_key", "n_matches"],
+            columns=["run_id", "feature", "feature_order", "ano_key", "n_matches"],
         )
 
-    counts = refs.groupBy(*keys, "feature").applyInPandas(per_feature, out_schema)
+    counts = refs.groupBy("run_id", "feature").applyInPandas(per_feature, out_schema)
 
-    w_key = Window.partitionBy(*keys, "ano_key")
+    w_key = Window.partitionBy("run_id", "ano_key")
     counts = counts.withColumn(
         "kept_primary", (F.col("n_matches") <= F.lit(KEEP_THRESHOLD)).cast("int")
     )
     counts = counts.withColumn("any_kept", F.max("kept_primary").over(w_key))
     # fallback: argmin n_matches, ties by column order (np.argmin = first
     # occurrence, reference exstream/false_positive_filtering.py:46)
-    w_min = Window.partitionBy(*keys, "ano_key").orderBy(
+    w_min = Window.partitionBy("run_id", "ano_key").orderBy(
         "n_matches", "feature_order"
     )
     counts = counts.withColumn("min_rank", F.row_number().over(w_min))
@@ -239,4 +226,4 @@ def false_positive_filter(
         F.when(F.col("any_kept") == 1, F.col("kept_primary") == 1).otherwise(
             F.col("min_rank") == 1
         ),
-    ).select(*keys, "ano_key", "feature", "feature_order", "n_matches", "kept")
+    ).select("run_id", "ano_key", "feature", "feature_order", "n_matches", "kept")

@@ -20,18 +20,15 @@ covering integer PCM (8/16/24/32-bit), IEEE float (32/64-bit) and
 WAVE_FORMAT_EXTENSIBLE (lossless, so ``audio_stats`` is hash-gated exactly
 like the pixel paths), PLUS the compressed telephony variants — G.711
 A-law/µ-law and IMA ADPCM (operators/adpcm.py, exact table/block decode
-pinned against stdlib audioop).  Animated-GIF frame extraction is real
-(operators/gif.py + ``sample_gif_frames``), and so is true-video MP4:
-the ISO BMFF container (operators/mp4.py — full sample-table resolve)
-with MJPEG frame decode through the jpeg codec, and lossless WebP
+pinned against stdlib audioop).  Lossless WebP decode is real too
 (operators/webp.py — the full VP8L bitstream: prefix codes, color cache,
-LZ77, meta groups, all four transforms).  What still refuses with
-NotImplementedError is exactly the perceptual-codec bitstreams (lossy
-VP8 WebP, H.264/HEVC samples inside MP4, MP3-in-WAV) — the honest
-boundary; the pixel/sample synths are exact
-integer formulas so the BMP/PNG/WAV stats stay oracle-checkable in SQL
-(plans.multimodal — JPEG is lossy, so its stats are tolerance-tested in
-pytest instead of hash-gated).
+LZ77, meta groups, all four transforms).  What refuses with
+NotImplementedError is the perceptual-codec bitstreams (lossy VP8 WebP,
+MP3-in-WAV) and every video container — the honest boundary; frame
+sampling (``sample_frames``) is byte-chunk plumbing, not a video decode.
+The pixel/sample synths are exact integer formulas so the BMP/PNG/WAV
+stats stay oracle-checkable in SQL (plans.multimodal — JPEG is lossy, so
+its stats are tolerance-tested in pytest instead of hash-gated).
 """
 
 from __future__ import annotations
@@ -297,10 +294,10 @@ def decode_image(payload: bytes) -> np.ndarray:
     Real decode for uncompressed 24-bit BMP (bottom-up or top-down), PNG
     (all static color types and depths, Adam7 included — stdlib zlib
     inflate + numpy unfilter), and 8-bit Huffman JPEG (operators/jpeg.py:
-    baseline AND progressive, any subsampling) — no system codec.  Every
-    other container (WebP, video) needs a codec library absent from this
-    environment and raises NotImplementedError (swap in PIL.Image.open on
-    a real cluster)."""
+    baseline AND progressive, any subsampling) and lossless WebP
+    (operators/webp.py) — no system codec.  Every other container needs a
+    codec library absent from this environment and raises
+    NotImplementedError (swap in PIL.Image.open on a real cluster)."""
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
     if payload[:2] == b"\xff\xd8":
@@ -345,19 +342,6 @@ def resize_image(payload: bytes, width: int, height: int) -> bytes:
     ys = (np.arange(height) * h) // height
     xs = (np.arange(width) * w) // width
     return encode_bmp(np.ascontiguousarray(img[ys][:, xs]))
-
-
-def sample_video_frames(payload: bytes, fps: float) -> list:
-    """REAL frame sampling for true video containers: ISO BMFF (MP4) parse
-    + MJPEG decode, pure struct/numpy (operators/mp4.py) → [(tick_time_s,
-    (h, w, 3) uint8)].  Inter-coded codecs (avc1/hvc1/…) parse to exact
-    per-sample byte ranges but refuse the pixel decode with
-    NotImplementedError — ffmpeg/pyav on a real cluster.  (Animated-GIF
-    frame extraction is also real: operators/gif.py +
-    ``sample_gif_frames`` below.)"""
-    from exstream_implementation_spark.operators.mp4 import sample_mp4_frames
-
-    return sample_mp4_frames(payload, fps)
 
 
 # synthetic image geometry: width deliberately NOT a multiple of 4 so every
@@ -874,59 +858,3 @@ def sample_frames(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 
     return df.select(id_col, "payload").mapInPandas(batches, schema)
 
-
-def attach_gif_payload(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    n_frames: int = 4,
-    w: int = IMG_W,
-    h: int = IMG_H,
-) -> DataFrame:
-    """REAL animated-GIF payloads: each row gets a multi-frame GIF89a blob
-    (operators/gif.py — LZW, global 3-3-2 palette) whose frame f is the
-    synthetic pixel field of doc_id + f, built in the Arrow workers."""
-    from exstream_implementation_spark.operators.gif import encode_gif
-
-    @F.pandas_udf("binary")
-    def gif(ids: pd.Series) -> pd.Series:
-        return ids.map(
-            lambda i: encode_gif(
-                [synth_pixels(int(i) + f, w, h) for f in range(n_frames)]
-            )
-        )
-
-    out = df.withColumn("payload", gif(F.col(id_col)))
-    return out.withColumn("n_bytes", F.length("payload"))
-
-
-def sample_gif_frames(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """REAL frame sampling: decode each animated-GIF payload (LZW inflate +
-    palette lookup) and emit one row per frame with its decoded pixel mean —
-    the 1→N fan-out of ``sample_frames`` with an actual container behind it,
-    Arrow-batched via mapInPandas."""
-    from exstream_implementation_spark.operators.gif import decode_gif
-
-    schema = f"{id_col} long, frame_idx int, width int, height int, px_mean double"
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, ws, hs, means = [], [], [], [], []
-            for did, payload in zip(pdf[id_col], pdf["payload"]):
-                for k, frame in enumerate(decode_gif(bytes(payload))):
-                    fh, fw, _ = frame.shape
-                    ids.append(did)
-                    idxs.append(k)
-                    ws.append(fw)
-                    hs.append(fh)
-                    means.append(float(frame.astype(np.int64).sum()) / (fh * fw * 3))
-            yield pd.DataFrame(
-                {
-                    id_col: pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "px_mean": pd.Series(means, dtype="float64"),
-                }
-            )
-
-    return df.select(id_col, "payload").mapInPandas(batches, schema)

@@ -21,8 +21,7 @@ cache — plus four spatial transforms.  This module implements:
   by encoder/decoder round-trips in tests/test_webp.py.
 - ``decode_webp`` / ``encode_webp``: the RIFF container walk (``VP8L``
   and ``VP8X``-wrapped lossless; lossy ``VP8 `` bitstreams refuse with
-  NotImplementedError — the honest perceptual-codec boundary, same as
-  H.264-in-MP4).
+  NotImplementedError — the honest perceptual-codec boundary).
 
 Verification honesty: with no WebP library in this environment, the
 arithmetic here is validated by exhaustive encoder/decoder round-trips

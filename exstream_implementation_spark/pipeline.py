@@ -199,7 +199,7 @@ def explain_anomalies(
     # C3 per run: each run pools only its own sampled references (the
     # reference re-runs the whole pipeline per sample, script_1.py:227-238)
     if cfg.false_positive_filtering:
-        fp = false_positive_filter(melted, cfg.max_distance, keys=("run_id",))
+        fp = false_positive_filter(melted, cfg.max_distance)
         fp_kept = fp.filter(F.col("kept")).select("run_id", "ano_key", "feature")
         melted = melted.join(
             F.broadcast(fp_kept), ["run_id", "ano_key", "feature"], "inner"

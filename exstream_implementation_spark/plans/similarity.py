@@ -301,7 +301,7 @@ def ann_lsh_topk(spark, sf_dir):
 
 def _rerank_candidates(cand, q, e, k: int = 5):
     """Exact-cosine re-rank — the shared tail of every bucketed ANN path
-    (LSH multiprobe, stride IVF, trained IVF): candidates join back to the
+    (LSH multiprobe, stride IVF): candidates join back to the
     broadcast query vectors (bounded by N_QUERIES) and the corpus
     embeddings, score exact cosine, keep the top-k per query.  One
     definition so the output contract (rounding, tie-break, k) cannot
@@ -340,10 +340,6 @@ def _rerank_candidates(cand, q, e, k: int = 5):
 # oracle-reproducible with no RNG.  At 100 TB the assignment is one broadcast
 # pass (√n centroids ≪ data), the cell id becomes the table's partitioning
 # key, and a query touches nprobe partitions.
-# For production corpora the trained-centroid path (operators/kmeans.py,
-# broadcast k×dim, property-tested) replaces the stride subset — data-aware
-# cells beat a deterministic subset on clustered embeddings; the stride form
-# is the oracle-exact fixture.
 def _centroid_stride(n: int) -> int:
     import math
 
@@ -408,9 +404,7 @@ _IVF_DUCK = """
 # bounded by nprobe partitions.  On near-random embeddings (this testdata)
 # recall is purely probed-fraction-driven, so the recall gate in
 # tests/test_properties.py passes a test-side nprobe covering ~80% of cells —
-# it verifies the probe/union/rank mechanics, not clustering magic; clustered
-# production corpora get their recall from trained centroids
-# (operators/kmeans.py) at small nprobe.
+# it verifies the probe/union/rank mechanics, not clustering magic.
 IVF_NPROBE = 8
 
 
@@ -479,60 +473,6 @@ def ann_ivf_topk(spark, sf_dir, nprobe: int | None = None):
         .withColumn("r", F.row_number().over(wq))
         .filter(F.col("r") <= nprobe)
         .select("query_id", F.col("centroid_id").alias("cell"))
-    )
-    cand = (
-        F.broadcast(qcells)
-        .join(assign, "cell")
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", F.col("vec_id").alias("neighbor_id"))
-        .distinct()
-    )
-    return _rerank_candidates(cand, q, e)
-
-
-# --- trained-centroid IVF: the production upgrade of the stride index -------
-# Not a catalog slot: Lloyd iteration is not SQL-expressible, so the
-# oracle-exact stride form above carries the hash gate while this carries
-# the deployment path — data-aware cells from
-# operators/kmeans.py, searched with the same probe/union/re-rank mechanics.
-# Quality is pinned by the recall gate in tests/test_properties.py;
-# determinism by construction (lowest-vec_id init, no RNG anywhere).
-def ann_ivf_trained_topk(
-    spark, sf_dir, k: int | None = None, nprobe: int | None = None,
-    max_iter: int = 5,
-):
-    """IVF-flat top-5 over kmeans-trained centroids.
-
-    Assignment and query-cell ranking both use the TRAINING metric (squared
-    L2) so cells are searched under the geometry they were built with; the
-    final candidate re-rank is exact cosine, matching the other ANN paths'
-    output contract (query_id, neighbor_id, cosine, rank).
-    """
-    from pyspark.sql import Window
-
-    from exstream_implementation_spark.operators.kmeans import (
-        _SQDIST,
-        _assign,
-        kmeans_train,
-    )
-
-    nprobe = IVF_NPROBE if nprobe is None else nprobe
-    e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    if k is None:
-        k = _centroid_stride(e.count())  # ≈ √n cells, like the stride index
-    cents, _ = kmeans_train(e, k=k, max_iter=max_iter)
-    cents = F.broadcast(cents)  # k×dim by construction — always broadcastable
-    assign = _assign(e, cents).select("vec_id", "cell")
-    q = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qemb")
-    )
-    wq = Window.partitionBy("query_id").orderBy(F.asc("sqdist"), F.asc("cell"))
-    qcells = (
-        q.crossJoin(cents)
-        .withColumn("sqdist", F.expr(_SQDIST.format(a="qemb", b="cemb")))
-        .withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= nprobe)
-        .select("query_id", "cell")
     )
     cand = (
         F.broadcast(qcells)

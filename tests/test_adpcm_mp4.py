@@ -1,12 +1,10 @@
-"""Compressed-audio (G.711 / IMA ADPCM) and MP4-container codecs.
+"""Compressed-audio codecs: G.711 A-law/µ-law and IMA ADPCM.
 
 The reference has no media pipeline (SURVEY.md — these are extension
 surface for the 100 TB training-data design point).  Where the stdlib
 ``audioop`` module exists (<= 3.12) it serves as an INDEPENDENT reference
 implementation for the G.711 tables/encoders and the IMA nibble decoder —
-bit-exact parity, not tolerance.  The MP4 tests cover the full sample-
-table resolve (stsc runs, co64) and the honest codec boundary: container
-parse always real, pixel decode only for MJPEG."""
+bit-exact parity, not tolerance."""
 
 import struct
 
@@ -22,18 +20,9 @@ from exstream_implementation_spark.operators.adpcm import (
     encode_alaw,
     encode_ulaw,
 )
-from exstream_implementation_spark.operators.jpeg import encode_jpeg
-from exstream_implementation_spark.operators.mp4 import (
-    encode_mp4,
-    extract_mp4_samples,
-    parse_mp4,
-    sample_mp4_frames,
-)
 from exstream_implementation_spark.operators.multimodal import (
     decode_wav,
     encode_wav_compressed,
-    sample_video_frames,
-    synth_pixels,
     synth_samples,
 )
 
@@ -203,66 +192,3 @@ def test_spark_audio_stats_over_compressed_payloads(spark):
         assert got[i]["n_samples"] == 300 and got[i]["sample_rate"] == 8000
         assert got[i]["amp_mean"] == float(s.sum()) / 300
         assert got[i]["amp_rms"] == math.sqrt(float((s * s).sum()) / 300)
-
-
-# --- MP4 ---------------------------------------------------------------------
-
-
-def _mjpeg_frames(n=5, w=16, h=16, base=100):
-    return [
-        encode_jpeg(synth_pixels(base + f, w, h), quality=92) for f in range(n)
-    ]
-
-
-def test_mp4_roundtrip_sample_bytes_and_times():
-    frames = _mjpeg_frames(6)
-    blob = encode_mp4(frames, fps=3.0, width=16, height=16)
-    info = parse_mp4(blob)
-    assert info["codec"] == "jpeg"
-    assert (info["width"], info["height"]) == (16, 16)
-    assert info["n_samples"] == 6
-    assert info["duration_s"] == pytest.approx(2.0)
-    samples = extract_mp4_samples(blob)
-    assert [b for _, b in samples] == frames
-    assert [t for t, _ in samples] == pytest.approx(
-        [0, 1 / 3, 2 / 3, 1.0, 4 / 3, 5 / 3]
-    )
-
-
-@pytest.mark.parametrize("spc,co64", [(2, False), (2, True), (3, False), (7, False)])
-def test_mp4_stsc_runs_and_co64_resolve(spc, co64):
-    frames = _mjpeg_frames(5)
-    blob = encode_mp4(
-        frames, 2.0, 16, 16, samples_per_chunk=spc, use_co64=co64
-    )
-    assert [b for _, b in extract_mp4_samples(blob)] == frames
-
-
-def test_sample_video_frames_ticks_and_pixels():
-    frames = _mjpeg_frames(4, base=60)
-    blob = encode_mp4(frames, fps=2.0, width=16, height=16)
-    out = sample_video_frames(blob, fps=2.0)  # native cadence: one per frame
-    assert [t for t, _ in out] == pytest.approx([0.0, 0.5, 1.0, 1.5])
-    for k, (_, frame) in enumerate(out):
-        assert frame.shape == (16, 16, 3)
-        ref = synth_pixels(60 + k, 16, 16).astype(np.float64)
-        assert np.abs(frame.astype(np.float64) - ref).mean() < 8  # JPEG lossy
-    # sub- and super-sampling pick the frame in force at each tick
-    assert len(sample_video_frames(blob, fps=1.0)) == 2
-    assert len(sample_video_frames(blob, fps=8.0)) == 16
-
-
-def test_mp4_honest_codec_boundary_and_garbage():
-    blob = encode_mp4(_mjpeg_frames(2), 2.0, 16, 16)
-    avc = blob.replace(b"jpeg", b"avc1", 1)
-    # container layer still parses inter-coded tracks to exact byte ranges
-    assert parse_mp4(avc)["codec"] == "avc1"
-    assert len(extract_mp4_samples(avc)) == 2
-    with pytest.raises(NotImplementedError):
-        sample_mp4_frames(avc, 2.0)
-    with pytest.raises(ValueError):
-        parse_mp4(b"\x00\x00\x00\x08free")
-    with pytest.raises(ValueError):
-        parse_mp4(blob[: len(blob) // 2])  # truncated moov
-    with pytest.raises(ValueError):
-        encode_mp4([], 2.0, 16, 16)

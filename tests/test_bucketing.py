@@ -1,83 +1,6 @@
-"""Bucketed co-located join: writing both sides bucketed on the join key must
-produce a SortMergeJoin with NO Exchange — the shuffle-free fact-fact join
-that matters at 100 TB (each task reads bucket i of both tables)."""
-
-import pytest
-from pyspark.sql import functions as F
-
-from exstream_implementation_spark.operators.bucketing import (
-    read_bucketed,
-    write_bucketed,
-)
-from tests.test_plan_shape import plan_str
-
-SF_DIR = "/root/testdata/sf0.01"
-
-
-@pytest.fixture(scope="module")
-def bucketed_tables(spark, tmp_path_factory):
-    warehouse = tmp_path_factory.mktemp("warehouse")
-    # warehouse.dir is a static conf — use a database with an explicit
-    # location so bucketed tables land in the test tmp dir
-    spark.sql(f"CREATE DATABASE IF NOT EXISTS bdemo LOCATION '{warehouse}'")
-    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-    lineitem = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-    write_bucketed(
-        orders, "bdemo.orders_b", ["o_orderkey"], n_buckets=8,
-        sort_cols=["o_orderkey"],
-    )
-    write_bucketed(
-        lineitem,
-        "bdemo.lineitem_b",
-        ["l_orderkey"],
-        n_buckets=8,
-        sort_cols=["l_orderkey"],
-    )
-    yield "bdemo.orders_b", "bdemo.lineitem_b"
-    spark.sql("DROP DATABASE IF EXISTS bdemo CASCADE")
-
-
-def test_bucketed_join_has_no_exchange(spark, bucketed_tables):
-    ot, lt = bucketed_tables
-    o = read_bucketed(spark, ot)
-    li = read_bucketed(spark, lt)
-    # force SMJ path (no broadcast) to show the co-located join shape
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = li.join(o, li.l_orderkey == o.o_orderkey).groupBy(
-            "o_orderpriority"
-        ).agg(F.count(F.lit(1)).alias("n"))
-        plan = plan_str(joined, mode="simple")
-        smj = [l for l in plan.splitlines() if "SortMergeJoin" in l]
-        assert smj, plan
-        # the join itself must not shuffle either side: the only Exchange
-        # allowed is the one for the groupBy ABOVE the join
-        join_idx = plan.index("SortMergeJoin")
-        below_join = plan[join_idx:]
-        assert "Exchange" not in below_join, below_join
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10485760")
-
-
-def test_bucketed_join_matches_plain_join(spark, bucketed_tables):
-    ot, lt = bucketed_tables
-    o = read_bucketed(spark, ot)
-    li = read_bucketed(spark, lt)
-    got = (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .agg(F.count(F.lit(1)), F.round(F.sum("l_extendedprice"), 2))
-        .first()
-    )
-    plain = (
-        spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        .join(
-            spark.read.parquet(f"{SF_DIR}/orders.parquet"),
-            F.col("l_orderkey") == F.col("o_orderkey"),
-        )
-        .agg(F.count(F.lit(1)), F.round(F.sum("l_extendedprice"), 2))
-        .first()
-    )
-    assert tuple(got) == tuple(plain)
+"""Physical-layout levers for skewed joins and multi-column pruning: AQE's
+skew-join split, and the z-order layout (operators/zorder.py) that keeps
+per-file min/max spans tight on two columns at once."""
 
 
 def test_aqe_splits_skewed_join_partitions(spark):

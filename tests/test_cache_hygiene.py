@@ -34,7 +34,7 @@ def test_local_checkpoints_not_counted_as_leaks(spark):
     """``localCheckpoint()`` blocks are ContextCleaner-managed (released on
     GC of the referencing frame), so the hygiene inventory must not count
     them — counting them made the post-suite gate flake on GC timing
-    whenever an earlier test exercised ``idempotent_append``'s fence."""
+    whenever an earlier test ran a ``localCheckpoint`` fence."""
     cache.release_tracked()
     base = cache.persisted_rdd_count(spark)
     base_ckpt = cache.persisted_rdd_census(spark)[1]

@@ -331,3 +331,88 @@ def test_explain_config_rejects_bad_modes(spark):
         explain_anomalies(
             trace, labels, ExplainConfig(sample_method="sha1")
         )
+
+
+@pytest.mark.parametrize("cluster", [False, True], ids=["flat", "cluster"])
+@pytest.mark.parametrize("dup_values", ["equal", "different"])
+def test_duplicate_timestamps_match_oracle(spark, dup_values, cluster):
+    """Duplicate timestamps (ROADMAP defect class): every third timestamp
+    carries a second row, either a copy of the first (``equal``) or a
+    disagreeing reading whose f_shift misses the anomaly's shift
+    (``different``).  Both rows are slice rows, as in the reference's
+    boolean mask (utils/get_data.py:83-100).  Rows with equal
+    (value, type_data) carry equal labels, so their order in the
+    segmentation cannot change a reward; the explanation must equal the
+    oracle's on the same rows, with C2 clustering off and on.  On the
+    ``different`` trace, keeping only the first or the last row of each
+    timestamp gives another explanation, with clustering off or on."""
+    rng = np.random.default_rng(7)
+    feats = ["f_shift", "f_noise", "f_level", "f_twin"]
+    n, ref_end, a0, a1 = 120, 60, 60, 90
+
+    def draw(t, stale=False):
+        shift = 6.0 if a0 <= t <= a1 else 0.0
+        base = float(rng.normal(0, 1))
+        # f_level takes few distinct values, so equal values straddle the
+        # classes; f_twin tracks f_shift (|corr| > 0.6: one C2 component)
+        level = float(round(rng.normal(0, 1)) + (1 if shift else 0))
+        return [
+            base + (0.0 if stale else shift),
+            float(rng.normal(0, 1)),
+            level,
+            base + shift + float(rng.normal(0, 0.1)),
+        ]
+
+    rows = []
+    for t in range(n):
+        vals = draw(t)
+        rows.append(("d", t, *vals))
+        if t % 3 == 0:
+            dup = vals if dup_values == "equal" else draw(t, stale=True)
+            rows.append(("d", t, *dup))
+    traces = spark.createDataFrame(
+        rows,
+        "trace_id string, timestamp long, "
+        + ", ".join(f"{f} double" for f in feats),
+    )
+    labels = spark.createDataFrame(
+        [(0, "d", 1, "bursty input", 0, ref_end, a0, a1)],
+        "label_row int, trace_id string, ano_id int, ano_type string, "
+        "ref_start long, ref_end long, ano_start long, ano_end long",
+    )
+    out = explain_anomalies(
+        traces, labels, ExplainConfig(cluster=cluster, instability_runs=0)
+    ).collect()
+
+    sliced = [
+        (0 if t < ref_end else 1, vals)
+        for _, t, *vals in rows
+        if t < ref_end or a0 <= t <= a1
+    ]
+    kept = list(range(len(feats)))
+    if cluster:
+        # C2: components of |corr| > 0.6 over the pooled slice rows, one
+        # representative (the lowest column) each
+        corr = np.corrcoef(np.array([v for _, v in sliced]).T)
+        comp = list(range(len(feats)))
+        for i in range(len(feats)):
+            for j in range(i):
+                if abs(corr[i][j]) > 0.6:
+                    old, new = comp[i], comp[j]
+                    comp = [new if c == old else c for c in comp]
+        kept = sorted({min(i for i in kept if comp[i] == c) for c in set(comp)})
+        assert kept == [0, 1, 2]
+    rewards = [
+        (i, oracle.reward([v[i] for _, v in sliced], [lab for lab, _ in sliced]))
+        for i in kept
+    ]
+    want = oracle.leap_filter(sorted(rewards, key=lambda t: -t[1]))
+    assert want == {
+        ("equal", False): [0, 3],
+        ("equal", True): [0],
+        ("different", False): [3],
+        ("different", True): [2, 0],
+    }[dup_values, cluster]
+    assert len(out) == 1
+    assert list(out[0]["explanation"]) == want
+    assert out[0]["exp_size"] == len(want)

@@ -130,26 +130,6 @@ def test_salted_agg_equals_plain_groupby(spark):
     assert as_map(got) == as_map(want)
 
 
-def test_kmeans_inertia_decreases_and_partitions(spark):
-    from exstream_implementation_spark.operators.kmeans import (
-        _assign,
-        kmeans_train,
-    )
-
-    vecs = spark.read.parquet("/root/testdata/sf0.01/embeddings.parquet").select(
-        "vec_id", "embedding"
-    )
-    centroids, history = kmeans_train(vecs, k=6, max_iter=5)
-    # Lloyd's algorithm: inertia is monotonically non-increasing
-    assert all(a >= b - 1e-9 for a, b in zip(history, history[1:])), history
-    assert len(history) >= 2 and history[-1] < history[0]
-    # every vector lands in exactly one of ≤ k cells
-    assigned = _assign(vecs, centroids)
-    assert assigned.count() == vecs.count()
-    n_cells = assigned.select("cell").distinct().count()
-    assert 1 < n_cells <= 6
-
-
 def test_mass_profile_and_greedy_matches_bruteforce():
     """C3 numeric core: the FFT distance profile and the stumpy-style greedy
     exclusion count must match a naive O(n·m) implementation on random data."""
@@ -311,8 +291,7 @@ def test_ann_recall_vs_brute_force(spark):
 
     # IVF on near-random embeddings: recall is probed-fraction-driven, so the
     # gate probes ~80% of the √n-derived cells — it verifies the
-    # probe/union/rank mechanics; clustered corpora get small-nprobe recall
-    # from trained centroids (operators/kmeans.py).
+    # probe/union/rank mechanics.
     import math
 
     n = spark.read.parquet(f"{sf_dir}/embeddings.parquet").count()
@@ -327,11 +306,6 @@ def test_ann_recall_vs_brute_force(spark):
     for name, fn in [
         ("lsh", sim.ann_lsh_topk),
         ("ivf", lambda s, d: sim.ann_ivf_topk(s, d, nprobe=ivf_nprobe)),
-        # trained-centroid IVF (operators/kmeans.py wired end-to-end): same
-        # probed-fraction logic — ~80% of the ≈√n trained cells
-        ("ivf_trained", lambda s, d: sim.ann_ivf_trained_topk(
-            s, d, nprobe=math.ceil(0.8 * sim._centroid_stride(n)), max_iter=3
-        )),
     ]:
         approx = {}
         for r in fn(spark, sf_dir).collect():
