@@ -18,11 +18,22 @@ Spark-first wins over the reference's 6× eager recomputation
     replacement and reruns eagerly — statistically equivalent, and FIXTURES
     §4 notes instability is only statistically comparable across engines
     anyway);
+  * one collected pre-pass over the exploded slice, grouped by
+    (run, anomaly), gives the class check, the labels and — with
+    clustering on — C2's first pass; C2's second pass is one more grouped
+    aggregation for all runs (``operators.correlation``), with Pearson on
+    the driver;
   * after C7 the plan holds one reward per (run, anomaly, feature), so
     ``explain_anomalies`` collects those rows once and runs C8, the
     assembly and C9 on the driver (``operators.leap`` — the same cut the
-    streaming trigger uses); the call is eager, and its result is a local
-    relation broadcast-joined to the labels.
+    streaming trigger uses); the call is eager, and its result is one local
+    relation — the labels come from the pre-pass, with no join.
+
+Labels: every label row is sliced on its own, so overlapping labels each
+get their own rows (a row in two intervals belongs to both), and a label
+reaching past the trace explains the rows it does cover.  A label that
+covers no reference or no anomaly row has no result row (pinned by
+tests/test_pipeline.py against tests/oracle_pandas).
 
 Samples that lose a class (a documented divergence from the reference): a
 (run, anomaly) group whose sample lost every reference or every anomaly row
@@ -45,11 +56,15 @@ from collections import Counter
 from dataclasses import dataclass, replace
 
 from pyspark.sql import DataFrame, functions as F
+from pyspark.sql.types import StructType
 
 from exstream_implementation_spark.cache import tracked_persist
 from exstream_implementation_spark.canon import md5_hex_threshold
 from exstream_implementation_spark.operators.correlation import (
     correlated_features_filter,
+    merge_moments,
+    moment_aggregates,
+    no_rows,
 )
 from exstream_implementation_spark.operators.fp_filter import false_positive_filter
 from exstream_implementation_spark.operators.leap import (
@@ -122,8 +137,9 @@ def explain_anomalies(
 ) -> DataFrame:
     """→ (trace_id, ano_id, ano_key, explanation array<int>, exp_size,
     exp_instability) — the reference's result schema (FIXTURES §4) plus the
-    engine's explicit ano_key.  Eager: the call runs the plan up to C7 and
-    returns the driver tail's local relation joined to ``labels``."""
+    engine's explicit ano_key.  Eager: the call runs the pre-pass, C2 and
+    the plan up to C7, and returns the driver tail's local relation; its
+    ``trace_id`` and ``ano_id`` fields are those of ``labels``."""
     cfg = cfg or ExplainConfig()
     features = feature_columns(traces.columns)
 
@@ -160,35 +176,52 @@ def explain_anomalies(
         "*", f"explode(sequence(0, {int(n_runs)})) AS run_id"
     ).filter(f"run_id = 0 OR ({keep_sql})")
 
-    # C2 per run (the reference re-clusters on each sample): driver loop over
-    # tiny d×d matrices; skipped entirely when cluster=False.
+    # Pre-pass: one grouped aggregation over the cached slice, collected —
+    # O(runs × anomalies) rows.  It feeds the class check, the labels and,
+    # with clustering on, C2's first pass (the per-run feature moments).
+    spark = sliced.sparkSession
+    moment_sql = f", {moment_aggregates(features)}" if cfg.cluster else ""
+    pre = spark.sql(
+        "SELECT run_id, ano_key, trace_id, ano_id, count(1), min(type_data),"
+        f" max(type_data){moment_sql} FROM {{runs}}"
+        " GROUP BY run_id, ano_key, trace_id, ano_id",
+        runs=all_runs,
+    )
+    classes: dict[tuple[int, str], set[int]] = {}
+    ids: dict[str, list[tuple]] = {}
+    # every run is a key, so a run that sampled no rows keeps every feature
+    moments = {i: no_rows(features) for i in range(n_runs + 1)}
+    for run_id, ano_key, trace_id, ano_id, n, lo, hi, *aggs in pre.collect():
+        classes.setdefault((run_id, ano_key), set()).update((lo, hi))
+        if run_id == 0:
+            ids.setdefault(ano_key, []).append((trace_id, ano_id))
+        if cfg.cluster:
+            merge_moments(moments[run_id], n, aggs)
+
+    # C2 per run (the reference re-clusters on each sample): one second
+    # pass over all runs, tiny d×d matrices on the driver; skipped entirely
+    # when cluster=False.
     if cfg.cluster:
-        per_run_feats = {}
-        for i in range(cfg.instability_runs + 1):
-            src = sliced if i == 0 else all_runs.filter(F.col("run_id") == i)
-            per_run_feats[i] = correlated_features_filter(
-                src, features, cfg.correlation_threshold
-            )
         surv_rows = [
-            (i, f) for i, feats in per_run_feats.items() for f in feats
+            (i, f)
+            for i, feats in correlated_features_filter(
+                all_runs, features, cfg.correlation_threshold, moments
+            ).items()
+            for f in feats
         ]
         surv = F.broadcast(
-            local_frame(
-                sliced.sparkSession, surv_rows, "run_id int, feature string"
-            )
+            local_frame(spark, surv_rows, "run_id int, feature string")
         )
     else:
         surv = None
 
-    # drop (run, key) groups that lost a class to sampling — computed on the
-    # WIDE table (rows/|features| of the melted size) and applied as a tiny
-    # broadcast join, not a window over the melted table (saves a full-width
-    # shuffle; a (run, ano_key) pair list is O(runs × anomalies) ≪ data).
-    valid = (
-        all_runs.groupBy("run_id", "ano_key")
-        .agg(F.max("type_data").alias("_mx"), F.min("type_data").alias("_mn"))
-        .filter((F.col("_mx") == 1) & (F.col("_mn") == 0))
-        .select("run_id", "ano_key")
+    # drop (run, key) groups that lost a class to sampling: a tiny broadcast
+    # join on the WIDE table (rows/|features| of the melted size), not a
+    # window over the melted table
+    valid = local_frame(
+        spark,
+        [key for key, seen in classes.items() if seen == {0, 1}],
+        "run_id int, ano_key string",
     )
     all_runs = all_runs.join(F.broadcast(valid), ["run_id", "ano_key"], "inner")
 
@@ -225,10 +258,12 @@ def explain_anomalies(
     for e in assemble_explanations(kept):
         run_id, ano_key = e["ano_key"]
         runs.setdefault(ano_key, {})[run_id] = e["feature_orders"]
-    main = local_frame(
-        sliced.sparkSession,
+    return local_frame(
+        spark,
         [
             (
+                trace_id,
+                ano_id,
                 ano_key,
                 by_run[0],
                 len(by_run[0]),
@@ -238,19 +273,15 @@ def explain_anomalies(
             )
             for ano_key, by_run in runs.items()
             if 0 in by_run
+            for trace_id, ano_id in ids[ano_key]
         ],
-        "ano_key string, explanation array<int>, exp_size int,"
-        " exp_instability double",
-    )
-
-    lbl = labels.select(
-        "trace_id",
-        "ano_id",
-        F.concat_ws("_", "ano_type", "trace_id", "label_row").alias("ano_key"),
-    )
-    return main.join(F.broadcast(lbl), "ano_key", "inner").select(
-        "trace_id", "ano_id", "ano_key", "explanation", "exp_size",
-        "exp_instability",
+        StructType(
+            [labels.schema["trace_id"], labels.schema["ano_id"]]
+            + StructType.fromDDL(
+                "ano_key string, explanation array<int>, exp_size int,"
+                " exp_instability double"
+            ).fields
+        ),
     )
 
 

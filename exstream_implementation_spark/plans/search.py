@@ -44,9 +44,9 @@ BM25_B = 0.75
 # query term containing e.g. \xa0 would silently never match.
 _PY_WS = re.compile(r"[ \t\n\x0b\f\r]+")
 
-# widest query vocabulary that still fuses df counting into the single
-# stats aggregation row (one array_contains counter per term); beyond this
-# the df computation falls back to a distributed aggregation
+# widest query vocabulary bm25_topk accepts: df counting fuses into the
+# single stats aggregation row, one array_contains counter per term, and a
+# wider batch raises ValueError instead of growing that row
 _FUSED_VOCAB_MAX = 256
 
 
@@ -76,7 +76,9 @@ def bm25_topk(
     contract — or a literal ``[(query_id, query_text), ...]`` list (a
     constant query batch skips the driver collect job entirely).
     Returns (query_id, doc_id, score double, rank int), rank 1..k, ties
-    broken by doc_id ascending (deterministic).
+    broken by doc_id ascending (deterministic).  Raises ``ValueError`` when
+    the batch holds more than ``_FUSED_VOCAB_MAX`` (256) distinct terms:
+    split such a batch.
 
     ``toks_col``: name of an existing token-array column on ``docs`` —
     callers that already tokenized (and possibly cached) the corpus pass it
@@ -97,9 +99,7 @@ def bm25_topk(
     # query batch: the batch is human-scale by contract, so its terms are
     # tokenized on the driver and become literals of a per-doc scoring
     # projection (per-term tf from array ops — no token explode, no
-    # (term, doc) shuffle).  Vocabularies too wide for that projection
-    # (> _FUSED_VOCAB_MAX) fall back to the distributed explode+join
-    # formulation.  A literal [(query_id, query_text)] list skips the
+    # (term, doc) shuffle).  A literal [(query_id, query_text)] list skips the
     # collect job — callers with a constant query batch (the catalog
     # branch) save a full scheduler round-trip per invocation.
     if isinstance(queries, list):
@@ -119,6 +119,11 @@ def bm25_topk(
             spark, [], "query_id int, doc_id bigint, score double, rank int"
         )
     vocab_terms = sorted({t for _, t in qterms_local})
+    if len(vocab_terms) > _FUSED_VOCAB_MAX:
+        raise ValueError(
+            f"bm25_topk takes at most {_FUSED_VOCAB_MAX} distinct query terms"
+            f" per batch, got {len(vocab_terms)}: split the batch"
+        )
     tok_arr = (
         F.filter(F.col(toks_col), lambda t: t != F.lit(""))
         if toks_col is not None
@@ -129,131 +134,79 @@ def bm25_topk(
         .withColumn("dl", F.size("toks"))
         .filter(F.col("dl") > 0)
     )
-    if len(vocab_terms) <= _FUSED_VOCAB_MAX:
-        # ONE job: the corpus-stats aggregate (n, avgdl, per-vocab-term
-        # df — all partial-combined in one pass) broadcast-joins into
-        # the scoring projection instead of being fetched to the driver
-        # first.  The old two-job shape (stats .first(), then a
-        # projection built from driver literals) cost a blocking
-        # scheduler round-trip per invocation — the dominant warm-path
-        # cost on human-scale corpora — and bought nothing at scale,
-        # since both jobs read the same scan.
-        stats = toks.agg(
-            F.count("*").cast("double").alias("__n"),
-            F.avg("dl").alias("__avgdl"),
-            *[
-                F.sum(F.array_contains("toks", t).cast("int"))
-                .cast("double")
-                .alias(f"__df{i}")
-                for i, t in enumerate(vocab_terms)
-            ],
-        )
-        idx = {t: i for i, t in enumerate(vocab_terms)}
-        by_query: dict[int, list[str]] = {}
-        for qid, t in qterms_local:
-            by_query.setdefault(qid, []).append(t)
-        # one O(dl) pass keeps only query-term occurrences; per-term tf
-        # then scans that (usually tiny) matched list
-        matched = F.filter(
-            F.col("toks"), lambda x: x.isin(vocab_terms)
-        ).alias("matched")
-        docs_m = (
-            toks.select("doc_id", "dl", matched)
-            .filter(F.size("matched") > 0)
-            .crossJoin(F.broadcast(stats))  # 1-row stats side
-        )
+    # ONE job: the corpus-stats aggregate (n, avgdl, per-vocab-term df —
+    # all partial-combined in one pass) broadcast-joins into the scoring
+    # projection instead of being fetched to the driver first, which would
+    # cost a blocking scheduler round-trip per invocation.
+    stats = toks.agg(
+        F.count("*").cast("double").alias("__n"),
+        F.avg("dl").alias("__avgdl"),
+        *[
+            F.sum(F.array_contains("toks", t).cast("int"))
+            .cast("double")
+            .alias(f"__df{i}")
+            for i, t in enumerate(vocab_terms)
+        ],
+    )
+    idx = {t: i for i, t in enumerate(vocab_terms)}
+    by_query: dict[int, list[str]] = {}
+    for qid, t in qterms_local:
+        by_query.setdefault(qid, []).append(t)
+    # one O(dl) pass keeps only query-term occurrences; per-term tf
+    # then scans that (usually tiny) matched list
+    matched = F.filter(
+        F.col("toks"), lambda x: x.isin(vocab_terms)
+    ).alias("matched")
+    docs_m = (
+        toks.select("doc_id", "dl", matched)
+        .filter(F.size("matched") > 0)
+        .crossJoin(F.broadcast(stats))  # 1-row stats side
+    )
 
-        def _qscore(terms: list[str]):
-            # fixed summation order (query-term order); same formula as
-            # the wide-vocab hits path: idf * (tf*(k1+1)) / (tf + k1*(1-b+b*dl/avgdl))
-            denom_tail = k1 * (
-                1.0 - b + b * F.col("dl") / F.col("__avgdl")
+    def _qscore(terms: list[str]):
+        # fixed summation order (query-term order):
+        # idf * (tf*(k1+1)) / (tf + k1*(1-b+b*dl/avgdl))
+        denom_tail = k1 * (
+            1.0 - b + b * F.col("dl") / F.col("__avgdl")
+        )
+        parts = []
+        for t in terms:
+            dfc = F.col(f"__df{idx[t]}")
+            idf = F.log(
+                F.lit(1.0) + (F.col("__n") - dfc + 0.5) / (dfc + 0.5)
             )
-            parts = []
-            for t in terms:
-                dfc = F.col(f"__df{idx[t]}")
-                idf = F.log(
-                    F.lit(1.0) + (F.col("__n") - dfc + 0.5) / (dfc + 0.5)
-                )
-                tf = F.size(
-                    F.filter(F.col("matched"), lambda x: x == F.lit(t))
-                )
-                # stop-term cap in-expression (mirrors the wide-vocab
-                # path's df filter); df=0 terms contribute 0 via tf=0
-                parts.append(
-                    F.when(
-                        dfc <= F.lit(float(max_df_ratio)) * F.col("__n"),
-                        idf * ((tf * (k1 + 1.0)) / (tf + denom_tail)),
-                    ).otherwise(F.lit(0.0))
-                )
-            score = parts[0]
-            for p in parts[1:]:
-                score = score + p
-            return score
+            tf = F.size(
+                F.filter(F.col("matched"), lambda x: x == F.lit(t))
+            )
+            # stop-term cap in-expression; df=0 terms contribute 0
+            # via tf=0
+            parts.append(
+                F.when(
+                    dfc <= F.lit(float(max_df_ratio)) * F.col("__n"),
+                    idf * ((tf * (k1 + 1.0)) / (tf + denom_tail)),
+                ).otherwise(F.lit(0.0))
+            )
+        score = parts[0]
+        for p in parts[1:]:
+            score = score + p
+        return score
 
-        entries = F.array(
-            *[
-                F.struct(
-                    F.lit(qid).cast("int").alias("query_id"),
-                    _qscore(terms).alias("score"),
-                )
-                for qid, terms in by_query.items()
-            ]
-        )
-        scored = (
-            docs_m.select("doc_id", F.inline(entries))
-            # a doc scores for a query only if it contains >= 1 of THAT
-            # query's terms (score is NaN-free: tf=0 => term part 0)
-            .filter(F.col("score") > 0.0)
-            .select("query_id", "doc_id", "score")
-        )
-    else:
-        row = toks.agg(
-            F.count("*").alias("n"), F.avg("dl").alias("avgdl")
-        ).first()
-        n_docs, avgdl = int(row["n"] or 0), float(row["avgdl"] or 0.0)
-        if n_docs == 0:
-            return local_frame(
-                spark, [], "query_id int, doc_id bigint, score double, rank int"
+    entries = F.array(
+        *[
+            F.struct(
+                F.lit(qid).cast("int").alias("query_id"),
+                _qscore(terms).alias("score"),
             )
-        qterms = local_frame(
-            spark, qterms_local, "query_id int, term string"
-        )
-        vocab = qterms.select("term").distinct()
-        dfreq = (
-            toks.select(
-                "doc_id", F.explode(F.array_distinct("toks")).alias("term")
-            )
-            .join(F.broadcast(vocab), "term")
-            .groupBy("term")
-            .agg(F.count("*").alias("df"))
-        )
-        idf = F.log(
-            F.lit(1.0)
-            + (F.lit(float(n_docs)) - F.col("df") + 0.5)
-            / (F.col("df") + 0.5)
-        )
-        weights = (
-            qterms.join(F.broadcast(dfreq), "term")
-            .filter(F.col("df") <= F.lit(max_df_ratio * n_docs))
-            .select("query_id", "term", idf.alias("idf"))
-        )
-        hits = (
-            toks.select("doc_id", "dl", F.explode("toks").alias("term"))
-            .join(F.broadcast(weights.select("term").distinct()), "term")
-            .groupBy("term", "doc_id")
-            .agg(F.count("*").alias("tf"), F.first("dl").alias("dl"))
-        )
-        # hits x broadcast(query-term weights): BroadcastHashJoin — the
-        # corpus side never shuffles to meet the query batch.
-        tf_norm = (F.col("tf") * (k1 + 1.0)) / (
-            F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl))
-        )
-        scored = (
-            hits.join(F.broadcast(weights), "term")
-            .groupBy("query_id", "doc_id")
-            .agg(F.sum(F.col("idf") * tf_norm).alias("score"))
-        )
+            for qid, terms in by_query.items()
+        ]
+    )
+    scored = (
+        docs_m.select("doc_id", F.inline(entries))
+        # a doc scores for a query only if it contains >= 1 of THAT
+        # query's terms (score is NaN-free: tf=0 => term part 0)
+        .filter(F.col("score") > 0.0)
+        .select("query_id", "doc_id", "score")
+    )
     if score_round is not None:
         # applied before the fold AND the final window so both rank the
         # same value (see docstring)

@@ -7,7 +7,8 @@ filtering (~160 classes) evicted its own classes and every warm call
 recompiled all of them.  The plans must also be data-independent: a second
 trace with the same columns but a different number of anomalies reuses the
 compiled classes (the per-run correlation survivors are data in a local
-relation, not literals in the plan).
+relation, and C2's per-run means an array literal the generated class holds
+as a reference, not literals in the generated source).
 """
 
 import numpy as np

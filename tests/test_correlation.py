@@ -1,6 +1,7 @@
 """C2 correlation clustering: the driver-side union-find, the catalog's
-``corr_cluster_reps`` on a trace with a constant feature, and the matrix
-on fewer than two rows.
+``corr_cluster_reps`` on a trace with a constant feature, the matrix on
+fewer than two rows, and the two-pass SQL Pearson against numpy (a large
+offset, constant and invalid columns, runs of 0-2 rows).
 
 Reference: exstream/correlation_filtering.py:39-61 connects two features
 when |corr| > threshold and keeps one representative per component.
@@ -122,3 +123,141 @@ def test_clustered_explain_on_a_two_row_slice(spark):
         got[cluster] = (list(rows[0]["explanation"]), rows[0]["exp_instability"])
     # f0 and f1 correlate perfectly over two rows, so f0 represents both
     assert got[True] == got[False] == ([0], 0.0)
+
+
+# --- the two-pass SQL Pearson ---------------------------------------------------
+
+OFFSET = 1e12  # an integer double: OFFSET + k/1024 is exact for |k/1024| < 2**26
+
+
+def _runs_frame(spark, cols, runs):
+    """One row per position of the (possibly None) double columns, tagged
+    with its int ``run_id``."""
+    names = list(cols)
+    rows = [(r, *vals) for r, *vals in zip(runs, *cols.values())]
+    return spark.createDataFrame(
+        rows, "run_id int, " + ", ".join(f"{c} double" for c in names)
+    ), names
+
+
+def _matrices(df, names):
+    from exstream_implementation_spark.operators.correlation import (
+        correlation_matrices,
+        feature_moments,
+    )
+
+    return correlation_matrices(
+        df, names, feature_moments(df, names, "run_id"), "run_id"
+    )
+
+
+def _same(got, want, tol):
+    # NaN where the other is NaN, else within tol
+    return all(
+        (math.isnan(g) and math.isnan(w)) or abs(g - w) <= tol
+        for gr, wr in zip(got, want)
+        for g, w in zip(gr, wr)
+    )
+
+
+def test_pearson_matches_numpy_on_a_large_offset_column(spark):
+    # "big" sits at 1e12 with noise of ~1: numpy's corrcoef on the raw
+    # column is itself off by ~1e-9, so the reference shifts it back first
+    # (the shift is exact); a raw one-pass Σx² formula returns garbage there
+    import numpy as np
+
+    from exstream_implementation_spark.operators.correlation import (
+        correlation_matrix,
+    )
+
+    rng = np.random.default_rng(11)
+    n = 240
+    a = rng.normal(0, 1, n)
+    cols = {
+        "a": a,
+        "b": 0.7 * a + rng.normal(0, 0.5, n),
+        "c": rng.normal(-3e4, 20, n),
+        "big": OFFSET + np.round((0.8 * a + rng.normal(0, 0.6, n)) * 1024) / 1024,
+        # its run means print with an exponent ("2.1e-05") in the SQL text
+        "tiny": rng.normal(2e-5, 1e-6, n),
+    }
+    runs = rng.integers(0, 3, n)
+    df, names = _runs_frame(spark, {k: v.tolist() for k, v in cols.items()}, runs.tolist())
+    got = _matrices(df, names)
+    exact = np.vstack(
+        [cols["a"], cols["b"], cols["c"], cols["big"] - OFFSET, cols["tiny"]]
+    )
+    assert sorted(got) == [0, 1, 2]
+    for r in range(3):
+        want = np.corrcoef(exact[:, runs == r])
+        assert _same(got[r], want.tolist(), 1e-12), r
+        # one call over all runs equals a call on the run's own rows
+        alone = correlation_matrix(df.filter(f"run_id = {r}"), names)
+        assert _same(got[r], alone, 1e-13), r
+
+    x, y = cols["a"], cols["big"]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        one_pass = (np.sum(x * y) - np.sum(x) * np.sum(y) / n) / np.sqrt(
+            (np.sum(x * x) - np.sum(x) ** 2 / n)
+            * (np.sum(y * y) - np.sum(y) ** 2 / n)
+        )
+    assert not abs(one_pass - np.corrcoef(exact)[0, 3]) <= 1e-6
+
+
+def test_pearson_is_nan_on_constant_and_invalid_columns(spark):
+    # 0.1 repeated: its sum / n is not 0.1, so a centred sum of squares is
+    # not 0; min == max still marks it constant
+    import numpy as np
+
+    n = 7
+    assert sum([0.1] * n) / n != 0.1
+    x = [1.0, 2.0, 4.0, 3.0, 7.0, 5.0, 6.0]
+    y = [2.0, 1.0, 5.0, 3.0, 6.0, 7.0, 4.0]
+
+    def poisoned(v):
+        return [v if i == 3 else 10.0 + i for i in range(n)]
+
+    cols = {
+        "x": x,
+        "tenth": [0.1] * n,
+        "gap": poisoned(None),
+        "nan": poisoned(math.nan),
+        "pinf": poisoned(math.inf),
+        "ninf": poisoned(-math.inf),
+        "y": y,
+    }
+    df, names = _runs_frame(spark, cols, [0] * n)
+    got = _matrices(df, names)[0]
+    good = {0, 6}
+    for i in range(len(names)):
+        for j in range(len(names)):
+            if i in good and j in good:
+                want = np.corrcoef([cols[names[i]], cols[names[j]]])[0, 1]
+                assert abs(got[i][j] - want) <= 1e-12
+            else:
+                assert math.isnan(got[i][j]), (names[i], names[j])
+
+
+def test_pearson_on_runs_of_two_one_and_no_rows(spark):
+    # run 0 has two rows (every defined r is ±1), run 1 one row (all NaN);
+    # run 2 sampled no rows: it clusters nothing, so every feature survives
+    from exstream_implementation_spark.operators.correlation import (
+        correlated_features_filter,
+        feature_moments,
+        no_rows,
+    )
+
+    cols = {"a": [1.0, 2.0, 5.0], "b": [3.0, 1.0, 5.0], "c": [4.0, 4.0, 5.0]}
+    df, names = _runs_frame(spark, cols, [0, 0, 1])
+    got = _matrices(df, names)
+    assert sorted(got) == [0, 1]
+    nan = math.nan
+    assert _same(got[0], [[1.0, -1.0, nan], [-1.0, 1.0, nan], [nan, nan, nan]], 1e-15)
+    assert all(math.isnan(c) for row in got[1] for c in row)
+
+    moments = {**feature_moments(df, names, "run_id"), 2: no_rows(names)}
+    assert correlated_features_filter(df, names, 0.6, moments) == {
+        0: ["a", "c"],
+        1: ["a", "b", "c"],
+        2: ["a", "b", "c"],
+    }

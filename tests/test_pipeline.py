@@ -416,3 +416,81 @@ def test_duplicate_timestamps_match_oracle(spark, dup_values, cluster):
     assert len(out) == 1
     assert list(out[0]["explanation"]) == want
     assert out[0]["exp_size"] == len(want)
+
+
+LABEL_CASES = {
+    # label_row: (what it pins, ref_start, ref_end, ano_start, ano_end)
+    0: ("overlaps label 1", 0, 50, 50, 70),
+    1: ("overlaps label 0", 30, 80, 60, 90),
+    2: ("reference and anomaly overlap", 95, 125, 115, 135),
+    3: ("starts before the trace", -50, 20, 20, 40),
+    4: ("ends after the trace", 140, 150, 150, 400),
+    5: ("wholly after the trace", 500, 600, 600, 700),
+    6: ("wholly before the trace", -300, -200, -200, -100),
+}
+
+
+@pytest.mark.parametrize("cluster", [False, True], ids=["flat", "cluster"])
+def test_overlapping_and_out_of_range_labels_match_oracle(spark, cluster):
+    """Label defects (ROADMAP defect class): every label row is sliced on
+    its own, as the reference's per-label boolean masks do
+    (utils/get_data.py:83-100).  Overlapping labels each explain their own
+    rows, a row in both of one label's intervals is a row of both classes,
+    a label reaching past either end of the trace explains the rows it
+    covers, and a label wholly outside the trace has no result row.  C2
+    pools every sliced row of every label, so the out-of-range labels add
+    nothing to it.  Pinned against tests/oracle_pandas with clustering off
+    and on."""
+    rng = np.random.default_rng(13)
+    feats = ["f_a", "f_b", "f_c", "f_twin"]
+    n = 160
+    cols = {f: rng.normal(0, 1, n) for f in feats[:3]}
+    for f, (lo, hi) in (("f_b", (50, 70)), ("f_c", (60, 90)), ("f_a", (115, 135)),
+                        ("f_b", (20, 40)), ("f_c", (150, 159))):
+        cols[f][lo : hi + 1] += 4.0
+    cols["f_twin"] = cols["f_a"] + rng.normal(0, 0.3, n)
+    rows = [("L", t, *[float(cols[f][t]) for f in feats]) for t in range(n)]
+    traces = spark.createDataFrame(
+        rows, "trace_id string, timestamp long, " + ", ".join(f"{f} double" for f in feats)
+    )
+    labels = spark.createDataFrame(
+        [(lr, "L", 10 + lr, "shift", r0, r1, a0, a1)
+         for lr, (_, r0, r1, a0, a1) in LABEL_CASES.items()],
+        "label_row int, trace_id string, ano_id int, ano_type string, "
+        "ref_start long, ref_end long, ano_start long, ano_end long",
+    )
+    out = explain_anomalies(
+        traces, labels, ExplainConfig(cluster=cluster, instability_runs=0)
+    ).collect()
+    got = {r["ano_id"] - 10: list(r["explanation"]) for r in out}
+    assert {r["ano_key"] for r in out} == {f"shift_L_{lr}" for lr in got}
+
+    sliced = {
+        lr: [(cls, vals) for _, t, *vals in rows for cls, (lo, hi) in
+             ((0, (r0, r1 - 1)), (1, (a0, a1))) if lo <= t <= hi]
+        for lr, (_, r0, r1, a0, a1) in LABEL_CASES.items()
+    }
+    kept = list(range(len(feats)))
+    if cluster:
+        pooled = np.array([v for s in sliced.values() for _, v in s]).T
+        corr = np.corrcoef(pooled)
+        comp = list(range(len(feats)))
+        for i in range(len(feats)):
+            for j in range(i):
+                if abs(corr[i][j]) > 0.6:
+                    old, new = comp[i], comp[j]
+                    comp = [new if c == old else c for c in comp]
+        kept = sorted({min(i for i in kept if comp[i] == c) for c in set(comp)})
+        assert kept == [0, 1, 2]
+    want = {}
+    for lr, s in sliced.items():
+        classes = [cls for cls, _ in s]
+        if 0 not in classes or 1 not in classes:
+            continue
+        rewards = [(i, oracle.reward([v[i] for _, v in s], classes)) for i in kept]
+        want[lr] = oracle.leap_filter(sorted(rewards, key=lambda t: -t[1]))
+    # labels 5 and 6 have no row; f_twin joins f_a's component with C2 on
+    assert want == {
+        0: [2, 1], 1: [2], 2: [0] if cluster else [0, 3], 3: [1], 4: [2],
+    }
+    assert got == want

@@ -800,3 +800,58 @@ def test_explanation_instability_matches_oracle(explanations):
         assert got is None
     else:
         assert abs(got - oracle.instability(explanations)) <= 1e-12
+
+
+_corr_value = st.one_of(
+    # multiples of 1/8: no variance underflows, so numpy and the engine
+    # agree on which columns are defined
+    st.integers(min_value=-(10**6), max_value=10**6).map(lambda k: k / 8),
+    st.sampled_from([0.1, 1e12, 1e12 + 0.5, None, math.nan, math.inf]),
+)
+
+
+@given(
+    st.lists(
+        st.tuples(st.integers(min_value=0, max_value=2), _corr_value, _corr_value),
+        max_size=12,
+    )
+)
+@example([(0, 0.1, 1.0), (0, 0.1, 2.0), (1, 1e12, 3.0), (1, 1e12 + 0.5, 1.0)])
+@settings(max_examples=10, deadline=None)
+def test_grouped_pearson_matches_numpy_per_run(rows):
+    """C2's two-pass SQL Pearson over all runs in one call: per run, NaN
+    exactly where numpy's corrcoef has no defined value (under 2 rows, a
+    constant column, any NULL, NaN or inf), else numpy's coefficient."""
+    import numpy as np
+
+    from exstream_implementation_spark.operators.correlation import (
+        correlation_matrices,
+        feature_moments,
+        no_rows,
+    )
+    from exstream_implementation_spark.session import get_spark
+
+    spark = get_spark(app_name="exstream-spark-tests", shuffle_partitions=8)
+    df = spark.createDataFrame(rows, "run_id int, x double, y double")
+    moments = {r: no_rows(["x", "y"]) for r in range(3)}
+    moments.update(feature_moments(df, ["x", "y"], "run_id"))
+    got = correlation_matrices(df, ["x", "y"], moments, "run_id")
+    for r in range(3):
+        cols = [
+            np.array([math.nan if row[k] is None else row[k] for row in rows if row[0] == r])
+            for k in (1, 2)
+        ]
+        valid = [
+            len(c) >= 2 and bool(np.all(np.isfinite(c))) and c.min() != c.max()
+            for c in cols
+        ]
+        for i in range(2):
+            for j in range(2):
+                if valid[i] and valid[j]:
+                    # numpy on a raw 1e12 column loses ~1e-9 of its own, so
+                    # each column is shifted by its median first
+                    a, b = (cols[k] - np.median(cols[k]) for k in (i, j))
+                    want = np.corrcoef(a, b)[0, 1]
+                    assert abs(got[r][i][j] - want) <= 1e-9, (r, i, j)
+                else:
+                    assert math.isnan(got[r][i][j]), (r, i, j)

@@ -9,7 +9,8 @@
     the modules that module uses: its own module-level imports, followed
     transitively, plus the package ``__init__`` files Python executes on
     the way.  A package init that re-exports its submodules breaks this,
-    because it loads every submodule for every importer.
+    because it loads every submodule for every importer.  Neither may load
+    ``pyspark.ml``.
 (c) Every top-level function and class must be reached by an AST name walk
     from the same entry points, or be one of the ``RETAINED_TEST_ONLY``
     definitions that only tests reach; and every top-level definition,
@@ -228,13 +229,16 @@ def test_import_loads_only_its_closure(target):
     code = (
         "import importlib, json, sys\n"
         f"importlib.import_module({target!r})\n"
-        f"print(json.dumps(sorted(m for m in sys.modules if m.split('.')[0] == {PKG!r})))\n"
+        f"print(json.dumps(sorted(m for m in sys.modules if m.split('.')[0] in ({PKG!r}, 'pyspark'))))\n"
     )
     out = subprocess.run(
         [sys.executable, "-c", code], cwd=ROOT, capture_output=True,
         text=True, check=True,
     )
-    loaded = set(json.loads(out.stdout))
+    modules = json.loads(out.stdout)
+    # MLlib is nowhere on these paths: C2 is SQL plus driver arithmetic
+    assert "pyspark.ml" not in modules
+    loaded = {m for m in modules if m.split(".")[0] == PKG}
     assert target in loaded
     assert not loaded - closure, (
         f"{target} loads modules outside its import closure: "

@@ -143,6 +143,23 @@ def test_degenerate_inputs(spark):
     assert bm25_topk(spark, docs_df, _queries_df(spark, []), k=5).count() == 0
 
 
+def test_query_vocabulary_wider_than_the_fused_row_raises(spark):
+    # every query term is one df counter of the one stats row: a batch past
+    # _FUSED_VOCAB_MAX distinct terms is refused before any job runs
+    from exstream_implementation_spark.plans.search import _FUSED_VOCAB_MAX
+
+    docs_df = spark.createDataFrame([(1, "t0 t1")], "doc_id long, text string")
+    at_cap = [(1, " ".join(f"t{i}" for i in range(_FUSED_VOCAB_MAX)))]
+    # repeated terms count once, across queries too
+    at_cap.append((2, "t0 T0 t1"))
+    assert bm25_topk(spark, docs_df, at_cap, k=1).columns == [
+        "query_id", "doc_id", "score", "rank",
+    ]
+    over = at_cap + [(3, f"t{_FUSED_VOCAB_MAX}")]
+    with pytest.raises(ValueError, match=f"at most {_FUSED_VOCAB_MAX} distinct"):
+        bm25_topk(spark, docs_df, over, k=1)
+
+
 # --- property: random corpora vs the local model -----------------------------
 
 from hypothesis import given, settings, strategies as st  # noqa: E402
