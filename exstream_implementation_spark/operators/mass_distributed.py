@@ -2,9 +2,11 @@
 over a series of arbitrary length.
 
 The per-feature MASS in ``operators/fp_filter.py`` holds one feature's pooled
-reference series in a single ``applyInPandas`` group — sized by the label
-catalog, fine for C3 (reference exstream/false_positive_filtering.py:36-46).
-This operator is the scale path for the *generalized* similarity search: the
+reference series in a single ``applyInPandas`` group and runs one full-length
+MASS per anomaly over it (reference exstream/false_positive_filtering.py:
+36-46), so C3's work grows with the square of the anomaly count (0.28 s of
+Python at 2 anomalies, 23.1 s at 80; ROADMAP item 1 moves C3 onto this
+operator).  This operator is the scale path for similarity search: the
 series is split into fixed-size chunks with an (m-1)-row overlap, each chunk
 computes its window starts' distances independently (z-normalized distance
 depends only on the window and the pattern, so chunking is EXACT, not

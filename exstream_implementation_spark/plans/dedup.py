@@ -931,23 +931,14 @@ def corpus_decontaminate(spark, sf_dir):
     )
 
 
-# --- deterministic source-mix sampling (API + pytest) ------------------------
-# Pretraining data mixing: per-source sampling rates (e.g. wiki ×2 epochs,
-# web ×0.3) applied as a deterministic hash Bernoulli — reproducible across
-# runs and executors with NO RNG, expressible as a single filter that fuses
-# into the scan (no shuffle, no sort, trivially restartable).
+# --- deterministic source-mix sampling --------------------------------------
+# Pretraining data mixing: per-source sampling rates (e.g. web ×0.3) applied
+# as a deterministic hash Bernoulli — reproducible across runs and executors
+# with NO RNG, expressible as a single filter that fuses into the scan (no
+# shuffle, no sort, trivially restartable).
 from exstream_implementation_spark.canon import (  # noqa: E402
     md5_hex_threshold as _md5_hex_threshold,
 )
-
-
-def _hash_uniform(id_col: str, salt: int) -> F.Column:
-    """Deterministic per-row uniform in [0, 1) from (id, salt) — the ONE
-    selector shared by sample_mix and expand_epochs (their bit-identical
-    agreement for e < 1 is a pinned contract; keep it structural)."""
-    return (
-        F.abs(F.xxhash64(F.col(id_col), F.lit(int(salt)))) % F.lit(1_000_000)
-    ) / F.lit(1_000_000.0)
 
 
 def sample_mix(
@@ -956,287 +947,36 @@ def sample_mix(
     key: str = "source",
     id_col: str = "doc_id",
     salt: int = 0,
-    method: str = "xxhash64",
 ):
     """Keep each row of ``df`` with its source's probability.
 
     ``fractions`` maps key-column values to keep-probabilities in [0, 1];
-    unlisted sources are dropped.  Selection is a deterministic hash of
-    (id, salt) bucketed to [0, 1) — per-row deterministic, independent of
-    partitioning, and a different ``salt`` draws an independent sample.
-
-    ``method='xxhash64'`` (default) is the production path — one 64-bit JVM
-    hash per row.  ``method='md5'`` selects on the first 6 hex chars of
-    md5(f"{id}:{salt}") compared against a per-source hex cutoff; md5 is
-    bit-identical across engines, which makes the sample oracle-reproducible
-    (the catalog gate) at the cost of a wider hash.
+    unlisted sources are dropped.  Selection compares the first 6 hex chars
+    of md5(f"{id}:{salt}") against a per-source hex cutoff — per-row
+    deterministic, independent of partitioning, and a different ``salt``
+    draws an independent sample.  md5 hex is bit-identical across engines,
+    so the DuckDB oracle reproduces the exact kept set.
     """
-    if method not in ("xxhash64", "md5"):
-        raise ValueError(f"method must be 'xxhash64' or 'md5': {method!r}")
     for src, frac in fractions.items():
         if not 0.0 <= frac <= 1.0:
             raise ValueError(f"fraction for {src!r} must be in [0,1]: {frac}")
-    if method == "md5":
-        u_hex = F.substring(
-            F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f":{salt}"))),
-            1,
-            6,
-        )
-        th = F.create_map(
-            *[
-                F.lit(x)
-                for src, frac in fractions.items()
-                for x in (src, _md5_hex_threshold(frac))
-            ]
-        )[F.col(key)]
-        return df.filter(th.isNotNull() & (u_hex < th))
-    u = _hash_uniform(id_col, salt)
-    frac_col = F.create_map(
-        *[F.lit(x) for kv in fractions.items() for x in kv]
+    u_hex = F.substring(
+        F.md5(F.concat(F.col(id_col).cast("string"), F.lit(f":{salt}"))),
+        1,
+        6,
+    )
+    th = F.create_map(
+        *[
+            F.lit(x)
+            for src, frac in fractions.items()
+            for x in (src, _md5_hex_threshold(frac))
+        ]
     )[F.col(key)]
-    return df.filter(frac_col.isNotNull() & (u < frac_col))
-
-
-def temperature_mix_policy(
-    df,
-    tau: float,
-    target_rows: int,
-    key: str = "source",
-    weight_col: str | None = None,
-) -> dict:
-    """Derive the per-source keep fractions for temperature-τ mixing —
-    the standard multilingual/source-balancing rule (XLM, Xue et al.
-    2021 mT5 §3.2): sampling probability q_i ∝ n_i^τ, so τ=1 keeps the
-    natural distribution, τ→0 flattens toward uniform, and rare sources
-    are upsampled in between.
-
-    ONE map-side-combined aggregate reads the per-source sizes n_i
-    (rows, or the sum of ``weight_col`` — e.g. token counts — when
-    given); the policy arithmetic is driver-side over the handful of
-    source rows.  Returns:
-
-      {"fractions": {src: f_i in (0, 1]},   feed to sample_mix
-       "epochs":    {src: e_i >= 1.0},      repeat factor where the τ
-                                            target exceeds the source
-                                            (f_i clamps to 1; the caller
-                                            repeats e_i epochs of it)
-       "sizes":     {src: n_i}}
-
-    The un-clamped demand for source i is target_rows * q_i; f_i is
-    demand / n_i clamped to 1 with the remainder reported as epochs —
-    deterministic, no RNG, composes with sample_mix's hash-Bernoulli.
-    """
-    if tau < 0:
-        raise ValueError(f"temperature_mix_policy: tau must be >= 0: {tau}")
-    if target_rows <= 0:
-        raise ValueError(
-            f"temperature_mix_policy: target_rows must be > 0: {target_rows}"
-        )
-    size_expr = (
-        F.sum(weight_col) if weight_col is not None else F.count(F.lit(1))
-    )
-    rows = df.groupBy(key).agg(size_expr.cast("double").alias("n")).collect()
-    if not rows:
-        raise ValueError("temperature_mix_policy: input has no rows")
-    bad = [r[key] for r in rows if r["n"] is None or r["n"] <= 0]
-    if bad:
-        raise ValueError(
-            "temperature_mix_policy: zero/NULL total size for source(s) "
-            f"{bad} — a keep fraction is undefined there (weight_col sums "
-            "to 0 or NULL)"
-        )
-    sizes = {r[key]: float(r["n"]) for r in rows}
-    q_raw = {s: n ** tau for s, n in sizes.items()}
-    z = sum(q_raw.values())
-    fractions, epochs = {}, {}
-    for s, n in sizes.items():
-        demand = target_rows * q_raw[s] / z
-        f = demand / n
-        fractions[s] = min(1.0, f)
-        epochs[s] = max(1.0, f)
-    return {"fractions": fractions, "epochs": epochs, "sizes": sizes}
-
-
-def expand_epochs(
-    df,
-    epochs: dict,
-    key: str = "source",
-    id_col: str = "doc_id",
-    salt: int = 0,
-):
-    """Apply ``temperature_mix_policy``'s epoch factors: emit each row of
-    source s exactly ``floor(e_s)`` times plus one extra copy with
-    probability ``frac(e_s)`` (deterministic hash-Bernoulli on
-    (id, salt), the sample_mix convention) — so a source's expected
-    output volume is e_s * n_s and the realized duplication is a pure
-    function of (data, epochs, salt), independent of partitioning.
-
-    Output gains an ``epoch`` int column (0-based copy index): the unique
-    row key downstream is (id_col, epoch).  Keep leakage-safe splits by
-    assigning the split from the ORIGINAL ``id_col`` (plans/splits.py)
-    BEFORE or independent of expansion — then every epoch copy of a doc
-    lands in the same split by construction.  Sources absent from
-    ``epochs`` are dropped (the sample_mix convention); e_s < 1 behaves
-    like sampling (0 or 1 copies, keep probability e_s).
-
-    Execution: one map lookup + bounded sequence/explode per row — no
-    shuffle, no UDF; output size is the only cost, which is the point.
-    """
-    for src, e in epochs.items():
-        if e < 0:
-            raise ValueError(f"epoch factor for {src!r} must be >= 0: {e}")
-    e_map = F.create_map(
-        *[F.lit(x) for src, e in epochs.items() for x in (src, float(e))]
-    )[F.col(key)]
-    full = F.floor(e_map).cast("int")
-    frac = e_map - full
-    u = _hash_uniform(id_col, salt)
-    n_copies = full + (u < frac).cast("int")
-    return (
-        df.withColumn("__nc", n_copies)
-        .filter(e_map.isNotNull() & (F.col("__nc") > 0))
-        .withColumn("epoch", F.explode(F.sequence(F.lit(0), F.col("__nc") - 1)))
-        .drop("__nc")
-    )
-
-
-def sample_exact_k(
-    df,
-    group_col: str,
-    k: int,
-    id_col: str = "doc_id",
-    salt: int = 0,
-):
-    """EXACTLY k rows per group (all rows when a group has fewer) — the
-    deterministic distributed reservoir.
-
-    ``sample_mix`` keeps each row with a probability, so realized
-    per-source counts fluctuate; quota-driven curation ("exactly 10k docs
-    per language") needs exact-k.  Selection = the k SMALLEST
-    ``xxhash64(id, salt)`` per group: a pure function of row identity, so
-    the sample is independent of partitioning and engines, and a different
-    ``salt`` draws an independent sample.
-
-    Scale shape (the two-phase fold, same as plans/search.two_phase_topk):
-    each shuffle partition folds its (group, partition) slice down to k
-    candidates; a per-group window then exact-ranks <= partitions*k rows
-    per group — never a full per-group sort.  Winners semi-join back to
-    the input (AQE picks the strategy; the winner side is k*|groups|
-    rows), so sampled rows keep all their columns.
-    """
-    if k <= 0:
-        raise ValueError(f"k must be positive: {k}")
-    h = F.xxhash64(F.col(id_col), F.lit(int(salt)))
-    tagged = df.select(group_col, id_col).withColumn("_h", h)
-    return _fold_smallest_k(df, tagged, group_col, id_col, k)
-
-
-def _fold_smallest_k(df, tagged, group_col: str, id_col: str, k: int):
-    """The two-phase exact-k fold shared by sample_exact_k and
-    sample_weighted_k: ``tagged`` is (group, id, _h); keep the k rows
-    with the SMALLEST ``_h`` per group (ties by id), then semi-join the
-    winners back so sampled rows keep all their columns.  Each shuffle
-    partition folds its (group, partition) slice to k candidates first,
-    so the per-group window exact-ranks <= partitions*k rows — never a
-    full per-group sort."""
-    from pyspark.sql import Window
-
-    part = (
-        tagged.groupBy(group_col, F.spark_partition_id().alias("_p"))
-        .agg(
-            F.slice(
-                F.sort_array(F.collect_list(F.struct("_h", id_col))), 1, k
-            ).alias("top")
-        )
-        .select(group_col, F.explode("top").alias("c"))
-        .select(
-            group_col,
-            F.col("c._h").alias("_h"),
-            F.col(f"c.{id_col}").alias(id_col),
-        )
-    )
-    w = Window.partitionBy(group_col).orderBy(F.asc("_h"), F.asc(id_col))
-    winners = (
-        part.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .select(group_col, id_col)
-    )
-    # the USING-style semi join moves the key columns first; give the
-    # caller back their own column order
-    return df.join(winners, [group_col, id_col], "left_semi").select(df.columns)
-
-
-def es_sampling_key(id_col: str, weight_col: str, salt: int) -> F.Column:
-    """The Efraimidis-Spirakis sampling key -ln(u)/w — smallest keys win.
-    u is the deterministic open-interval (id, salt) hash uniform at 2^52
-    granularity (see ``sample_weighted_k`` for why 2^52, not 2^53, and why
-    the coarse Bernoulli ``_hash_uniform`` is NOT reused)."""
-    two52 = 1 << 52
-    u = (
-        (F.abs(F.xxhash64(F.col(id_col), F.lit(int(salt)))) % F.lit(two52))
-        + F.lit(0.5)
-    ) / F.lit(float(two52))
-    return -F.log(u) / F.col(weight_col).cast("double")
-
-
-def sample_weighted_k(
-    df,
-    group_col: str,
-    k: int,
-    weight_col: str,
-    id_col: str = "doc_id",
-    salt: int = 0,
-):
-    """EXACTLY k rows per group, drawn WITHOUT replacement with
-    probability proportional to ``weight_col`` — the quality-weighted
-    curation primitive ("keep the best 10k docs per language, favoring
-    high quality scores, but never deterministically: low-quality docs
-    still get in with proportional probability").
-
-    Efraimidis & Spirakis 2006 ("Weighted random sampling with a
-    reservoir"): give each row the key u^(1/w) for u ~ Uniform(0,1) and
-    keep the k LARGEST keys — equivalently the k smallest -ln(u)/w,
-    which is an Exponential(w) draw, so the winner distribution matches
-    sequential weighted draws without replacement exactly.  u is the
-    deterministic (id, salt) hash uniform (same family as sample_mix's
-    selector, shifted to the OPEN interval so ln never sees 0), so the
-    sample is a pure function of (row identity, salt, weights) —
-    independent of partitioning, reproducible across runs, and a
-    different ``salt`` draws an independent sample.
-
-    Rows with NULL or non-positive weight are excluded (a zero-weight
-    row has selection probability 0; a negative weight is undefined).
-    Scale shape: the same two-phase fold as ``sample_exact_k`` — each
-    shuffle partition folds its (group, partition) slice to k
-    candidates, the per-group window exact-ranks <= partitions*k rows,
-    winners semi-join back; never a full per-group sort.
-    """
-    if k <= 0:
-        raise ValueError(f"k must be positive: {k}")
-    # (0, 1) open-interval uniform at 2^52 granularity: +0.5 bucket
-    # centering keeps ln(u) finite at both ends (ANSI mode makes ln(0) a
-    # hard error), and 2^52 — not 2^53 — because x+0.5 must be EXACTLY
-    # representable for every bucket x (ULP is 0.5 up to 2^52, 1 beyond,
-    # where +0.5 would round x to a shared neighbor and reintroduce
-    # collisions, with x = 2^53-1 rounding to u = 1.0 → key 0, an
-    # unconditional winner).  The coarse 1e6-bucket _hash_uniform is NOT
-    # reused here — it exists for Bernoulli thresholds; a continuous ES
-    # key needs collision-free granularity, else same-weight rows tie
-    # and the id tie-break (not chance) decides boundary admissions.
-    w_dbl = F.col(weight_col).cast("double")
-    key = es_sampling_key(id_col, weight_col, salt)
-    tagged = (
-        # NaN needs its own guard: Spark orders NaN above every number,
-        # so `NaN > 0` is TRUE and a 0/0 quality score would slip the
-        # positivity filter, then win under-quota slots with a NaN key
-        df.filter(w_dbl.isNotNull() & ~F.isnan(w_dbl) & (w_dbl > 0))
-        .select(group_col, id_col, key.alias("_h"))
-    )
-    return _fold_smallest_k(df, tagged, group_col, id_col, k)
+    return df.filter(th.isNotNull() & (u_hex < th))
 
 
 # Catalog gate: a graded mix over the testdata's 20 sources (full / half /
-# quarter epochs, tail dropped) with the md5-portable selector, so DuckDB
+# quarter keep rates, tail dropped) with the md5 selector, so DuckDB
 # reproduces the EXACT kept set — the gate proves the sampler is a pure
 # function of (doc_id, salt, policy), not of partitioning or engine.
 MIX_POLICY = {
@@ -1271,15 +1011,14 @@ _SPLIT_CASE = _split_oracle_case(SPLIT_WEIGHTS, "d.doc_id", salt=1)
     """,
 )
 def sample_source_mix(spark, sf_dir):
-    """Deterministic source-mix sample (md5-portable selector) — the kept
+    """Deterministic source-mix sample (md5 selector) — the kept
     (doc_id, source) set under the graded policy above — plus the
-    train/val/test assignment from plans/splits.py (md5 flavor, salt=1),
+    train/val/test assignment from plans/splits.py (salt=1),
     so the gate pins BOTH samplers as pure functions of (doc_id, salt)
     reproduced bit-identically by the DuckDB oracle."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "source")
-    kept = sample_mix(d, MIX_POLICY, method="md5")
-    return _assign_splits(kept, SPLIT_WEIGHTS, unit_col="doc_id", salt=1,
-                          method="md5")
+    kept = sample_mix(d, MIX_POLICY)
+    return _assign_splits(kept, SPLIT_WEIGHTS, unit_col="doc_id", salt=1)
 
 
 # --- per-source frequency capping -------------------------------------------

@@ -162,20 +162,6 @@ def filter_union_suite(spark, sf_dir):
     )
 
 
-# range filter alone (covered by filter_union_suite in the catalog; kept for
-# the package API and the parquet-pushdown plan guard test)
-def filter_range(spark, sf_dir):
-    # predicate on the RAW ts column (timestamp_ntz literals), not the derived
-    # ts_sec — a filter on a computed column can't push down into the parquet
-    # scan, which at scale means reading the whole table instead of pruned row
-    # groups; typed literals keep row-group pushdown intact
-    ev = load_table(spark, sf_dir, "events")
-    return ev.filter(
-        (F.col("ts") >= F.lit("2024-01-06 00:00:00").cast("timestamp_ntz"))
-        & (F.col("ts") < F.lit("2024-01-13 00:00:00").cast("timestamp_ntz"))
-    ).select("event_id", "user_id", "event_type", "value")
-
-
 # --- §2.1 #10 inner equi-join, broadcast dims (reference utils/get_data.py:81,
 #     script_1.py:164-166) ----------------------------------------------------
 @query(
@@ -242,22 +228,10 @@ def positional_join(spark, sf_dir):
 
 
 # --- §2.1 #12 group-by count (reference
-#     exstream/entropy_based_single_reward_feature.py:60) ---------------------
-# (covered by groupby_salted_skew: same groupBy-count semantics, skew-safe path)
-def groupby_count(spark, sf_dir):
-    return (
-        load_table(spark, sf_dir, "lineitem")
-        .groupBy("l_returnflag", "l_linestatus")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-        )
-    )
-
-
-# --- skew-resilient variant of #12: two-phase salted aggregation over a
-#     3-distinct-value key (the hottest possible skew) — result must be
-#     IDENTICAL to the direct group-by the oracle runs -------------------------
+#     exstream/entropy_based_single_reward_feature.py:60), skew-resilient:
+#     two-phase salted aggregation over a 3-distinct-value key (the hottest
+#     possible skew) — result must be IDENTICAL to the direct group-by the
+#     oracle runs --------------------------------------------------------------
 @query(
     "groupby_salted_skew",
     oracle="""
@@ -309,24 +283,6 @@ def sort_rank_topk(spark, sf_dir):
         k=100,
         rank_col="price_rank",
     ).select("o_orderkey", "o_totalprice", "price_rank")
-
-
-# --- §2.1 #17 lag analytic (reference
-#     entropy_based_single_reward_feature.py:266-271) -------------------------
-# (covered by window_fn_suite's delta column)
-def lag_delta(spark, sf_dir):
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy("event_id")
-    return (
-        load_table(spark, sf_dir, "events")
-        .filter(F.col("user_id") < 10)
-        .select(
-            "user_id",
-            "event_id",
-            F.round(F.col("value") - F.lag("value").over(w), 2).alias("delta"),
-        )
-    )
 
 
 # --- §2.1 #19 top-k-until-leap: the reward-leap cut (C8) expressed over

@@ -1,38 +1,27 @@
 """Leakage-safe train/val/test splits for corpus building.
 
 Not in the reference (no dataset-assembly stage there) — this is the step
-every training-data pipeline ends with, and the one most often done wrong
-at scale: a row-wise `rand()` split (a) changes with partitioning and
-retries, and (b) puts near-duplicate documents on both sides of the
-train/eval boundary, leaking test content into training.
+every training-data pipeline ends with, and one often done wrong at scale:
+a row-wise `rand()` split changes with partitioning and retries.
 
 Spark-first design:
 
-  assignment  a PURE PROJECTION — split = f(hash(unit_key, salt)) with
+  assignment  a PURE PROJECTION — split = f(md5(unit_key:salt)) with
               cumulative cutoffs over the weight vector.  No shuffle, no
               sample pass, no state; the split of a row can be recomputed
               anywhere from its key alone, so reruns, backfills and
-              incremental appends land rows consistently.  Two hash
-              flavors, same contract as sample_mix (plans/dedup.py):
-              ``xxhash64`` for production, ``md5`` for the cross-engine
-              oracle gate (md5 hex is bit-identical Spark<->DuckDB).
+              incremental appends land rows consistently.  md5 hex is
+              bit-identical Spark<->DuckDB, the same selector as
+              sample_mix (plans/dedup.py).
   group-aware the unit key can be a GROUP id (near-dup cluster, url host,
               license pool ...) instead of the row id: every member of a
-              group hashes identically, so whole clusters co-assign and
-              cross-split leakage is structurally impossible.
-  composition ``split_by_neardup_groups`` wires the existing near-dup
-              machinery in: candidate pairs (from any of the dedup
-              families) -> connected components (operators/components.py,
-              pointer-jumping at scale) -> docs join their component id
-              (singletons keep their own id) -> group-keyed assignment.
-              One broadcast-sized join against the component map (dup
-              clusters are ~pairs-sized, << corpus) plus the projection.
+              group hashes identically, so whole clusters co-assign.
 
-Determinism note: weights are positions on the [0, 16^6) md5-prefix line /
-the [0, 1e6) xxhash64 line, identical to md5_hex_threshold's encoding, so
-expected proportions are exact up to hash granularity (~6e-8 / 1e-6) and
-EVERY engine or round re-derives the same membership — the catalog gate
-(split branch of sample_source_mix) pins that cross-engine.
+Determinism note: weights are positions on the [0, 16^6) md5-prefix line,
+identical to md5_hex_threshold's encoding, so expected proportions are
+exact up to hash granularity (~6e-8) and EVERY engine or round re-derives
+the same membership — the catalog gate (split branch of
+sample_source_mix) pins that cross-engine.
 """
 
 from __future__ import annotations
@@ -40,9 +29,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from exstream_implementation_spark.canon import md5_hex_threshold
-from exstream_implementation_spark.operators.components import (
-    connected_components,
-)
 
 
 def _cutoffs(weights: dict) -> list:
@@ -66,7 +52,6 @@ def assign_splits(
     weights: dict,
     unit_col: str = "doc_id",
     salt: int = 0,
-    method: str = "xxhash64",
     split_col: str = "split",
 ) -> DataFrame:
     """Add ``split_col`` in {weights.keys()} — deterministic in
@@ -74,87 +59,25 @@ def assign_splits(
 
     All rows sharing a ``unit_col`` value get the SAME split: pass the row
     id for an i.i.d. row split, or a group id (cluster / host / license)
-    for a leakage-safe group split.  ``method='md5'`` is the
-    oracle-portable flavor; ``'xxhash64'`` the cheap production one.
+    for a leakage-safe group split.  ``split_oracle_case`` is its DuckDB
+    mirror.
     """
     cuts = _cutoffs(weights)
-    if method == "md5":
-        u_hex = F.substring(
-            F.md5(F.concat(F.col(unit_col).cast("string"), F.lit(f":{salt}"))),
-            1, 6,
-        )
-        expr = F.lit(cuts[-1][0])
-        # build the CASE from the top down: u < hi(name_i) picks name_i
-        for name, _lo, hi in reversed(cuts[:-1]):
-            expr = F.when(
-                u_hex < F.lit(md5_hex_threshold(hi)), F.lit(name)
-            ).otherwise(expr)
-        return df.withColumn(split_col, expr)
-    if method != "xxhash64":
-        raise ValueError(f"method must be 'xxhash64' or 'md5': {method!r}")
-    u = (
-        F.abs(F.xxhash64(F.col(unit_col).cast("string"), F.lit(int(salt))))
-        % F.lit(1_000_000)
-    ) / F.lit(1_000_000.0)
+    u_hex = F.substring(
+        F.md5(F.concat(F.col(unit_col).cast("string"), F.lit(f":{salt}"))),
+        1, 6,
+    )
     expr = F.lit(cuts[-1][0])
+    # build the CASE from the top down: u < hi(name_i) picks name_i
     for name, _lo, hi in reversed(cuts[:-1]):
-        expr = F.when(u < F.lit(hi), F.lit(name)).otherwise(expr)
+        expr = F.when(
+            u_hex < F.lit(md5_hex_threshold(hi)), F.lit(name)
+        ).otherwise(expr)
     return df.withColumn(split_col, expr)
 
 
-def split_by_neardup_groups(
-    docs: DataFrame,
-    pairs: DataFrame,
-    weights: dict,
-    id_col: str = "doc_id",
-    pair_cols: tuple = ("doc_id_a", "doc_id_b"),
-    salt: int = 0,
-    method: str = "xxhash64",
-    split_col: str = "split",
-) -> DataFrame:
-    """Group-aware split: near-duplicate docs NEVER straddle splits.
-
-    ``pairs`` is any near-dup pair frame (minhash/simhash/ngram/embedding
-    families all emit one); its connected components become the split
-    units.  Docs in no pair form singleton groups keyed by their own id,
-    prefixed so a singleton id can never collide with a component label.
-    Returns ``docs`` + [__group, split].
-    """
-    comp = connected_components(pairs, src=pair_cols[0], dst=pair_cols[1])
-    comp = comp.select(
-        F.col("vertex").alias(id_col),
-        F.concat(F.lit("c:"), F.col("component").cast("string")).alias(
-            "__group"
-        ),
-    )
-    # dup clusters are pair-bounded (<< corpus): broadcast the map side
-    tagged = docs.join(F.broadcast(comp), id_col, "left").withColumn(
-        "__group",
-        F.coalesce(
-            F.col("__group"),
-            F.concat(F.lit("d:"), F.col(id_col).cast("string")),
-        ),
-    )
-    return assign_splits(
-        tagged, weights, unit_col="__group", salt=salt, method=method,
-        split_col=split_col,
-    )
-
-
-def leakage_report(
-    df: DataFrame, group_col: str, split_col: str = "split"
-) -> DataFrame:
-    """Groups spanning more than one split — MUST be empty for a group
-    split.  One map-side-combined aggregate."""
-    return (
-        df.groupBy(group_col)
-        .agg(F.countDistinct(split_col).alias("n_splits"))
-        .filter(F.col("n_splits") > 1)
-    )
-
-
 def split_oracle_case(weights: dict, unit_sql: str, salt: int = 0) -> str:
-    """The DuckDB mirror of assign_splits(method='md5') as a CASE
+    """The DuckDB mirror of assign_splits as a CASE
     expression over ``unit_sql`` — used by the catalog gate so both
     engines derive membership from the identical md5-prefix line."""
     cuts = _cutoffs(weights)

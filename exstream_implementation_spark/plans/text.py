@@ -160,33 +160,6 @@ def text_metrics_suite(spark, sf_dir):
 _BPE_RE = r" ?[a-z]+| ?[0-9]+| ?[^a-z0-9\s]+"
 
 
-# --- quality scoring (covered by text_metrics_suite in the catalog) ----------
-def text_quality(spark, sf_dir):
-    d = load_documents_parallel(spark, sf_dir).withColumn("toks", _toks())
-    d = d.select(
-        "doc_id",
-        "lang",
-        F.size("toks").alias("n_tokens"),
-        (stop_count().cast("double") / F.size("toks")).alias("stop_ratio_raw"),
-        (punct_count().cast("double") / F.length("text")).alias(
-            "punct_ratio_raw"
-        ),
-    )
-    return d.select(
-        "doc_id",
-        "lang",
-        "n_tokens",
-        F.round("stop_ratio_raw", 4).alias("stop_ratio"),
-        F.round("punct_ratio_raw", 4).alias("punct_ratio"),
-        F.round(
-            0.4 * F.least(F.col("n_tokens") / 100.0, F.lit(1.0))
-            + 0.4 * F.col("stop_ratio_raw")
-            + 0.2 * (1.0 - F.col("punct_ratio_raw")),
-            4,
-        ).alias("quality"),
-    )
-
-
 # --- document fingerprint (position-weighted rolling hash, md5-derived so
 #     both engines agree bit-for-bit) + cross-document duplicated-span
 #     detection (the substring-dedup shape of Lee et al. 2022, "Deduplicating
@@ -719,155 +692,6 @@ def text_repetition(spark, sf_dir):
     )
     lm = score_lm_nll(d, train_bigram_lm(d)).select("doc_id", "lm_nll")
     return rep.join(prof, "doc_id").join(lm, "doc_id")
-
-
-# --- HTML/boilerplate cleanup (C4-style, Raffel et al. 2020 §2.2) ------------
-# Web-scraped pretraining text arrives with markup and navigation junk; the
-# standard scrub is: drop script/style blocks, strip tags, decode the common
-# entities, then keep only "sentence-like" lines (terminal punctuation and a
-# minimum word count).  All of it is regexp_replace / split / filter chains —
-# whole-stage codegen, zero Python, linear at 100 TB.  API + pytest (the
-# catalog is at the driver's 50-entry budget; the transform composes from the
-# same oracle-proven regexp machinery as text_pii_redact).
-# &amp; must decode LAST: decoding it first turns a double-escaped entity
-# ("&amp;lt;", which displays as "&lt;") into "&lt;" and then a second rule
-# corrupts it to "<" — silent damage to any page quoting escaped markup.
-_HTML_ENTITIES = [
-    ("&lt;", "<"), ("&gt;", ">"),
-    ("&quot;", '"'), ("&#39;", "'"), ("&nbsp;", " "),
-    ("&amp;", "&"),
-]
-
-
-def strip_html(df, text_col: str = "text"):
-    """Remove comments, script/style blocks, all tags, and decode common
-    entities; collapses runs of spaces/tabs (newlines survive for line
-    filtering).  Known limit: an attribute VALUE containing a literal '>'
-    truncates that one tag early (full HTML parsing needs a real parser —
-    out of scope for a regexp scrub)."""
-    out = F.col(text_col)
-    # (?s): dot matches newlines so multi-line blocks drop whole.  Comments
-    # go FIRST — '<!-- nav > home -->' would otherwise leak ' home -->' past
-    # the generic tag pass.
-    out = F.regexp_replace(out, r"(?s)<!--.*?-->", " ")
-    out = F.regexp_replace(out, r"(?is)<script[^>]*>.*?</script>", " ")
-    out = F.regexp_replace(out, r"(?is)<style[^>]*>.*?</style>", " ")
-    out = F.regexp_replace(out, r"(?s)<[^>]+>", " ")
-    for ent, ch in _HTML_ENTITIES:
-        out = F.regexp_replace(out, ent, ch)
-    out = F.regexp_replace(out, r"[ \t]+", " ")
-    return df.withColumn(text_col, F.trim(out))
-
-
-def c4_line_filter(df, text_col: str = "text", min_words: int = 3):
-    """Keep only lines that end in terminal punctuation and carry at least
-    ``min_words`` whitespace words (the C4 heuristic); emits the cleaned
-    text plus (n_lines_in, n_lines_kept) accounting."""
-    lines = F.split(F.col(text_col), r"\n")
-    kept = F.filter(
-        lines,
-        lambda ln: F.trim(ln).rlike(r"[.!?\"']$")
-        & (F.size(F.split(F.trim(ln), r"\s+")) >= F.lit(min_words)),
-    )
-    return (
-        df.withColumn("n_lines_in", F.size(lines))
-        .withColumn("n_lines_kept", F.size(kept))
-        .withColumn(
-            text_col,
-            F.array_join(F.transform(kept, F.trim), "\n"),
-        )
-    )
-
-
-def clean_web_text(df, text_col: str = "text", min_words: int = 3):
-    """strip_html → c4_line_filter, the full web-scrape scrub as one lazy
-    plan (compose with redact_pii / repetition_metrics for the whole
-    C4/Gopher-style quality pass)."""
-    return c4_line_filter(strip_html(df, text_col), text_col, min_words)
-
-
-def chunk_by_separator(
-    df,
-    max_chars: int,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    sep: str = "\n\n",
-):
-    """Boundary-respecting chunking for retrieval corpora: split each doc
-    on ``sep`` (paragraphs by default), then greedily merge CONSECUTIVE
-    units into chunks of at most ``max_chars`` characters — a unit is
-    never split, so a chunk always ends on a semantic boundary (the
-    standard RAG chunker, vs a fixed token grid).
-    A single unit longer than ``max_chars`` becomes its own oversized
-    chunk (splitting it mid-unit would break the boundary contract;
-    callers wanting hard caps compose with a second fixed-length pass).
-
-    Output: (id_col, chunk_idx, chunk_text, n_chars) — one row per chunk,
-    empty/whitespace docs emit nothing.
-
-    Execution: one pure-JVM ``aggregate`` fold per doc (state = finished
-    chunks + open buffer), then a posexplode — no UDF, no shuffle beyond
-    the explode, cost linear in corpus size and independent of doc count
-    per partition.
-    """
-    if max_chars <= 0:
-        raise ValueError(f"max_chars must be positive: {max_chars}")
-    sep_lit = (
-        sep.replace("\\", "\\\\")
-        .replace("'", "\\'")
-        .replace("\n", "\\n")
-        .replace("\t", "\\t")
-    )
-    # trim ALL whitespace (\\s), not just ASCII space — SQL trim() would
-    # keep tab/newline-edged units and diverge from str.strip() semantics
-    units = (
-        f"filter(transform(split({text_col}, '{_re_escape_sql(sep)}'),"
-        " u -> regexp_replace(u, '^\\\\s+|\\\\s+$', '')), u -> u != '')"
-    )
-    # fold state: (chunks array, open buffer); joining two units costs
-    # len(sep) chars — the reassembled chunk uses the ORIGINAL separator
-    fold = f"""
-    aggregate(
-      {units},
-      named_struct('chunks', cast(array() as array<string>), 'buf', ''),
-      (s, u) -> CASE
-        WHEN s.buf = '' THEN named_struct('chunks', s.chunks, 'buf', u)
-        WHEN length(s.buf) + {len(sep)} + length(u) <= {int(max_chars)}
-          THEN named_struct('chunks', s.chunks,
-                            'buf', concat(s.buf, '{sep_lit}', u))
-        ELSE named_struct('chunks', array_append(s.chunks, s.buf), 'buf', u)
-      END,
-      s -> CASE WHEN s.buf = '' THEN s.chunks
-                ELSE array_append(s.chunks, s.buf) END
-    )
-    """
-    return (
-        df.select(id_col, F.expr(fold).alias("__chunks"))
-        .select(id_col, F.posexplode("__chunks").alias("chunk_idx", "chunk_text"))
-        .withColumn("n_chars", F.length("chunk_text"))
-    )
-
-
-def _re_escape_sql(sep: str) -> str:
-    """Escape ``sep`` for use inside a single-quoted SQL regexp literal
-    (split's pattern argument is a Java regex)."""
-    out = []
-    for ch in sep:
-        if ch == "\\":
-            # four in the SQL literal → two after literal parsing → one
-            # escaped backslash for the regex engine
-            out.append("\\\\\\\\")
-        elif ch in r".[]{}()*+?^$|":
-            out.append("\\\\" + ch)
-        elif ch == "'":
-            out.append("\\'")
-        elif ch == "\n":
-            out.append("\\n")
-        elif ch == "\t":
-            out.append("\\t")
-        else:
-            out.append(ch)
-    return "".join(out)
 
 
 # --- per-document tf-idf keyword extraction ----------------------------------

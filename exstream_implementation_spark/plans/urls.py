@@ -1,5 +1,5 @@
-"""URL-level corpus curation — canonicalization, registered-domain
-extraction, URL dedup, and deterministic per-group caps.
+"""URL-level corpus curation — canonicalization and deterministic
+per-group caps, the two URL-side branches ``corpus_curation`` runs.
 
 Not in the reference (numeric traces only); this serves the web-scrape
 side of training-data work, where the FIRST dedup key is the URL (C4 and
@@ -11,24 +11,15 @@ Everything here is whole-stage-codegen SQL — regexp extraction, array
 higher-order functions, hash folds.  No UDFs, no driver state, nothing
 corpus-sized collected:
 
-  * ``normalize_urls``    — canonical form: lowercase scheme+host, default
+  * ``_norm_expr``        — canonical form: lowercase scheme+host, default
     port stripped, fragment dropped, tracking params removed, remaining
-    query params sorted, trailing slash trimmed.  Idempotent (pinned by a
-    property test), so re-normalizing an already-clean corpus is a no-op.
-  * ``registered_domain`` — eTLD+1 heuristic: one extra label for the
-    common two-level public suffixes (co.uk, com.au, ...), IPv4 literals
-    passed through whole.  A full public-suffix-list lookup is a 10k-row
-    broadcast join a deployment can layer on; the heuristic covers the
-    overwhelming mass of web hosts without any side table.
-  * ``dedup_by_url``      — keep the min-id representative per canonical
-    URL: groupBy + semi-join pullback (map-side combined), never a
-    window over the corpus.
+    query params sorted, trailing slash trimmed; NULL when the string has
+    no scheme://host to anchor on.  Idempotent (pinned by a test), so
+    re-normalizing an already-clean corpus is a no-op.
   * ``cap_per_group``     — at most n rows per group, smallest
     (order, id) first, via the two-phase fold (partition-local top-n,
-    then a window over <= partitions*n survivors per group) — the
-    generalization of plans/dedup.sample_exact_k from hash-order to
-    caller-chosen order.  A hot domain with 10^8 pages never becomes a
-    single-task sort.
+    then a window over <= partitions*n survivors per group).  A hot
+    domain with 10^8 pages never becomes a single-task sort.
 """
 
 from __future__ import annotations
@@ -50,19 +41,10 @@ TRACKING_PARAMS = (
     "spm",
 )
 
-# Two-level public suffixes common enough to matter for eTLD+1 grouping.
-TWO_LEVEL_SUFFIXES = (
-    "co.uk", "org.uk", "ac.uk", "gov.uk",
-    "com.au", "net.au", "org.au", "edu.au", "gov.au",
-    "co.jp", "ne.jp", "or.jp", "ac.jp", "go.jp",
-    "com.br", "com.cn", "com.mx", "com.tr", "com.ar", "com.tw",
-    "co.in", "co.kr", "co.za", "co.nz", "co.id",
-    "com.sg", "com.hk", "org.cn", "net.cn", "gov.cn", "edu.cn",
-)
-
 
 def _norm_expr(url: F.Column) -> F.Column:
-    """Canonical URL as one codegen expression tree."""
+    """Canonical URL as one codegen expression tree (NULL when ``url``
+    has no scheme://host to anchor on — relative or garbage strings)."""
     u = F.trim(url)
     # drop the fragment FIRST: a '?' inside an SPA-style fragment
     # ('/page#/route?x=1') must not be mistaken for the query
@@ -99,62 +81,6 @@ def _norm_expr(url: F.Column) -> F.Column:
     return F.when(
         (scheme == "") | (host == ""), F.lit(None).cast("string")
     ).otherwise(F.concat(scheme, F.lit("://"), host, path, qpart))
-
-
-def normalize_urls(
-    df: DataFrame, url_col: str = "url", out_col: str = "url_norm"
-) -> DataFrame:
-    """Append the canonical URL (NULL when ``url_col`` has no
-    scheme://host to anchor on — relative or garbage strings)."""
-    return df.withColumn(out_col, _norm_expr(F.col(url_col)))
-
-
-def registered_domain(host: F.Column) -> F.Column:
-    """eTLD+1 of a (already lowercased) host: the grouping key for
-    per-site caps.  IPv4 literals and single-label hosts pass through."""
-    labels = F.split(host, r"\.")
-    n = F.size(labels)
-    last2 = F.concat_ws(".", F.element_at(labels, -2), F.element_at(labels, -1))
-    last3 = F.concat_ws(
-        ".",
-        F.element_at(labels, -3),
-        F.element_at(labels, -2),
-        F.element_at(labels, -1),
-    )
-    is_ip = host.rlike(r"^\d{1,3}\.\d{1,3}\.\d{1,3}\.\d{1,3}$")
-    two_level = last2.isin(*TWO_LEVEL_SUFFIXES)
-    return (
-        F.when(is_ip | (n <= 2), host)
-        .when(two_level & (n >= 3), last3)
-        .otherwise(last2)
-    )
-
-
-def with_domain(
-    df: DataFrame, url_col: str = "url_norm", out_col: str = "domain"
-) -> DataFrame:
-    """Append the registered domain extracted from a URL column."""
-    host = F.regexp_extract(F.col(url_col), r"^[^:/?#]+://([^/?#:]*)", 1)
-    return df.withColumn(out_col, registered_domain(host))
-
-
-def dedup_by_url(
-    df: DataFrame, url_col: str = "url", id_col: str = "doc_id"
-) -> DataFrame:
-    """Keep the min-``id_col`` row per canonical URL; rows whose URL does
-    not normalize (NULL canonical form) or that carry a NULL id are kept
-    unconditionally — an unparseable URL is no evidence of duplication,
-    and a row without an identity cannot participate in keep-min."""
-    normed = normalize_urls(df, url_col, "__un")
-    dedupable = F.col("__un").isNotNull() & F.col(id_col).isNotNull()
-    keep = (
-        normed.filter(dedupable)
-        .groupBy("__un")
-        .agg(F.min(id_col).alias(id_col))
-    )
-    kept = normed.filter(dedupable).join(keep, ["__un", id_col], "left_semi")
-    passthrough = normed.filter(~dedupable)
-    return kept.unionByName(passthrough).drop("__un").select(df.columns)
 
 
 def cap_per_group(

@@ -261,3 +261,29 @@ def test_pearson_on_runs_of_two_one_and_no_rows(spark):
         1: ["a", "b", "c"],
         2: ["a", "b", "c"],
     }
+
+
+def test_pearson_at_the_papers_feature_width(spark):
+    # d = 100 features, as in the paper's traces: pass 2 is one grouped
+    # aggregation of d(d+1)/2 = 5,050 product sums plus d sums
+    import numpy as np
+
+    from exstream_implementation_spark.operators.correlation import (
+        correlated_feature_clusters,
+    )
+
+    d, n = 100, 60
+    rng = np.random.default_rng(23)
+    x = rng.normal(0.0, 1.0, (d, n)) * rng.uniform(0.5, 50.0, (d, 1))
+    x[7] = 3.0 * x[3] + rng.normal(0.0, 0.05, n)  # one strongly correlated pair
+    runs = np.repeat([0, 1], n // 2)
+    names = [f"f{i}" for i in range(d)]
+    df, names = _runs_frame(spark, dict(zip(names, x.tolist())), runs.tolist())
+    got = _matrices(df, names)
+    assert sorted(got) == [0, 1]
+    for r in (0, 1):
+        want = np.corrcoef(x[:, runs == r])
+        assert _same(got[r], want.tolist(), 1e-12), r
+        assert abs(got[r][3][7]) > 0.99
+        clusters = correlated_feature_clusters(got[r], names, 0.9)
+        assert sorted(c for c in clusters if len(c) > 1) == [["f3", "f7"]]

@@ -97,7 +97,7 @@ def test_sample_mix_rejects_bad_fraction(spark):
 
 def test_sample_mix_md5_portable_method(spark):
     """The md5 selector keeps frac=1.0 sources whole, drops frac=0.0, and
-    approximates intermediate rates — mirroring the xxhash64 contract."""
+    approximates intermediate rates."""
     from exstream_implementation_spark.plans.dedup import _md5_hex_threshold
 
     assert _md5_hex_threshold(1.0) == "g"          # above every hex prefix
@@ -107,8 +107,8 @@ def test_sample_mix_md5_portable_method(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     sources = sorted(r["source"] for r in docs.select("source").distinct().collect())
     fractions = {sources[0]: 1.0, sources[1]: 0.5, sources[2]: 0.0}
-    a = sample_mix(docs, fractions, method="md5")
-    b = sample_mix(docs, fractions, method="md5")
+    a = sample_mix(docs, fractions)
+    b = sample_mix(docs, fractions)
     got_a = {r["doc_id"] for r in a.select("doc_id").collect()}
     assert got_a == {r["doc_id"] for r in b.select("doc_id").collect()}
 
@@ -118,12 +118,6 @@ def test_sample_mix_md5_portable_method(spark):
     n_half = docs.filter(F.col("source") == sources[1]).count()
     kept = a.filter(F.col("source") == sources[1]).count()
     assert 0.2 * n_half <= kept <= 0.8 * n_half
-
-
-def test_sample_mix_rejects_unknown_method(spark):
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    with pytest.raises(ValueError, match="method"):
-        sample_mix(docs, {"web": 0.5}, method="MD5")
 
 
 def test_repetition_metrics_null_text_scores_zero(spark):
@@ -231,314 +225,6 @@ def test_short_docs_survive_gram_paths(spark, tmp_path):
     out = decontaminate(spark, str(tmp_path), bench_grams(bench)).collect()
     assert len(out) == 5
     assert all(not r["contaminated"] for r in out)
-
-
-def test_strip_html_removes_markup_and_decodes_entities(spark):
-    from exstream_implementation_spark.plans.text import strip_html
-
-    df = spark.createDataFrame(
-        [
-            (1, "<html><head><style>p { color: red }</style></head>"
-                "<body><p>Hello &amp; welcome.</p>"
-                "<script>var x = '<p>not text</p>';</script>"
-                "<div>Second   line&nbsp;here.</div></body></html>"),
-            (2, "plain text, no markup."),
-        ],
-        "doc_id int, text string",
-    )
-    got = {r["doc_id"]: r["text"] for r in strip_html(df).collect()}
-    assert got[1] == "Hello & welcome. Second line here."
-    assert got[2] == "plain text, no markup."
-
-
-def test_c4_line_filter_keeps_sentence_like_lines(spark):
-    from exstream_implementation_spark.plans.text import c4_line_filter
-
-    text = "\n".join(
-        [
-            "This is a real sentence.",       # kept
-            "Home | About | Contact",          # dropped: no terminal punct
-            "Menu",                            # dropped: too short, no punct
-            "Buy now!",                        # dropped: < 3 words
-            "Another proper line, it ends?",   # kept
-        ]
-    )
-    df = spark.createDataFrame([(1, text)], "doc_id int, text string")
-    row = c4_line_filter(df).first()
-    assert row["n_lines_in"] == 5 and row["n_lines_kept"] == 2
-    assert row["text"] == "This is a real sentence.\nAnother proper line, it ends?"
-
-
-def test_clean_web_text_composes(spark):
-    from pyspark.sql import functions as F
-
-    from exstream_implementation_spark.plans.text import clean_web_text
-
-    df = spark.createDataFrame(
-        [(1, "<h1>Title</h1>\nA sentence that clearly survives cleanup.\n"
-             "<a href='/'>nav</a>")],
-        "doc_id int, text string",
-    )
-    row = clean_web_text(df).first()
-    assert row["text"] == "A sentence that clearly survives cleanup."
-    # the whole scrub must stay JVM-side: no Python eval nodes in the plan
-    plan = clean_web_text(df)._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
-
-
-def test_strip_html_double_escaped_entities_and_comments(spark):
-    """&amp; decodes LAST (a double-escaped '&amp;lt;' displays as '&lt;'
-    and must not corrupt to '<'); HTML comments — including ones containing
-    '>' — strip whole."""
-    from exstream_implementation_spark.plans.text import strip_html
-
-    df = spark.createDataFrame(
-        [
-            (1, "Use &amp;lt; for a literal less-than."),
-            (2, "<!-- nav menu > home -->Real sentence here."),
-        ],
-        "doc_id int, text string",
-    )
-    got = {r["doc_id"]: r["text"] for r in strip_html(df).collect()}
-    assert got[1] == "Use &lt; for a literal less-than."
-    assert got[2] == "Real sentence here."
-
-
-def test_sample_exact_k_quota_and_determinism(spark):
-    from exstream_implementation_spark.plans.dedup import sample_exact_k
-
-    docs = load_table(spark, SF_DIR, "documents").select("doc_id", "source", "text")
-    sizes = {r["source"]: r["n"] for r in
-             docs.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    k = 5
-    got = sample_exact_k(docs, "source", k, salt=1)
-    counts = {r["source"]: r["n"] for r in
-              got.groupBy("source").agg(F.count("*").alias("n")).collect()}
-    # exactly k per group, or the whole group when it's smaller
-    assert counts == {s: min(k, n) for s, n in sizes.items()}
-    # rows come back intact (all columns, real members)
-    assert got.columns == docs.columns
-    assert got.join(docs, ["doc_id", "source", "text"], "left_anti").count() == 0
-
-    # deterministic and independent of physical layout
-    a = sorted(r["doc_id"] for r in got.select("doc_id").collect())
-    b = sorted(
-        r["doc_id"]
-        for r in sample_exact_k(docs.repartition(17), "source", k, salt=1)
-        .select("doc_id").collect()
-    )
-    assert a == b
-
-    # a different salt draws a mostly-different sample of the same shape
-    c = sorted(
-        r["doc_id"]
-        for r in sample_exact_k(docs, "source", k, salt=2).select("doc_id").collect()
-    )
-    assert len(c) == len(a) and set(c) != set(a)
-
-
-def test_sample_exact_k_rejects_bad_k(spark):
-    from exstream_implementation_spark.plans.dedup import sample_exact_k
-
-    docs = load_table(spark, SF_DIR, "documents")
-    with pytest.raises(ValueError):
-        sample_exact_k(docs, "source", 0)
-
-
-def test_sample_exact_k_partial_fold_agrees_with_global_rank(spark):
-    """The per-partition fold must keep the k globally-smallest hashes per
-    group even when they're scattered across partitions: compare against a
-    single-partition run of the same data."""
-    from exstream_implementation_spark.plans.dedup import sample_exact_k
-
-    rows = [(i, f"g{i % 3}") for i in range(300)]
-    df = spark.createDataFrame(rows, "doc_id long, source string")
-    many = sorted(
-        (r["source"], r["doc_id"])
-        for r in sample_exact_k(df.repartition(16), "source", 7, salt=3).collect()
-    )
-    one = sorted(
-        (r["source"], r["doc_id"])
-        for r in sample_exact_k(df.coalesce(1), "source", 7, salt=3).collect()
-    )
-    assert many == one and len(many) == 21
-
-
-def test_temperature_mix_policy_math(spark):
-    """Closed-form check of the τ policy on a planted size profile, plus
-    the τ=1 (natural) and τ=0 (uniform) endpoints."""
-    from exstream_implementation_spark.plans.dedup import (
-        temperature_mix_policy,
-    )
-
-    rows = (
-        [(i, "big") for i in range(800)]
-        + [(1000 + i, "mid") for i in range(150)]
-        + [(2000 + i, "rare") for i in range(50)]
-    )
-    docs = spark.createDataFrame(rows, "doc_id long, source string")
-    pol = temperature_mix_policy(docs, tau=0.5, target_rows=500)
-    assert pol["sizes"] == {"big": 800.0, "mid": 150.0, "rare": 50.0}
-    import math
-
-    z = 800**0.5 + 150**0.5 + 50**0.5
-    for s, n in pol["sizes"].items():
-        demand = 500 * (n**0.5) / z
-        assert pol["fractions"][s] == pytest.approx(min(1.0, demand / n))
-        assert pol["epochs"][s] == pytest.approx(max(1.0, demand / n))
-    # τ=0.5 upsamples the rare source relative to its natural share
-    nat = 50 / 1000
-    tau_share = (50**0.5) / z
-    assert tau_share > nat
-    # τ=1: fractions equal across sources (natural distribution scaled)
-    pol1 = temperature_mix_policy(docs, tau=1.0, target_rows=500)
-    fr = set(round(v, 12) for v in pol1["fractions"].values())
-    assert fr == {0.5}
-    # τ=0: equal DEMAND per source → rare source needs multiple epochs
-    pol0 = temperature_mix_policy(docs, tau=0.0, target_rows=600)
-    assert pol0["fractions"]["rare"] == 1.0
-    assert pol0["epochs"]["rare"] == pytest.approx(200 / 50)
-    assert pol0["fractions"]["big"] == pytest.approx(200 / 800)
-
-
-def test_temperature_mix_composes_with_sample_mix(spark):
-    from exstream_implementation_spark.plans.dedup import (
-        temperature_mix_policy,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    n = docs.count()
-    pol = temperature_mix_policy(docs, tau=0.3, target_rows=n // 3)
-    kept = sample_mix(docs, pol["fractions"])
-    got = kept.count()
-    want = sum(
-        pol["fractions"][s] * pol["sizes"][s] for s in pol["sizes"]
-    )
-    assert got == pytest.approx(want, rel=0.25)
-    # weight_col flavor: sizes become summed weights
-    weighted = docs.withColumn("n_chars2", F.length("text"))
-    polw = temperature_mix_policy(
-        weighted, tau=1.0, target_rows=1000, weight_col="n_chars2"
-    )
-    total = sum(polw["sizes"].values())
-    assert total == pytest.approx(
-        weighted.agg(F.sum("n_chars2")).first()[0]
-    )
-
-
-def test_temperature_mix_validation(spark):
-    from exstream_implementation_spark.plans.dedup import (
-        temperature_mix_policy,
-    )
-
-    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
-    with pytest.raises(ValueError, match="tau"):
-        temperature_mix_policy(docs, tau=-0.1, target_rows=10)
-    with pytest.raises(ValueError, match="target_rows"):
-        temperature_mix_policy(docs, tau=0.5, target_rows=0)
-    with pytest.raises(ValueError, match="no rows"):
-        temperature_mix_policy(
-            docs.filter(F.col("doc_id") < 0), tau=0.5, target_rows=10
-        )
-
-
-def test_temperature_mix_zero_weight_source_clear_error(spark):
-    from exstream_implementation_spark.plans.dedup import (
-        temperature_mix_policy,
-    )
-
-    df = spark.createDataFrame(
-        [(1, "ok", 10), (2, "ok", 5), (3, "empty", 0), (4, "empty", 0)],
-        "doc_id long, source string, n_tokens int",
-    )
-    with pytest.raises(ValueError, match="empty"):
-        temperature_mix_policy(
-            df, tau=0.5, target_rows=5, weight_col="n_tokens"
-        )
-
-
-# --- weighted exact-k sampling (Efraimidis-Spirakis) --------------------------
-def test_sample_weighted_k_quota_and_determinism(spark):
-    from exstream_implementation_spark.plans.dedup import sample_weighted_k
-
-    docs = (
-        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-        .withColumn("w", (F.col("doc_id") % 5 + 1).cast("double"))
-    )
-    got = sample_weighted_k(docs, "source", 7, "w")
-    counts = {r["source"]: r["c"] for r in
-              got.groupBy("source").agg(F.count("*").alias("c")).collect()}
-    sizes = {r["source"]: r["c"] for r in
-             docs.groupBy("source").agg(F.count("*").alias("c")).collect()}
-    for src, n in sizes.items():
-        assert counts[src] == min(7, n), src
-    # column order preserved; deterministic across reruns and partitionings
-    assert got.columns == docs.columns
-    a = sorted(r["doc_id"] for r in got.select("doc_id").collect())
-    b = sorted(
-        r["doc_id"]
-        for r in sample_weighted_k(docs.repartition(13), "source", 7, "w")
-        .select("doc_id").collect()
-    )
-    assert a == b
-    # a different salt draws a different sample
-    c = sorted(
-        r["doc_id"]
-        for r in sample_weighted_k(docs, "source", 7, "w", salt=1)
-        .select("doc_id").collect()
-    )
-    assert a != c
-
-
-def test_sample_weighted_k_probability_proportional_to_weight(spark):
-    """k=1 over many independent salts: the ES winner frequency for item
-    i must approach w_i / sum(w) — the defining property of weighted
-    sampling without replacement (first draw)."""
-    from exstream_implementation_spark.plans.dedup import sample_weighted_k
-
-    n_salts = 3000
-    items = [(i, float(w)) for i, w in enumerate([1.0, 2.0, 3.0, 4.0])]
-    base = spark.createDataFrame(items, "item long, w double")
-    salts = spark.range(n_salts).select(F.col("id").alias("salt"))
-    # one job: ES key per (salt, item), argmin per salt — the same formula
-    # sample_weighted_k ranks by, evaluated over all salts at once
-    two52 = 1 << 52
-    u = (
-        (F.abs(F.xxhash64(F.col("item"), F.col("salt")))
-         % F.lit(two52)) + F.lit(0.5)
-    ) / F.lit(float(two52))
-    keyed = salts.crossJoin(base).select(
-        "salt", "item", "w", (-F.log(u) / F.col("w")).alias("key")
-    )
-    winners = (
-        keyed.groupBy("salt")
-        .agg(F.min(F.struct("key", "item")).alias("m"))
-        .select(F.col("m.item").alias("item"))
-        .groupBy("item")
-        .count()
-        .collect()
-    )
-    freq = {r["item"]: r["count"] / n_salts for r in winners}
-    for i, w in items:
-        expect = w / 10.0
-        # 5-sigma binomial envelope keeps this deterministic-safe
-        sigma = (expect * (1 - expect) / n_salts) ** 0.5
-        assert abs(freq.get(i, 0.0) - expect) <= 5 * sigma, (i, freq)
-
-
-def test_sample_weighted_k_weight_edge_cases(spark):
-    from exstream_implementation_spark.plans.dedup import sample_weighted_k
-
-    df = spark.createDataFrame(
-        [("a", 1, 2.0), ("a", 2, None), ("a", 3, 0.0), ("a", 4, -1.0),
-         ("a", 5, 0.5)],
-        "g string, doc_id long, w double",
-    )
-    got = sample_weighted_k(df, "g", 10, "w")
-    # null / zero / negative weights are excluded even when k has room
-    assert sorted(r["doc_id"] for r in got.collect()) == [1, 5]
-    with pytest.raises(ValueError, match="k must be positive"):
-        sample_weighted_k(df, "g", 0, "w")
 
 
 # --- per-row SimHash (bit parity with pure Python, shuffle-free fold) -------

@@ -15,20 +15,15 @@ from pyspark.sql import functions as F
 from exstream_implementation_spark.plans import QUERIES
 from exstream_implementation_spark.plans import relational as rel
 from exstream_implementation_spark.plans import similarity as sim
-from exstream_implementation_spark.plans import text as textq
 from exstream_implementation_spark.plans import windows as winq
 
 SF_DIR = "/root/testdata/sf0.01"
 
 # unregistered building-block queries keep their plan contracts
 _EXTRA = {
-    "filter_range": rel.filter_range,
-    "groupby_count": rel.groupby_count,
-    "lag_delta": rel.lag_delta,
     "asof_join_events": rel.asof_join_events,
     "interval_join_binned": rel.interval_join_binned,
     "ann_topk_cosine": sim.ann_topk_cosine,
-    "text_quality": textq.text_quality,
     "events_tumbling_window": winq.events_tumbling_window,
 }
 
@@ -53,7 +48,9 @@ def test_scan_project_pushdown_and_pruning(spark):
 
 
 def test_filter_range_pushdown(spark):
-    plan = plan_str(q("filter_range")(spark, SF_DIR))
+    # the suite's range branch filters the RAW ts column with typed
+    # timestamp_ntz literals, so the predicate reaches the parquet scan
+    plan = plan_str(QUERIES["filter_union_suite"](spark, SF_DIR))
     assert "PushedFilters" in plan and "GreaterThanOrEqual(ts" in plan
 
 
@@ -72,9 +69,9 @@ def test_no_single_partition_window_in_catalog_hot_paths(spark):
     """No query over a fact table may plan `Exchange SinglePartition` feeding
     a Window — the one-partition sort that breaks at scale.  (Scalar-aggregate
     single partitions over already-reduced data are fine.)"""
-    for name in ["scan_project", "groupby_count", "pivot_wide", "lag_delta",
+    for name in ["scan_project", "pivot_wide",
                  "positional_join", "sort_rank_topk", "dedup_minhash_lsh",
-                 "ann_topk_cosine", "text_quality", "events_tumbling_window",
+                 "ann_topk_cosine", "text_metrics_suite", "events_tumbling_window",
                  "filter_union_suite", "window_fn_suite", "agg_stats_suite",
                  "temporal_join_suite", "dedup_simhash_pairs"]:
         plan = plan_str(q(name)(spark, SF_DIR), mode="simple")
@@ -86,10 +83,12 @@ def test_no_single_partition_window_in_catalog_hot_paths(spark):
 
 
 def test_groupby_has_partial_aggregation(spark):
-    # map-side combine: two HashAggregate levels around one exchange
-    plan = plan_str(q("groupby_count")(spark, SF_DIR), mode="simple")
+    # map-side combine: two aggregate levels around one exchange (the
+    # percentile buffers make them ObjectHashAggregate), partials below it
+    plan = plan_str(QUERIES["agg_stats_suite"](spark, SF_DIR), mode="simple")
     assert plan.count("HashAggregate") >= 2
     assert plan.count("Exchange") == 1
+    assert plan.index("Exchange") < plan.index("partial_count(1)")
 
 
 def test_exstream_rewards_windows_are_keyed(spark):

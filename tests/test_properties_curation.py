@@ -22,10 +22,9 @@ _weights = st.dictionaries(
 @settings(max_examples=8, deadline=None)
 def test_split_total_coverage_and_mirror(spark, weights, salt):
     """Every row gets exactly one split from the weight keys, and the md5
-    flavor matches an independent python computation of the same cutoffs."""
+    assignment matches an independent python computation of the same cutoffs."""
     df = spark.range(0, 120).withColumnRenamed("id", "doc_id")
-    out = assign_splits(df, weights, unit_col="doc_id", salt=salt,
-                        method="md5").collect()
+    out = assign_splits(df, weights, unit_col="doc_id", salt=salt).collect()
     assert len(out) == 120
     total = sum(weights.values())
     names = list(weights)

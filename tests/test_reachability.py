@@ -269,16 +269,6 @@ RETAINED_TEST_ONLY = frozenset(
         ("operators.multimodal",
          "attach_audio_payload attach_image_payload audio_stats image_stats "
          "resize_image"),
-        # catalog-adjacent plan variants, left for a later deletion
-        ("plans.dedup",
-         "_fold_smallest_k es_sampling_key expand_epochs sample_exact_k "
-         "sample_weighted_k temperature_mix_policy"),
-        ("plans.relational", "filter_range groupby_count lag_delta"),
-        ("plans.splits", "leakage_report split_by_neardup_groups"),
-        ("plans.text",
-         "_re_escape_sql c4_line_filter chunk_by_separator clean_web_text strip_html "
-         "text_quality"),
-        ("plans.urls", "dedup_by_url normalize_urls registered_domain with_domain"),
         # exact brute-force top-k the ANN recall gate compares against
         ("plans.similarity", "ann_topk_cosine"),
         # the streaming source and windowed features wait for a trigger

@@ -1,6 +1,5 @@
 """Leakage-safe splits (plans/splits.py): proportions, determinism,
-partition/append invariance, md5-python mirror, group co-assignment via
-near-dup components, leakage report, and arg validation."""
+partition/append invariance, md5-python mirror, and arg validation."""
 
 import hashlib
 
@@ -9,8 +8,6 @@ from pyspark.sql import functions as F
 
 from exstream_implementation_spark.plans.splits import (
     assign_splits,
-    leakage_report,
-    split_by_neardup_groups,
     split_oracle_case,
 )
 from exstream_implementation_spark.sources import load_table
@@ -52,10 +49,9 @@ def test_deterministic_partition_and_append_invariant(spark):
 
 
 def test_md5_flavor_matches_python_mirror(spark):
-    """The oracle-portable flavor is reproducible from pure python —
+    """The assignment is reproducible from pure python —
     the same guarantee the DuckDB CASE (split_oracle_case) relies on."""
-    out = assign_splits(_docs(spark), W, unit_col="doc_id", salt=1,
-                        method="md5").collect()
+    out = assign_splits(_docs(spark), W, unit_col="doc_id", salt=1).collect()
     cut_train = format(int(0.8 * 16**6), "06x")
     cut_val = format(int(0.9 * 16**6), "06x")
     for r in out:
@@ -68,51 +64,12 @@ def test_md5_flavor_matches_python_mirror(spark):
     assert case.endswith("ELSE 'test' END")
 
 
-def test_group_split_never_leaks(spark):
-    docs = _docs(spark)
-    # plant chains: (0,1),(1,2) one cluster; (10,11) another; rest singleton
-    pairs = docs.sparkSession.createDataFrame(
-        [(0, 1), (1, 2), (10, 11), (400, 401)],
-        "doc_id_a long, doc_id_b long",
-    )
-    for salt in (0, 1, 2, 3):
-        out = split_by_neardup_groups(docs, pairs, W, salt=salt).persist()
-        assert leakage_report(out, "__group").count() == 0
-        by_id = {r["doc_id"]: r["split"] for r in out.collect()}
-        assert by_id[0] == by_id[1] == by_id[2]
-        assert by_id[10] == by_id[11]
-        assert by_id[400] == by_id[401]
-        out.unpersist()
-    # the row-wise split DOES tear at least one planted cluster across
-    # salts — the failure mode the group split exists to prevent
-    torn = 0
-    for salt in range(6):
-        by_id = {r["doc_id"]: r["split"]
-                 for r in assign_splits(docs, W, salt=salt).collect()}
-        torn += any(by_id[a] != by_id[b] for a, b in [(0, 1), (1, 2), (10, 11), (400, 401)])
-    assert torn > 0
-
-
-def test_singleton_groups_distinct_from_components(spark):
-    docs = _docs(spark)
-    pairs = docs.sparkSession.createDataFrame(
-        [(0, 1)], "doc_id_a long, doc_id_b long"
-    )
-    out = split_by_neardup_groups(docs, pairs, W)
-    groups = {r["doc_id"]: r["__group"] for r in out.collect()}
-    assert groups[0] == groups[1] == "c:0"
-    assert groups[2] == "d:2"  # singleton id-keyed, prefix-separated
-    assert out.count() == docs.count()
-
-
 def test_weights_validation(spark):
     docs = _docs(spark)
     with pytest.raises(ValueError, match="non-empty"):
         assign_splits(docs, {})
     with pytest.raises(ValueError, match=">= 0"):
         assign_splits(docs, {"a": -1.0, "b": 2.0})
-    with pytest.raises(ValueError, match="method"):
-        assign_splits(docs, W, method="sha9")
     # unnormalized weights normalize
     out = assign_splits(docs, {"a": 8.0, "b": 2.0})
     counts = {r["split"]: r["n"] for r in

@@ -1,18 +1,12 @@
 """URL curation (plans/urls.py): canonicalization against hand-written
-expected forms + idempotence, eTLD+1 extraction, URL dedup semantics, and
-cap_per_group vs an exact window reference with partition invariance."""
+expected forms + idempotence, and cap_per_group vs an exact window
+reference with partition invariance."""
 
 import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from exstream_implementation_spark.plans.urls import (
-    cap_per_group,
-    dedup_by_url,
-    normalize_urls,
-    registered_domain,
-    with_domain,
-)
+from exstream_implementation_spark.plans.urls import _norm_expr, cap_per_group
 from exstream_implementation_spark.sources import load_table
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -46,9 +40,13 @@ CANON = [
 ]
 
 
+def _canon(df):
+    return [r[0] for r in df.select(_norm_expr(F.col("url"))).collect()]
+
+
 def test_canonical_forms(spark):
     df = spark.createDataFrame([(u,) for u, _ in CANON], "url string")
-    got = [r["url_norm"] for r in normalize_urls(df).collect()]
+    got = _canon(df)
     want = [w for _, w in CANON]
     assert got == want
 
@@ -57,54 +55,10 @@ def test_normalization_is_idempotent(spark):
     df = spark.createDataFrame(
         [(u,) for u, w in CANON if w is not None], "url string"
     )
-    once = normalize_urls(df, "url", "n1")
-    twice = normalize_urls(once, "n1", "n2")
+    once = df.withColumn("n1", _norm_expr(F.col("url")))
+    twice = once.withColumn("n2", _norm_expr(F.col("n1")))
     for r in twice.collect():
         assert r["n2"] == r["n1"], r["url"]
-
-
-def test_registered_domain(spark):
-    cases = [
-        ("www.example.co.uk", "example.co.uk"),
-        ("a.b.example.com", "example.com"),
-        ("example.com", "example.com"),
-        ("news.site.com.au", "site.com.au"),
-        ("192.168.10.1", "192.168.10.1"),
-        ("localhost", "localhost"),
-        # a host that IS a two-level suffix has nothing above it
-        ("co.uk", "co.uk"),
-    ]
-    df = spark.createDataFrame([(h,) for h, _ in cases], "host string")
-    got = [
-        r["d"]
-        for r in df.select(registered_domain(F.col("host")).alias("d")).collect()
-    ]
-    assert got == [w for _, w in cases]
-
-
-def test_with_domain_from_url(spark):
-    df = normalize_urls(
-        spark.createDataFrame(
-            [("https://Blog.Shop.Example.co.uk:443/x?utm_source=a",)],
-            "url string",
-        )
-    )
-    assert with_domain(df).collect()[0]["domain"] == "example.co.uk"
-
-
-def test_dedup_by_url(spark):
-    rows = [
-        (0, "https://example.com/a?utm_source=x"),
-        (1, "https://EXAMPLE.com/a#frag"),        # same canonical as 0
-        (2, "https://example.com/b"),
-        (3, "garbage"),                            # unparseable → kept
-        (4, "nonsense"),                           # unparseable → kept
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, url string")
-    kept = sorted(r["doc_id"] for r in dedup_by_url(df).collect())
-    assert kept == [0, 2, 3, 4]
-    # caller's column order survives
-    assert dedup_by_url(df).columns == ["doc_id", "url"]
 
 
 def _exact_cap(docs, keys, n, order_col, id_col="doc_id"):
@@ -152,7 +106,7 @@ def test_fragment_query_confusion(spark):
          ("https://site.com/page#frag?utm_source=x&y=2",)],
         "url string",
     )
-    got = [r["url_norm"] for r in normalize_urls(df).collect()]
+    got = _canon(df)
     assert got == ["https://site.com/page", "https://site.com/page"]
 
 
@@ -162,7 +116,7 @@ def test_tracking_params_case_insensitive(spark):
          ("https://a.com/p?Fbclid=y&keep=1",)],
         "url string",
     )
-    got = [r["url_norm"] for r in normalize_urls(df).collect()]
+    got = _canon(df)
     assert got == ["https://a.com/p", "https://a.com/p?keep=1"]
 
 
@@ -174,16 +128,3 @@ def test_cap_per_group_null_group_is_capped_not_dropped(spark):
     )
     # NULL is a group of its own: 3 smallest of each group survive
     assert kept == [0, 1, 2, 5, 6, 7]
-
-
-def test_dedup_by_url_null_id_passes_through(spark):
-    df = spark.createDataFrame(
-        [(None, "https://a.com/x"), (7, "https://a.com/x"),
-         (8, "https://a.com/x")],
-        "doc_id long, url string",
-    )
-    out = dedup_by_url(df).collect()
-    ids = sorted((r["doc_id"] is None, r["doc_id"] or -1) for r in out)
-    # keep-min over identified rows (7) + the NULL-id row passes through
-    assert len(out) == 2
-    assert {r["doc_id"] for r in out} == {None, 7}

@@ -10,9 +10,9 @@ Usage:  PYTHONPATH=/root/repo python tools/check_correctness.py [names...]
             python tools/check_correctness.py --out docs/X20_SWEEP_r12.json
 
 ``--out FILE`` additionally writes a JSON artifact {query: {status,
-rows, wall_s}, "_summary": {...}} — the driver-visible record of an
-at-scale sweep (the r11 verdict asked for the x20 50/50 claim to live as
-a committed artifact, not round-log prose).
+rows, wall_s, hash}, "_summary": {...}} — the committed record of a
+sweep.  ``hash`` is the Spark side's value hash (``table_hash``), so two
+commits' artifacts show whether a query's answer changed between them.
 """
 
 from __future__ import annotations
@@ -150,6 +150,7 @@ def main():
             spdf = sdf.toPandas()  # driver-parity dtype view
             srows = [tuple(r) for r in sdf.collect()]
             sdf.unpersist()
+            shash = table_hash(scols, srows)
         except Exception as e:
             print(f"FAIL {name}: spark error: {str(e)[:300]}")
             record[name] = {"status": "fail",
@@ -160,7 +161,8 @@ def main():
             print(f"WEAK {name}: rows={len(srows)} (no oracle) "
                   f"[{time.time()-t0:.1f}s]")
             record[name] = {"status": "weak", "rows": len(srows),
-                            "wall_s": round(time.time() - t0, 1)}
+                            "wall_s": round(time.time() - t0, 1),
+                            "hash": shash}
             n_weak += 1
             continue
         try:
@@ -176,28 +178,29 @@ def main():
             drows = list(zip(*col_lists)) if col_lists else []
         except Exception as e:
             print(f"FAIL {name}: duckdb error: {str(e)[:300]}")
-            record[name] = {"status": "fail",
+            record[name] = {"status": "fail", "hash": shash,
                             "err": f"duckdb error: {str(e)[:200]}"}
             n_fail += 1
             continue
         ok_cols = sorted(scols) == sorted(dcols)
         ok_count = len(srows) == len(drows)
         ok_hash = (
-            table_hash(scols, srows) == table_hash(dcols, drows)
+            shash == table_hash(dcols, drows)
             if ok_cols and ok_count
             else False
         )
         hazards = pandas_hazards(spdf, dpdf)
         if hazards:
             print(f"FAIL {name}: driver-canon hazards: {hazards}")
-            record[name] = {"status": "fail",
+            record[name] = {"status": "fail", "hash": shash,
                             "err": f"canon hazards: {str(hazards)[:200]}"}
             n_fail += 1
             continue
         if ok_cols and ok_count and ok_hash:
             print(f"PASS {name}: rows={len(srows)} [{time.time()-t0:.1f}s]")
             record[name] = {"status": "pass", "rows": len(srows),
-                            "wall_s": round(time.time() - t0, 1)}
+                            "wall_s": round(time.time() - t0, 1),
+                            "hash": shash}
             n_pass += 1
         else:
             print(
@@ -215,6 +218,7 @@ def main():
                         print(f"  spark: {a[:200]}\n  duck : {b[:200]}")
                         break
             record[name] = {"status": "fail", "rows": len(srows),
+                            "hash": shash,
                             "err": f"rows {len(srows)} vs {len(drows)}, "
                                    f"cols_ok={ok_cols}, hash_ok={ok_hash}"}
             n_fail += 1
