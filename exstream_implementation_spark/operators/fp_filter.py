@@ -10,10 +10,13 @@ the single feature with the fewest matches is kept
 
 Spark realization (SURVEY §7 M3): the distance profile is the classic MASS
 algorithm (Mueen's FFT-based z-normalized matching — public algorithm) in
-numpy inside one ``applyInPandas`` keyed by feature: each group holds one
-feature's pooled reference series, computes every anomaly's profile in a few
-vectorized FFTs, and emits (ano_key, n_matches). Everything around it —
-keep/fallback logic — is plain DataFrame ops.
+numpy inside one ``applyInPandas`` keyed by (run_id, feature)
+(``match_profile``): each group holds one run's pooled reference series of
+one feature and computes every anomaly's profile once, emitting the greedy
+match count with the profile statistics the ``exstream_fp_profile`` catalog
+query checks against DuckDB — the pipeline and the catalog run the same
+pass.  The keep/fallback rule (``keep_rule``) runs on the driver over the
+collected counts, O(runs × anomalies × features) rows.
 
 Match-selection semantics follow stumpy's documented behavior: candidates
 with D ≤ max_distance, greedily picked in ascending distance, suppressing an
@@ -24,9 +27,10 @@ The reference's order is os.listdir file order (nondeterministic!); we order
 by (ano_key, timestamp) — deterministic, differing only in windows that
 straddle slice boundaries.
 
-Scale bound: each applyInPandas group holds ONE feature's pooled reference
-series — sized by (#labeled anomalies × reference-window length), i.e. by
-the label catalog, not by raw data volume; the 100 TB trace never pools.
+Scale bound: each applyInPandas group holds ONE run's pooled reference
+series of one feature — sized by (#labeled anomalies × reference-window
+length), i.e. by the label catalog, not by raw data volume; the 100 TB
+trace never pools.
 But every anomaly's pattern runs a full-length MASS over that pooled
 series, so a group's work grows with the SQUARE of the anomaly count:
 ``fp_filter.python_s`` measured 0.28 s at 2 anomalies and 23.1 s at 80
@@ -41,14 +45,14 @@ import math
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 
 # the reference keeps a feature whose reference shape stumpy.match finds at
 # most this many times (reference exstream/false_positive_filtering.py:36-46,
 # before the :45-46 fewest-matches fallback)
 KEEP_THRESHOLD = 5
 
-# distance_profile_stats rounds distances to this many decimals, as the
+# match_profile rounds distances to this many decimals, as the
 # exstream_fp_profile oracle SQL does (round(d, 4))
 PROFILE_DECIMALS = 4
 
@@ -112,13 +116,13 @@ def mass_distance_profile(query: np.ndarray, ts: np.ndarray) -> np.ndarray:
     return d
 
 
-def count_matches(query: np.ndarray, ts: np.ndarray, max_distance: float) -> int:
-    """Number of non-overlapping windows with distance ≤ max_distance,
-    stumpy.match-style: ascending-distance greedy with ±ceil(m/4) exclusion."""
-    d = mass_distance_profile(query, ts)
+def _greedy_matches(d: np.ndarray, m: int, max_distance: float) -> int:
+    """Number of non-overlapping windows of the profile ``d`` with distance
+    ≤ max_distance, stumpy.match-style: ascending-distance greedy with
+    ±ceil(m/4) exclusion around each pick."""
     if d.size == 0:
         return 0
-    excl = int(np.ceil(len(query) / 4))
+    excl = int(np.ceil(m / 4))
     d = d.copy()
     count = 0
     while True:
@@ -130,70 +134,36 @@ def count_matches(query: np.ndarray, ts: np.ndarray, max_distance: float) -> int
     return count
 
 
-def distance_profile_stats(
-    melted: DataFrame,
-    max_distance: float = 40.0,
-) -> DataFrame:
-    """Oracle-checkable projection of C3: per (ano_key, feature), statistics
-    of the full z-normalized distance profile (pattern = the anomaly's
-    reference slice, series = pooled references — quirk Q4 orientation)
-    WITHOUT the greedy exclusion-zone match selection, which is inherently
-    sequential and stays golden-tested.  Distances are rounded to
-    ``PROFILE_DECIMALS`` before the threshold compare so the FFT path and a
-    naive O(n·m) SQL evaluation agree.
-    """
-    refs = melted.filter(F.col("type_data") == 0).select(
-        "ano_key", "timestamp", "feature", "value"
-    )
-    out_schema = (
-        "ano_key string, feature string, n_below long, min_dist double, "
-        "n_windows long"
-    )
-
-    def per_feature(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ano_key", "timestamp"])
-        pooled = pdf["value"].to_numpy(dtype=np.float64)
-        feature = pdf["feature"].iloc[0]
-        rows = []
-        for key, grp in pdf.groupby("ano_key", sort=True):
-            pattern = grp["value"].to_numpy(dtype=np.float64)
-            d = mass_distance_profile(pattern, pooled)
-            dr = np.round(d, PROFILE_DECIMALS)
-            rows.append(
-                (
-                    key,
-                    feature,
-                    int((dr <= max_distance).sum()),
-                    float(np.round(d.min(), PROFILE_DECIMALS)),
-                    int(d.size),
-                )
-            )
-        return pd.DataFrame(
-            rows,
-            columns=["ano_key", "feature", "n_below", "min_dist", "n_windows"],
-        )
-
-    return refs.groupBy("feature").applyInPandas(per_feature, out_schema)
+def count_matches(query: np.ndarray, ts: np.ndarray, max_distance: float) -> int:
+    """Number of non-overlapping windows of ``ts`` within max_distance of
+    ``query`` (``_greedy_matches`` over its MASS profile)."""
+    return _greedy_matches(mass_distance_profile(query, ts), len(query), max_distance)
 
 
-def false_positive_filter(melted: DataFrame, max_distance: float = 40.0) -> DataFrame:
-    """melted long table → (run_id, ano_key, feature, feature_order,
-    n_matches, kept).
+def match_profile(melted: DataFrame, max_distance: float = 40.0) -> DataFrame:
+    """melted long table (with ``run_id``) → (run_id, ano_key, feature,
+    feature_order, n_matches, n_below, min_dist, n_windows): C3's one MASS
+    pass.
 
-    ``kept`` replicates the reference's rule: n_matches ≤ KEEP_THRESHOLD, with
-    the fewest-matches fallback when an anomaly would keep nothing.
-
-    Pooling happens per (run_id, feature): each instability run pools ONLY
-    its own sampled references, exactly as the reference's per-run pipeline
-    re-execution does (reference script_1.py:227-238).  ``run_id`` is the
-    int the pipeline explodes from ``sequence``.
+    One group per (run_id, feature) holds that run's pooled reference
+    series; each anomaly's reference slice is matched against it with one
+    ``mass_distance_profile``, and that one profile gives both the greedy
+    match count the keep rule reads (``n_matches``) and the oracle-checkable
+    statistics of the full profile: ``n_below`` windows at distance ≤
+    max_distance, the smallest distance and the window count, distances
+    rounded to ``PROFILE_DECIMALS`` so the FFT path and a naive O(n·m) SQL
+    evaluation agree.
     """
     refs = melted.filter(F.col("type_data") == 0).select(
         "run_id", "ano_key", "timestamp", "feature", "feature_order", "value"
     )
+    columns = [
+        "run_id", "ano_key", "feature", "feature_order", "n_matches",
+        "n_below", "min_dist", "n_windows",
+    ]
     out_schema = (
-        "run_id int, feature string, feature_order int, ano_key string, "
-        "n_matches long"
+        "run_id int, ano_key string, feature string, feature_order int, "
+        "n_matches long, n_below long, min_dist double, n_windows long"
     )
 
     def per_feature(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -205,29 +175,58 @@ def false_positive_filter(melted: DataFrame, max_distance: float = 40.0) -> Data
         rows = []
         for key, grp in pdf.groupby("ano_key", sort=True):
             pattern = grp["value"].to_numpy(dtype=np.float64)
-            n = count_matches(pattern, pooled, max_distance)
-            rows.append((run_id, feature, order, key, n))
-        return pd.DataFrame(
-            rows,
-            columns=["run_id", "feature", "feature_order", "ano_key", "n_matches"],
+            # the pattern is a slice of the pooled series, so d is never empty
+            d = mass_distance_profile(pattern, pooled)
+            rows.append(
+                (
+                    run_id,
+                    key,
+                    feature,
+                    order,
+                    _greedy_matches(d, len(pattern), max_distance),
+                    int((np.round(d, PROFILE_DECIMALS) <= max_distance).sum()),
+                    float(np.round(d.min(), PROFILE_DECIMALS)),
+                    int(d.size),
+                )
+            )
+        return pd.DataFrame(rows, columns=columns)
+
+    return refs.groupBy("run_id", "feature").applyInPandas(per_feature, out_schema)
+
+
+def keep_rule(counts) -> list[tuple[int, str, str]]:
+    """(run_id, ano_key, feature, feature_order, n_matches) rows → the kept
+    (run_id, ano_key, feature), the reference's rule decided per (run_id,
+    ano_key): every feature with n_matches ≤ KEEP_THRESHOLD, in column
+    order; if none qualifies, only the feature with the fewest matches,
+    ties going to the lowest feature_order (np.argmin = first occurrence,
+    reference exstream/false_positive_filtering.py:45-46)."""
+    groups: dict[tuple[int, str], list[tuple[int, int, str]]] = {}
+    for run_id, ano_key, feature, order, n in counts:
+        groups.setdefault((run_id, ano_key), []).append((n, order, feature))
+    kept = []
+    for (run_id, ano_key), cands in groups.items():
+        primary = sorted(
+            (c for c in cands if c[0] <= KEEP_THRESHOLD), key=lambda c: c[1]
         )
+        kept.extend((run_id, ano_key, f) for _, _, f in primary or [min(cands)])
+    return kept
 
-    counts = refs.groupBy("run_id", "feature").applyInPandas(per_feature, out_schema)
 
-    w_key = Window.partitionBy("run_id", "ano_key")
-    counts = counts.withColumn(
-        "kept_primary", (F.col("n_matches") <= F.lit(KEEP_THRESHOLD)).cast("int")
+def false_positive_filter(
+    melted: DataFrame, max_distance: float = 40.0
+) -> list[tuple[int, str, str]]:
+    """melted long table → the kept (run_id, ano_key, feature) rows: one
+    collect of ``match_profile``'s match counts, O(runs × anomalies ×
+    features) rows, decided by ``keep_rule`` on the driver.
+
+    Pooling happens per (run_id, feature): each instability run pools ONLY
+    its own sampled references, exactly as the reference's per-run pipeline
+    re-execution does (reference script_1.py:227-238).  ``run_id`` is the
+    int the pipeline explodes from ``sequence``.
+    """
+    return keep_rule(
+        match_profile(melted, max_distance)
+        .select("run_id", "ano_key", "feature", "feature_order", "n_matches")
+        .collect()
     )
-    counts = counts.withColumn("any_kept", F.max("kept_primary").over(w_key))
-    # fallback: argmin n_matches, ties by column order (np.argmin = first
-    # occurrence, reference exstream/false_positive_filtering.py:46)
-    w_min = Window.partitionBy("run_id", "ano_key").orderBy(
-        "n_matches", "feature_order"
-    )
-    counts = counts.withColumn("min_rank", F.row_number().over(w_min))
-    return counts.withColumn(
-        "kept",
-        F.when(F.col("any_kept") == 1, F.col("kept_primary") == 1).otherwise(
-            F.col("min_rank") == 1
-        ),
-    ).select("run_id", "ano_key", "feature", "feature_order", "n_matches", "kept")

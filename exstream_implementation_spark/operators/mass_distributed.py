@@ -34,8 +34,6 @@ def mass_profile_distributed(
     series: DataFrame,
     pattern: np.ndarray,
     chunk_size: int = 1 << 20,
-    seq_col: str = "seq",
-    value_col: str = "value",
     round_decimals: int | None = None,
 ) -> DataFrame:
     """(seq, value) series → (start, dist) full distance profile.
@@ -52,14 +50,14 @@ def mass_profile_distributed(
         raise ValueError(f"chunk_size {chunk_size} < pattern length {m}")
 
     c = int(chunk_size)
-    own = (F.col(seq_col) / c).cast("long")
+    own = (F.col("seq") / c).cast("long")
     # overlap rows (first m-1 of each chunk) also feed the previous chunk
     chunk_ids = F.array_compact(
-        F.array(own, F.when((F.col(seq_col) % c <= m - 2) & (own > 0), own - 1))
+        F.array(own, F.when((F.col("seq") % c <= m - 2) & (own > 0), own - 1))
     )
     exploded = series.select(
-        F.col(seq_col).alias("__seq"),
-        F.col(value_col).cast("double").alias("__val"),
+        F.col("seq").alias("__seq"),
+        F.col("value").cast("double").alias("__val"),
         F.explode(chunk_ids).alias("__chunk"),
     )
 

@@ -23,6 +23,9 @@ Spark-first wins over the reference's 6× eager recomputation
     clustering on — C2's first pass; C2's second pass is one more grouped
     aggregation for all runs (``operators.correlation``), with Pearson on
     the driver;
+  * C3 is one grouped MASS pass for all runs whose match counts are
+    collected; the keep rule runs on the driver (``operators.fp_filter``)
+    and its kept rows join back as a broadcast local relation;
   * after C7 the plan holds one reward per (run, anomaly, feature), so
     ``explain_anomalies`` collects those rows once and runs C8, the
     assembly and C9 on the driver (``operators.leap`` — the same cut the
@@ -230,10 +233,14 @@ def explain_anomalies(
         melted = melted.join(surv, ["run_id", "feature"], "inner")
 
     # C3 per run: each run pools only its own sampled references (the
-    # reference re-runs the whole pipeline per sample, script_1.py:227-238)
+    # reference re-runs the whole pipeline per sample, script_1.py:227-238);
+    # the keep rule runs on the driver over the collected match counts
     if cfg.false_positive_filtering:
-        fp = false_positive_filter(melted, cfg.max_distance)
-        fp_kept = fp.filter(F.col("kept")).select("run_id", "ano_key", "feature")
+        fp_kept = local_frame(
+            spark,
+            false_positive_filter(melted, cfg.max_distance),
+            "run_id int, ano_key string, feature string",
+        )
         melted = melted.join(
             F.broadcast(fp_kept), ["run_id", "ano_key", "feature"], "inner"
         )

@@ -758,11 +758,12 @@ def exstream_explain(spark, sf_dir):
     )
 
 
-# --- C3: z-normalized subsequence distance profile (the MASS/FFT math inside
-#     operators/fp_filter.py) vs a naive O(n·m) SQL evaluation.  Pattern = an
-#     anomaly's reference slice, series = pooled references (quirk Q4); the
-#     greedy exclusion-zone match counting is sequential and stays
-#     golden-tested — this pins the numeric core cross-engine. ---------------
+# --- C3: z-normalized subsequence distance profile (operators/fp_filter.py's
+#     match_profile, the one MASS pass the pipeline's FP filter runs) vs a
+#     naive O(n·m) SQL evaluation.  Pattern = an anomaly's reference slice,
+#     series = pooled references (quirk Q4); the greedy exclusion-zone match
+#     count the same pass emits is sequential and stays golden-tested — this
+#     pins the numeric core cross-engine. -------------------------------------
 _FP_MAX_DIST = 40.0
 
 _FP_PROFILE_DUCK = f"""
@@ -829,17 +830,19 @@ FROM dist GROUP BY ano_key, feature
 
 @query("exstream_fp_profile", oracle=_FP_PROFILE_DUCK)
 def exstream_fp_profile(spark, sf_dir):
-    from exstream_implementation_spark.operators.fp_filter import (
-        distance_profile_stats,
-    )
+    from exstream_implementation_spark.operators.fp_filter import match_profile
     from exstream_implementation_spark.schemas import feature_columns
 
     trace, labels = _two_anomaly_setup(spark, sf_dir)
+    # the pipeline's C3 pass, every row in run 0
     melted = melt_features(
-        slice_intervals(trace, labels),
+        slice_intervals(trace, labels).withColumn("run_id", F.lit(0)),
         feature_columns(trace.columns),
+        extra_cols=("run_id",),
     )
-    return distance_profile_stats(melted, _FP_MAX_DIST)
+    return match_profile(melted, _FP_MAX_DIST).select(
+        "ano_key", "feature", "n_below", "min_dist", "n_windows"
+    )
 
 
 # --- C2: correlation clustering — connected components of |corr| > τ over

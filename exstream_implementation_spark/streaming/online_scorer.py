@@ -35,7 +35,7 @@ Spark is replaying, whose journal write landed but whose commit did not
 (the recovery rule of *Discretized Streams*: replay the input from the last
 committed batch).  A resume without ``state_dir``, or without a state log,
 raises ``ValueError`` instead of serving partial state.  Every
-``compact_every`` journal appends both logs are rewritten down to
+``COMPACT_EVERY`` journal appends both logs are rewritten down to
 latest-per-key (the parquet stand-in for a compacted topic / Delta-Iceberg
 merge, which is what a production deployment would use).
 
@@ -104,6 +104,8 @@ STATE_SCHEMA = (
     " batch_id int, epoch int"
 )
 _COMPACT_TMP = "_compact_tmp"
+# journal appends between compactions of both logs to latest-per-key
+COMPACT_EVERY = 64
 
 
 def melted_to_keyed(melted: DataFrame) -> DataFrame:
@@ -152,7 +154,6 @@ class RewardServingView:
         spark: SparkSession,
         state_dir: str | None = None,
         max_view_anomalies: int | None = None,
-        compact_every: int | None = 64,
     ):
         if max_view_anomalies is not None and state_dir is None:
             raise ValueError(
@@ -163,7 +164,6 @@ class RewardServingView:
         self.spark = spark
         self.state_dir = state_dir
         self.max_view_anomalies = max_view_anomalies
-        self.compact_every = compact_every
         # (ano_key, feature, feature_order) -> raw (unrounded) reward
         self.latest: dict[tuple[str, str, int], float] = {}
         # packed key -> C6 tuple + n_ano (stateful.online_feature_rewards)
@@ -337,10 +337,7 @@ class RewardServingView:
         self._evict(keep=touched)
         if self.state_dir is None:
             return touched
-        if (
-            self.compact_every is not None
-            and self._appends >= self.compact_every
-        ):
+        if self._appends >= COMPACT_EVERY:
             self._compact()
         if states:
             # after the compaction: the compacted state log then holds only

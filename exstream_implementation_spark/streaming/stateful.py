@@ -32,13 +32,6 @@ import math
 from operator import itemgetter
 
 from pyspark.sql import Row
-from pyspark.sql.types import (
-    DoubleType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 
 def _scan(labels, state):
@@ -72,20 +65,8 @@ def batch_segmentation_entropy_reference(labels) -> float:
     return _entropy(st[0], st[1], st[2])
 
 
-REWARD_OUTPUT_SCHEMA = StructType(
-    [
-        StructField("key", StringType()),
-        StructField("n_rows", LongType()),
-        StructField("n_ano", LongType()),
-        StructField("class_entropy", DoubleType()),
-        StructField("seg_entropy", DoubleType()),
-        StructField("reward", DoubleType()),
-    ]
-)
-
-
 # the update row the reducer emits per touched key
-RewardUpdate = Row(*REWARD_OUTPUT_SCHEMA.fieldNames())
+RewardUpdate = Row("key", "n_rows", "n_ano", "class_entropy", "seg_entropy", "reward")
 
 # a key's state before its first point: the C6 tuple, then n_ano
 EMPTY_STATE = (0, 0, 0.0, 0, -1, 0, 0)

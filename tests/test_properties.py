@@ -181,6 +181,60 @@ def test_mass_profile_and_greedy_matches_bruteforce():
         assert count_matches(q, ts, thresh) == expect, trial
 
 
+def test_fp_keep_rule_threshold_fallback_and_tie_break():
+    """C3's keep rule on the driver (reference
+    exstream/false_positive_filtering.py:36-46): every feature with at most
+    KEEP_THRESHOLD matches is kept, in column order; when none qualifies
+    only the one with the fewest matches is kept, a tie going to the lowest
+    feature_order (np.argmin); each (run_id, ano_key) is decided alone."""
+    from exstream_implementation_spark.operators.fp_filter import (
+        KEEP_THRESHOLD,
+        keep_rule,
+    )
+
+    assert KEEP_THRESHOLD == 5
+
+    def kept(rows):
+        out = {}
+        for run_id, ano_key, feature in keep_rule(rows):
+            out.setdefault((run_id, ano_key), []).append(feature)
+        return out
+
+    # (run_id, ano_key, feature, feature_order, n_matches); rows arrive in
+    # no particular order, as a collect returns them
+    primary = [
+        (0, "a", "f3", 3, 0),
+        (0, "a", "f0", 0, 5),
+        (0, "a", "f1", 1, 6),
+        (0, "a", "f2", 2, 2),
+    ]
+    assert kept(primary) == {(0, "a"): ["f0", "f2", "f3"]}
+
+    fallback = [(0, "a", "f0", 0, 9), (0, "a", "f1", 1, 7), (0, "a", "f2", 2, 8)]
+    assert kept(fallback) == {(0, "a"): ["f1"]}
+
+    tie = [(0, "a", "f4", 4, 7), (0, "a", "f2", 2, 7), (0, "a", "f3", 3, 9)]
+    assert kept(tie) == {(0, "a"): ["f2"]}
+
+    # the same feature counts, decided per run and per anomaly: run 1 of "a"
+    # and run 0 of "b" keep nothing at <= 5 and fall back on their own
+    mixed = primary + [
+        (1, "a", "f0", 0, 6),
+        (1, "a", "f1", 1, 8),
+        (0, "b", "f0", 0, 12),
+        (0, "b", "f1", 1, 10),
+        (0, "b", "f2", 2, 10),
+        (1, "b", "f1", 1, 1),
+        (1, "b", "f0", 0, 20),
+    ]
+    assert kept(mixed) == {
+        (0, "a"): ["f0", "f2", "f3"],
+        (1, "a"): ["f0"],
+        (0, "b"): ["f1"],
+        (1, "b"): ["f1"],
+    }
+
+
 def test_mass_constant_query_with_inexact_mean():
     """A flat pattern whose float mean is INEXACT (e.g. [0.1]*3: std is
     ~1.4e-17, not 0) must behave like a constant query — distance 0 to

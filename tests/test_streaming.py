@@ -709,18 +709,20 @@ def test_serving_view_rebuild_honors_anomaly_bound(spark, tmp_path):
     assert bounded.latest[("A", "f2", 1)] == 0.6
 
 
-def test_serving_view_compaction_bounds_log(spark, tmp_path):
-    """After compact_every appends the journal is rewritten to latest-per-
+def test_serving_view_compaction_bounds_log(spark, tmp_path, monkeypatch):
+    """After COMPACT_EVERY appends the journal is rewritten to latest-per-
     key: file count drops, and a fresh rebuild still serves the newest
     values."""
     import glob
 
+    from exstream_implementation_spark.streaming import online_scorer
     from exstream_implementation_spark.streaming.online_scorer import (
         RewardServingView,
     )
 
+    monkeypatch.setattr(online_scorer, "COMPACT_EVERY", 4)
     state = str(tmp_path / "log")
-    view = RewardServingView(spark, state_dir=state, compact_every=4)
+    view = RewardServingView(spark, state_dir=state)
     for bid in range(4):
         _view_batch(spark, view, [("A", "f1", 0, 10 + bid, 0.1 * (bid + 1))], bid)
     files_after = glob.glob(f"{state}/*.parquet")
@@ -766,7 +768,7 @@ def test_serving_view_journal_schema(spark, tmp_path):
         "struct<key:string,n_rows:bigint,reward:double,batch_id:int,epoch:int>"
     )
     state = str(tmp_path / "log")
-    view = RewardServingView(spark, state_dir=state, compact_every=None)
+    view = RewardServingView(spark, state_dir=state)
     _view_batch(spark, view, [("A", "f1", 0, 10, 0.9), ("A", "f2", 1, 10, 0.5)], 0)
     _view_batch(spark, view, [("A", "f1", 0, 12, 0.7)], 1)
     assert file_schemas(state) == {fields(not_null=True)}
@@ -928,7 +930,7 @@ def test_journal_append_is_one_file(spark, tmp_path):
     )
 
     state = str(tmp_path / "log")
-    view = RewardServingView(spark, state_dir=state, compact_every=None)
+    view = RewardServingView(spark, state_dir=state)
     rows = [(f"A{_SEP}f{i}{_SEP}{i}", seq, (seq + i) % 2)
             for i in range(8) for seq in range(3)]
     updates = online_feature_rewards(view.state, rows)
@@ -1116,18 +1118,20 @@ def test_online_scorer_runs_no_stateful_operator(spark, tmp_path):
     assert "Exchange" not in plan
 
 
-def test_state_log_compaction_keeps_replay_point(spark, tmp_path):
+def test_state_log_compaction_keeps_replay_point(spark, tmp_path, monkeypatch):
     """The state log is compacted before the batch's own tuples are
     appended, so it still holds the last committed batch's tuples for a
     replay of the batch that triggered the compaction."""
+    from exstream_implementation_spark.streaming import online_scorer
     from exstream_implementation_spark.streaming.online_scorer import (
         _SEP,
         RewardServingView,
     )
 
+    monkeypatch.setattr(online_scorer, "COMPACT_EVERY", 1)
     state = str(tmp_path / "log")
     key = f"A{_SEP}f{_SEP}0"
-    view = RewardServingView(spark, state_dir=state, compact_every=1)
+    view = RewardServingView(spark, state_dir=state)
     for bid, labels in enumerate(([0, 1, 1], [0, 0, 1])):
         view.admit({"A"}, bid)
         rows = [(key, 3 * bid + i, lab) for i, lab in enumerate(labels)]
@@ -1135,6 +1139,6 @@ def test_state_log_compaction_keeps_replay_point(spark, tmp_path):
         if bid == 0:
             committed = dict(view.state)
     # batch 1 journaled and compacted both logs, then never committed
-    replay = RewardServingView(spark, state_dir=state, compact_every=1)
+    replay = RewardServingView(spark, state_dir=state)
     replay.admit({"A"}, 1)
     assert replay.state == committed
