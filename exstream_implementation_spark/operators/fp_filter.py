@@ -15,8 +15,9 @@ numpy inside one ``applyInPandas`` keyed by (run_id, feature)
 one feature and computes every anomaly's profile once, emitting the greedy
 match count with the profile statistics the ``exstream_fp_profile`` catalog
 query checks against DuckDB — the pipeline and the catalog run the same
-pass.  The keep/fallback rule (``keep_rule``) runs on the driver over the
-collected counts, O(runs × anomalies × features) rows.
+pass.  The keep/fallback rule (``false_positive_filter``) runs on the
+driver over the counts, O(runs × anomalies × features) rows, which the
+pipeline collects in the same query as the C7 rewards.
 
 Match-selection semantics follow stumpy's documented behavior: candidates
 with D ≤ max_distance, greedily picked in ascending distance, suppressing an
@@ -194,13 +195,19 @@ def match_profile(melted: DataFrame, max_distance: float = 40.0) -> DataFrame:
     return refs.groupBy("run_id", "feature").applyInPandas(per_feature, out_schema)
 
 
-def keep_rule(counts) -> list[tuple[int, str, str]]:
-    """(run_id, ano_key, feature, feature_order, n_matches) rows → the kept
-    (run_id, ano_key, feature), the reference's rule decided per (run_id,
-    ano_key): every feature with n_matches ≤ KEEP_THRESHOLD, in column
-    order; if none qualifies, only the feature with the fewest matches,
-    ties going to the lowest feature_order (np.argmin = first occurrence,
-    reference exstream/false_positive_filtering.py:45-46)."""
+def false_positive_filter(counts) -> list[tuple[int, str, str]]:
+    """``match_profile``'s collected (run_id, ano_key, feature,
+    feature_order, n_matches) rows → the kept (run_id, ano_key, feature),
+    the reference's rule decided per (run_id, ano_key): every feature with
+    n_matches ≤ KEEP_THRESHOLD, in column order; if none qualifies, only the
+    feature with the fewest matches, ties going to the lowest feature_order
+    (np.argmin = first occurrence, reference
+    exstream/false_positive_filtering.py:45-46).
+
+    ``match_profile`` pools per (run_id, feature): each instability run
+    pools ONLY its own sampled references, exactly as the reference's
+    per-run pipeline re-execution does (reference script_1.py:227-238).
+    """
     groups: dict[tuple[int, str], list[tuple[int, int, str]]] = {}
     for run_id, ano_key, feature, order, n in counts:
         groups.setdefault((run_id, ano_key), []).append((n, order, feature))
@@ -211,22 +218,3 @@ def keep_rule(counts) -> list[tuple[int, str, str]]:
         )
         kept.extend((run_id, ano_key, f) for _, _, f in primary or [min(cands)])
     return kept
-
-
-def false_positive_filter(
-    melted: DataFrame, max_distance: float = 40.0
-) -> list[tuple[int, str, str]]:
-    """melted long table → the kept (run_id, ano_key, feature) rows: one
-    collect of ``match_profile``'s match counts, O(runs × anomalies ×
-    features) rows, decided by ``keep_rule`` on the driver.
-
-    Pooling happens per (run_id, feature): each instability run pools ONLY
-    its own sampled references, exactly as the reference's per-run pipeline
-    re-execution does (reference script_1.py:227-238).  ``run_id`` is the
-    int the pipeline explodes from ``sequence``.
-    """
-    return keep_rule(
-        match_profile(melted, max_distance)
-        .select("run_id", "ano_key", "feature", "feature_order", "n_matches")
-        .collect()
-    )

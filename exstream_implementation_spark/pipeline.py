@@ -23,14 +23,14 @@ Spark-first wins over the reference's 6× eager recomputation
     clustering on — C2's first pass; C2's second pass is one more grouped
     aggregation for all runs (``operators.correlation``), with Pearson on
     the driver;
-  * C3 is one grouped MASS pass for all runs whose match counts are
-    collected; the keep rule runs on the driver (``operators.fp_filter``)
-    and its kept rows join back as a broadcast local relation;
-  * after C7 the plan holds one reward per (run, anomaly, feature), so
-    ``explain_anomalies`` collects those rows once and runs C8, the
-    assembly and C9 on the driver (``operators.leap`` — the same cut the
-    streaming trigger uses); the call is eager, and its result is one local
-    relation — the labels come from the pre-pass, with no join.
+  * after C2 the call runs one more query: one reward per (run, anomaly,
+    feature) from C7, unioned, with FP filtering on, with C3's match counts
+    from one grouped MASS pass over the same melted slice, and collected
+    once.  The keep rule (``operators.fp_filter``) drops the rejected
+    features' reward rows on the driver, and C8, the assembly and C9 run
+    there too (``operators.leap`` — the same cut the streaming trigger
+    uses); the call is eager, and its result is one local relation — the
+    labels come from the pre-pass, with no join.
 
 Labels: every label row is sliced on its own, so overlapping labels each
 get their own rows (a row in two intervals belongs to both), and a label
@@ -69,7 +69,10 @@ from exstream_implementation_spark.operators.correlation import (
     moment_aggregates,
     no_rows,
 )
-from exstream_implementation_spark.operators.fp_filter import false_positive_filter
+from exstream_implementation_spark.operators.fp_filter import (
+    false_positive_filter,
+    match_profile,
+)
 from exstream_implementation_spark.operators.leap import (
     assemble_explanations,
     reward_leap_filter,
@@ -96,9 +99,9 @@ class ExplainConfig:
     # determinism boundary); None = full precision
     reward_round: int | None = None
     # instability-sample selector: 'xxhash64' (production — one 64-bit JVM
-    # hash per row) or 'md5' (bit-identical across engines, so the sampled
-    # runs — and therefore the instability metric — are oracle-reproducible
-    # in DuckDB; same trade as plans.dedup.sample_mix)
+    # hash per row) or 'md5' (bit-identical across engines: the selector
+    # that exstream_explain's DuckDB oracle reproduces, so the sampled runs
+    # — and therefore the instability metric — are oracle-checked)
     sample_method: str = "xxhash64"
     # cache scope for the sliced table: "query" (default — released when the
     # next catalog query starts) or "session" (shared across queries via
@@ -232,34 +235,37 @@ def explain_anomalies(
     if surv is not None:
         melted = melted.join(surv, ["run_id", "feature"], "inner")
 
-    # C3 per run: each run pools only its own sampled references (the
-    # reference re-runs the whole pipeline per sample, script_1.py:227-238);
-    # the keep rule runs on the driver over the collected match counts
-    if cfg.false_positive_filtering:
-        fp_kept = local_frame(
-            spark,
-            false_positive_filter(melted, cfg.max_distance),
-            "run_id int, ano_key string, feature string",
-        )
-        melted = melted.join(
-            F.broadcast(fp_kept), ["run_id", "ano_key", "feature"], "inner"
-        )
-
-    # C7 → one collect → C8, assembly and C9 on the driver.  After C7 the
-    # tail holds one reward per (run, anomaly, feature), O(runs × anomalies
-    # × features) rows: too few to pay for a Spark stage each.  The collect
-    # runs here, not inside the cut, so its job is the pipeline's own.
-    rewards = single_feature_rewards(
+    # C7 — with FP filtering on, unioned with C3's match counts (each run
+    # pools only its own sampled references: the reference re-runs the whole
+    # pipeline per sample, script_1.py:227-238) → one collect → the keep
+    # rule, C8, assembly and C9 on the driver.  C7 scores each (run,
+    # anomaly, feature) from that group's rows only, so dropping the
+    # rejected features' reward rows after the collect is exact, and one
+    # query broadcasts ``valid`` and ``surv`` once.  The tail holds O(runs ×
+    # anomalies × features) rows: too few to pay for a Spark stage each.
+    # The collect runs here, not inside the cut, so its job is the
+    # pipeline's own.
+    tail = single_feature_rewards(
         melted,
         features,
         reward_round=cfg.reward_round,
         keys=("run_id", "ano_key"),
-    )
-    rows = rewards.select(
-        "run_id", "ano_key", "feature", "feature_order", "reward"
-    ).collect()
+    ).select("run_id", "ano_key", "feature", "feature_order", "reward")
+    if cfg.false_positive_filtering:
+        tail = (
+            match_profile(melted, cfg.max_distance)
+            .select("run_id", "ano_key", "feature", "feature_order", "n_matches")
+            .unionByName(tail, allowMissingColumns=True)
+        )
+    rows = tail.collect()
+    if cfg.false_positive_filtering:
+        passed = set(
+            false_positive_filter(r[:5] for r in rows if r.n_matches is not None)
+        )
+        rows = [r for r in rows if r.n_matches is None and r[:3] in passed]
     kept = reward_leap_filter(
-        ((run_id, ano_key), f, fo, rw) for run_id, ano_key, f, fo, rw in rows
+        ((r.run_id, r.ano_key), r.feature, r.feature_order, r.reward)
+        for r in rows
     )
     runs: dict[str, dict[int, list[int]]] = {}
     for e in assemble_explanations(kept):

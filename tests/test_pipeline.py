@@ -7,13 +7,23 @@ cross-checked feature-by-feature against the pure-Python oracle.
 import math
 
 import numpy as np
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from exstream_implementation_spark.operators.fp_filter import count_matches
 from exstream_implementation_spark.pipeline import ExplainConfig, explain_anomalies
 from tests import oracle_pandas as oracle
 
 FEATURES = ["f_cpu", "f_heap", "f_sched", "f_net", "f_records", "f_uptime", "f_dup"]
+LABEL_DDL = (
+    "label_row int, trace_id string, ano_id int, ano_type string, "
+    "ref_start long, ref_end long, ano_start long, ano_end long"
+)
+FIXTURE_LABELS = [
+    (0, "1_1", 1, "bursty input", 0, 100, 100, 150),
+    (1, "1_2", 1, "bursty input", 0, 100, 100, 150),
+]
 
 
 def build_fixture(spark):
@@ -41,14 +51,7 @@ def build_fixture(spark):
         rows,
         "trace_id string, timestamp long, " + ", ".join(f"{f} double" for f in FEATURES),
     )
-    labels = spark.createDataFrame(
-        [
-            (0, "1_1", 1, "bursty input", 0, 100, 100, 150),
-            (1, "1_2", 1, "bursty input", 0, 100, 100, 150),
-        ],
-        "label_row int, trace_id string, ano_id int, ano_type string, "
-        "ref_start long, ref_end long, ano_start long, ano_end long",
-    )
+    labels = spark.createDataFrame(FIXTURE_LABELS, LABEL_DDL)
     return traces, labels, rows
 
 
@@ -95,13 +98,97 @@ def test_explain_anomalies_cluster_collapses_duplicate(spark):
         assert 2 in row["explanation"]
 
 
+def fp_explanations(rows, label_rows, max_distance):
+    """Independent pandas rerun of run 0 with FP filtering on and clustering
+    off → ({ano_key: explanation}, {ano_key: kept by the fallback}): slice
+    per label, pool every anomaly's reference rows per feature in (ano_key,
+    timestamp) order, count each anomaly's reference matches in the pool,
+    keep the features at ≤ 5 matches or else the one with the fewest (the
+    first on a tie), then reward and leap-cut the kept features."""
+    trace = pd.DataFrame(rows, columns=["trace_id", "timestamp", *FEATURES])
+    parts = []
+    for lr, tid, _, ano_type, r0, r1, a0, a1 in label_rows:
+        t = trace[trace["trace_id"] == tid]
+        key = f"{ano_type}_{tid}_{lr}"
+        ts = t["timestamp"]
+        parts.append(t[(ts >= r0) & (ts < r1)].assign(ano_key=key, type_data=0))
+        parts.append(t[(ts >= a0) & (ts <= a1)].assign(ano_key=key, type_data=1))
+    sliced = pd.concat(parts)
+    refs = sliced[sliced["type_data"] == 0].sort_values(["ano_key", "timestamp"])
+    want, fallback = {}, {}
+    for key, grp in sliced.groupby("ano_key"):
+        own = refs[refs["ano_key"] == key]
+        counts = [
+            count_matches(
+                own[f].to_numpy(dtype=np.float64),
+                refs[f].to_numpy(dtype=np.float64),
+                max_distance,
+            )
+            for f in FEATURES
+        ]
+        use = [i for i, n in enumerate(counts) if n <= 5]
+        fallback[key] = not use
+        use = use or [int(np.argmin(counts))]
+        labs = grp["type_data"].tolist()
+        scored = [(i, oracle.reward(grp[FEATURES[i]].tolist(), labs)) for i in use]
+        want[key] = oracle.leap_filter(sorted(scored, key=lambda t: -t[1]))
+    return want, fallback
+
+
+# 12 labels of 10-row references over the fixture's traces: at
+# max_distance >= 5 every feature's reference shape matches the pooled
+# references more than 5 times, so every anomaly keeps its fewest-matches
+# feature
+FALLBACK_LABELS = [
+    (lr, tid, 1 + k, "bursty input", 10 * k, 10 * k + 10, 100, 150)
+    for lr, (tid, k) in enumerate(
+        (tid, k) for tid in ("1_1", "1_2") for k in range(6)
+    )
+]
+
+
 def test_explain_anomalies_fp_filter_runs(spark):
+    """FP filtering on (C3, reference exstream/false_positive_filtering.py:
+    36-46): the run-0 explanation equals the pandas rerun's, once on the
+    fixture, where every feature passes the ≤ 5 rule, and once on labels
+    that reach the fewest-matches fallback for every anomaly."""
+    traces, _, rows = build_fixture(spark)
+    for label_rows, max_distance, fell_back in (
+        (FIXTURE_LABELS, 40.0, False),
+        (FALLBACK_LABELS, 5.0, True),
+    ):
+        want, fallback = fp_explanations(rows, label_rows, max_distance)
+        assert set(fallback.values()) == {fell_back}
+        out = explain_anomalies(
+            traces,
+            spark.createDataFrame(label_rows, LABEL_DDL),
+            ExplainConfig(
+                false_positive_filtering=True,
+                instability_runs=0,
+                max_distance=max_distance,
+            ),
+        ).collect()
+        assert len(out) == len(label_rows)
+        for row in out:
+            assert list(row["explanation"]) == want[row["ano_key"]], row["ano_key"]
+            assert row["exp_size"] == len(want[row["ano_key"]])
+
+
+def test_explain_call_job_count(spark):
+    """A warm explain call with clustering and FP filtering on runs at most
+    9 Spark jobs: the pre-pass, C2's second pass and one query for C3 and
+    C7 together, with each broadcast of a driver-side relation once."""
     traces, labels, _ = build_fixture(spark)
-    cfg = ExplainConfig(false_positive_filtering=True, instability_runs=0)
-    out = explain_anomalies(traces, labels, cfg).collect()
-    assert len(out) == 2
-    for row in out:
-        assert row["exp_size"] >= 1
+    cfg = ExplainConfig(cluster=True, false_positive_filtering=True, instability_runs=1)
+    explain_anomalies(traces, labels, cfg)  # warm-up
+    sc = spark.sparkContext
+    sc.setJobGroup("explain-job-count", "one warm explain call")
+    try:
+        explain_anomalies(traces, labels, cfg)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = sc.statusTracker().getJobIdsForGroup("explain-job-count")
+    assert len(jobs) <= 9, f"{len(jobs)} jobs"
 
 
 def test_fp_filter_pools_per_run(spark):

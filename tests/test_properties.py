@@ -189,14 +189,14 @@ def test_fp_keep_rule_threshold_fallback_and_tie_break():
     feature_order (np.argmin); each (run_id, ano_key) is decided alone."""
     from exstream_implementation_spark.operators.fp_filter import (
         KEEP_THRESHOLD,
-        keep_rule,
+        false_positive_filter,
     )
 
     assert KEEP_THRESHOLD == 5
 
     def kept(rows):
         out = {}
-        for run_id, ano_key, feature in keep_rule(rows):
+        for run_id, ano_key, feature in false_positive_filter(rows):
             out.setdefault((run_id, ano_key), []).append(feature)
         return out
 
