@@ -18,15 +18,11 @@ DEFLATE round-trip on the PNG path and a real baseline-JPEG decode (huffman
 progressive) on the JPEG path.  Audio is real too: a RIFF WAV codec
 covering integer PCM (8/16/24/32-bit), IEEE float (32/64-bit) and
 WAVE_FORMAT_EXTENSIBLE (lossless, so ``audio_stats`` is hash-gated exactly
-like the pixel paths), PLUS the compressed telephony variants — G.711
-A-law/µ-law and IMA ADPCM (operators/adpcm.py, exact table/block decode
-pinned against stdlib audioop).  Lossless WebP decode is real too
-(operators/webp.py — the full VP8L bitstream: prefix codes, color cache,
-LZ77, meta groups, all four transforms).  What refuses with
-NotImplementedError is the perceptual-codec bitstreams (lossy VP8 WebP,
-MP3-in-WAV) and every video container — the honest boundary; frame
-sampling (``sample_frames``) is byte-chunk plumbing, not a video decode.
-The pixel/sample synths are exact integer formulas so the BMP/PNG/WAV
+like the pixel paths).  What refuses with NotImplementedError is every
+other container or codec: WebP, compressed WAV (G.711, ADPCM, MP3-in-WAV)
+and every video container — the honest boundary; frame sampling
+(``sample_frames``) is byte-chunk plumbing, not a video decode.  The
+pixel/sample synths are exact integer formulas so the BMP/PNG/WAV
 stats stay oracle-checkable in SQL (plans.multimodal — JPEG is lossy, so
 its stats are tolerance-tested in pytest instead of hash-gated).
 """
@@ -294,8 +290,8 @@ def decode_image(payload: bytes) -> np.ndarray:
     Real decode for uncompressed 24-bit BMP (bottom-up or top-down), PNG
     (all static color types and depths, Adam7 included — stdlib zlib
     inflate + numpy unfilter), and 8-bit Huffman JPEG (operators/jpeg.py:
-    baseline AND progressive, any subsampling) and lossless WebP
-    (operators/webp.py) — no system codec.  Every other container needs a
+    baseline AND progressive, any subsampling) — no system codec.  Every
+    other container (WebP included) needs a
     codec library absent from this environment and raises
     NotImplementedError (swap in PIL.Image.open on a real cluster)."""
     if payload[:8] == _PNG_SIG:
@@ -304,16 +300,10 @@ def decode_image(payload: bytes) -> np.ndarray:
         from exstream_implementation_spark.operators.jpeg import decode_jpeg
 
         return decode_jpeg(payload)
-    if payload[:4] == b"RIFF" and payload[8:12] == b"WEBP":
-        from exstream_implementation_spark.operators.webp import decode_webp
-
-        return np.ascontiguousarray(decode_webp(payload)[:, :, :3])
     if payload[:2] != b"BM":
         raise NotImplementedError(
-            "only BMP/PNG/JPEG/lossless-WebP decode without a system codec "
-            "(lossy VP8 WebP refuses inside the webp module); swap in "
-            "PIL.Image.open / libvips for the perceptual codecs on a real "
-            "cluster"
+            "only BMP/PNG/JPEG decode without a system codec; swap in "
+            "PIL.Image.open / libvips for other containers on a real cluster"
         )
     off = struct.unpack_from("<I", payload, 10)[0]
     _hdr, w, h, _planes, bpp = struct.unpack_from("<IiiHH", payload, 14)
@@ -332,16 +322,6 @@ def decode_image(payload: bytes) -> np.ndarray:
     ]
     img = np.stack(rows)
     return img if top_down else img[::-1].copy()
-
-
-def resize_image(payload: bytes, width: int, height: int) -> bytes:
-    """Nearest-neighbor resize of a decodable payload, re-encoded as BMP —
-    pure numpy (real interpolation libraries would do bilinear/Lanczos)."""
-    img = decode_image(payload)
-    h, w, _ = img.shape
-    ys = (np.arange(height) * h) // height
-    xs = (np.arange(width) * w) // width
-    return encode_bmp(np.ascontiguousarray(img[ys][:, xs]))
 
 
 # synthetic image geometry: width deliberately NOT a multiple of 4 so every
@@ -564,27 +544,25 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     - integer PCM (format tag 1) at 8 (unsigned → returned centered as
       int16), 16, 24 (returned as int32, sign-extended) and 32 bits;
     - IEEE float (tag 3) at 32/64 bits;
-    - **G.711 A-law (tag 6) and µ-law (tag 7)** — exact table expansion
-      to int16 (operators/adpcm.py);
-    - **IMA ADPCM (tag 0x11)** — bit-exact block decode to int16, honoring
-      ``wSamplesPerBlock`` and the ``fact`` chunk's true frame count;
     - WAVE_FORMAT_EXTENSIBLE (tag 0xFFFE) wrapping integer/float PCM —
       the SubFormat GUID's leading dword is the real tag.
 
-    The returned dtype mirrors the stream (compressed variants expand to
-    int16, their spec working precision).  Perceptual formats (MP3-in-WAV
-    etc.) refuse with NotImplementedError (soundfile/ffmpeg on a real
-    cluster).  Chunk-walks the container, so extra chunks (LIST, fact)
-    are skipped, not tripped over."""
+    The returned dtype mirrors the stream.  Compressed formats (G.711,
+    ADPCM, MP3-in-WAV etc.) refuse with NotImplementedError at the fmt
+    chunk (soundfile/ffmpeg on a real cluster).  Chunk-walks the
+    container, so extra chunks (LIST, fact) are skipped, not tripped
+    over."""
     if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
         raise ValueError("not a RIFF/WAVE stream")
-    pos, fmt, data, fact_frames = 12, None, None, None
+    pos, fmt, data = 12, None, None
     while pos + 8 <= len(payload):
         cid = payload[pos : pos + 4]
         ln = struct.unpack_from("<I", payload, pos + 4)[0]
         body = payload[pos + 8 : pos + 8 + ln]
         if cid == b"fmt ":
-            tag, ch, rate, _br, ba, bits = struct.unpack_from("<HHIIHH", body, 0)
+            tag, ch, rate, _br, _ba, bits = struct.unpack_from(
+                "<HHIIHH", body, 0
+            )
             if tag == 0xFFFE:  # extensible: the true tag lives in SubFormat
                 if len(body) < 40:
                     raise ValueError("truncated WAVE_FORMAT_EXTENSIBLE fmt")
@@ -596,55 +574,19 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
                 tag = struct.unpack_from("<I", guid, 0)[0]
             if (tag, bits) not in (
                 (1, 8), (1, 16), (1, 24), (1, 32), (3, 32), (3, 64),
-                (6, 8), (7, 8), (0x11, 4),
             ):
                 raise NotImplementedError(
-                    f"WAV format={tag} bits={bits} needs a perceptual "
-                    f"codec (only PCM/float/G.711/IMA-ADPCM decode "
-                    f"without one; swap in soundfile/ffmpeg for the rest)"
+                    f"WAV format={tag} bits={bits} needs a codec (only "
+                    f"PCM/float decode without one; swap in soundfile/ffmpeg "
+                    f"for the rest)"
                 )
-            spb = None
-            if tag == 0x11:
-                # cbSize extension: wSamplesPerBlock (fall back to the
-                # value block_align implies — they must agree anyway)
-                from exstream_implementation_spark.operators.adpcm import (
-                    adpcm_samples_per_block,
-                )
-
-                spb = (
-                    struct.unpack_from("<H", body, 18)[0]
-                    if len(body) >= 20
-                    else adpcm_samples_per_block(ba, ch)
-                )
-            fmt = (tag, ch, rate, bits, ba, spb)
-        elif cid == b"fact":
-            fact_frames = struct.unpack_from("<I", body, 0)[0]
+            fmt = (tag, ch, rate, bits)
         elif cid == b"data":
             data = body
         pos += 8 + ln + (ln & 1)  # chunks are word-aligned
     if fmt is None or data is None:
         raise ValueError("WAV stream missing fmt/data chunk")
-    tag, ch, rate, bits, ba, spb = fmt
-    if tag in (6, 7):
-        from exstream_implementation_spark.operators.adpcm import (
-            decode_alaw,
-            decode_ulaw,
-        )
-
-        dec = decode_alaw(data) if tag == 6 else decode_ulaw(data)
-        return dec.reshape(-1, ch), rate
-    if tag == 0x11:
-        from exstream_implementation_spark.operators.adpcm import (
-            adpcm_samples_per_block,
-            decode_adpcm,
-        )
-
-        if spb != adpcm_samples_per_block(ba, ch):
-            raise ValueError(
-                f"IMA WAV wSamplesPerBlock {spb} inconsistent with "
-                f"block_align {ba} × {ch} channel(s)"
-            )
-        return decode_adpcm(data, ch, ba, fact_frames), rate
+    tag, ch, rate, bits = fmt
     if tag == 3:
         samples = np.frombuffer(data, dtype="<f4" if bits == 32 else "<f8")
     elif bits == 8:
@@ -658,51 +600,6 @@ def decode_wav(payload: bytes) -> tuple[np.ndarray, int]:
     else:
         samples = np.frombuffer(data, dtype="<i2" if bits == 16 else "<i4")
     return samples.reshape(-1, ch), rate
-
-
-def encode_wav_compressed(
-    samples: np.ndarray, sample_rate: int = 8000, codec: str = "ulaw"
-) -> bytes:
-    """int16 samples → a compressed RIFF/WAVE stream: G.711 µ-law/A-law
-    (format tags 7/6, byte per sample) or IMA ADPCM (tag 0x11, 4 bits per
-    sample, block-structured with the cbSize=2 ``wSamplesPerBlock``
-    extension and a ``fact`` frame count — the layout every compressed
-    WAV writer emits).  ``decode_wav`` round-trips all three; G.711 is
-    idempotent on already-expanded values, ADPCM tracks within its
-    adaptive step (both pinned in tests against stdlib ``audioop``)."""
-    from exstream_implementation_spark.operators import adpcm as _adpcm
-
-    s = np.asarray(samples, dtype=np.int16)
-    if s.ndim == 1:
-        s = s[:, None]
-    n, ch = s.shape
-    if codec in ("ulaw", "alaw"):
-        tag = 7 if codec == "ulaw" else 6
-        data = (
-            _adpcm.encode_ulaw(s.reshape(-1))
-            if codec == "ulaw"
-            else _adpcm.encode_alaw(s.reshape(-1))
-        )
-        fmt = struct.pack(
-            "<HHIIHH", tag, ch, sample_rate, sample_rate * ch, ch, 8
-        )
-    elif codec == "adpcm":
-        data, ba, spb = _adpcm.encode_adpcm(s)
-        byte_rate = (sample_rate * ba + spb - 1) // spb  # blocks/sec × align
-        fmt = struct.pack(
-            "<HHIIHHHH", 0x11, ch, sample_rate, byte_rate, ba, 4, 2, spb
-        )
-    else:
-        raise ValueError(f"unknown codec {codec!r} (ulaw|alaw|adpcm)")
-    fact = struct.pack("<I", n)
-    body = (
-        b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(data)) + data
-        + (b"\x00" if len(data) & 1 else b"")
-    )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 N_AUDIO_SAMPLES = 256

@@ -14,7 +14,7 @@ see tests/test_jpeg.py.
 
 Catalog slot: ``multimodal_suite`` unions the five branches canonicalized
 to one schema under one oracle — same evidence as five slots, one
-driver-budget entry.  The per-branch functions stay as the package API.
+driver-budget entry.
 """
 
 from __future__ import annotations
@@ -60,8 +60,8 @@ def mm_binary_meta(spark, sf_dir):
 #     JVM↔Python boundary twice; the fused ``*_payload_stats`` operators
 #     run the identical encode→decode round-trip inside one task, shipping
 #     only ``doc_id`` in and six stat columns out.
-# attach_image_payload/image_stats (and the audio pair) remain the package
-# API for corpora whose payloads exist as real columns.
+# attach_image_payload/image_stats (and the audio pair) stay as the two-op
+# chains the tests check the fused operators against.
 
 
 # --- real BMP/PNG decode → per-channel pixel stats vs SQL oracle -------------

@@ -8,9 +8,14 @@ become anomaly intervals, each paired with the trailing reference period, and
 recorded trace for exactly those intervals.
 
 Per the paper's efficiency target (BASELINE.md: trigger → explanation < 30 s),
-each micro-batch handler is one bounded Spark job over the trace slice it
-needs — interval predicates push down to the trace scan, and the per-anomaly
-work is the same one-shuffle keyed plan as batch.
+the handler runs the batch pipeline itself, ``explain_anomalies``, on the
+intervals one micro-batch flags.  Counted with ``statusTracker`` job groups
+on the input of tests/test_streaming.py::test_online_explanation_trigger
+(sf0.001), a handler call that explains runs 13 Spark jobs: the
+``batch_df.isEmpty()`` check, 11 inside ``explain_flagged`` (the labels'
+window and ``explain_anomalies``' pre-pass, C2 and tail collects with the
+broadcasts they read) and the final ``collect``; a micro-batch that flags
+nothing costs the one ``isEmpty`` job.
 
 Scale notes: the handler receives only *flagged* windows (≪ all windows); the
 trace lookup joins on a broadcast labels frame, so trigger volume, not stream

@@ -18,7 +18,6 @@ from exstream_implementation_spark.operators.multimodal import (
     encode_bmp,
     encode_png,
     image_stats,
-    resize_image,
     synth_pixels,
 )
 
@@ -52,23 +51,18 @@ def test_bmp_topdown_decode():
 
 def test_non_bmp_raises_not_implemented():
     # WebP needs a real codec — honest refusal (JPEG is real now)
-    with pytest.raises(NotImplementedError):
-        decode_image(b"RIFF\x00\x00\x00\x00WEBPVP8 " + b"\x00" * 64)
+    for payload in (
+        b"RIFF\x00\x00\x00\x00WEBPVP8 " + b"\x00" * 64,
+        b"RIFF\x00\x00\x00\x00WEBPVP8L" + b"\x00" * 64,
+    ):
+        with pytest.raises(NotImplementedError):
+            decode_image(payload)
     # 8-bit BMP variant: honest refusal, not silent garbage
     img = encode_bmp(np.zeros((2, 2, 3), dtype=np.uint8))
     bad = bytearray(img)
     struct.pack_into("<H", bad, 28, 8)
     with pytest.raises(NotImplementedError):
         decode_image(bytes(bad))
-
-
-def test_resize_nearest_neighbor():
-    img = synth_pixels(9, w=8, h=6)
-    small = decode_image(resize_image(encode_bmp(img), 4, 3))
-    assert small.shape == (3, 4, 3)
-    ys = (np.arange(3) * 6) // 3
-    xs = (np.arange(4) * 8) // 4
-    assert np.array_equal(small, img[ys][:, xs])
 
 
 def test_image_stats_matches_local(spark):
@@ -377,6 +371,42 @@ def test_wav_refuses_compressed_formats():
         decode_wav(b"RIFX" + b"\x00" * 40)
     with pytest.raises(ValueError):
         encode_wav(np.zeros(4, dtype=np.int8))
+
+    def riff(fmt_body, data):
+        chunks = (
+            b"fmt " + _struct.pack("<I", len(fmt_body)) + fmt_body
+            + b"data" + _struct.pack("<I", len(data)) + data
+        )
+        return b"RIFF" + _struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+
+    def fmt(tag, block_align, bits):
+        return _struct.pack(
+            "<HHIIHH", tag, 1, 8000, 8000 * block_align, block_align, bits
+        )
+
+    # well-formed compressed streams
+    for payload in (
+        riff(fmt(6, 1, 8), bytes(4)),  # G.711 A-law
+        riff(fmt(7, 1, 8), bytes(4)),  # G.711 µ-law
+        # IMA ADPCM, one 36-byte block of 65 samples (cbSize 2)
+        riff(fmt(0x11, 36, 4) + _struct.pack("<HH", 2, 65), bytes(36)),
+    ):
+        with pytest.raises(NotImplementedError):
+            decode_wav(payload)
+
+
+def test_wav_still_refuses_perceptual_codecs():
+    from exstream_implementation_spark.operators.multimodal import (
+        decode_wav,
+        encode_wav,
+        synth_samples,
+    )
+
+    blob = bytearray(encode_wav(synth_samples(5, 100)))
+    at = blob.find(b"fmt ") + 8
+    struct.pack_into("<H", blob, at, 0x55)  # MP3-in-WAV
+    with pytest.raises(NotImplementedError):
+        decode_wav(bytes(blob))
 
 
 def test_spark_audio_stats_match_local(spark):

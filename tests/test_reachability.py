@@ -218,7 +218,7 @@ def test_every_package_module_is_reachable():
     )
 
 
-CODECS = ("adpcm", "jpeg", "multimodal", "webp")
+CODECS = ("jpeg", "multimodal")
 
 
 @pytest.mark.parametrize(
@@ -258,17 +258,10 @@ RETAINED_TEST_ONLY = frozenset(
     for mod, names in (
         # reads Spark's storage status for the cache-scope tests
         ("cache", "persisted_rdd_count"),
-        # encoders that make the inputs of the decoders the system uses
-        ("operators.adpcm", "encode_adpcm encode_alaw encode_ulaw"),
-        ("operators.webp",
-         "_BitWriter _dist_code_value _encode_entropy_image _limited_lengths "
-         "_lz77_symbol _write_prefix_code encode_vp8l encode_webp"),
-        ("operators.multimodal", "encode_wav_compressed"),
         # two-op image and audio chains: references for the fused
         # *_payload_stats the catalog runs
         ("operators.multimodal",
-         "attach_audio_payload attach_image_payload audio_stats image_stats "
-         "resize_image"),
+         "attach_audio_payload attach_image_payload audio_stats image_stats"),
         # exact brute-force top-k the ANN recall gate compares against
         ("plans.similarity", "ann_topk_cosine"),
         # the streaming source and windowed features wait for a trigger
