@@ -9,13 +9,15 @@ recorded trace for exactly those intervals.
 
 Per the paper's efficiency target (BASELINE.md: trigger → explanation < 30 s),
 the handler runs the batch pipeline itself, ``explain_anomalies``, on the
-intervals one micro-batch flags.  Counted with ``statusTracker`` job groups
-on the input of tests/test_streaming.py::test_online_explanation_trigger
-(sf0.001), a handler call that explains runs 13 Spark jobs: the
-``batch_df.isEmpty()`` check, 11 inside ``explain_flagged`` (the labels'
-window and ``explain_anomalies``' pre-pass, C2 and tail collects with the
-broadcasts they read) and the final ``collect``; a micro-batch that flags
-nothing costs the one ``isEmpty`` job.
+intervals one micro-batch flags.  The labels are numbered on the driver from
+one collect of the flagged windows' buckets, so the micro-batch's scoring
+plan runs once and the explain queries read a local relation.  Counted with
+``statusTracker`` job groups on the input of
+tests/test_streaming.py::test_online_explanation_trigger (sf0.001), a
+handler call on new intervals runs 10 Spark jobs: that collect and 9 inside
+``explain_anomalies`` (its pre-pass, C2 and tail collects with the
+broadcasts they read); a micro-batch that flags nothing costs the one
+collect.
 
 Scale notes: the handler receives only *flagged* windows (≪ all windows); the
 trace lookup joins on a broadcast labels frame, so trigger volume, not stream
@@ -24,9 +26,11 @@ volume, drives explanation cost.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from exstream_implementation_spark.pipeline import ExplainConfig, explain_anomalies
+from exstream_implementation_spark.schemas import LABELS_SCHEMA
+from exstream_implementation_spark.session import local_frame
 
 
 def flagged_windows_to_labels(
@@ -38,25 +42,19 @@ def flagged_windows_to_labels(
     anomaly interval is the flagged window (inclusive end, reference
     utils/get_data.py:92-96 semantics); the reference interval is the
     ``ref_buckets`` trace buckets immediately before it ([start, end)
-    exclusive end, :85-89)."""
+    exclusive end, :85-89).  One label per flagged bucket, whatever event
+    types flagged it: the flagged windows' buckets (far fewer than all
+    windows) are collected once, deduplicated and numbered by
+    ``ano_start`` on the driver."""
     b = F.floor(F.unix_timestamp("window_start") / bucket_seconds).cast("long")
-    return (
-        flagged.select(
-            b.alias("ano_start"),
-            (b).alias("ano_end"),  # one-bucket anomaly: [b, b] inclusive
-            (b - ref_buckets).alias("ref_start"),
-            b.alias("ref_end"),  # [b - k, b) exclusive end
-            F.col("event_type"),
-        )
-        .groupBy("ano_start", "ano_end", "ref_start", "ref_end")
-        .agg(F.array_sort(F.collect_set("event_type")).alias("flagged_types"))
-        .withColumn("trace_id", F.lit("events"))
-        .withColumn(
-            "ano_id", F.row_number().over(Window.orderBy("ano_start"))
-        )
-        .withColumn("label_row", F.col("ano_id") - 1)
-        .withColumn("ano_type", F.lit("online"))
-    )
+    buckets = sorted({r[0] for r in flagged.select(b).collect()})
+    rows = [
+        # one-bucket anomaly [bucket, bucket] inclusive; reference
+        # [bucket - ref_buckets, bucket) exclusive
+        (i, "events", i + 1, "online", bucket - ref_buckets, bucket, bucket, bucket)
+        for i, bucket in enumerate(buckets)
+    ]
+    return local_frame(flagged.sparkSession, rows, LABELS_SCHEMA)
 
 
 def explain_flagged(
@@ -65,15 +63,16 @@ def explain_flagged(
     bucket_seconds: int = 3600,
     ref_buckets: int = 24,
     cfg: ExplainConfig | None = None,
-) -> DataFrame:
-    """Run the batch explanation pipeline for the intervals flagged online.
-    ``trace`` is the recorded metric trace (sources.events_trace shape)."""
-    labels = flagged_windows_to_labels(flagged, bucket_seconds, ref_buckets).select(
-        "label_row", "trace_id", "ano_id", "ano_type",
-        "ref_start", "ref_end", "ano_start", "ano_end",
-    )
+) -> list:
+    """Run the batch explanation pipeline for the intervals flagged online
+    and return its rows; ``[]`` without an explain call when nothing is
+    flagged.  ``trace`` is the recorded metric trace (sources.events_trace
+    shape)."""
+    labels = flagged_windows_to_labels(flagged, bucket_seconds, ref_buckets)
+    if labels.isEmpty():
+        return []
     cfg = cfg or ExplainConfig(instability_runs=0)
-    return explain_anomalies(trace, labels, cfg)
+    return explain_anomalies(trace, labels, cfg).collect()
 
 
 def start_online_explainer(
@@ -92,10 +91,7 @@ def start_online_explainer(
     flagged_stream = scored_stream.filter(F.col("is_anomalous"))
 
     def handle(batch_df: DataFrame, batch_id: int):
-        if batch_df.isEmpty():
-            return
-        out = explain_flagged(trace, batch_df, bucket_seconds, ref_buckets, cfg)
-        for row in out.collect():
+        for row in explain_flagged(trace, batch_df, bucket_seconds, ref_buckets, cfg):
             sink.append((batch_id, row))
 
     return (

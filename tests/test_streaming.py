@@ -168,6 +168,69 @@ def test_online_explanation_trigger(spark):
     assert elapsed < 30, f"trigger→explanation took {elapsed:.1f}s (paper: <30s)"
 
 
+def test_explain_flagged_numbers_buckets_on_the_driver(spark):
+    """The trigger's labels: one per flagged bucket whatever event types
+    flagged it, numbered by ano_start, built from one collect of the
+    flagged windows.  The flagged frame carries its scoring plan (the
+    profile's broadcast join) as a micro-batch does, so a labels plan that
+    re-ran it inside every explain query would show in the job count."""
+    import datetime as dt
+
+    from exstream_implementation_spark.sources import events_trace
+    from exstream_implementation_spark.streaming.explain_trigger import (
+        explain_flagged,
+        flagged_windows_to_labels,
+    )
+
+    hour = dt.timedelta(hours=1)
+    windows = [
+        (dt.datetime(2024, 1, 9, 13), "click", 20),
+        (dt.datetime(2024, 1, 3, 12), "click", 20),
+        (dt.datetime(2024, 1, 9, 13), "signup", 20),
+        (dt.datetime(2024, 1, 5, 10), "purchase", 20),
+        (dt.datetime(2024, 1, 4, 1), "view", 10),  # inside the profile
+    ]
+    windowed = spark.createDataFrame(
+        [(t, t + hour, e, n, 100.0) for t, e, n in windows],
+        "window_start timestamp, window_end timestamp, event_type string, "
+        "n_events long, sum_value double",
+    )
+    profile = spark.createDataFrame(
+        [(e, 10.0, 1.0, 100.0, 10.0) for e in ("click", "signup", "purchase", "view")],
+        "event_type string, mu_n double, sigma_n double, mu_value double, "
+        "sigma_value double",
+    )
+    flagged = score_against_profile(windowed, profile).filter("is_anomalous")
+    # hour buckets since the epoch: 2024-01-03 12:00, 01-05 10:00, 01-09 13:00
+    assert [tuple(r) for r in flagged_windows_to_labels(flagged).collect()] == [
+        (0, "events", 1, "online", 473388, 473412, 473412, 473412),
+        (1, "events", 2, "online", 473434, 473458, 473458, 473458),
+        (2, "events", 3, "online", 473533, 473557, 473557, 473557),
+    ]
+
+    trace = events_trace(spark, SF_DIR, bucket_seconds=3600)
+    # warm-up on another interval set, as an earlier micro-batch would be:
+    # the measured call's slice is not in the cache yet
+    explain_flagged(trace, flagged.filter("event_type = 'purchase'"))
+    sc = spark.sparkContext
+    sc.setJobGroup("explain-flagged", "one warm trigger explain call")
+    try:
+        out = explain_flagged(trace, flagged)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # 2 jobs for the collect of the flagged buckets (the profile's broadcast
+    # and the collect) and 9 inside explain_anomalies; a labels plan that
+    # re-ran the flagged frame inside the explain queries costs more
+    jobs = sc.statusTracker().getJobIdsForGroup("explain-flagged")
+    assert len(jobs) <= 11, f"{len(jobs)} jobs"
+    assert sorted(r["ano_id"] for r in out) == [1, 2, 3]
+    for row in out:
+        assert row["trace_id"] == "events"
+        assert row["exp_size"] == len(row["explanation"]) >= 1
+    # nothing flagged: no labels and no explain call
+    assert explain_flagged(trace, flagged.filter("n_events < 0")) == []
+
+
 def test_session_window_streaming_matches_batch(spark):
     """session_window works unbounded too: with a watermark, closed sessions
     stream out in append mode as a subset of the batch sessionization."""
