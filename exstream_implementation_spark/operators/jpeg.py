@@ -1,9 +1,8 @@
 """Baseline JPEG codec — pure numpy + stdlib, no system codec.
 
-Completes the multimodal decode story (operators/multimodal.py): BMP and PNG
-were real as of r07/r08; this adds baseline sequential (SOF0) AND progressive
-(SOF2) DCT JPEG (8-bit, 4:4:4 and chroma-subsampled, optimized per-image
-Huffman tables), the formats actual training corpora arrive in.
+Completes the multimodal decode story (operators/multimodal.py) beside BMP
+and PNG: baseline sequential (SOF0) DCT JPEG, 8-bit, 4:4:4 and
+chroma-subsampled, optimized per-image Huffman tables.
 
 Scope and honesty:
   * ``encode_jpeg`` writes a spec-conformant JFIF stream: level
@@ -11,18 +10,14 @@ Scope and honesty:
     quantization → zigzag → DC-differential + AC run-length → canonical
     Huffman (tables BUILT from this image's symbol frequencies, emitted in
     DHT — no memorized Annex K constants to get subtly wrong) → byte-stuffed
-    entropy stream.  ``progressive=True`` emits libjpeg's default ten-scan
-    script (spectral selection + successive approximation, per-scan
-    optimized tables) over the SAME quantized coefficients.
+    entropy stream.
   * ``decode_jpeg`` parses the marker stream and inverts each step, reading
-    quant + Huffman tables FROM THE FILE, so it decodes any 8-bit Huffman
-    JPEG — baseline and progressive (any scan script: DC/AC first +
-    refinement scans, EOB runs, per-scan table redefinition), 4:4:4 AND
-    chroma-subsampled (4:2:0/4:2:2/4:4:0, any integer factor ratio;
-    nearest-neighbor chroma upsample) — not just our own.  Restart
-    intervals (DRI/RSTn) decode with per-scan predictor/EOB-run resets and
-    sequence checking.  12-bit, arithmetic-coded, lossless and hierarchical
-    variants refuse loudly with NotImplementedError — swap in
+    quant + Huffman tables FROM THE FILE, so it decodes any single-scan
+    interleaved baseline JPEG, 4:4:4 AND chroma-subsampled (4:2:0/4:2:2/
+    4:4:0, any integer factor ratio; nearest-neighbor chroma upsample) —
+    not just our own.  Progressive, 12-bit, arithmetic-coded, lossless and
+    hierarchical variants, restart intervals (DRI) and multi-scan
+    sequential streams refuse loudly with NotImplementedError — swap in
     PIL/libjpeg-turbo on a real cluster.
   * JPEG is lossy: round-trips are exact only for DC-flat blocks; tests pin
     exactness there and PSNR elsewhere, plus pure-math invariants (DCT
@@ -258,14 +253,6 @@ class _BitWriter:
             self.write((1 << pad) - 1, pad)  # pad with 1s per spec
         return bytes(self.out)
 
-    def restart(self, n: int) -> None:
-        """Byte-align (1-padding) and emit RSTn — markers are written raw,
-        never byte-stuffed (T.81 §E.2.4)."""
-        if self.nbits:
-            pad = 8 - self.nbits
-            self.write((1 << pad) - 1, pad)
-        self.out += bytes([0xFF, 0xD0 + (n & 7)])
-
 
 class _BitReader:
     def __init__(self, data: bytes):
@@ -299,23 +286,6 @@ class _BitReader:
             v = (v << 1) | self.read_bit()
         return v
 
-    def consume_restart(self) -> int:
-        """Byte-align and consume one RSTn marker (T.81 §E.2.4): discard
-        the current byte's padding bits, expect 0xFF 0xD0-0xD7, return n.
-        The caller resets its DC predictors."""
-        self.acc = 0
-        self.nbits = 0  # byte-align: drop pad bits of the partial byte
-        while self.pos < len(self.data) and self.data[self.pos] == 0xFF:
-            nxt = self.data[self.pos + 1] if self.pos + 1 < len(self.data) else None
-            if nxt == 0xFF:  # spec-legal fill byte run
-                self.pos += 1
-                continue
-            if nxt is not None and 0xD0 <= nxt <= 0xD7:
-                self.pos += 2
-                return nxt - 0xD0
-            break
-        raise ValueError("expected RSTn marker at restart interval")
-
 
 def _decode_symbol(reader: _BitReader, index) -> int:
     code = 0
@@ -339,190 +309,6 @@ def _extend(bits: int, size: int) -> int:
     return bits if bits >= (1 << (size - 1)) else bits - (1 << size) + 1
 
 
-# --- progressive scan machinery ----------------------------------------------
-# libjpeg's default progressive scan script (jcparam.c): an interleaved DC
-# first scan, spectral-selection AC first scans per component, then the
-# successive-approximation refinement scans.  Tuples are
-# (component indices, Ss, Se, Ah, Al).
-_PROGRESSIVE_SCRIPT = (
-    ((0, 1, 2), 0, 0, 0, 1),
-    ((0,), 1, 5, 0, 2),
-    ((1,), 1, 63, 0, 1),
-    ((2,), 1, 63, 0, 1),
-    ((0,), 6, 63, 0, 2),
-    ((0, 1, 2), 0, 0, 1, 0),
-    ((0,), 1, 63, 2, 1),
-    ((1,), 1, 63, 1, 0),
-    ((2,), 1, 63, 1, 0),
-    ((0,), 1, 63, 1, 0),
-)
-
-
-class _StatSink:
-    """Gather pass: count Huffman symbols per table id, drop raw bits."""
-
-    def __init__(self):
-        self.freqs: dict[tuple, dict[int, int]] = {}
-
-    def sym(self, tid, s: int) -> None:
-        f = self.freqs.setdefault(tid, {})
-        f[s] = f.get(s, 0) + 1
-
-    def bits(self, v: int, n: int) -> None:
-        pass
-
-    def restart(self, n: int) -> None:
-        pass
-
-
-class _WriteSink:
-    """Emit pass: Huffman-code symbols through per-table-id tables."""
-
-    def __init__(self, tables: dict):
-        self.bw = _BitWriter()
-        self.tables = tables
-
-    def sym(self, tid, s: int) -> None:
-        code, ln = self.tables[tid].codes[s]
-        self.bw.write(code, ln)
-
-    def bits(self, v: int, n: int) -> None:
-        if n:
-            self.bw.write(v, n)
-
-    def restart(self, n: int) -> None:
-        self.bw.restart(n)
-
-
-def _emit_dc_scan(sink, comp_coefs, factors, n_mcu, ah, al, restart_interval):
-    """Interleaved DC scan (T.81 §G.1.2.1): first pass (Ah=0) codes the
-    point-transformed value's diff chain; refinement (Ah>0) emits one raw
-    bit — bit Al of the two's-complement DC — per block, no Huffman."""
-    prev = [0, 0, 0]
-    cursors = [0, 0, 0]
-    for m in range(n_mcu):
-        if restart_interval and m and m % restart_interval == 0:
-            sink.restart((m // restart_interval - 1) % 8)
-            prev = [0, 0, 0]
-        for ci, (fh, fv) in enumerate(factors):
-            tid = ("dc", 0 if ci == 0 else 1)
-            for _ in range(fh * fv):
-                v = int(comp_coefs[ci][cursors[ci], 0])
-                cursors[ci] += 1
-                if ah == 0:
-                    sv = v >> al  # arithmetic shift, negatives toward -inf
-                    diff = sv - prev[ci]
-                    prev[ci] = sv
-                    size = _category(diff)
-                    sink.sym(tid, size)
-                    sink.bits(diff if diff > 0 else diff + (1 << size) - 1, size)
-                else:
-                    sink.bits((v >> al) & 1, 1)
-
-
-def _emit_ac_first(sink, blocks, tid, ss, se, al, restart_interval):
-    """AC first scan (T.81 §G.1.2.2): run-length over the point-transformed
-    band with EOB-run accumulation across blocks (EOBn symbols)."""
-    eobrun = 0
-
-    def flush_eob():
-        nonlocal eobrun
-        if eobrun:
-            nbits = eobrun.bit_length() - 1
-            sink.sym(tid, nbits << 4)
-            sink.bits(eobrun - (1 << nbits), nbits)
-            eobrun = 0
-
-    for bi, blk in enumerate(blocks):
-        if restart_interval and bi and bi % restart_interval == 0:
-            flush_eob()
-            sink.restart((bi // restart_interval - 1) % 8)
-        r = 0
-        for k in range(ss, se + 1):
-            v = int(blk[k])
-            v = v >> al if v >= 0 else -((-v) >> al)  # AC point transform
-            if v == 0:
-                r += 1
-                continue
-            flush_eob()
-            while r > 15:
-                sink.sym(tid, 0xF0)
-                r -= 16
-            size = _category(v)
-            sink.sym(tid, (r << 4) | size)
-            sink.bits(v if v > 0 else v + (1 << size) - 1, size)
-            r = 0
-        if r:
-            eobrun += 1
-            if eobrun == 0x7FFF:  # EOBn extension bits cap at 14
-                flush_eob()
-    flush_eob()
-
-
-def _emit_ac_refine(sink, blocks, tid, ss, se, al, restart_interval):
-    """AC refinement scan (T.81 §G.1.2.3): newly-nonzero coefficients are
-    Huffman-coded (size always 1) with a sign bit; already-nonzero ones
-    contribute correction bits appended after the NEXT emitted symbol —
-    including the deferred EOBn symbol when the run spans blocks."""
-    eobrun = 0
-    held: list[int] = []  # correction bits deferred behind a pending EOBn
-
-    def flush_eob():
-        nonlocal eobrun, held
-        if eobrun:
-            nbits = eobrun.bit_length() - 1
-            sink.sym(tid, nbits << 4)
-            sink.bits(eobrun - (1 << nbits), nbits)
-            for b in held:
-                sink.bits(b, 1)
-        else:
-            assert not held, "correction bits held without a pending EOB run"
-        held = []
-        eobrun = 0
-
-    for bi, blk in enumerate(blocks):
-        if restart_interval and bi and bi % restart_interval == 0:
-            flush_eob()
-            sink.restart((bi // restart_interval - 1) % 8)
-        vals = [int(blk[k]) for k in range(ss, se + 1)]
-        absv = [(v if v >= 0 else -v) >> al for v in vals]
-        eob = -1  # band-relative index of the LAST newly-nonzero coefficient
-        for i, a in enumerate(absv):
-            if a == 1:
-                eob = i
-        r = 0  # run of zero-history coefficients
-        br: list[int] = []  # correction bits since the last symbol
-        for i, a in enumerate(absv):
-            if a == 0:
-                r += 1
-                continue
-            # ZRL only if another newly-nonzero coefficient follows;
-            # otherwise the zero run folds into the end-of-block run
-            while r > 15 and i <= eob:
-                flush_eob()
-                sink.sym(tid, 0xF0)
-                r -= 16
-                for b in br:
-                    sink.bits(b, 1)
-                br = []
-            if a > 1:  # history: already nonzero — just a correction bit
-                br.append(a & 1)
-                continue
-            flush_eob()
-            sink.sym(tid, (r << 4) | 1)
-            sink.bits(1 if vals[i] > 0 else 0, 1)
-            for b in br:
-                sink.bits(b, 1)
-            br = []
-            r = 0
-        if r > 0 or br:
-            eobrun += 1
-            held.extend(br)
-            if eobrun == 0x7FFF:
-                flush_eob()
-    flush_eob()
-
-
 # --- encoder -----------------------------------------------------------------
 _SUBSAMPLING = {
     # component (h, v) sampling factors, Y Cb Cr
@@ -531,35 +317,17 @@ _SUBSAMPLING = {
     "420": ((2, 2), (1, 1), (1, 1)),
 }
 
-
 def encode_jpeg(
     arr: np.ndarray,
     quality: int = 85,
     subsampling: str = "444",
-    restart_interval: int = 0,
-    progressive: bool = False,
 ) -> bytes:
-    """(h, w, 3) uint8 RGB → JFIF bytes (optimized tables).
+    """(h, w, 3) uint8 RGB → baseline JFIF bytes (optimized tables).
 
-    ``subsampling``: "444" (default — byte-stable with earlier rounds),
-    "422", or "420" (2×2 box-averaged chroma, the variant virtually all
-    web JPEGs use).  Interleaved MCUs per ITU T.81 §A.2.3: each MCU
-    carries h_i×v_i blocks per component in raster order within the MCU.
-
-    ``restart_interval`` > 0 emits a DRI segment and an RSTn marker every
-    that many MCUs (DC predictors reset — the error-resilience feature
-    most camera/web encoders enable).  0 (default) omits DRI entirely,
-    keeping earlier rounds' streams byte-stable.
-
-    ``progressive=True`` emits a progressive DCT stream (SOF2) using
-    libjpeg's default scan script — spectral selection + successive
-    approximation, ten scans, per-scan optimized Huffman tables — the
-    variant large sites actually serve.  The quantized coefficients are
-    identical to the sequential path, so ``decode_jpeg`` of a progressive
-    stream is pixel-identical to decoding the baseline stream of the same
-    (image, quality, subsampling).  In progressive mode the restart
-    interval counts each scan's own MCU unit (one block, for the
-    non-interleaved AC scans).
+    ``subsampling``: "444" (default), "422", or "420" (2×2 box-averaged
+    chroma, the variant virtually all web JPEGs use).  Interleaved MCUs per
+    ITU T.81 §A.2.3: each MCU carries h_i×v_i blocks per component in
+    raster order within the MCU.
     """
     h, w, c = arr.shape
     if c != 3:
@@ -576,9 +344,8 @@ def encode_jpeg(
 
     # per component: box-downsample chroma, pad to full MCU coverage,
     # DCT + quantize, then reorder blocks raster → MCU-scan order (for
-    # 4:4:4 the reorder is the identity, keeping that path byte-stable)
+    # 4:4:4 the reorder is the identity)
     comp_coefs = []
-    comp_raster = []  # subgrid blocks, raster order — progressive AC scans
     for ci, (fh, fv) in enumerate(factors):
         ch = ycc[:, :, ci]
         sy, sx = vmax // fv, hmax // fh
@@ -609,30 +376,12 @@ def encode_jpeg(
             dtype=np.int64,
         )
         comp_coefs.append(zz[order])
-        # non-interleaved scans cover only the component's OWN block grid
-        # (ceil(ch/8) × ceil(cw/8), T.81 §A.2.2) — the padded MCU-lattice
-        # blocks beyond it are coded only by interleaved scans
-        sgy, sgx = -(-chh // 8), -(-chw // 8)
-        sub_idx = (np.arange(sgy)[:, None] * nbx + np.arange(sgx)).ravel()
-        comp_raster.append(zz[sub_idx])
 
-    if progressive:
-        return _assemble_progressive(
-            comp_coefs, comp_raster, factors, mcux * mcuy,
-            restart_interval, h, w, ql, qc,
-        )
-
-    # symbol statistics → optimal tables (luma: tables 0, chroma: tables 1).
-    # DC predictor resets must mirror the emission loop's restart resets
-    # exactly, or the optimized table lacks codes for post-reset categories
+    # symbol statistics → optimal tables (luma: tables 0, chroma: tables 1)
     def symbols(ci):
         dc_syms, ac_syms = [], []
         prev = 0
-        bpm = factors[ci][0] * factors[ci][1]
-        reset_every = restart_interval * bpm if restart_interval else 0
-        for bi, blk in enumerate(comp_coefs[ci]):
-            if reset_every and bi and bi % reset_every == 0:
-                prev = 0
+        for blk in comp_coefs[ci]:
             diff = int(blk[0]) - prev
             prev = int(blk[0])
             dc_syms.append(_category(diff))
@@ -670,11 +419,7 @@ def encode_jpeg(
     prev_dc = [0, 0, 0]
     cursor = [0, 0, 0]
     blocks_per_mcu = [fh * fv for fh, fv in factors]
-    n_mcu = mcux * mcuy
-    for m in range(n_mcu):
-        if restart_interval and m and m % restart_interval == 0:
-            bw.restart((m // restart_interval - 1) % 8)
-            prev_dc = [0, 0, 0]
+    for _ in range(mcux * mcuy):
         for ci in range(3):
             for _ in range(blocks_per_mcu[ci]):
                 dct_t = dc_l if ci == 0 else dc_c
@@ -726,8 +471,6 @@ def encode_jpeg(
     )
     for tc_th, t in ((0x00, dc_l), (0x10, ac_l), (0x01, dc_c), (0x11, ac_c)):
         out += seg(0xFFC4, bytes([tc_th]) + t.dht_payload())
-    if restart_interval:
-        out += seg(0xFFDD, struct.pack(">H", restart_interval))
     out += seg(0xFFDA, bytes([3, 1, 0x00, 2, 0x11, 3, 0x11, 0, 63, 0]))
     out += bw.flush()
     out += b"\xff\xd9"  # EOI
@@ -738,230 +481,43 @@ def _seg(marker: int, payload: bytes) -> bytes:
     return struct.pack(">HH", marker, len(payload) + 2) + payload
 
 
-def _assemble_progressive(
-    comp_coefs, comp_raster, factors, n_mcu, restart_interval, h, w, ql, qc
-) -> bytes:
-    """Emit the SOF2 marker stream: per scan, a gather pass builds optimized
-    Huffman tables (re-defining slots 0/1 before each SOS is spec-legal),
-    then an emit pass writes the entropy data."""
-
-    def emit_scan(sink, comps_in_scan, ss, se, ah, al):
-        if ss == 0:
-            _emit_dc_scan(
-                sink, comp_coefs, factors, n_mcu, ah, al, restart_interval
-            )
-        else:
-            ci = comps_in_scan[0]
-            tid = ("ac", 0 if ci == 0 else 1)
-            emit = _emit_ac_first if ah == 0 else _emit_ac_refine
-            emit(sink, comp_raster[ci], tid, ss, se, al, restart_interval)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += _seg(0xFFE0, b"JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00")
-    for tq, q in ((0, ql), (1, qc)):
-        out += _seg(0xFFDB, bytes([tq]) + bytes(q.reshape(-1)[ZIGZAG].tolist()))
-    sof_comps = []
-    for ci, (fh, fv) in enumerate(factors):
-        sof_comps += [ci + 1, (fh << 4) | fv, 0 if ci == 0 else 1]
-    out += _seg(0xFFC2, struct.pack(">BHHB", 8, h, w, 3) + bytes(sof_comps))
-    if restart_interval:
-        out += _seg(0xFFDD, struct.pack(">H", restart_interval))
-    for comps_in_scan, ss, se, ah, al in _PROGRESSIVE_SCRIPT:
-        stat = _StatSink()
-        emit_scan(stat, comps_in_scan, ss, se, ah, al)
-        tables = {
-            tid: _HuffTable(_optimal_code_lengths(f))
-            for tid, f in stat.freqs.items()
-        }
-        for (kind, slot), t in sorted(tables.items()):
-            tc_th = ((0 if kind == "dc" else 1) << 4) | slot
-            out += _seg(0xFFC4, bytes([tc_th]) + t.dht_payload())
-        ws = _WriteSink(tables)
-        emit_scan(ws, comps_in_scan, ss, se, ah, al)
-        sos = bytearray([len(comps_in_scan)])
-        for ci in comps_in_scan:
-            slot = 0 if ci == 0 else 1
-            if ss == 0:  # DC scan: Td used (first pass only), Ta ignored
-                tdta = (slot << 4) if ah == 0 else 0
-            else:  # AC scan: Td ignored, Ta used
-                tdta = slot
-            sos += bytes([ci + 1, tdta])
-        sos += bytes([ss, se, (ah << 4) | al])
-        out += _seg(0xFFDA, bytes(sos))
-        out += ws.bw.flush()
-    out += b"\xff\xd9"  # EOI
-    return bytes(out)
-
-
 # --- decoder -----------------------------------------------------------------
-def _ac_first_block(reader, blk, ac_idx, lo, se, al, eob_state, sequential):
-    """AC band of one block, first pass (Ah=0; baseline when Al=0): DC-style
-    run-length symbols, plus progressive EOBn run accumulation (T.81
-    §G.1.2.2) carried across blocks in ``eob_state``."""
-    if eob_state[0] > 0:
-        eob_state[0] -= 1
-        return
-    k = lo
-    while k <= se:
+def _decode_block(reader, blk, dc_idx, ac_idx, preds, cid):
+    """One block of a baseline scan: the DC difference, then the AC
+    run-length symbols up to EOB (T.81 §F.2.2)."""
+    size = _decode_symbol(reader, dc_idx)
+    preds[cid] += _extend(reader.read_bits(size), size)
+    blk[0] = preds[cid]
+    k = 1
+    while k <= 63:
         sym = _decode_symbol(reader, ac_idx)
         r, s = sym >> 4, sym & 0xF
         if s:
             k += r
-            if k > se:
-                raise ValueError("AC run past band end")
-            blk[k] = _extend(reader.read_bits(s), s) << al
+            if k > 63:
+                raise ValueError("AC run past block end")
+            blk[k] = _extend(reader.read_bits(s), s)
             k += 1
-        elif r != 15:
-            # EOBn: run of 2^r + ext bits end-of-band blocks (this one
-            # incl.) — progressive-only; in a sequential scan any size-0
-            # symbol other than EOB/ZRL means a corrupt entropy stream,
-            # and decoding on would desynchronize every later coefficient
-            if sequential and r != 0:
-                raise ValueError("bad AC symbol")
-            eob_state[0] = (1 << r) + (reader.read_bits(r) if r else 0) - 1
-            return
-        else:
+        elif r == 15:
             k += 16  # ZRL
-
-
-def _refine_nonzero(reader, blk, k, p1):
-    """History (already-nonzero) coefficient in a refinement scan: consume
-    one correction bit; apply only if bit Al is not already set (libjpeg
-    decode_mcu_AC_refine; two's-complement & works for negatives)."""
-    v = int(blk[k])
-    if reader.read_bit() and not (v & p1):
-        blk[k] = v + (p1 if v >= 0 else -p1)
-
-
-def _ac_refine_block(reader, blk, ac_idx, lo, se, al, eob_state):
-    """AC band of one block, refinement pass (Ah>0, T.81 §G.1.2.3): newly-
-    nonzero coefficients arrive as (run, size=1)+sign; zero-history runs
-    skip only zero-history positions, with correction bits interleaved for
-    every nonzero-history coefficient passed; EOB-run blocks still carry
-    correction bits for their nonzero-history band."""
-    p1 = 1 << al
-    k = lo
-    if eob_state[0] == 0:
-        while k <= se:
-            sym = _decode_symbol(reader, ac_idx)
-            r, s = sym >> 4, sym & 0xF
-            newval = 0
-            if s:
-                if s != 1:
-                    raise ValueError("bad AC refinement symbol")
-                newval = p1 if reader.read_bit() else -p1
-            elif r != 15:
-                eob_state[0] = (1 << r) + (reader.read_bits(r) if r else 0)
-                break
-            # advance: r counts ZERO-history skips; nonzero-history
-            # coefficients along the way each consume a correction bit
-            while k <= se:
-                if int(blk[k]) != 0:
-                    _refine_nonzero(reader, blk, k, p1)
-                else:
-                    if r == 0:
-                        break
-                    r -= 1
-                k += 1
-            if newval:
-                if k > se:
-                    raise ValueError("refinement coefficient past band end")
-                blk[k] = newval
-            k += 1
-    if eob_state[0] > 0:
-        while k <= se:
-            if int(blk[k]) != 0:
-                _refine_nonzero(reader, blk, k, p1)
-            k += 1
-        eob_state[0] -= 1
-
-
-def _decode_block(reader, blk, cid, td, ta, ss, se, ah, al, huff, preds,
-                  eob_state, sequential):
-    """One block's contribution to the current scan (any of the four
-    progressive modes; baseline is ss=0 se=63 ah=al=0)."""
-    if ss == 0:
-        if ah == 0:
-            size = _decode_symbol(reader, huff[(0, td)])
-            diff = _extend(reader.read_bits(size), size)
-            preds[cid] += diff
-            blk[0] = preds[cid] << al
-        elif reader.read_bit():  # DC refinement: one raw bit, no Huffman
-            blk[0] |= 1 << al
-        if se == 0:
-            return
-    lo = max(ss, 1)
-    if ah == 0:
-        _ac_first_block(reader, blk, huff[(1, ta)], lo, se, al, eob_state,
-                        sequential)
-    else:
-        _ac_refine_block(reader, blk, huff[(1, ta)], lo, se, al, eob_state)
-
-
-def _decode_scan(reader, scomps, ss, se, ah, al, huff, comp_f, comp_sub,
-                 grids, mcux, mcuy, restart_interval, sequential):
-    """Entropy-decode one scan into the coefficient grids.
-
-    Interleaved scans (>1 component) walk the MCU lattice; non-interleaved
-    scans walk the single component's OWN block grid (T.81 §A.2.2) — which
-    is smaller than its padded lattice slice when the image isn't an exact
-    MCU multiple.  The restart interval counts the scan's own MCU unit."""
-    preds = {cid: 0 for cid, _, _ in scomps}
-    eob_state = [0]
-
-    def restart_check(unit):
-        got = reader.consume_restart()
-        want = (unit // restart_interval - 1) % 8
-        if got != want:
-            raise ValueError(
-                f"RST sequence error: expected RST{want}, got RST{got}"
-            )
-        for cid in preds:
-            preds[cid] = 0
-        eob_state[0] = 0
-
-    if len(scomps) == 1:
-        cid, td, ta = scomps[0]
-        sgy, sgx = comp_sub[cid]
-        unit = 0
-        for by in range(sgy):
-            for bx in range(sgx):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    restart_check(unit)
-                unit += 1
-                _decode_block(reader, grids[cid][by, bx], cid, td, ta,
-                              ss, se, ah, al, huff, preds, eob_state,
-                              sequential)
-    else:
-        unit = 0
-        for my in range(mcuy):
-            for mx in range(mcux):
-                if restart_interval and unit and unit % restart_interval == 0:
-                    restart_check(unit)
-                unit += 1
-                for cid, td, ta in scomps:
-                    fh, fv = comp_f[cid]
-                    for by in range(fv):
-                        for bx in range(fh):
-                            _decode_block(
-                                reader, grids[cid][my * fv + by, mx * fh + bx],
-                                cid, td, ta, ss, se, ah, al, huff, preds,
-                                eob_state, sequential,
-                            )
+        elif r == 0:
+            return  # EOB
+        else:
+            # EOBn is progressive-only: in a sequential scan it means a
+            # corrupt entropy stream, and decoding on would desynchronize
+            # every later coefficient
+            raise ValueError("bad AC symbol")
 
 
 def decode_jpeg(payload: bytes) -> np.ndarray:
-    """8-bit Huffman JFIF bytes → (h, w, 3) uint8 RGB.
+    """8-bit Huffman baseline JFIF bytes → (h, w, 3) uint8 RGB.
 
-    Tables come from the file (DQT/DHT).  Both baseline sequential (SOF0)
-    and progressive (SOF2 — spectral selection AND successive approximation,
-    any scan script) decode through one unified scan loop; baseline is the
-    single-scan Ss=0/Se=63/Ah=Al=0 case.  Any integer sampling-factor
-    combination where max_factor % factor == 0 decodes (4:4:4, 4:2:0,
-    4:2:2, 4:4:0, ...); subsampled chroma is nearest-neighbor upsampled
-    before YCbCr→RGB.  Restart intervals (DRI/RSTn) are honored per scan
-    (DC predictor + EOB-run resets, RST sequence checked).  12-bit,
-    arithmetic-coded, lossless and hierarchical variants refuse loudly
+    Tables come from the file (DQT/DHT); the one interleaved scan walks the
+    MCU lattice.  Any integer sampling-factor combination where
+    max_factor % factor == 0 decodes (4:4:4, 4:2:0, 4:2:2, 4:4:0, ...);
+    subsampled chroma is nearest-neighbor upsampled before YCbCr→RGB.
+    Progressive, 12-bit, arithmetic-coded, lossless and hierarchical
+    variants, restart intervals and non-interleaved scans refuse loudly
     with NotImplementedError."""
     if payload[:2] != b"\xff\xd8":
         raise ValueError("not a JPEG stream (no SOI)")
@@ -970,11 +526,9 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
     huff: dict[tuple[int, int], dict] = {}
     sof = None
     grids = None
-    comp_f = comp_sub = None
+    comp_f = None
     mcux = mcuy = hmax = vmax = 0
-    restart_interval = 0
     saw_scan = False
-    sequential = True  # set by SOF0 (True) / SOF2 (False)
     while pos < len(payload):
         if payload[pos] != 0xFF:
             raise ValueError("bad JPEG marker stream")
@@ -1003,8 +557,7 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 ).astype(np.int64)
                 qt[pq_tq & 0xF] = tbl.reshape(8, 8)
                 bpos += 65
-        elif marker in (0xFFC0, 0xFFC2):
-            sequential = marker == 0xFFC0
+        elif marker == 0xFFC0:
             prec, h, w, nc = struct.unpack_from(">BHHB", body, 0)
             if prec != 8:
                 raise NotImplementedError(f"{prec}-bit JPEG unsupported")
@@ -1033,24 +586,19 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             mcux = -(-w // (8 * hmax))
             mcuy = -(-h // (8 * vmax))
             comp_f = {cid: (fh, fv) for cid, _, fh, fv in comps}
-            comp_sub = {}
-            grids = {}
-            for cid, _, fh, fv in comps:
-                ch = -(-(h * fv) // vmax)  # component resolution, §A.1.1
-                cw = -(-(w * fh) // hmax)
-                comp_sub[cid] = (-(-ch // 8), -(-cw // 8))
-                # quantized coefficients, zigzag order, accumulated across
-                # scans; dequantize + IDCT happen once at EOI
-                grids[cid] = np.zeros(
-                    (mcuy * fv, mcux * fh, 64), dtype=np.int64
-                )
+            # quantized coefficients, zigzag order; dequantize + IDCT
+            # happen once at EOI
+            grids = {
+                cid: np.zeros((mcuy * fv, mcux * fh, 64), dtype=np.int64)
+                for cid, _, fh, fv in comps
+            }
             sof = (h, w, comps)
         elif marker in (
-            0xFFC1, 0xFFC3, 0xFFC5, 0xFFC6, 0xFFC7,
+            0xFFC1, 0xFFC2, 0xFFC3, 0xFFC5, 0xFFC6, 0xFFC7,
             0xFFC9, 0xFFCA, 0xFFCB, 0xFFCD, 0xFFCE, 0xFFCF,
         ):
             raise NotImplementedError(
-                "only baseline (SOF0) and progressive (SOF2) JPEG decode here"
+                "only baseline (SOF0) JPEG decodes here"
             )
         elif marker == 0xFFC4:
             bpos = 0
@@ -1065,7 +613,8 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
                 huff[(tc_th >> 4, tc_th & 0xF)] = index
                 bpos += 17 + nv
         elif marker == 0xFFDD:
-            restart_interval = struct.unpack_from(">H", body, 0)[0]
+            if struct.unpack_from(">H", body, 0)[0]:
+                raise NotImplementedError("restart intervals (DRI) unsupported")
         elif marker == 0xFFDA:
             if grids is None:
                 raise ValueError("SOS before SOF")
@@ -1077,33 +626,26 @@ def decode_jpeg(payload: bytes) -> np.ndarray:
             for cid, _, _ in scomps:
                 if cid not in comp_f:
                     raise ValueError(f"scan references unknown component {cid}")
-            ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-            ah_al = body[3 + 2 * ns]
-            # scan-header conformance (T.81 §B.2.3): an AC scan (Ss>0)
-            # carries exactly one component — a multi-component AC scan
-            # would otherwise fall into the interleaved-MCU path with one
-            # shared EOB run and silently misdecode; spectral band and
-            # successive-approximation fields are range-checked too
-            if ss > 0 and ns > 1:
-                raise ValueError(
-                    f"non-conformant progressive scan: Ss={ss} with "
-                    f"Ns={ns} components (AC scans must have Ns=1)"
+            if saw_scan or ns != len(comp_f):
+                raise NotImplementedError(
+                    "only single-scan interleaved baseline JPEG decodes here"
                 )
-            if not (0 <= ss <= se <= 63):
-                raise ValueError(f"invalid spectral band Ss={ss} Se={se}")
-            if (ah_al >> 4) > 13 or (ah_al & 0xF) > 13:
-                raise ValueError(
-                    f"invalid successive approximation Ah/Al=0x{ah_al:02x}"
-                )
+            if body[1 + 2 * ns : 4 + 2 * ns] != bytes([0, 63, 0]):
+                raise ValueError("baseline scan must be Ss=0 Se=63 Ah=Al=0")
             data_start = pos + 2 + ln
-            # memoryview: ten-scan progressive streams would otherwise
-            # copy the remaining file tail once per scan
             reader = _BitReader(memoryview(payload)[data_start:])
-            _decode_scan(
-                reader, scomps, ss, se, ah_al >> 4, ah_al & 0xF, huff,
-                comp_f, comp_sub, grids, mcux, mcuy, restart_interval,
-                sequential,
-            )
+            preds = {cid: 0 for cid, _, _ in scomps}
+            for my in range(mcuy):
+                for mx in range(mcux):
+                    for cid, td, ta in scomps:
+                        fh, fv = comp_f[cid]
+                        for by in range(fv):
+                            for bx in range(fh):
+                                _decode_block(
+                                    reader,
+                                    grids[cid][my * fv + by, mx * fh + bx],
+                                    huff[(0, td)], huff[(1, ta)], preds, cid,
+                                )
             saw_scan = True
             # entropy data ends at the next true marker; the reader stops
             # exactly after the last consumed byte (pad bits unread)

@@ -14,15 +14,20 @@ type, depths 1-16, and Adam7) need no system codec, so
 pixels) and ``image_stats`` decodes the actual bytes and computes
 per-channel pixel statistics — the full ingest → decode → feature path runs
 on real image data, including a real DEFLATE round-trip on the PNG path.
+Baseline JPEG is real too (operators/jpeg.py: huffman + dequant + IDCT,
+4:4:4 and chroma-subsampled) but no catalog query encodes it; it is lossy,
+so its stats are tolerance-tested in pytest instead of hash-gated.
 Audio is real too: a RIFF WAV codec covering integer PCM (8/16/24/32-bit),
 IEEE float (32/64-bit) and WAVE_FORMAT_EXTENSIBLE (lossless, so
 ``audio_stats`` is hash-gated exactly like the pixel paths).  What refuses
-with NotImplementedError is every other container or codec: JPEG, WebP,
-compressed WAV (G.711, ADPCM, MP3-in-WAV) and every video container — the
-honest boundary; frame sampling (``sample_frames``) is byte-chunk plumbing,
-not a video decode.  The pixel/sample synths are exact integer formulas so
-the BMP/PNG/WAV stats stay oracle-checkable in SQL (plans.multimodal).
+with NotImplementedError is every other container or codec: progressive
+JPEG, WebP, compressed WAV (G.711, ADPCM, MP3-in-WAV) and every video
+container — the honest boundary; frame sampling (``sample_frames``) is
+byte-chunk plumbing, not a video decode.  The pixel/sample synths are exact
+integer formulas so the BMP/PNG/WAV stats stay oracle-checkable in SQL
+(plans.multimodal).
 """
+
 from __future__ import annotations
 
 import hashlib
@@ -283,17 +288,22 @@ def decode_png(payload: bytes) -> np.ndarray:
 def decode_image(payload: bytes) -> np.ndarray:
     """Decode an image payload → (h, w, 3) uint8 RGB.
 
-    Real decode for uncompressed 24-bit BMP (bottom-up or top-down) and PNG
+    Real decode for uncompressed 24-bit BMP (bottom-up or top-down), PNG
     (all static color types and depths, Adam7 included — stdlib zlib
-    inflate + numpy unfilter) — no system codec.  Every other container
-    (JPEG and WebP included) needs a codec library absent from this
-    environment and raises NotImplementedError (swap in PIL.Image.open on
-    a real cluster)."""
+    inflate + numpy unfilter), and 8-bit Huffman baseline JPEG
+    (operators/jpeg.py, any subsampling) — no system codec.  Every other
+    container or variant (progressive JPEG and WebP included) needs a codec
+    library absent from this environment and raises NotImplementedError
+    (swap in PIL.Image.open on a real cluster)."""
     if payload[:8] == _PNG_SIG:
         return decode_png(payload)
+    if payload[:2] == b"\xff\xd8":
+        from exstream_implementation_spark.operators.jpeg import decode_jpeg
+
+        return decode_jpeg(payload)
     if payload[:2] != b"BM":
         raise NotImplementedError(
-            "only BMP/PNG decode without a system codec; swap in "
+            "only BMP/PNG/JPEG decode without a system codec; swap in "
             "PIL.Image.open / libvips for other containers on a real cluster"
         )
     off = struct.unpack_from("<I", payload, 10)[0]
@@ -336,8 +346,12 @@ def _image_encoder(fmt: str):
     """Shared encoder dispatch — ``attach_image_payload`` (chained) and
     ``image_payload_stats`` (fused) call this ONE implementation so the two
     paths can never drift."""
-    if fmt not in ("bmp", "png"):
+    if fmt not in ("bmp", "png", "jpeg"):
         raise ValueError(f"unknown image format {fmt!r}")
+    if fmt == "jpeg":
+        from exstream_implementation_spark.operators.jpeg import encode_jpeg
+
+        return lambda a: encode_jpeg(a, quality=95)
     return encode_bmp if fmt == "bmp" else encode_png
 
 
@@ -381,10 +395,11 @@ def attach_image_payload(
     fmt: str = "bmp",
 ) -> DataFrame:
     """REAL image payloads: each row gets a genuine 24-bit BMP or 8-bit
-    truecolor PNG blob of its synthetic pixel field (Arrow-batched pandas
-    UDF — bytes are built in the workers, never the driver).  The PNG
-    encoder cycles all five row filters, so decoding it exercises the full
-    inflate + unfilter path."""
+    truecolor PNG or baseline JPEG blob of its synthetic pixel field
+    (Arrow-batched pandas UDF — bytes are built in the workers, never the
+    driver).  The PNG encoder cycles all five row filters, so decoding it
+    exercises the full inflate + unfilter path; JPEG (quality 95) is lossy
+    by nature, so its decoded stats are tolerance-tested, not hash-gated."""
     enc = _image_encoder(fmt)
 
     @F.pandas_udf("binary")

@@ -9,8 +9,8 @@ RIFF/PCM16 WAV; the workers DECODE the actual bytes, and the per-channel /
 per-stream stats come from the decoded values — each oracle recomputes them
 from the synthetic integer formulas, so a codec bug (row order, BGR swap,
 stride padding, PNG filter math, WAV byte order or chunk walk) breaks the
-hash.  BMP and PNG are the only image formats the package encodes or
-decodes.
+hash.  JPEG is real too but lives outside the hash gate (it is lossy) —
+see tests/test_jpeg.py.
 
 Catalog slot: ``multimodal_suite`` unions the five branches canonicalized
 to one schema under one oracle — same evidence as five slots, one

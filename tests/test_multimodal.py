@@ -51,21 +51,20 @@ def test_bmp_topdown_decode():
 
 
 def test_non_bmp_raises_not_implemented(spark):
-    # JPEG and WebP need a real codec — honest refusal.  The JPEG streams
-    # are SOI, a JFIF APP0 and an 8x8 three-component baseline (SOF0) or
-    # progressive (SOF2) frame header, then EOI.
+    # WebP and progressive JPEG need a real codec — honest refusal (baseline
+    # JPEG is real).  The progressive stream is SOI, a JFIF APP0 and an 8x8
+    # three-component SOF2 frame header, then EOI.
     app0 = b"\xff\xe0\x00\x10JFIF\x00\x01\x01\x00\x00\x01\x00\x01\x00\x00"
     frame = b"\x00\x11\x08\x00\x08\x00\x08\x03\x01\x11\x00\x02\x11\x01\x03\x11\x01"
     for payload in (
         b"RIFF\x00\x00\x00\x00WEBPVP8 " + b"\x00" * 64,
         b"RIFF\x00\x00\x00\x00WEBPVP8L" + b"\x00" * 64,
-        b"\xff\xd8" + app0 + b"\xff\xc0" + frame + b"\xff\xd9",
         b"\xff\xd8" + app0 + b"\xff\xc2" + frame + b"\xff\xd9",
     ):
         with pytest.raises(NotImplementedError):
             decode_image(payload)
     with pytest.raises(ValueError):
-        image_payload_stats(spark.range(1), fmt="jpeg")
+        image_payload_stats(spark.range(1), fmt="jpeg_progressive")
     # 8-bit BMP variant: honest refusal, not silent garbage
     img = encode_bmp(np.zeros((2, 2, 3), dtype=np.uint8))
     bad = bytearray(img)
@@ -489,12 +488,14 @@ def test_audio_stats_full_scale_int32_does_not_overflow(spark):
     assert row["amp_mean"] == pytest.approx(float(2**31 - 1))
 
 
-@pytest.mark.parametrize("fmt", ["bmp", "png"])
+@pytest.mark.parametrize("fmt", ["bmp", "png", "jpeg"])
 def test_image_payload_stats_matches_two_op_chain(spark, fmt):
     """The fused encode→decode→stats operator (r12: one Python plan node,
     payload never crosses the JVM boundary) must be bitwise identical to
     the attach_image_payload → image_stats chain it replaces — across
-    EVERY encoder the dispatch supports."""
+    EVERY encoder the dispatch supports, including the lossy jpeg path
+    (lossy vs the pixels, but the fused and chained operators decode the
+    same bytes, so their stats must still match exactly)."""
     df = spark.range(0, 40).withColumnRenamed("id", "doc_id")
     key = lambda r: (r["doc_id"], r["channel"])
     chain = {

@@ -218,7 +218,7 @@ def test_every_package_module_is_reachable():
     )
 
 
-CODECS = ("multimodal",)
+CODECS = ("jpeg", "multimodal")
 
 
 @pytest.mark.parametrize(
